@@ -23,19 +23,29 @@ def load(p):
     raise SystemExit(f"no bench line in {p}")
 
 
+def failed_in(board):
+    """Queries a board marks failed: the -1.0 sentinel or its list."""
+    return sorted({q for q, v in board["queries"].items() if v < 0} |
+                  set(board.get("failed") or []))
+
+
 def main(old_p, new_p, top_n=25):
     old, new = load(old_p), load(new_p)
     oq, nq = old["queries"], new["queries"]
     # Bench's -1.0 sentinel marks a FAILED query; folding it into
     # totals/ratios would deflate NEW and read as a huge "improvement"
     # (the r10 failure mode renderLine exists to prevent). Drop failed
-    # entries from the arithmetic and warn as loudly as REMOVED.
-    failed = sorted({q for q, v in oq.items() if v < 0} |
-                    {q for q, v in nq.items() if v < 0} |
-                    set(old.get("failed") or []) | set(new.get("failed") or []))
-    if failed:
-        print(f"FAILED queries (excluded from totals/ratios — "
-              f"a red board, not a speedup!): {failed}")
+    # entries from the arithmetic, and name the board each failed on:
+    # a query that broke in NEW is a regression, one that failed only
+    # in OLD recovered.
+    failed_old, failed_new = failed_in(old), failed_in(new)
+    if failed_new:
+        print(f"FAILED in NEW (excluded from totals/ratios — "
+              f"a red board, not a speedup!): {failed_new}")
+    if failed_old:
+        print(f"failed in OLD (excluded from totals/ratios; "
+              f"recovered in NEW unless also listed above): {failed_old}")
+    failed = set(failed_old) | set(failed_new)
     oq = {q: v for q, v in oq.items() if v >= 0 and q not in failed}
     nq = {q: v for q, v in nq.items() if v >= 0 and q not in failed}
     common = sorted(set(oq) & set(nq))

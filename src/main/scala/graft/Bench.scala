@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every registered query against
   * `SPARK_GRAFT_SF_DIR` and prints one JSON line with per-query
   * seconds. A full untimed warmup pass first absorbs one-time session
@@ -12,23 +10,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // local-iteration knob (the driver sets it to nothing): extra
-    // session confs as ';'-separated k=v pairs, for A/B-ing a config
-    // hypothesis on a bench subset before baking it in
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(';')
-      .filter(_.contains('=')).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        builder.config(k.trim, v.trim)
-      })
-    val spark = builder.getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
 
     // local-iteration knobs (the driver sets neither): ONLY filters to

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.schema._
 
 /** Runnable end-to-end demo of the schema planner: models the TPC-H-ish
@@ -55,12 +53,7 @@ object Demo {
     catch { case e: NoSuchColumnInSchemaError => println(s"  unknown ok: ${e.getMessage.linesIterator.next()}") }
 
     println("\n=== executing compare query on " + sfDir + " ===")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     Seq("region", "nation", "customer", "orders", "lineitem").foreach { t =>
       spark.read.parquet(s"$sfDir/$t.parquet").createOrReplaceTempView(t)

@@ -11,14 +11,9 @@ import graft.functions.{NormalizeText, RollingHash, ZInterleave}
 /** SparkSessionExtensions entry point: registers the engine's custom
   * Catalyst expressions AND the SQL front door for the Column-level
   * operator library at session-build time (survives session cloning,
-  * available to pure-SQL users), e.g.
-  *
-  * {{{
-  * SparkSession.builder()
-  *   .withExtensions(new GraftExtensions)
-  *   .config("spark.sql.extensions", "graft.GraftExtensions") // or via config
-  *   .getOrCreate()
-  * }}}
+  * available to pure-SQL users). [[GraftSession.withExtensions]]
+  * derives such a session from an existing one; outside this library,
+  * set `spark.sql.extensions=graft.GraftExtensions`.
   *
   * SQL surface:
   *   - `rolling_hash(text)` — codegen rolling hash (fingerprinting)
@@ -39,9 +34,8 @@ import graft.functions.{NormalizeText, RollingHash, ZInterleave}
   * the argument expressions in Columns, reuses the library's exact
   * Column formulation, and unwraps — one definition, two surfaces.
   *
-  * Verified end-to-end by `graft.ExtensionsDemo` (fresh-JVM main —
-  * extensions only apply at session construction, so the shared test
-  * session can't exercise this path).
+  * Pinned by `GraftExtensionsSpec` and `RangeJoinRewriteSpec`, which
+  * run in a child session from [[GraftSession.withExtensions]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -112,92 +106,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // become the binned equi-join decomposition when
     // spark.graft.rangeJoin.binWidth is set (see RangeJoinRewrite)
     e.injectOptimizerRule(graft.plans.RangeJoinRewrite)
-  }
-}
-
-/** `sbt "runMain graft.ExtensionsDemo"` — proves the extension wires
-  * each SQL-surface function and the optimizer rule into a fresh
-  * session.
-  */
-object ExtensionsDemo {
-  def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val rows = spark.sql(
-      "SELECT rolling_hash('abc') AS h, rolling_hash('') AS empty").collect()
-    println(s"rolling_hash('abc') = ${rows.head.getLong(0)}, " +
-      s"rolling_hash('') = ${rows.head.getLong(1)}")
-    val expected = "abc".foldLeft(0L)((h, c) => (h * 31 + c) % 2147483647L)
-    assert(rows.head.getLong(0) == expected, "extension-registered function mismatch")
-
-    // z_interleave: bit-interleaving 0b11 with 0b00 -> 0b0101
-    val z = spark.sql("SELECT z_interleave(3, 0, 2) AS z").collect().head.getLong(0)
-    assert(z == 5L, s"z_interleave(3,0,2) = $z, want 5")
-
-    // fingerprint: normalization-invariant — case/whitespace variants agree
-    val fp = spark.sql(
-      """SELECT fingerprint('Hello  World') = fingerprint(' hello world ') AS same,
-        |       fingerprint('hello world') <> fingerprint('other') AS diff""".stripMargin)
-      .collect().head
-    assert(fp.getBoolean(0) && fp.getBoolean(1), "fingerprint normalization broken")
-
-    // graft_bucket: matches the Scala column formulation exactly
-    import org.apache.spark.sql.functions.{col, lit}
-    import spark.implicits._
-    val ids = (1L to 100L).toDF("id")
-    val viaSql = ids.selectExpr("id", "graft_bucket(id, 42) AS b")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaScala = ids.select(col("id"),
-      graft.ops.Sampling.bucket(col("id"), 42L).as("b"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(viaSql == viaScala, "graft_bucket diverges from Sampling.bucket")
-
-    // quality_rules / quality_pass: prose passes, junk fails
-    val good = ("the quick brown fox jumps over the lazy dog and that " +
-      "cat has been quite happy to have seen it with all of them ") * 3
-    val q = spark.sql(
-      s"SELECT quality_rules('$good') AS r, quality_pass('$good') AS p, " +
-        "quality_pass('# # # ...') AS junk").collect().head
-    val r = q.getStruct(0)
-    assert(r.schema.fieldNames.contains("r_words") && r.schema.size == 7,
-      s"quality_rules struct shape: ${r.schema}")
-    assert(q.getBoolean(1), "quality_pass rejected ordinary prose")
-    assert(!q.getBoolean(2), "quality_pass accepted junk")
-
-    // chunk_windows: explodes to the same windows the DataFrame
-    // operator produces; lang_id agrees with the Column form
-    val ch = spark.sql(
-      """SELECT w.chunk_id, w.start_tok, w.n_tokens, w.chunk_text
-        |FROM (SELECT explode(chunk_windows('a b c d e f g', 4, 3)) AS w)"""
-        .stripMargin).collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getString(3)))
-    assert(ch.toSeq == Seq((0, 0, 4, "a b c d"), (1, 3, 4, "d e f g"),
-      (2, 6, 1, "g")), s"chunk_windows mismatch: ${ch.toSeq}")
-    val li = spark.sql(
-      "SELECT lang_id('the of and to a in is it') AS l").collect().head.getString(0)
-    assert(li == "en", s"lang_id('the of ...') = $li, want en")
-
-    // the injected optimizer rule: a naive non-equi range join must
-    // plan as a binned equi-join once the bin width is set
-    spark.conf.set("spark.graft.rangeJoin.binWidth", "16")
-    val pts = (0L until 100L).map(i => (i, i * 3L % 200L)).toDF("pid", "p")
-    val ivs = (0L until 10L).map(i => (i, i * 20L, i * 20L + 15L)).toDF("iid", "lo", "hi")
-    val joined = pts.join(ivs, col("p") >= col("lo") && col("p") <= col("hi"))
-    val plan = joined.queryExecution.executedPlan.toString
-    assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"),
-      s"range-join rewrite did not fire:\n$plan")
-    val viaRule = joined.select("pid", "iid").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    spark.conf.unset("spark.graft.rangeJoin.binWidth")
-    val naive = joined.select("pid", "iid").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(viaRule == naive, "rewritten join changed the result")
-    println(s"range-join rewrite ok (${viaRule.size} pairs)")
-    println("extensions ok")
-    spark.stop()
   }
 }

@@ -92,30 +92,6 @@ object SparkEntry {
     Seq(docs.filter(col("doc_id") < cutId),
       docs.filter(col("doc_id") >= cutId))
 
-  /** Child session on the SAME SparkContext but WITH
-    * [[GraftExtensions]] installed — extensions only apply at session
-    * construction, and the driver's verify session is built without
-    * them, so the one gate that exercises the injected optimizer rule
-    * ([[plans.RangeJoinRewrite]]) builds its frames here. The active/
-    * default session is restored before returning; the child session
-    * stays usable (sessions share the context and are never stopped).
-    */
-  private def extendedSession(s: SparkSession): SparkSession = {
-    s.sparkContext // the shared context must exist before the builder runs
-    val orig = SparkSession.getActiveSession
-    val origDefault = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-    try SparkSession.builder()
-      .config("spark.sql.shuffle.partitions", "32")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    finally {
-      SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-      orig.foreach(SparkSession.setActiveSession)
-      origDefault.foreach(SparkSession.setDefaultSession)
-    }
-  }
-
   /** The event operators and their DuckDB oracles share one `ts`
     * convention: int64 epoch nanoseconds (the oracles read the parquet
     * natively and apply `epoch_ns(ts)`). Testdata vintages differ —
@@ -4630,7 +4606,8 @@ object SparkEntry {
       // logical plan. The row itself asserts the executed plan holds
       // no nested-loop/cartesian: a silently-inert rule fails loudly
       // here, not at 100 TB
-      val c = extendedSession(s)
+      val c = GraftSession.withExtensions(s)
+      c.conf.set("spark.sql.shuffle.partitions", "32")
       c.conf.set("spark.graft.rangeJoin.binWidth",
         (3600L * 1000000000L).toString)
       val ev = t(c, dir, "events")

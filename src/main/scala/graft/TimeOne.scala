@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Times a single registered query cold (no warmup): `sbt "runMain
   * graft.TimeOne <queryName> <sfDir>"`. Complements Bench (which
@@ -8,11 +7,7 @@ import org.apache.spark.sql.SparkSession
   */
 object TimeOne {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     val name = args(0); val dir = args(1)
     // optional third arg: repetitions in ONE session — rep 1 is the

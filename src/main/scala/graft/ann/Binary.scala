@@ -73,22 +73,14 @@ object Binary {
     // the query×corpus scoring below is a nested-loop join (non-equi
     // condition), so it runs in the STREAM side's partitioning — and
     // which side streams is the planner's size-estimate call (either
-    // packed side may broadcast). A side that arrives in fewer splits
-    // than the session has cores (one small parquet file ⇒ ONE task:
-    // measured 2.3 s of single-task popcount scoring on the gate) is
-    // spread by id first, BOTH sides — what spreads is the 16-byte
-    // PACKED rows, never the float vectors, so the insurance on the
-    // broadcast side costs next to nothing. Scale-adaptive, not a
-    // constant: when a scan already fans out to >= the session's
-    // cores (any real corpus under maxPartitionBytes), it is a no-op.
-    val cores = candidates.sparkSession.sparkContext.defaultParallelism
-    def spread(df: DataFrame, key: String): DataFrame =
-      if (df.rdd.getNumPartitions >= cores) df
-      else df.repartition(cores, col(key))
-    val q = spread(signPack(queries, idCol, vecCol, dim)
+    // packed side may broadcast). So BOTH sides are spread by id —
+    // what spreads is the 16-byte PACKED rows, never the float
+    // vectors, so the insurance on the broadcast side costs next to
+    // nothing.
+    val q = graft.ops.Width.spread(signPack(queries, idCol, vecCol, dim)
       .select(col("id").as("query_id") +:
         (0 until words).map(w => col(s"w$w").as(s"qw$w")): _*), "query_id")
-    val c = spread(signPack(candidates, idCol, vecCol, dim)
+    val c = graft.ops.Width.spread(signPack(candidates, idCol, vecCol, dim)
       .select(col("id").as("neighbor_id") +:
         (0 until words).map(w => col(s"w$w")): _*), "neighbor_id")
     val dist = (0 until words)

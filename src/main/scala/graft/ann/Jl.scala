@@ -95,16 +95,11 @@ object Jl {
     val signs = typedLit(signMatrix(outDims, dim))
     // the pairwise census below is a nested-loop join (a.id < b.id)
     // running in the stream side's partitioning, with a 64-element
-    // fold per pair — a one-file slice scan ran it as ONE task
-    // (measured 1.5 s single-task on the gate). Spread by id when the
-    // input arrives narrower than the session's cores; the slice is
+    // fold per pair, so the slice is spread by id first; it is
     // <= maxRows BY CONTRACT (enforced below), so what moves is a few
     // thousand quantized rows at most, at any corpus scale.
-    val cores = df.sparkSession.sparkContext.defaultParallelism
-    val in0 = df.select(col(idCol).as("id"), col(vecCol).as("__v"))
-    val in =
-      if (in0.rdd.getNumPartitions >= cores) in0
-      else in0.repartition(cores, col("id"))
+    val in = graft.ops.Width.spread(
+      df.select(col(idCol).as("id"), col(vecCol).as("__v")), "id")
     val base0 = in
       .withColumn("__q", expr(
         s"transform(__v, x -> CAST(floor(CAST(x AS DOUBLE) * ${Scale}L) AS BIGINT))"))

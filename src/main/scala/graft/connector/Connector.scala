@@ -92,7 +92,20 @@ final class Connector(
       columns: Map[String, String] = Map.empty,
       replace: Boolean = true,
       allowDuplication: Boolean = false,
-  ): DataFrame = {
+  ): DataFrame =
+    retrieveJoined(data, table, alias, columns, replace, allowDuplication)._2
+
+  /** [[retrieveIds]], also returning the cached join its result reads
+    * from ([[FrameOps.mergeIds]]), so that [[load]] can release it.
+    */
+  private def retrieveJoined(
+      data: DataFrame,
+      table: String,
+      alias: String,
+      columns: Map[String, String],
+      replace: Boolean,
+      allowDuplication: Boolean,
+  ): (DataFrame, DataFrame) = {
     schema.checkSchemaNotEmpty()
     val pre = FrameOps.preprocess(data, columns)
     val (primaryKey, commonColumns) =
@@ -101,10 +114,12 @@ final class Connector(
     val query = dialect.getRetrieveQuery(table, primaryKey, alias, commonColumns)
     val dbFetch = JdbcFrames.queryToDataFrame(spark, conn, query, lowercaseLabels = true)
 
-    var out = FrameOps.mergeIds(pre, dbFetch, alias, table,
+    val joined = FrameOps.mergeIds(pre, dbFetch, alias, table,
       allowDuplication = allowDuplication)
-    if (replace) out = FrameOps.dropReplaced(out, schema.getColumns(table))
-    FrameOps.postprocess(out, columns)
+    val out =
+      if (replace) FrameOps.dropReplaced(joined, schema.getColumns(table))
+      else joined
+    (joined, FrameOps.postprocess(out, columns))
   }
 
   /** Committed-snapshot parallel read of a whole table via Spark's
@@ -162,6 +177,11 @@ final class Connector(
   /** The flagship: plan, cascade inserts in topological order threading
     * retrieved ids through the frame, then validate — §3.1
     * (`connector.py:376-452`).
+    *
+    * Each retrieve step caches the join that carries its ids (the next
+    * step reads it). On success every cache but the last step's, which
+    * backs the returned frame, is released; on failure all of them are,
+    * so a long-lived session does not accumulate cached RDDs either way.
     */
   def load(
       data: DataFrame,
@@ -174,35 +194,35 @@ final class Connector(
       exact: Boolean = true,
   ): DataFrame = {
     schema.checkSchemaNotEmpty()
-    val pre = FrameOps.preprocess(data, columns).cache()
-    val origData = pre // immutable — no clone needed (connector.py:424)
-
-    val instructions = schema.getLoadInstructions(pre.columns.toSeq)
-
-    // phase 1: insert+retrieve in topo order, ids cascade through the frame
-    val cached = scala.collection.mutable.ArrayBuffer(pre)
-    val afterRetrieve = instructions.insertAndRetrieve.foldLeft(pre) {
-      (acc, spec) =>
-        val next = insertAndRetrieveIds(acc, spec.table, spec.alias,
-          spec.columns.toMap, replace, allowDuplication).cache()
-        cached += next
-        next
-    }
-    // phase 2: plain inserts
-    instructions.insert.foreach { spec =>
-      insert(afterRetrieve, spec.table, spec.columns.toMap)
-    }
-
+    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     try {
-      if (compare)
-        this.compare(origData, compareQuery, Map.empty, where, exact)
-    } finally {
-      // free intermediates; repeated loads in a long-lived session
-      // would otherwise accumulate cached RDDs until LRU pressure
-      cached.dropRight(1).foreach(_.unpersist())
-    }
+      // immutable — the compare below validates this very frame, no
+      // clone needed (connector.py:424)
+      val pre = FrameOps.preprocess(data, columns).cache()
+      cached += pre
+      val instructions = schema.getLoadInstructions(pre.columns.toSeq)
 
-    FrameOps.postprocess(afterRetrieve, columns)
+      // phase 1: insert+retrieve in topo order, ids cascade through the frame
+      val afterRetrieve = instructions.insertAndRetrieve.foldLeft(pre) {
+        (acc, spec) =>
+          insert(acc, spec.table, spec.columns.toMap)
+          val (joined, next) = retrieveJoined(acc, spec.table, spec.alias,
+            spec.columns.toMap, replace, allowDuplication)
+          cached += joined
+          next
+      }
+      // phase 2: plain inserts
+      instructions.insert.foreach { spec =>
+        insert(afterRetrieve, spec.table, spec.columns.toMap)
+      }
+      if (compare)
+        this.compare(pre, compareQuery, Map.empty, where, exact)
+
+      cached.init.foreach(_.unpersist())
+      FrameOps.postprocess(afterRetrieve, columns)
+    } catch {
+      case e: Throwable => cached.foreach(_.unpersist()); throw e
+    }
   }
 }
 

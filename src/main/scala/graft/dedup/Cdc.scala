@@ -50,19 +50,10 @@ object Cdc {
       .foreach(c => require(!df.columns.contains(c),
         s"chunkSpans reserves column name $c; rename it in the input"))
     // the per-char posexplode + md5-per-gram below multiplies work
-    // ~chars× past the scan, so scan parallelism bounds the whole
-    // cut-finding pass (and the chunk-extraction md5 pass reuses the
-    // same frame): a corpus that arrives in fewer splits than the
-    // session has cores (one small parquet file ⇒ ONE task: measured
-    // single-task 2.2 s on the duplicate-chunk gate) is spread by doc
-    // id first — the same scale-adaptive dial as Substr.anchorsOf; a
-    // real corpus under maxPartitionBytes already fans out and never
-    // re-shuffles its text.
-    val cores = df.sparkSession.sparkContext.defaultParallelism
-    val base0 = df.select(col(idCol).as("id"), col(textCol).as("__t"))
-    val base =
-      if (base0.rdd.getNumPartitions >= cores) base0
-      else base0.repartition(cores, col("id"))
+    // ~chars× past the scan (and the chunk-extraction md5 pass reuses
+    // the same frame), so the docs are spread by doc id first
+    val base = graft.ops.Width.spread(
+      df.select(col(idCol).as("id"), col(textCol).as("__t")), "id")
     val cuts = base.select(col("id"),
         posexplode(transform(
           sequence(lit(1), greatest(length(col("__t")) - (k - 1), lit(1))),

@@ -50,19 +50,9 @@ object Substr {
   ): DataFrame = {
     val gram = col("__text").substr(col("__pos"), lit(k))
     // the per-char explode + md5 below multiplies work ~chars× past
-    // the scan, so scan parallelism bounds the whole anchor pass: a
-    // corpus that arrives in fewer splits than the session has cores
-    // (one small parquet file ⇒ ONE task: measured 1.9 s single-task
-    // anchor stages on the gate) is spread by doc id first. Scale-
-    // adaptive, not a constant: when the scan already fans out to
-    // >= the session's cores (any real corpus under
-    // maxPartitionBytes), this is a no-op and the text is never
-    // re-shuffled (§8: don't move payload bytes you don't have to).
-    val cores = df.sparkSession.sparkContext.defaultParallelism
-    val docs0 = df.select(col(idCol).as("__id"), col(textCol).as("__text"))
-    val docs =
-      if (docs0.rdd.getNumPartitions >= cores) docs0
-      else docs0.repartition(cores, col("__id"))
+    // the scan, so the docs are spread by doc id first
+    val docs = graft.ops.Width.spread(
+      df.select(col(idCol).as("__id"), col(textCol).as("__text")), "__id")
     val anchors = docs
       .select(col("__id"), col("__text"),
         explode(when(length(col("__text")) >= k,

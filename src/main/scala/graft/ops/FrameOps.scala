@@ -13,8 +13,8 @@ import graft.{CompareMissingRowsError, CompareNoExactMatchError, MissingKeysAfte
   * Scale notes: everything stays distributed; the only actions are the
   * row-count guards in [[mergeIds]] (cached first) and emptiness
   * probes (`limit(1)` scans, not full counts). The database side of
-  * [[mergeIds]] is broadcast by default — id/dimension tables are
-  * small relative to the data being loaded.
+  * [[mergeIds]] is always broadcast — id/dimension tables are small
+  * relative to the data being loaded.
   */
 object FrameOps {
 
@@ -114,8 +114,11 @@ object FrameOps {
     *   - no duplication unless `allowDuplication`,
     *   - no null ids after the join ([[MissingKeysAfterMergeError]]).
     *
-    * @param broadcastDb broadcast the db side (default): retrieved
-    *   id tables are deduped dimension rows, small next to the data.
+    * The db side is always broadcast: retrieved id tables are deduped
+    * dimension rows, small next to the data. The result is returned
+    * cached (the guards above already materialized it); the caller
+    * owns that cache and unpersists it when done. On a failed guard it
+    * is released before the error propagates.
     */
   def mergeIds(
       df: DataFrame,
@@ -123,15 +126,13 @@ object FrameOps {
       alias: String,
       table: String,
       allowDuplication: Boolean = false,
-      broadcastDb: Boolean = true,
   ): DataFrame = {
     require(dbDf.columns.contains(alias),
       "Provided alias not found in fetch from database.")
     val onColumns = df.columns.toSeq.intersect(dbDf.columns.toSeq)
 
     val l = df.alias("l")
-    val rRaw = matchTypes(dbDf, df.schema).alias("r")
-    val r = if (broadcastDb) broadcast(rRaw) else rRaw
+    val r = broadcast(matchTypes(dbDf, df.schema).alias("r"))
 
     val cond: Column = onColumns
       .map(c => col(s"l.`$c`") <=> col(s"r.`$c`"))

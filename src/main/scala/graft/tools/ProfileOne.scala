@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
@@ -10,23 +9,15 @@ import scala.collection.mutable
   * <query> <sfDir> [reps]"`. Prints, for the LAST rep (steady state),
   * every job's wall time and every stage's task count / task-time sum
   * / shuffle bytes — the local stand-in for the Spark UI's stage page
-  * (guide §1/§7), which the bench keeps disabled. Reads
-  * SPARK_GRAFT_CPUS like Bench so the profile matches the measured
-  * regime.
+  * (guide §1/§7), which the bench keeps disabled. Builds Bench's
+  * session ([[graft.GraftSession.local]]) so the profile matches the
+  * measured regime.
   */
 object ProfileOne {
   def main(args: Array[String]): Unit = {
     val name = args(0); val dir = args(1)
     val reps = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
 
     case class StageRow(id: Int, name: String, tasks: Int, taskMs: Long,

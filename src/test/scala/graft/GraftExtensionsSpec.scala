@@ -6,29 +6,17 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the SQL front door registered by [[GraftExtensions]]: each
   * function resolves in pure SQL and agrees with its Column-level
-  * source formulation. (ExtensionsDemo drives the same surface as a
-  * fresh-JVM main; this keeps it under `sbt test`.)
+  * source formulation.
   */
 class GraftExtensionsSpec extends AnyFunSuite with SparkSpec {
 
-  /** Fresh session (same SparkContext) WITH GraftExtensions —
-    * extensions only apply at session construction.
-    */
-  private def withExtendedSession[T](f: SparkSession => T): T = {
-    spark.sparkContext // ensure shared context exists
-    val orig = SparkSession.getActiveSession
-    val origDefault = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    try f(s)
-    finally {
-      SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-      orig.foreach(SparkSession.setActiveSession)
-      origDefault.foreach(SparkSession.setDefaultSession)
+  private def withExtendedSession[T](f: SparkSession => T): T =
+    f(GraftSession.withExtensions(spark))
+
+  test("rolling_hash in SQL matches the reference recurrence") {
+    withExtendedSession { s =>
+      val h = s.sql("SELECT rolling_hash('abc') AS h").collect().head.getLong(0)
+      assert(h === "abc".foldLeft(0L)((h, c) => (h * 31 + c) % 2147483647L))
     }
   }
 
@@ -102,6 +90,12 @@ class GraftExtensionsSpec extends AnyFunSuite with SparkSpec {
         .collect().map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getString(3)))
         .sorted.toSeq
       assert(viaSql === viaCol && viaSql.nonEmpty)
+      val windows = s.sql(
+        """SELECT w.chunk_id, w.start_tok, w.n_tokens, w.chunk_text
+          |FROM (SELECT explode(chunk_windows('a b c d e f g', 4, 3)) AS w)"""
+          .stripMargin).collect()
+        .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getString(3))).toSeq
+      assert(windows === Seq((0, 0, 4, "a b c d"), (1, 3, 4, "d e f g"), (2, 6, 1, "g")))
       val err = intercept[Exception] {
         s.sql("SELECT chunk_windows('x', 4, 1 + 2)").collect()
       }

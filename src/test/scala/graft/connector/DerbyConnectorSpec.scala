@@ -135,6 +135,68 @@ class DerbyConnectorSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  /** land <- stad <- straat: loading it runs two insert+retrieve steps
+    * (land, stad) and a plain insert (straat).
+    */
+  private def streetDb(): String = {
+    val url = freshDb()
+    ddl(url,
+      "CREATE TABLE land (id INT GENERATED ALWAYS AS IDENTITY PRIMARY KEY, " +
+        "land VARCHAR(50) NOT NULL UNIQUE)",
+      "CREATE TABLE stad (id INT GENERATED ALWAYS AS IDENTITY PRIMARY KEY, " +
+        "land_id INT NOT NULL REFERENCES land (id), stad VARCHAR(50) NOT NULL UNIQUE)",
+      "CREATE TABLE straat (id INT GENERATED ALWAYS AS IDENTITY PRIMARY KEY, " +
+        "stad_id INT NOT NULL REFERENCES stad (id), straat VARCHAR(50) NOT NULL UNIQUE, " +
+        "lengte VARCHAR(10))")
+    url
+  }
+
+  private def streets(land: String, stad: String, straat: String,
+      lengtes: String*): DataFrame = strDf(
+    "land" -> lengtes.map(_ => land), "stad" -> lengtes.map(_ => stad),
+    "straat" -> lengtes.map(_ => straat), "lengte" -> lengtes)
+
+  test("a successful load leaves only the cache under its returned frame") {
+    val url = streetDb()
+    spark.catalog.clearCache()
+    val sc = spark.sparkContext
+    val persistedBefore = sc.getPersistentRDDs.keySet
+    val rows = Connector.withConnection(spark, url)(c =>
+      c.load(streets("NL", "Utrecht", "Oudegracht", "1")).count())
+    assert(rows == 1)
+    assert(sc.getPersistentRDDs.keySet.diff(persistedBefore).size == 1)
+    spark.catalog.clearCache()
+  }
+
+  test("a load failing at its third step rolls back and releases every cache it took") {
+    val url = streetDb()
+    def tables(): Seq[Seq[String]] = Connector.withConnection(spark, url) { c =>
+      Seq("SELECT id, land FROM land ORDER BY id",
+        "SELECT id, land_id, stad FROM stad ORDER BY id",
+        "SELECT id, stad_id, straat, lengte FROM straat ORDER BY id").map { q =>
+        JdbcFrames.queryToDataFrame(spark, c.conn, q).collect().map(_.mkString("|")).toSeq
+      }
+    }
+    Connector.withConnection(spark, url)(c =>
+      c.load(streets("NL", "Utrecht", "Oudegracht", "1")))
+    val before = tables()
+    assert(before.forall(_.size == 1))
+
+    spark.catalog.clearCache()
+    val sc = spark.sparkContext
+    val persistedBefore = sc.getPersistentRDDs.keySet
+    // land and stad insert and retrieve new rows; straat, the third
+    // step, gets two rows with one UNIQUE key and different values, so
+    // its D1 check fails after the first two steps cached their frames
+    intercept[InsertingDataFailedError] {
+      Connector.withConnection(spark, url)(c =>
+        c.load(streets("BE", "Gent", "Veldstraat", "1", "2")))
+    }
+    assert(tables() == before)
+    assert(sc.getPersistentRDDs.keySet == persistedBefore)
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
   test("F1: vehicle star schema full load + compare round trip (test_sqlite_connector.py:130-234)") {
     val url = freshDb()
     ddl(url,

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{GraftExtensions, SparkSpec}
+import graft.{GraftSession, SparkSpec}
 
 /** Seeded randomized equivalence for [[RangeJoinRewrite]]: across
   * random points/intervals (including inverted and empty intervals,
@@ -15,24 +15,8 @@ import graft.{GraftExtensions, SparkSpec}
   */
 class RangeJoinRewritePropertySpec extends AnyFunSuite with SparkSpec {
 
-  private def withExtendedSession[T](f: SparkSession => T): T = {
-    spark.sparkContext
-    val orig = SparkSession.getActiveSession
-    val origDefault = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    try f(s)
-    finally {
-      s.conf.unset("spark.graft.rangeJoin.binWidth")
-      SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-      orig.foreach(SparkSession.setActiveSession)
-      origDefault.foreach(SparkSession.setDefaultSession)
-    }
-  }
+  private def withExtendedSession[T](f: SparkSession => T): T =
+    f(GraftSession.withExtensions(spark))
 
   test("rewritten point and overlap joins equal driver-side nested loops on random data") {
     withExtendedSession { s =>

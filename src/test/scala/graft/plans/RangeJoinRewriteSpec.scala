@@ -5,33 +5,12 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{GraftExtensions, SparkSpec}
+import graft.{GraftSession, SparkSpec}
 
 class RangeJoinRewriteSpec extends AnyFunSuite with SparkSpec {
 
-  /** A fresh session (same SparkContext) built WITH GraftExtensions —
-    * extensions only apply at session construction, so the shared test
-    * session can't see the rule. Active/default sessions are restored
-    * afterwards and the new session is never stopped (shared context).
-    */
-  private def withExtendedSession[T](f: SparkSession => T): T = {
-    spark.sparkContext // ensure shared context exists
-    val orig = SparkSession.getActiveSession
-    val origDefault = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    try f(s)
-    finally {
-      s.conf.unset("spark.graft.rangeJoin.binWidth")
-      SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-      orig.foreach(SparkSession.setActiveSession)
-      origDefault.foreach(SparkSession.setDefaultSession)
-    }
-  }
+  private def withExtendedSession[T](f: SparkSession => T): T =
+    f(GraftSession.withExtensions(spark))
 
   private def points(s: SparkSession): DataFrame =
     s.createDataFrame(
