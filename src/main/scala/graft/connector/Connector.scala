@@ -50,7 +50,13 @@ final class Connector(
       columns: Map[String, String] = Map.empty,
   ): Unit = {
     schema.checkSchemaNotEmpty()
-    val pre = FrameOps.preprocess(data, columns)
+    insertRenamed(data.withColumnsRenamed(columns), table)
+  }
+
+  /** [[insert]] of a frame already renamed. The full frame needs no
+    * dedup: [[FrameOps.getRows]] dedups the table's projection.
+    */
+  private def insertRenamed(pre: DataFrame, table: String): Unit = {
     val commonColumns = schema.parseInsert(table, pre.columns.toSeq)
     assert(commonColumns.nonEmpty, "No common columns were found.")
 
@@ -64,14 +70,19 @@ final class Connector(
     val insertable = commonColumns.filter(notNull.contains).foldLeft(rows) {
       (df, c) => df.filter(FrameOps.quoted(c).isNotNull)
     }
-    JdbcFrames.batchInsert(conn, query, insertable,
+    // collected once: the same rows feed the batch and the D1 check.
+    // D1 drops null-bearing rows, so checking `insertable` instead of
+    // `rows` checks the same rows
+    val collected = insertable.collect().toSeq
+    JdbcFrames.batchInsert(conn, query, collected, insertable.schema,
       dialect.insertParamOrder(commonColumns, uniqueSets))
 
     // D1: inserted rows must be contained in the table read-back
+    val inserted = JdbcFrames.frameOf(spark, collected, insertable.schema)
     val checkQuery = dialect.getCheckInsertQuery(table, commonColumns)
     val dbData = JdbcFrames.queryToDataFrame(spark, conn, checkQuery, lowercaseLabels = true)
     try FrameOps.compareFrames(
-      rows, FrameOps.matchTypes(dbData, rows.schema), exact = false)
+      inserted, FrameOps.matchTypes(dbData, inserted.schema), exact = false)
     catch {
       case e: CompareMissingRowsError =>
         throw new InsertingDataFailedError(
@@ -92,35 +103,35 @@ final class Connector(
       columns: Map[String, String] = Map.empty,
       replace: Boolean = true,
       allowDuplication: Boolean = false,
-  ): DataFrame =
-    retrieveJoined(data, table, alias, columns, replace, allowDuplication)._2
-
-  /** [[retrieveIds]], also returning the cached join its result reads
-    * from ([[FrameOps.mergeIds]]), so that [[load]] can release it.
-    */
-  private def retrieveJoined(
-      data: DataFrame,
-      table: String,
-      alias: String,
-      columns: Map[String, String],
-      replace: Boolean,
-      allowDuplication: Boolean,
-  ): (DataFrame, DataFrame) = {
+  ): DataFrame = {
     schema.checkSchemaNotEmpty()
     val pre = FrameOps.preprocess(data, columns)
+    val joined = retrieveJoined(pre, table, alias, allowDuplication, pre.count())
+    FrameOps.postprocess(dropReplaced(joined, table, replace), columns)
+  }
+
+  /** The id join of [[retrieveIds]] over a frame already renamed and
+    * deduped, whose row count is `inputRows`. The result is the cached
+    * join of [[FrameOps.mergeIds]]; the caller releases it.
+    */
+  private def retrieveJoined(
+      pre: DataFrame,
+      table: String,
+      alias: String,
+      allowDuplication: Boolean,
+      inputRows: => Long,
+  ): DataFrame = {
     val (primaryKey, commonColumns) =
       schema.parseRetrieve(table, alias, pre.columns.toSeq)
 
     val query = dialect.getRetrieveQuery(table, primaryKey, alias, commonColumns)
     val dbFetch = JdbcFrames.queryToDataFrame(spark, conn, query, lowercaseLabels = true)
 
-    val joined = FrameOps.mergeIds(pre, dbFetch, alias, table,
-      allowDuplication = allowDuplication)
-    val out =
-      if (replace) FrameOps.dropReplaced(joined, schema.getColumns(table))
-      else joined
-    (joined, FrameOps.postprocess(out, columns))
+    FrameOps.mergeIds(pre, dbFetch, alias, table, allowDuplication, inputRows)
   }
+
+  private def dropReplaced(joined: DataFrame, table: String, replace: Boolean): DataFrame =
+    if (replace) FrameOps.dropReplaced(joined, schema.getColumns(table)) else joined
 
   /** Committed-snapshot parallel read of a whole table via Spark's
     * distributed JDBC source ([[JdbcFrames.readTableParallel]]).
@@ -162,21 +173,41 @@ final class Connector(
   ): Unit = {
     schema.checkSchemaNotEmpty()
     val pre = FrameOps.preprocess(data, columns)
+    compareDistinct(pre, FrameOps.countAndNulls(pre), query, where, exact)
+  }
+
+  /** [[compare]] of a frame already renamed and deduped, whose
+    * [[FrameOps.countAndNulls]] is `preStats`.
+    */
+  private def compareDistinct(
+      pre: DataFrame,
+      preStats: => (Long, Boolean),
+      query: Option[String],
+      where: Option[String],
+      exact: Boolean,
+  ): Unit = {
     val q = query.getOrElse(schema.getCompareQuery(pre.columns.toSeq, where))
-    val dbRows = JdbcFrames.queryToDataFrame(spark, conn, q, lowercaseLabels = true)
-    val dbCount = dbRows.count()
+    val (dbRows, dbSchema) = JdbcFrames.readQuery(conn, q, lowercaseLabels = true)
+    val dbCount = dbRows.size.toLong
     assert(dbCount > 0, "Compare query yielded no results.")
-    val (preCount, preHasNulls) = FrameOps.countAndNulls(pre)
+    val (preCount, preHasNulls) = preStats
     if (!preHasNulls)
       assert(dbCount >= preCount,
         s"Compare query yielded fewer rows ($dbCount) than data.")
-    FrameOps.compareFrames(pre,
-      FrameOps.matchTypes(dbRows, pre.schema), exact = exact)
+    FrameOps.compareFrames(pre, FrameOps.matchTypes(
+      JdbcFrames.frameOf(spark, dbRows, dbSchema), pre.schema), exact = exact)
   }
 
   /** The flagship: plan, cascade inserts in topological order threading
     * retrieved ids through the frame, then validate — §3.1
     * (`connector.py:376-452`).
+    *
+    * Each step's data is evaluated once. The frame is deduped and
+    * cached once up front, and its row count taken at most once: every
+    * id join keeps it distinct with the same row count (rows that differ
+    * only on a table's dropped natural columns join to different keys),
+    * so no step re-dedups or re-counts it. Under `allowDuplication` a
+    * join may add rows, so each retrieve step counts its input.
     *
     * Each retrieve step caches the join that carries its ids (the next
     * step reads it). On success every cache but the last step's, which
@@ -200,23 +231,26 @@ final class Connector(
       // clone needed (connector.py:424)
       val pre = FrameOps.preprocess(data, columns).cache()
       cached += pre
+      lazy val preStats = FrameOps.countAndNulls(pre)
       val instructions = schema.getLoadInstructions(pre.columns.toSeq)
 
       // phase 1: insert+retrieve in topo order, ids cascade through the frame
       val afterRetrieve = instructions.insertAndRetrieve.foldLeft(pre) {
         (acc, spec) =>
-          insert(acc, spec.table, spec.columns.toMap)
-          val (joined, next) = retrieveJoined(acc, spec.table, spec.alias,
-            spec.columns.toMap, replace, allowDuplication)
+          val renames = spec.columns.toMap
+          val renamed = acc.withColumnsRenamed(renames)
+          insertRenamed(renamed, spec.table)
+          val joined = retrieveJoined(renamed, spec.table, spec.alias,
+            allowDuplication, if (allowDuplication) renamed.count() else preStats._1)
           cached += joined
-          next
+          FrameOps.postprocess(dropReplaced(joined, spec.table, replace), renames)
       }
       // phase 2: plain inserts
       instructions.insert.foreach { spec =>
-        insert(afterRetrieve, spec.table, spec.columns.toMap)
+        insertRenamed(afterRetrieve.withColumnsRenamed(spec.columns.toMap), spec.table)
       }
       if (compare)
-        this.compare(pre, compareQuery, Map.empty, where, exact)
+        compareDistinct(pre, preStats, compareQuery, where, exact)
 
       cached.init.foreach(_.unpersist())
       FrameOps.postprocess(afterRetrieve, columns)

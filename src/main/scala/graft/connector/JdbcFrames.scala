@@ -30,6 +30,17 @@ object JdbcFrames {
       sql: String,
       lowercaseLabels: Boolean = false,
   ): DataFrame = {
+    val (rows, schema) = readQuery(conn, sql, lowercaseLabels)
+    frameOf(spark, rows, schema)
+  }
+
+  /** The rows and schema [[queryToDataFrame]] reads, still on the
+    * driver — for callers that also need facts the driver already
+    * holds, such as the row count.
+    */
+  private[graft] def readQuery(
+      conn: Connection, sql: String, lowercaseLabels: Boolean,
+  ): (Seq[Row], StructType) = {
     val st = conn.createStatement()
     try {
       val rs = st.executeQuery(sql)
@@ -40,17 +51,23 @@ object JdbcFrames {
         // loader's column names are lower-case throughout
         val label = md.getColumnLabel(i)
         StructField(if (lowercaseLabels) label.toLowerCase else label,
-          jdbcToSpark(md.getColumnType(i)), nullable = true)
+          jdbcToSpark(md.getColumnType(i), md.getPrecision(i), md.getScale(i)),
+          nullable = true)
       }
-      val schema = StructType(fields)
       val rows = mutable.ArrayBuffer.empty[Row]
       while (rs.next()) {
         rows += Row.fromSeq((1 to n).map(i => readValue(rs, i, fields(i - 1).dataType)))
       }
       rs.close()
-      spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, 1), schema)
+      (rows.toSeq, StructType(fields))
     } finally st.close()
   }
+
+  /** One-partition frame over driver-held rows (B6's materialization). */
+  private[graft] def frameOf(
+      spark: SparkSession, rows: Seq[Row], schema: StructType,
+  ): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
 
   /** Committed-snapshot parallel table read (the scale companion to
     * [[queryToDataFrame]]): Spark's distributed JDBC source, one
@@ -118,18 +135,19 @@ object JdbcFrames {
     if (lowercaseLabels) df.toDF(df.columns.map(_.toLowerCase): _*) else df
   }
 
-  /** Batch-execute a parameterized insert for every row of `df`
+  /** Batch-execute a parameterized insert for every row of `rows`
     * (B5 — the reference's `cursor.executemany`, `connector.py:212`).
-    * Parameters bind in `columns` order.
+    * Parameter i binds the field of `schema` named `columns(i)`.
     */
   def batchInsert(
-      conn: Connection, sql: String, df: DataFrame, columns: Seq[String],
+      conn: Connection, sql: String, rows: Seq[Row], schema: StructType,
+      columns: Seq[String],
   ): Unit = {
-    val rows = df.select(columns.map(org.apache.spark.sql.functions.col): _*).collect()
+    val fields = columns.map(schema.fieldIndex)
     val ps = conn.prepareStatement(sql)
     try {
       rows.foreach { row =>
-        columns.indices.foreach { i => bind(ps, i + 1, row.get(i)) }
+        fields.zipWithIndex.foreach { case (f, i) => bind(ps, i + 1, row.get(f)) }
         ps.addBatch()
       }
       ps.executeBatch()
@@ -154,11 +172,18 @@ object JdbcFrames {
     case other                     => ps.setObject(idx, other)
   }
 
-  private def jdbcToSpark(t: Int): DataType = t match {
+  /** Spark type of a result column. DECIMAL/NUMERIC keep the
+    * column's own precision and scale (clamped to Spark's 38 digits);
+    * only a driver that reports no precision gets `decimal(38,18)`.
+    */
+  private def jdbcToSpark(t: Int, precision: Int, scale: Int): DataType = t match {
     case Types.INTEGER | Types.SMALLINT | Types.TINYINT => IntegerType
     case Types.BIGINT                                   => LongType
     case Types.DOUBLE | Types.FLOAT | Types.REAL        => DoubleType
-    case Types.DECIMAL | Types.NUMERIC                  => DecimalType(38, 18)
+    case Types.DECIMAL | Types.NUMERIC if precision <= 0 => DecimalType(38, 18)
+    case Types.DECIMAL | Types.NUMERIC =>
+      val p = math.min(precision, DecimalType.MAX_PRECISION)
+      DecimalType(p, math.min(math.max(scale, 0), p))
     case Types.BOOLEAN | Types.BIT                      => BooleanType
     case Types.DATE                                     => DateType
     case Types.TIMESTAMP                                => TimestampType

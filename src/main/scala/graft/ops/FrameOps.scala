@@ -14,7 +14,10 @@ import graft.{CompareMissingRowsError, CompareNoExactMatchError, MissingKeysAfte
   * row-count guards in [[mergeIds]] (cached first) and emptiness
   * probes (`limit(1)` scans, not full counts). The database side of
   * [[mergeIds]] is always broadcast — id/dimension tables are small
-  * relative to the data being loaded.
+  * relative to the data being loaded. `Connector.load` evaluates each
+  * step once: it dedups and counts the frame once up front (each id
+  * join keeps it distinct and its row count unchanged), and D1 checks
+  * the very rows collected for the JDBC batch.
   */
 object FrameOps {
 
@@ -26,7 +29,7 @@ object FrameOps {
     // post-dedup coalesce(1): the dedup's map-side partial aggregation
     // still runs distributed; only the (already per-partition-deduped)
     // final merge collapses to one task. Loader frames are dimension
-    // rows headed for a single-connection JDBC boundary — batchInsert
+    // rows headed for a single-connection JDBC boundary — the insert
     // COLLECTS them — so every downstream consumer otherwise pays
     // shuffle.partitions near-empty tasks per action (and a .cache()
     // on the result pins that width against AQE coalescing: measured
@@ -126,6 +129,19 @@ object FrameOps {
       alias: String,
       table: String,
       allowDuplication: Boolean = false,
+  ): DataFrame =
+    mergeIds(df, dbDf, alias, table, allowDuplication, df.count())
+
+  /** [[mergeIds]] with `df`'s row count supplied by a caller that
+    * already knows it (evaluated only when the guards need it).
+    */
+  private[graft] def mergeIds(
+      df: DataFrame,
+      dbDf: DataFrame,
+      alias: String,
+      table: String,
+      allowDuplication: Boolean,
+      inputRows: => Long,
   ): DataFrame = {
     require(dbDf.columns.contains(alias),
       "Provided alias not found in fetch from database.")
@@ -143,7 +159,7 @@ object FrameOps {
       .select(df.columns.map(c => col(s"l.`$c`")) :+ col(s"r.`$alias`").as(alias): _*)
       .cache()
     try {
-      val origLen = df.count()
+      val origLen = inputRows
       // row count + null-id count in one aggregation job
       val stats = joined.agg(count(lit(1)).as("n"),
         sum(when(quoted(alias).isNull, 1L).otherwise(0L)).as("nn")).first()

@@ -169,11 +169,12 @@ object LinkAnalysis {
       live = List(aRdd, hRdd).flatten
       scores = next
     }
-    // free edges and nodes; the LAST round's two checkpoints stay —
-    // the returned frame reads the final hub/auth rows from them
-    // (the pre-observation version leaked its final cut the same way)
-    (checkpointRdd(e) ++ checkpointRdd(nodes)).foreach(_.unpersist(false))
-    scores
+    // cut the result itself, so the last round's two half-step
+    // checkpoints, the edges and the nodes can all be freed: only the
+    // returned frame's one checkpoint outlives the call
+    val out = scores.localCheckpoint()
+    (live ++ checkpointRdd(e) ++ checkpointRdd(nodes)).foreach(_.unpersist(false))
+    out
   }
 
   /** Degree-oriented triangle count over an undirected edge set —

@@ -1,9 +1,15 @@
 package graft.connector
 
 import java.sql.DriverManager
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.graftbridge.ListenerBus
+import org.apache.spark.sql.types.{DecimalType, StringType, StructField, StructType}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft._
@@ -195,6 +201,131 @@ class DerbyConnectorSpec extends AnyFunSuite with SparkSpec {
     assert(tables() == before)
     assert(sc.getPersistentRDDs.keySet == persistedBefore)
     assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  /** `body`'s result and the SQL actions it ran, by name (`collect`,
+    * `count`, ...).
+    */
+  private def withActions[A](body: => A): (A, Seq[String]) = {
+    val seen = new ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen.add(funcName)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
+        seen.add(funcName)
+    }
+    ListenerBus.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      val result = body
+      ListenerBus.drain(spark.sparkContext)
+      (result, seen.asScala.toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("one load of the three-table streets fixture runs at most 10 SQL actions") {
+    // each of the three inserts collects its rows once and runs D1 on
+    // them (6), the load counts its frame once (1), each of the two
+    // retrieve steps runs its guard (2), and the exact compare runs
+    // once (1); before each step was evaluated once, the load ran 13
+    val url = streetDb()
+    val (_, actions) = withActions(Connector.withConnection(spark, url)(c =>
+      c.load(streets("NL", "Utrecht", "Oudegracht", "1"))))
+    assert(actions.size <= 10, actions.mkString(", "))
+    assert(!actions.contains("count"), actions.mkString(", "))
+    spark.catalog.clearCache()
+  }
+
+  test("load(compare = false) runs no SQL action the compare-free load did not run") {
+    // the same load without the compare: 10 actions before each step
+    // was evaluated once, 9 now (the frame's count replaces the first
+    // retrieve step's own count, the second step's is gone)
+    val url = streetDb()
+    val (_, actions) = withActions(Connector.withConnection(spark, url)(c =>
+      c.load(streets("NL", "Utrecht", "Oudegracht", "1"), compare = false)))
+    assert(actions.size <= 9, actions.mkString(", "))
+    spark.catalog.clearCache()
+  }
+
+  test("load(allowDuplication = true) counts every retrieve step's input") {
+    val url = freshDb()
+    // no UNIQUE on tag: the load inserts a third 'x', and its retrieve
+    // step then matches three ids
+    ddl(url,
+      "CREATE TABLE tag (id INT GENERATED ALWAYS AS IDENTITY PRIMARY KEY, naam VARCHAR(20) NOT NULL)",
+      "CREATE TABLE item (tag_id INT REFERENCES tag (id), waarde VARCHAR(20) NOT NULL)",
+      "INSERT INTO tag (naam) VALUES ('x'), ('x')")
+    val data = strDf("naam" -> Seq("x"), "waarde" -> Seq("1"))
+
+    val dup = intercept[AssertionError] {
+      Connector.withConnection(spark, url)(c => c.load(data))
+    }
+    assert(dup.getMessage.contains("Rows were duplicated"), dup.getMessage)
+    val (rows, actions) = withActions(Connector.withConnection(spark, url)(c =>
+      c.load(data, allowDuplication = true).collect().toSeq))
+    assert(rows.size == 3 && rows.map(_.getAs[Int]("tag_id")).distinct.size == 3)
+    // the join added rows, so the step counts its input instead of
+    // reusing the frame's count
+    assert(actions.count(_ == "count") == 1, actions.mkString(", "))
+    spark.catalog.clearCache()
+  }
+
+  test("insert dedups the rows it inserts and D1 reports the rows a conflict kept out") {
+    val url = freshDb()
+    ddl(url,
+      "CREATE TABLE a (id INT GENERATED ALWAYS AS IDENTITY PRIMARY KEY, " +
+        "naam VARCHAR(50) NOT NULL UNIQUE, waarde INT NOT NULL)")
+    def frame(rows: (String, String, String)*): DataFrame =
+      strDf("naam" -> rows.map(_._1), "waarde" -> rows.map(_._2), "extra" -> rows.map(_._3))
+        .withColumn("waarde", col("waarde").cast("int"))
+    def table(): Seq[(String, Int)] = Connector.withConnection(spark, url) { c =>
+      JdbcFrames.queryToDataFrame(spark, c.conn, "SELECT naam, waarde FROM a ORDER BY naam")
+        .collect().map(r => (r.getString(0), r.getInt(1))).toSeq
+    }
+
+    // a duplicate full row, and two rows that project to the same (naam, waarde)
+    Connector.withConnection(spark, url)(c =>
+      c.insert(frame(("a", "1", "x"), ("a", "1", "x"), ("a", "1", "y"), ("b", "2", "z")), "a"))
+    assert(table() == Seq(("a", 1), ("b", 2)))
+
+    // 'a' exists with another waarde: the UNIQUE key keeps (a, 4) out
+    val err = intercept[InsertingDataFailedError] {
+      Connector.withConnection(spark, url)(c =>
+        c.insert(frame(("a", "4", "x"), ("a", "4", "x"), ("a", "4", "y")), "a"))
+    }
+    assert(err.getMessage.contains(
+      "Some rows from data were not found in the database:\n[a,4]\n"), err.getMessage)
+    assert(table() == Seq(("a", 1), ("b", 2)))
+  }
+
+  test("DECIMAL(31,0) values round-trip through queryToDataFrame and load") {
+    val big = new java.math.BigDecimal("1234567890123456789012345")
+    val url = freshDb()
+    ddl(url,
+      "CREATE TABLE bedrag (id INT GENERATED ALWAYS AS IDENTITY PRIMARY KEY, " +
+        "amount DECIMAL(31,0) NOT NULL UNIQUE)",
+      "CREATE TABLE boeking (bedrag_id INT REFERENCES bedrag (id), " +
+        "omschrijving VARCHAR(20) NOT NULL)")
+    Connector.withConnection(spark, url) { c =>
+      val back = JdbcFrames.queryToDataFrame(spark, c.conn,
+        "VALUES CAST(1234567890123456789012345 AS DECIMAL(31,0))")
+      assert(back.schema.head.dataType == DecimalType(31, 0))
+      assert(back.collect().map(_.getDecimal(0)).toSeq == Seq(big))
+    }
+
+    val data = spark.createDataFrame(java.util.List.of(Row(big, "salaris")),
+      StructType(Seq(StructField("amount", DecimalType(31, 0)),
+        StructField("omschrijving", StringType))))
+    Connector.withConnection(spark, url) { c =>
+      val loaded = c.load(data).collect()
+      assert(loaded.map(_.getAs[String]("omschrijving")).toSeq == Seq("salaris"))
+      val db = JdbcFrames.queryToDataFrame(spark, c.conn,
+        "SELECT bedrag.amount, boeking.omschrijving FROM boeking " +
+          "JOIN bedrag ON boeking.bedrag_id = bedrag.id", lowercaseLabels = true)
+      assert(db.collect().map(r => (r.getDecimal(0), r.getString(1))).toSeq ==
+        Seq((big, "salaris")))
+    }
+    spark.catalog.clearCache()
   }
 
   test("F1: vehicle star schema full load + compare round trip (test_sqlite_connector.py:130-234)") {

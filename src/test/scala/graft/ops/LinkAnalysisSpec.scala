@@ -61,6 +61,18 @@ class LinkAnalysisSpec extends AnyFunSuite with SparkSpec {
     spokes.foreach(s => assert(out(s) == (1000000L, 0L), s"$s -> ${out(s)}"))
   }
 
+  test("HITS: only the returned frame's checkpoint outlives the call") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val spokes = (1 to 6).map(i => s"s$i")
+    val edges = spokes.map(s => (s, "ctr")).toDF("src", "dst")
+    val out = LinkAnalysis.hits(edges, iters = 3)
+    assert(out.count() == 7)
+    val kept = sc.getPersistentRDDs.keySet.diff(before)
+    assert(kept.size <= 1, s"persisted RDDs left behind: $kept")
+    kept.foreach(id => sc.getPersistentRDDs(id).unpersist(false))
+  }
+
   test("triangles: K4 has 4, a path has 0, duplicates/directions collapse") {
     val k4 = (for {
       a <- Seq("a", "b", "c", "d"); b <- Seq("a", "b", "c", "d")
