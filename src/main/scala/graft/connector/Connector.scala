@@ -4,6 +4,7 @@ import java.sql.{Connection, DriverManager}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.internal.SQLConf
 
 import graft.{CompareMissingRowsError, InsertingDataFailedError}
 import graft.ops.FrameOps
@@ -17,9 +18,11 @@ import graft.schema.Schema
   * makes `load`'s validation failure undo the whole load.
   *
   * Spark shape: orchestration runs on the driver; data transformations
-  * (dedup, id joins, containment compares) are distributed DataFrame
-  * ops; only deduped dimension rows cross the JDBC boundary (see
-  * [[JdbcFrames]]).
+  * (dedup, id joins, the final compare) are distributed DataFrame ops;
+  * only deduped dimension rows cross the JDBC boundary (see
+  * [[JdbcFrames]]). The per-insert read-back check (D1) compares two
+  * row sets the driver already holds, so it runs there
+  * ([[FrameOps.containsRows]]).
   */
 final class Connector(
     val spark: SparkSession,
@@ -78,12 +81,12 @@ final class Connector(
       dialect.insertParamOrder(commonColumns, uniqueSets))
 
     // D1: inserted rows must be contained in the table read-back
-    val inserted = JdbcFrames.frameOf(spark, collected, insertable.schema)
-    val checkQuery = dialect.getCheckInsertQuery(table, commonColumns)
-    val dbData = JdbcFrames.queryToDataFrame(spark, conn, checkQuery, lowercaseLabels = true)
-    try FrameOps.compareFrames(
-      inserted, FrameOps.matchTypes(dbData, inserted.schema), exact = false)
-    catch {
+    val (dbRows, dbSchema) = JdbcFrames.readQuery(conn,
+      dialect.getCheckInsertQuery(table, commonColumns), lowercaseLabels = true)
+    // cast with this session's time zone and ANSI mode, as in Spark
+    try SQLConf.withExistingConf(spark.sessionState.conf) {
+      FrameOps.containsRows(collected, insertable.schema, dbRows, dbSchema)
+    } catch {
       case e: CompareMissingRowsError =>
         throw new InsertingDataFailedError(
           s"Encountered an error upon inserting data into table '$table':\n\t${e.getMessage}\n" +
@@ -207,7 +210,9 @@ final class Connector(
     * id join keeps it distinct with the same row count (rows that differ
     * only on a table's dropped natural columns join to different keys),
     * so no step re-dedups or re-counts it. Under `allowDuplication` a
-    * join may add rows, so each retrieve step counts its input.
+    * join may add rows, so each retrieve step counts its input. Each
+    * insert runs one Spark job, the collect of its rows; its D1 check
+    * runs on the driver over those rows and the table's read-back.
     *
     * Each retrieve step caches the join that carries its ids (the next
     * step reads it). On success every cache but the last step's, which

@@ -17,7 +17,9 @@ import org.apache.spark.sql.types._
   * which would break that contract and, for Derby in-memory DBs, not
   * see uncommitted state. Rows crossing this boundary are deduped
   * dimension rows (small by construction); the bulk work — joins,
-  * dedup, compare — stays distributed in Spark.
+  * dedup, the final compare — stays distributed in Spark. The
+  * per-insert check (D1) reads its table back with [[readQuery]] and
+  * compares on the driver, where the inserted rows already are.
   */
 object JdbcFrames {
 
@@ -37,6 +39,10 @@ object JdbcFrames {
   /** The rows and schema [[queryToDataFrame]] reads, still on the
     * driver — for callers that also need facts the driver already
     * holds, such as the row count.
+    *
+    * CHAR/NCHAR values lose their trailing pad spaces: Derby pads a
+    * `CHAR(5)` value 'NL' to 'NL   ' on read, and SQL compares CHAR
+    * values pad-insensitively, so the frame's 'NL' is the value stored.
     */
   private[graft] def readQuery(
       conn: Connection, sql: String, lowercaseLabels: Boolean,
@@ -54,9 +60,16 @@ object JdbcFrames {
           jdbcToSpark(md.getColumnType(i), md.getPrecision(i), md.getScale(i)),
           nullable = true)
       }
+      val padded = (1 to n).map { i =>
+        val t = md.getColumnType(i)
+        t == Types.CHAR || t == Types.NCHAR
+      }
       val rows = mutable.ArrayBuffer.empty[Row]
       while (rs.next()) {
-        rows += Row.fromSeq((1 to n).map(i => readValue(rs, i, fields(i - 1).dataType)))
+        rows += Row.fromSeq((1 to n).map { i =>
+          val v = readValue(rs, i, fields(i - 1).dataType)
+          if (padded(i - 1) && v != null) trimPad(v.asInstanceOf[String]) else v
+        })
       }
       rs.close()
       (rows.toSeq, StructType(fields))
@@ -189,6 +202,13 @@ object JdbcFrames {
     case Types.TIMESTAMP                                => TimestampType
     case Types.BINARY | Types.VARBINARY | Types.LONGVARBINARY => BinaryType
     case _                                              => StringType
+  }
+
+  /** `s` without its trailing spaces. */
+  private def trimPad(s: String): String = {
+    var end = s.length
+    while (end > 0 && s.charAt(end - 1) == ' ') end -= 1
+    s.substring(0, end)
   }
 
   private def readValue(rs: ResultSet, i: Int, dt: DataType): Any = {

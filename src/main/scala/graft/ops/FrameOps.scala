@@ -1,10 +1,16 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import scala.collection.mutable
 
-import graft.{CompareMissingRowsError, CompareNoExactMatchError, MissingKeysAfterMergeError}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, EvalMode, GenericInternalRow}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{DataType, StringType, StructType}
+
+import graft.{CompareMissingRowsError, CompareNoExactMatchError, MatchDatatypesError,
+  MissingKeysAfterMergeError}
 
 /** DataFrame operator family — the Spark port of the reference's
   * `sql_autoloader/dataframe_operations.py` + `connector.py:26-59`
@@ -16,8 +22,10 @@ import graft.{CompareMissingRowsError, CompareNoExactMatchError, MissingKeysAfte
   * [[mergeIds]] is always broadcast — id/dimension tables are small
   * relative to the data being loaded. `Connector.load` evaluates each
   * step once: it dedups and counts the frame once up front (each id
-  * join keeps it distinct and its row count unchanged), and D1 checks
-  * the very rows collected for the JDBC batch.
+  * join keeps it distinct and its row count unchanged). Its D1 check
+  * runs no Spark job: the rows collected for the JDBC batch and the
+  * table's read-back are both on the driver, so [[containsRows]]
+  * compares them there.
   */
 object FrameOps {
 
@@ -98,16 +106,18 @@ object FrameOps {
       targetByName.get(c) match {
         case Some(dt) if dt != dbDf.schema(c).dataType =>
           val orig = quoted(c)
+          val (before, after) = uncastable(c, dt)
           when(orig.isNotNull && orig.try_cast(dt).isNull,
-            raise_error(concat(
-              lit(s"MatchDatatypesError: column `$c` value '"),
-              orig.cast("string"),
-              lit(s"' does not cast to ${dt.sql}"))))
+            raise_error(concat(lit(before), orig.cast("string"), lit(after))))
             .otherwise(orig.cast(dt)).as(c)
         case _ => quoted(c)
       }
     }: _*)
   }
+
+  /** The text around the value in [[matchTypes]]' failure message. */
+  private def uncastable(column: String, dt: DataType): (String, String) =
+    (s"MatchDatatypesError: column `$column` value '", s"' does not cast to ${dt.sql}")
 
   /** A6 (`dataframe_operations.py:106-161`): left equi-join of data
     * with `(pk-as-alias, cols...)` fetched from the database, joining
@@ -216,10 +226,87 @@ object FrameOps {
             "database not allowing those, set exact=False")
     } else {
       val missing = data.except(db).limit(20).collect()
-      if (missing.nonEmpty)
-        throw new CompareMissingRowsError(
-          s"Some rows from data were not found in the database:\n${missing.mkString("\n")}")
+      if (missing.nonEmpty) throw missingRows(missing)
     }
+  }
+
+  private def missingRows(rows: Iterable[Row]): CompareMissingRowsError =
+    new CompareMissingRowsError(
+      s"Some rows from data were not found in the database:\n${rows.mkString("\n")}")
+
+  /** `compareFrames(data, matchTypes(db, dataSchema), exact = false)`
+    * over rows the driver already holds, evaluated on the driver with
+    * no Spark job: the same outcome, the same
+    * [[CompareMissingRowsError]] text and the same MatchDatatypesError
+    * label on an impossible cast. For flat schemas, as JDBC reads are.
+    *
+    * Both sides become Catalyst rows. Each database column whose type
+    * differs from its data column's is cast with Catalyst's own `Cast`
+    * (guarded by its `TRY` mode, as in [[matchTypes]]), in the time zone
+    * and ANSI mode of the active `SQLConf`. The database
+    * rows are then keyed in a hash set: `GenericInternalRow` equality
+    * is null-safe, compares byte arrays by content and NaNs as equal,
+    * and −0.0 is normalised to 0.0 as `except` does. Data rows holding
+    * a null or NaN are dropped first, as `na.drop()` does; the first
+    * 20 distinct missing rows are reported in data order.
+    */
+  private[graft] def containsRows(
+      data: Seq[Row], dataSchema: StructType,
+      dbRows: Seq[Row], dbSchema: StructType,
+  ): Unit = {
+    val conf = SQLConf.get
+    val tz = Some(conf.sessionLocalTimeZone)
+    // per data column: its value in a database row, cast to its type
+    val fromDb: Array[InternalRow => Any] = dataSchema.fields.map { f =>
+      val i = dbSchema.fields.indexWhere(d => conf.resolver(d.name, f.name))
+      require(i >= 0, s"Column `${f.name}` is missing from the database rows.")
+      val ref = BoundReference(i, dbSchema(i).dataType, nullable = true)
+      if (ref.dataType == f.dataType) (r: InternalRow) => normalized(ref.eval(r))
+      else {
+        val guard = Cast(ref, f.dataType, tz, EvalMode.TRY)
+        val cast = Cast(ref, f.dataType, tz, EvalMode.fromSQLConf(conf))
+        val (before, after) = uncastable(dbSchema(i).name, f.dataType)
+        (r: InternalRow) =>
+          if (!r.isNullAt(i) && guard.eval(r) == null)
+            throw new MatchDatatypesError(
+              before + Cast(ref, StringType, tz).eval(r) + after)
+          else normalized(cast.eval(r))
+      }
+    }
+    val toDb = CatalystTypeConverters.createToCatalystConverter(dbSchema)
+    val db = new mutable.HashSet[GenericInternalRow]()
+    dbRows.foreach { row =>
+      val r = toDb(row).asInstanceOf[InternalRow]
+      db += new GenericInternalRow(fromDb.map(_(r)))
+    }
+
+    val toData = CatalystTypeConverters.createToCatalystConverter(dataSchema)
+    val missing = mutable.LinkedHashSet.empty[GenericInternalRow]
+    val it = data.iterator
+    while (missing.size < 20 && it.hasNext) {
+      val values = toData(it.next()).asInstanceOf[InternalRow].toSeq(dataSchema)
+      val key = new GenericInternalRow(values.map(normalized).toArray)
+      if (!values.exists(isNullOrNaN) && !db.contains(key)) missing += key
+    }
+    if (missing.nonEmpty) {
+      val toRow = CatalystTypeConverters.createToScalaConverter(dataSchema)
+      throw missingRows(missing.map(toRow(_).asInstanceOf[Row]))
+    }
+  }
+
+  /** A Catalyst value as `except` groups it: −0.0 as 0.0, every NaN alike. */
+  private def normalized(v: Any): Any = v match {
+    case d: Double => if (d.isNaN) Double.NaN else if (d == 0.0d) 0.0d else d
+    case f: Float  => if (f.isNaN) Float.NaN else if (f == 0.0f) 0.0f else f
+    case other     => other
+  }
+
+  /** A value `na.drop()` drops its row for. */
+  private def isNullOrNaN(v: Any): Boolean = v match {
+    case null      => true
+    case d: Double => d.isNaN
+    case f: Float  => f.isNaN
+    case _         => false
   }
 
   /** A11 (`dataframe_operations.py:33-34`): drop rows containing any

@@ -8,7 +8,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.graftbridge.ListenerBus
-import org.apache.spark.sql.types.{DecimalType, StringType, StructField, StructType}
+import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -157,6 +157,16 @@ class DerbyConnectorSpec extends AnyFunSuite with SparkSpec {
     url
   }
 
+  /** The rows of the streets tables, one string per row. */
+  private def streetTables(url: String): Seq[Seq[String]] =
+    Connector.withConnection(spark, url) { c =>
+      Seq("SELECT id, land FROM land ORDER BY id",
+        "SELECT id, land_id, stad FROM stad ORDER BY id",
+        "SELECT id, stad_id, straat, lengte FROM straat ORDER BY id").map { q =>
+        JdbcFrames.queryToDataFrame(spark, c.conn, q).collect().map(_.mkString("|")).toSeq
+      }
+    }
+
   private def streets(land: String, stad: String, straat: String,
       lengtes: String*): DataFrame = strDf(
     "land" -> lengtes.map(_ => land), "stad" -> lengtes.map(_ => stad),
@@ -176,16 +186,9 @@ class DerbyConnectorSpec extends AnyFunSuite with SparkSpec {
 
   test("a load failing at its third step rolls back and releases every cache it took") {
     val url = streetDb()
-    def tables(): Seq[Seq[String]] = Connector.withConnection(spark, url) { c =>
-      Seq("SELECT id, land FROM land ORDER BY id",
-        "SELECT id, land_id, stad FROM stad ORDER BY id",
-        "SELECT id, stad_id, straat, lengte FROM straat ORDER BY id").map { q =>
-        JdbcFrames.queryToDataFrame(spark, c.conn, q).collect().map(_.mkString("|")).toSeq
-      }
-    }
     Connector.withConnection(spark, url)(c =>
       c.load(streets("NL", "Utrecht", "Oudegracht", "1")))
-    val before = tables()
+    val before = streetTables(url)
     assert(before.forall(_.size == 1))
 
     spark.catalog.clearCache()
@@ -198,7 +201,7 @@ class DerbyConnectorSpec extends AnyFunSuite with SparkSpec {
       Connector.withConnection(spark, url)(c =>
         c.load(streets("BE", "Gent", "Veldstraat", "1", "2")))
     }
-    assert(tables() == before)
+    assert(streetTables(url) == before)
     assert(sc.getPersistentRDDs.keySet == persistedBefore)
     assert(spark.sharedState.cacheManager.isEmpty)
   }
@@ -223,27 +226,29 @@ class DerbyConnectorSpec extends AnyFunSuite with SparkSpec {
     } finally spark.listenerManager.unregister(listener)
   }
 
-  test("one load of the three-table streets fixture runs at most 10 SQL actions") {
-    // each of the three inserts collects its rows once and runs D1 on
-    // them (6), the load counts its frame once (1), each of the two
-    // retrieve steps runs its guard (2), and the exact compare runs
-    // once (1); before each step was evaluated once, the load ran 13
+  test("one load of the three-table streets fixture runs at most 7 SQL actions") {
+    // each of the three inserts collects its rows once (3) and checks
+    // D1 on the driver (0), the load counts its frame once (1), each of
+    // the two retrieve steps runs its guard (2), and the exact compare
+    // runs once (1); with D1 in Spark the load ran 10, and 13 before
+    // each step was evaluated once
     val url = streetDb()
     val (_, actions) = withActions(Connector.withConnection(spark, url)(c =>
       c.load(streets("NL", "Utrecht", "Oudegracht", "1"))))
-    assert(actions.size <= 10, actions.mkString(", "))
+    assert(actions.size <= 7, actions.mkString(", "))
     assert(!actions.contains("count"), actions.mkString(", "))
     spark.catalog.clearCache()
   }
 
   test("load(compare = false) runs no SQL action the compare-free load did not run") {
-    // the same load without the compare: 10 actions before each step
-    // was evaluated once, 9 now (the frame's count replaces the first
-    // retrieve step's own count, the second step's is gone)
+    // the same load without the compare: the three inserts' collects,
+    // the frame's count (it replaces the first retrieve step's own
+    // count, the second step's is gone) and the two retrieve guards;
+    // 9 with D1 in Spark, 10 before each step was evaluated once
     val url = streetDb()
     val (_, actions) = withActions(Connector.withConnection(spark, url)(c =>
       c.load(streets("NL", "Utrecht", "Oudegracht", "1"), compare = false)))
-    assert(actions.size <= 9, actions.mkString(", "))
+    assert(actions.size <= 6, actions.mkString(", "))
     spark.catalog.clearCache()
   }
 
@@ -325,6 +330,97 @@ class DerbyConnectorSpec extends AnyFunSuite with SparkSpec {
       assert(db.collect().map(r => (r.getDecimal(0), r.getString(1))).toSeq ==
         Seq((big, "salaris")))
     }
+    spark.catalog.clearCache()
+  }
+
+  test("a CHAR(5) natural key loads, retrieves and compares despite Derby's padding") {
+    val url = freshDb()
+    ddl(url,
+      "CREATE TABLE land (id INT GENERATED ALWAYS AS IDENTITY PRIMARY KEY, " +
+        "land CHAR(5) NOT NULL UNIQUE)",
+      "CREATE TABLE stad (land_id INT NOT NULL REFERENCES land (id), " +
+        "stad VARCHAR(50) NOT NULL UNIQUE)")
+    val data = strDf("land" -> Seq("NL", "BE", "NL"), "stad" -> Seq("Utrecht", "Gent", "Delft"))
+    Connector.withConnection(spark, url) { c =>
+      assert(c.load(data).count() == 3)
+      val back = JdbcFrames.queryToDataFrame(spark, c.conn, "SELECT land FROM land ORDER BY land")
+      assert(back.collect().map(_.getString(0)).toSeq == Seq("BE", "NL"))
+    }
+    spark.catalog.clearCache()
+  }
+
+  test("D1 and the compare take one column of each type the JDBC reader maps") {
+    // the reader widens SMALLINT and REAL and keeps the column's own
+    // DECIMAL scale, so D1 and the compare cast three of these columns
+    // back to the frame's types
+    val url = freshDb()
+    ddl(url,
+      "CREATE TABLE meting (id INT GENERATED ALWAYS AS IDENTITY PRIMARY KEY, " +
+        "klein SMALLINT NOT NULL UNIQUE, enkel REAL NOT NULL, dubbel DOUBLE NOT NULL, " +
+        "bedrag DECIMAL(10,4) NOT NULL, tijd TIMESTAMP NOT NULL, " +
+        "bytes VARCHAR(16) FOR BIT DATA NOT NULL, opmerking VARCHAR(20))")
+    val schema = StructType(Seq(
+      StructField("klein", ShortType), StructField("enkel", FloatType),
+      StructField("dubbel", DoubleType), StructField("bedrag", DecimalType(6, 2)),
+      StructField("tijd", TimestampType), StructField("bytes", BinaryType),
+      StructField("opmerking", StringType)))
+    def ts(s: String) = java.sql.Timestamp.valueOf(s)
+    val rows = Seq(
+      Row(1.toShort, 1.5f, -0.0d, new java.math.BigDecimal("12.34"),
+        ts("2024-02-29 13:45:10.123456"), Array[Byte](0, 1, -1), null),
+      Row(2.toShort, -0.25f, 2.5d, new java.math.BigDecimal("-0.01"),
+        ts("1999-12-31 23:59:59.000001"), Array[Byte](7), "tweede"))
+    val data = spark.createDataFrame(java.util.List.of(rows: _*), schema)
+
+    Connector.withConnection(spark, url) { c =>
+      c.load(data)
+      c.compare(data)
+      val back = JdbcFrames.queryToDataFrame(spark, c.conn,
+        "SELECT klein, bedrag, tijd, opmerking FROM meting ORDER BY klein", lowercaseLabels = true)
+        .collect().map(r => (r.getInt(0), r.getDecimal(1), r.getTimestamp(2), r.get(3))).toSeq
+      assert(back == Seq(
+        (1, new java.math.BigDecimal("12.3400"), ts("2024-02-29 13:45:10.123456"), null),
+        (2, new java.math.BigDecimal("-0.0100"), ts("1999-12-31 23:59:59.000001"), "tweede")))
+    }
+    spark.catalog.clearCache()
+  }
+
+  test("a fault at any statement of a load rolls it back and releases every cache") {
+    val url = streetDb()
+    Connector.withConnection(spark, url)(c =>
+      c.load(streets("NL", "Utrecht", "Oudegracht", "1")))
+    val before = streetTables(url)
+    val faulty = FaultyDriver.url(url)
+    // the loaded row again, so the exact compare of a clean load passes
+    val data = strDf("land" -> Seq("NL", "BE", "BE"), "stad" -> Seq("Utrecht", "Gent", "Gent"),
+      "straat" -> Seq("Oudegracht", "Veldstraat", "Korenmarkt"), "lengte" -> Seq("1", "1", "2"))
+    def load() = Connector.withConnection(spark, faulty)(c => c.load(data))
+
+    // a clean load, rolled back, counts the statements a load executes
+    class Undo extends RuntimeException
+    FaultyDriver.arm(Int.MaxValue)
+    intercept[Undo](Connector.withConnection(spark, faulty) { c =>
+      c.load(data); throw new Undo
+    })
+    val statements = FaultyDriver.executed.get
+    // three inserts, three D1 read-backs, two retrieves, the compare
+    assert(statements == 9, statements)
+    assert(streetTables(url) == before)
+
+    spark.catalog.clearCache()
+    val sc = spark.sparkContext
+    val persistedBefore = sc.getPersistentRDDs.keySet
+    (1 to statements).foreach { k =>
+      FaultyDriver.arm(k)
+      val e = intercept[java.sql.SQLException](load())
+      assert(e.getMessage == s"injected fault at statement $k", e)
+      assert(streetTables(url) == before, s"fault at statement $k")
+      assert(sc.getPersistentRDDs.keySet == persistedBefore, s"fault at statement $k")
+      assert(spark.sharedState.cacheManager.isEmpty, s"fault at statement $k")
+    }
+    FaultyDriver.arm(Int.MaxValue)
+    load()
+    assert(streetTables(url).map(_.size) == Seq(2, 2, 3))
     spark.catalog.clearCache()
   }
 
@@ -445,4 +541,58 @@ class DerbyConnectorSpec extends AnyFunSuite with SparkSpec {
     assert(s.uniqueKeySets("parent") == Seq(Seq("naam")))
     assert(s.notNullColumns("parent") == Set("id", "naam"))
   }
+}
+
+/** Hands out Derby connections, under `jdbc:graftfault:<derby url>`,
+  * whose statements throw at the `failAt`-th execution counted across
+  * all of them.
+  */
+private object FaultyDriver extends java.sql.Driver {
+  import java.lang.reflect.{InvocationHandler, InvocationTargetException, Method, Proxy}
+  import java.sql.{Connection, SQLException, Statement}
+  import java.util.concurrent.atomic.AtomicInteger
+
+  private val prefix = "jdbc:graftfault:"
+  @volatile private var failAt = Int.MaxValue
+  val executed = new AtomicInteger()
+  DriverManager.registerDriver(this)
+
+  def url(derbyUrl: String): String = prefix + derbyUrl
+
+  /** Fail at the `k`-th statement execution from now on. */
+  def arm(k: Int): Unit = { failAt = k; executed.set(0) }
+
+  private def forward(target: AnyRef, m: Method, args: Array[AnyRef]): AnyRef =
+    try m.invoke(target, (if (args == null) Array.empty[AnyRef] else args): _*)
+    catch { case e: InvocationTargetException => throw e.getCause }
+
+  private def proxy[T](iface: Class[_], handler: InvocationHandler): T =
+    Proxy.newProxyInstance(getClass.getClassLoader, Array(iface), handler).asInstanceOf[T]
+
+  private def statement(target: Statement, iface: Class[_]): Statement =
+    proxy(iface, (_: AnyRef, m: Method, args: Array[AnyRef]) => {
+      if (m.getName.startsWith("execute") && executed.incrementAndGet() == failAt)
+        throw new SQLException(s"injected fault at statement $failAt")
+      forward(target, m, args)
+    })
+
+  def connect(url: String, info: java.util.Properties): Connection =
+    if (!acceptsURL(url)) null
+    else {
+      val conn = DriverManager.getConnection(url.stripPrefix(prefix))
+      proxy(classOf[Connection], (_: AnyRef, m: Method, args: Array[AnyRef]) =>
+        forward(conn, m, args) match {
+          case st: Statement => statement(st, m.getReturnType)
+          case other => other
+        })
+    }
+
+  def acceptsURL(url: String): Boolean = url.startsWith(prefix)
+  def getPropertyInfo(url: String, info: java.util.Properties): Array[java.sql.DriverPropertyInfo] =
+    Array.empty
+  def getMajorVersion: Int = 1
+  def getMinorVersion: Int = 0
+  def jdbcCompliant: Boolean = false
+  def getParentLogger: java.util.logging.Logger =
+    throw new java.sql.SQLFeatureNotSupportedException()
 }

@@ -91,6 +91,29 @@ class FrameOpsSpec extends AnyFunSuite with SparkSpec {
     } finally spark.conf.set("spark.sql.ansi.enabled", prev)
   }
 
+  test("containsRows raises the same MatchDatatypesError text as matchTypes on an impossible cast") {
+    import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
+    val target = StructType(Seq(StructField("a", IntegerType)))
+    val dbSchema = StructType(Seq(StructField("a", StringType)))
+    val dbRows = Seq(Row("1"), Row("not-a-number"))
+    val label = "MatchDatatypesError: column `a` value 'not-a-number' does not cast to INT"
+    val prev = spark.conf.get("spark.sql.ansi.enabled")
+    try Seq("true", "false").foreach { ansi =>
+      spark.conf.set("spark.sql.ansi.enabled", ansi)
+      val e = intercept[MatchDatatypesError](
+        FrameOps.containsRows(Seq(Row(1)), target, dbRows, dbSchema))
+      assert(e.getMessage == label)
+      val viaSpark = intercept[Exception](FrameOps.matchTypes(
+        spark.createDataFrame(spark.sparkContext.parallelize(dbRows, 1), dbSchema),
+        target).collect())
+      def messages(t: Throwable): Seq[String] =
+        Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
+      assert(messages(viaSpark).exists(_.contains(label)), viaSpark)
+      // a null casts to null, and a castable value is found
+      FrameOps.containsRows(Seq(Row(1)), target, Seq(Row(null), Row("1")), dbSchema)
+    } finally spark.conf.set("spark.sql.ansi.enabled", prev)
+  }
+
   test("mergeIds joins ids null-safely (dataframe_operations.py:106-161)") {
     val data = df("naam" -> Seq("een", "twee", null))
     val dbRows = df("id" -> Seq(1, 2, 3), "naam" -> Seq("een", "twee", null))
