@@ -231,29 +231,24 @@ object Nsw {
     // beam needs the entries. Both builds are eager driver-action
     // chains (NN-descent rounds with per-round checkpoints: measured
     // ~50 ms/job over ~96 jobs on the gate — round-trip-bound), so
-    // overlapping them is the guide §2.6 pattern (the quantizerPick
-    // device): at cluster scale the two builds' jobs back-fill each
+    // they run as [[graft.ops.Overlap]] branches, like quantizerPick's
+    // families: at cluster scale the two builds' jobs back-fill each
     // other's stragglers; plans and arithmetic are exactly the
-    // sequential ones.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
-    val baseGraphF = scala.concurrent.Future(graphOf(corpus))(
-      scala.concurrent.ExecutionContext.fromExecutor(pool))
+    // sequential ones. A failing chain cancels the other's jobs, so
+    // no build outlives the call.
     try {
-      val entries =
-        if (upper.isEmpty) None
-        else Some(
-          beamSearch(graphOf(upper), upper, queries, idCol, vecCol,
-            beam = upperBeam, rounds = upperRounds, k = 1,
-            persistInputs = persistInputs)
-            .select(col("query_id"), col("neighbor_id").as("node")))
-      val baseGraph = scala.concurrent.Await.result(
-        baseGraphF, scala.concurrent.duration.Duration.Inf)
-      beamSearch(baseGraph, corpus, queries, idCol, vecCol,
+      val Seq(entries, baseGraph) = graft.ops.Overlap.all(corpus.sparkSession)(
+        () =>
+          if (upper.isEmpty) None
+          else Some(
+            beamSearch(graphOf(upper), upper, queries, idCol, vecCol,
+              beam = upperBeam, rounds = upperRounds, k = 1,
+              persistInputs = persistInputs)
+              .select(col("query_id"), col("neighbor_id").as("node"))),
+        () => Some(graphOf(corpus)))
+      beamSearch(baseGraph.get, corpus, queries, idCol, vecCol,
         beam, rounds, k, persistInputs, entries = entries)
-    } finally {
-      pool.shutdown()
-      if (upperPersisted) upper.unpersist(false)
-    }
+    } finally if (upperPersisted) upper.unpersist(false)
   }
 
   /** The checkpointed RDD behind a localCheckpointed frame — the

@@ -249,50 +249,42 @@ object Sq {
     // their codebook trainings are eager driver-action chains (Lloyd
     // checkpoints, sample cuts, permutation collects — ~20 sequential
     // actions all told, measured: 56 single-task jobs, task time 2.0 s
-    // of a 4.3 s wall). Constructing them concurrently from a small
-    // pool overlaps those action chains (guide §2.6 "overlap
-    // independent jobs" — at cluster scale the training jobs
+    // of a 4.3 s wall). Building them as [[graft.ops.Overlap]] branches
+    // overlaps those action chains (at cluster scale the training jobs
     // back-fill executors the same way). Plans, arithmetic and the
     // emitted union ORDER are exactly the sequential ones — only the
     // driver-side scheduling overlaps.
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(6)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      val arms: Seq[Future[DataFrame]] = Seq(
-        Future(census("sq8",
-          sq8Encode(corpus, idCol, vecCol, sq8Scales(corpus, vecCol), dim),
-          "err8")),
-        Future(census("rvq_seed",
-          Rvq.rvqEncodeSeedDrawn(corpus, corpus, idCol, vecCol, rvqK, seed),
-          "err2")),
-        Future {
-          val (rcb1, rcb2) = Rvq.rvqCodebooksRefined(corpus, idCol, vecCol,
-            refinedK, refinedIters, refinedTrainRows, seed)
-          census("rvq_refined",
-            Rvq.rvqEncode(corpus, idCol, vecCol, rcb1, rcb2), "err2")
-        },
-        Future(census("pq_seed",
-          Ann.pqEncodeErr(corpus, idCol, vecCol,
-            Ann.pqCodebooks(corpus, idCol, vecCol, pqM, pqK, dim, seed),
-            pqM, dim), "errq")),
-        Future(census("pq_refined",
-          Ann.pqEncodeErr(corpus, idCol, vecCol,
-            Ann.pqCodebooksRefinedDet(corpus, idCol, vecCol, pqM, pqK, dim,
-              refinedIters, refinedTrainRows, seed),
-            pqM, dim), "errq")),
-        Future {
-          val permuted = corpus.select(col(idCol),
-            Ann.opqPermute(vecCol,
-              Ann.opqPermutation(corpus, vecCol, pqM, dim), dim).as(vecCol))
-          census("pq_opq",
-            Ann.pqEncodeErr(permuted, idCol, vecCol,
-              Ann.pqCodebooks(permuted, idCol, vecCol, pqM, pqK, dim, seed),
-              pqM, dim), "errq")
-        })
-      Await.result(Future.sequence(arms),
-        scala.concurrent.duration.Duration.Inf).reduce(_.unionByName(_))
-    } finally pool.shutdown()
+    graft.ops.Overlap.all(corpus.sparkSession)(
+      () => census("sq8",
+        sq8Encode(corpus, idCol, vecCol, sq8Scales(corpus, vecCol), dim),
+        "err8"),
+      () => census("rvq_seed",
+        Rvq.rvqEncodeSeedDrawn(corpus, corpus, idCol, vecCol, rvqK, seed),
+        "err2"),
+      () => {
+        val (rcb1, rcb2) = Rvq.rvqCodebooksRefined(corpus, idCol, vecCol,
+          refinedK, refinedIters, refinedTrainRows, seed)
+        census("rvq_refined",
+          Rvq.rvqEncode(corpus, idCol, vecCol, rcb1, rcb2), "err2")
+      },
+      () => census("pq_seed",
+        Ann.pqEncodeErr(corpus, idCol, vecCol,
+          Ann.pqCodebooks(corpus, idCol, vecCol, pqM, pqK, dim, seed),
+          pqM, dim), "errq"),
+      () => census("pq_refined",
+        Ann.pqEncodeErr(corpus, idCol, vecCol,
+          Ann.pqCodebooksRefinedDet(corpus, idCol, vecCol, pqM, pqK, dim,
+            refinedIters, refinedTrainRows, seed),
+          pqM, dim), "errq"),
+      () => {
+        val permuted = corpus.select(col(idCol),
+          Ann.opqPermute(vecCol,
+            Ann.opqPermutation(corpus, vecCol, pqM, dim), dim).as(vecCol))
+        census("pq_opq",
+          Ann.pqEncodeErr(permuted, idCol, vecCol,
+            Ann.pqCodebooks(permuted, idCol, vecCol, pqM, pqK, dim, seed),
+            pqM, dim), "errq")
+      }).reduce(_.unionByName(_))
   }
 
   /** DuckDB rendering of [[quantizerPick]] — each family's existing

@@ -269,7 +269,7 @@ object Connector {
 
   /** Loan pattern mirroring the reference's context manager (B10):
     * autocommit off; commit iff the block succeeds, else rollback and
-    * rethrow.
+    * rethrow. The connection is closed either way.
     */
   def withConnection[A](
       spark: SparkSession,
@@ -278,17 +278,22 @@ object Connector {
       schemaPattern: String = "APP",
   )(body: Connector => A): A = {
     val conn = DriverManager.getConnection(url)
-    conn.setAutoCommit(false)
-    try {
-      val result = body(new Connector(spark, conn, dialect, schemaPattern))
-      conn.commit()
-      result
-    } catch {
-      case e: Throwable =>
-        // a dead connection makes rollback throw too — never let that
-        // mask the root cause
-        try conn.rollback() catch { case _: Throwable => () }
-        throw e
-    } finally conn.close()
+    val result =
+      try {
+        conn.setAutoCommit(false)
+        val r = body(new Connector(spark, conn, dialect, schemaPattern))
+        conn.commit()
+        r
+      } catch {
+        case e: Throwable =>
+          // a dead connection throws on rollback and on close too: the
+          // failure that ended the block is the one raised, carrying
+          // those as suppressed
+          try conn.rollback() catch { case r: Throwable => e.addSuppressed(r) }
+          try conn.close() catch { case c: Throwable => e.addSuppressed(c) }
+          throw e
+      }
+    conn.close()
+    result
   }
 }

@@ -3,6 +3,7 @@ package graft.connector
 import java.sql.{Connection, PreparedStatement, ResultSet, Types}
 
 import scala.collection.mutable
+import scala.util.Using
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
@@ -46,9 +47,10 @@ object JdbcFrames {
     */
   private[graft] def readQuery(
       conn: Connection, sql: String, lowercaseLabels: Boolean,
-  ): (Seq[Row], StructType) = {
-    val st = conn.createStatement()
-    try {
+  ): (Seq[Row], StructType) =
+    // a statement that fails because its connection died throws on
+    // close too; Using keeps the first failure and suppresses that one
+    Using.resource(conn.createStatement()) { st =>
       val rs = st.executeQuery(sql)
       val md = rs.getMetaData
       val n = md.getColumnCount
@@ -73,8 +75,7 @@ object JdbcFrames {
       }
       rs.close()
       (rows.toSeq, StructType(fields))
-    } finally st.close()
-  }
+    }
 
   /** One-partition frame over driver-held rows (B6's materialization). */
   private[graft] def frameOf(
@@ -157,14 +158,13 @@ object JdbcFrames {
       columns: Seq[String],
   ): Unit = {
     val fields = columns.map(schema.fieldIndex)
-    val ps = conn.prepareStatement(sql)
-    try {
+    Using.resource(conn.prepareStatement(sql)) { ps =>
       rows.foreach { row =>
         fields.zipWithIndex.foreach { case (f, i) => bind(ps, i + 1, row.get(f)) }
         ps.addBatch()
       }
       ps.executeBatch()
-    } finally ps.close()
+    }
   }
 
   private def bind(ps: PreparedStatement, idx: Int, v: Any): Unit = v match {

@@ -1,11 +1,23 @@
 package graft.ann
 
-import org.apache.spark.sql.Row
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ListenerBus
 import org.apache.spark.sql.types._
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 
 import graft.SparkSpec
+
+/** Tasks of this spec run in the test JVM (local mode), so they can
+  * signal the driver through a shared latch.
+  */
+private object NswSignals {
+  @volatile var started = new CountDownLatch(1)
+}
 
 /** Graph-ANN semantics: the beam walks the graph toward the query's
   * region, saturating beam+rounds recovers the exact top-k, and the
@@ -168,6 +180,42 @@ class NswSpec extends AnyFunSuite with SparkSpec {
         beam = 3, rounds = 4, k = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(hnsw === flat)
+  }
+
+  test("hnswSearch: a failing upper-layer chain cancels the base-graph build") {
+    val n = 64
+    val c = frame((0L until n.toLong).map { i =>
+      val a = 2 * math.Pi * i / n
+      (i, Seq(math.cos(a).toFloat, math.sin(a).toFloat))
+    }, ("id", "v"))
+    val q = frame(Seq((1000L, Seq(1.0f, 0.0f))), ("id", "v"))
+    val sc = spark.sparkContext
+    NswSignals.started = new CountDownLatch(1)
+    // the base build runs a job that would take a minute; the upper
+    // chain fails once that job runs
+    def graphOf(df: DataFrame): DataFrame =
+      if (df eq c) {
+        sc.parallelize(1 to 2, 2).map { x =>
+          NswSignals.started.countDown()
+          Thread.sleep(60000)
+          x
+        }.count()
+        Nsw.knnGraph(df, "id", "v", k = 2)
+      } else {
+        assert(NswSignals.started.await(30, TimeUnit.SECONDS))
+        throw new IllegalStateException("upper layer fails")
+      }
+    val t0 = System.nanoTime()
+    val e = intercept[IllegalStateException](
+      Nsw.hnswSearch(c, q, "id", "v", graphOf, beam = 3, rounds = 3, k = 1))
+    assert(e.getMessage == "upper layer fails")
+    assert((System.nanoTime() - t0) / 1e9 < 30)
+    // a cancelled job's end reaches the status store just after its
+    // caller wakes
+    eventually(timeout(10.seconds)) {
+      ListenerBus.drain(sc)
+      assert(sc.statusTracker.getActiveJobIds().isEmpty, "the base-graph build still runs")
+    }
   }
 
   test("hnswSearch reaches an antipodal neighbor the flat search cannot (entry locality)") {

@@ -385,15 +385,20 @@ class DerbyConnectorSpec extends AnyFunSuite with SparkSpec {
     spark.catalog.clearCache()
   }
 
+  /** The streets fixture's loaded row again (so the exact compare of a
+    * clean load passes) plus two new streets.
+    */
+  private def faultData(): DataFrame =
+    strDf("land" -> Seq("NL", "BE", "BE"), "stad" -> Seq("Utrecht", "Gent", "Gent"),
+      "straat" -> Seq("Oudegracht", "Veldstraat", "Korenmarkt"), "lengte" -> Seq("1", "1", "2"))
+
   test("a fault at any statement of a load rolls it back and releases every cache") {
     val url = streetDb()
     Connector.withConnection(spark, url)(c =>
       c.load(streets("NL", "Utrecht", "Oudegracht", "1")))
     val before = streetTables(url)
     val faulty = FaultyDriver.url(url)
-    // the loaded row again, so the exact compare of a clean load passes
-    val data = strDf("land" -> Seq("NL", "BE", "BE"), "stad" -> Seq("Utrecht", "Gent", "Gent"),
-      "straat" -> Seq("Oudegracht", "Veldstraat", "Korenmarkt"), "lengte" -> Seq("1", "1", "2"))
+    val data = faultData()
     def load() = Connector.withConnection(spark, faulty)(c => c.load(data))
 
     // a clean load, rolled back, counts the statements a load executes
@@ -422,6 +427,37 @@ class DerbyConnectorSpec extends AnyFunSuite with SparkSpec {
     load()
     assert(streetTables(url).map(_.size) == Seq(2, 2, 3))
     spark.catalog.clearCache()
+  }
+
+  test("a connection dying at any statement of a load surfaces that fault, not the failed close") {
+    val url = streetDb()
+    Connector.withConnection(spark, url)(c =>
+      c.load(streets("NL", "Utrecht", "Oudegracht", "1")))
+    val before = streetTables(url)
+    val data = faultData()
+
+    spark.catalog.clearCache()
+    val sc = spark.sparkContext
+    val persistedBefore = sc.getPersistentRDDs.keySet
+    (1 to 9).foreach { k =>
+      FaultyDriver.arm(k, dies = true)
+      val e = intercept[java.sql.SQLException](
+        Connector.withConnection(spark, FaultyDriver.url(url))(c => c.load(data)))
+      assert(e.getMessage == s"injected fault at statement $k", e)
+      // closing the statement, the rollback and the close all hit the
+      // dead connection, and ride along as suppressed
+      val suppressed = e.getSuppressed.map(_.getMessage).toSeq
+      assert(suppressed.size >= 2 && suppressed.forall(_ == FaultyDriver.Dead),
+        s"fault at statement $k: $suppressed")
+      // the load's transaction is still open in Derby, behind the
+      // dead connection: end it there
+      FaultyDriver.underlying.rollback()
+      FaultyDriver.underlying.close()
+      assert(streetTables(url) == before, s"fault at statement $k")
+      assert(sc.getPersistentRDDs.keySet == persistedBefore, s"fault at statement $k")
+      assert(spark.sharedState.cacheManager.isEmpty, s"fault at statement $k")
+    }
+    FaultyDriver.arm(Int.MaxValue)
   }
 
   test("F1: vehicle star schema full load + compare round trip (test_sqlite_connector.py:130-234)") {
@@ -545,34 +581,49 @@ class DerbyConnectorSpec extends AnyFunSuite with SparkSpec {
 
 /** Hands out Derby connections, under `jdbc:graftfault:<derby url>`,
   * whose statements throw at the `failAt`-th execution counted across
-  * all of them.
+  * all of them. A connection armed to die throws on every later call
+  * too, rollback and close included, as a connection lost mid-load does.
   */
 private object FaultyDriver extends java.sql.Driver {
   import java.lang.reflect.{InvocationHandler, InvocationTargetException, Method, Proxy}
   import java.sql.{Connection, SQLException, Statement}
   import java.util.concurrent.atomic.AtomicInteger
 
+  val Dead = "connection is dead"
+
   private val prefix = "jdbc:graftfault:"
   @volatile private var failAt = Int.MaxValue
+  @volatile private var dies = false
+  @volatile private var dead = false
   val executed = new AtomicInteger()
+  /** The Derby connection behind the most recent faulty one. */
+  @volatile var underlying: Connection = _
   DriverManager.registerDriver(this)
 
   def url(derbyUrl: String): String = prefix + derbyUrl
 
-  /** Fail at the `k`-th statement execution from now on. */
-  def arm(k: Int): Unit = { failAt = k; executed.set(0) }
+  /** Fail at the `k`-th statement execution from now on; with `dies`,
+    * fail every call on the connection after it as well.
+    */
+  def arm(k: Int, dies: Boolean = false): Unit = {
+    failAt = k; this.dies = dies; dead = false; executed.set(0)
+  }
 
   private def forward(target: AnyRef, m: Method, args: Array[AnyRef]): AnyRef =
-    try m.invoke(target, (if (args == null) Array.empty[AnyRef] else args): _*)
-    catch { case e: InvocationTargetException => throw e.getCause }
+    if (dead) throw new SQLException(Dead)
+    else
+      try m.invoke(target, (if (args == null) Array.empty[AnyRef] else args): _*)
+      catch { case e: InvocationTargetException => throw e.getCause }
 
   private def proxy[T](iface: Class[_], handler: InvocationHandler): T =
     Proxy.newProxyInstance(getClass.getClassLoader, Array(iface), handler).asInstanceOf[T]
 
   private def statement(target: Statement, iface: Class[_]): Statement =
     proxy(iface, (_: AnyRef, m: Method, args: Array[AnyRef]) => {
-      if (m.getName.startsWith("execute") && executed.incrementAndGet() == failAt)
+      if (!dead && m.getName.startsWith("execute") && executed.incrementAndGet() == failAt) {
+        dead = dies
         throw new SQLException(s"injected fault at statement $failAt")
+      }
       forward(target, m, args)
     })
 
@@ -580,6 +631,7 @@ private object FaultyDriver extends java.sql.Driver {
     if (!acceptsURL(url)) null
     else {
       val conn = DriverManager.getConnection(url.stripPrefix(prefix))
+      underlying = conn
       proxy(classOf[Connection], (_: AnyRef, m: Method, args: Array[AnyRef]) =>
         forward(conn, m, args) match {
           case st: Statement => statement(st, m.getReturnType)
