@@ -2,9 +2,9 @@ package graft.connector
 
 import java.sql.{Connection, DriverManager}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 
 import graft.{CompareMissingRowsError, InsertingDataFailedError}
 import graft.ops.FrameOps
@@ -17,12 +17,16 @@ import graft.schema.Schema
   * commit on clean exit, rollback on any exception — which is what
   * makes `load`'s validation failure undo the whole load.
   *
-  * Spark shape: orchestration runs on the driver; data transformations
-  * (dedup, id joins, the final compare) are distributed DataFrame ops;
-  * only deduped dimension rows cross the JDBC boundary (see
-  * [[JdbcFrames]]). The per-insert read-back check (D1) compares two
-  * row sets the driver already holds, so it runs there
-  * ([[FrameOps.containsRows]]).
+  * Spark shape: orchestration and the checks run on the driver; the
+  * frame being loaded stays a DataFrame (dedup and the id joins are
+  * Spark operations), and only deduped dimension rows cross the JDBC
+  * boundary (see [[JdbcFrames]]). Each step reads its table once and
+  * checks that read on the driver against the rows it collected: the
+  * per-insert read-back check (D1, [[FrameOps.containsRows]]) and the
+  * id guard ([[FrameOps.mergeIdRows]]). The final compare (D2,
+  * [[FrameOps.compareRows]]) is one Spark action over the cached frame.
+  * A check that fails runs the Spark operator it stands for, which
+  * raises the error.
   */
 final class Connector(
     val spark: SparkSession,
@@ -56,44 +60,58 @@ final class Connector(
     insertRenamed(data.withColumnsRenamed(columns), table)
   }
 
-  /** [[insert]] of a frame already renamed. The full frame needs no
-    * dedup: [[FrameOps.getRows]] dedups the table's projection.
+  /** [[insert]] of a frame already renamed: one collect of the table's
+    * distinct projection, the batch, and D1 over the table's distinct
+    * read-back. The full frame needs no dedup: [[FrameOps.getRows]]
+    * dedups the projection.
     */
   private def insertRenamed(pre: DataFrame, table: String): Unit = {
     val commonColumns = schema.parseInsert(table, pre.columns.toSeq)
     assert(commonColumns.nonEmpty, "No common columns were found.")
-
-    val uniqueSets = introspected.uniqueKeySets.getOrElse(table, Nil)
-    val query = dialect.getInsertQuery(table, commonColumns, uniqueSets)
-    // SQLite's INSERT OR IGNORE also suppresses NOT NULL violations
-    // (the reference's missing-values fixture relies on it); emulate
-    // uniformly by dropping such rows before they reach the batch
-    val notNull = introspected.notNullColumns.getOrElse(table, Set.empty)
     val rows = FrameOps.getRows(pre, commonColumns)
-    val insertable = commonColumns.filter(notNull.contains).foldLeft(rows) {
-      (df, c) => df.filter(FrameOps.quoted(c).isNotNull)
-    }
-    // collected once: the same rows feed the batch and the D1 check.
-    // D1 drops null-bearing rows, so checking `insertable` instead of
-    // `rows` checks the same rows
-    val collected = insertable.collect().toSeq
-    JdbcFrames.batchInsert(conn, query, collected, insertable.schema,
-      dialect.insertParamOrder(commonColumns, uniqueSets))
-
-    // D1: inserted rows must be contained in the table read-back
+    val inserted = insertRows(rows.collect().toSeq, rows.schema, table, commonColumns)
     val (dbRows, dbSchema) = JdbcFrames.readQuery(conn,
       dialect.getCheckInsertQuery(table, commonColumns), lowercaseLabels = true)
-    // cast with this session's time zone and ANSI mode, as in Spark
-    try SQLConf.withExistingConf(spark.sessionState.conf) {
-      FrameOps.containsRows(collected, insertable.schema, dbRows, dbSchema)
-    } catch {
+    withConf(checkInserted(table, inserted, rows.schema, dbRows, dbSchema))
+  }
+
+  /** Batch-insert the rows of a table's distinct projection that hold
+    * a value in every NOT NULL column, and return them. SQLite's INSERT
+    * OR IGNORE also suppresses NOT NULL violations (the reference's
+    * missing-values fixture relies on it); dropping such rows first
+    * emulates that on every backend.
+    */
+  private def insertRows(
+      rows: Seq[Row], rowSchema: StructType, table: String, commonColumns: Seq[String],
+  ): Seq[Row] = {
+    val uniqueSets = introspected.uniqueKeySets.getOrElse(table, Nil)
+    val notNull = introspected.notNullColumns.getOrElse(table, Set.empty)
+    val required = commonColumns.filter(notNull.contains).map(rowSchema.fieldIndex)
+    val insertable = rows.filter(r => required.forall(i => !r.isNullAt(i)))
+    JdbcFrames.batchInsert(conn, dialect.getInsertQuery(table, commonColumns, uniqueSets),
+      insertable, rowSchema, dialect.insertParamOrder(commonColumns, uniqueSets))
+    insertable
+  }
+
+  /** D1: the inserted rows must be contained in the table's read-back. */
+  private def checkInserted(
+      table: String, inserted: Seq[Row], rowSchema: StructType,
+      dbRows: Seq[Row], dbSchema: StructType,
+  ): Unit =
+    try FrameOps.containsRows(inserted, rowSchema, dbRows, dbSchema)
+    catch {
       case e: CompareMissingRowsError =>
         throw new InsertingDataFailedError(
           s"Encountered an error upon inserting data into table '$table':\n\t${e.getMessage}\n" +
             "This usually happens due to a uniqueness constraint not allowing new data to be inserted.\n" +
             "Either clear the relevant tables, or reset the database.")
     }
-  }
+
+  /** Driver-side checks cast with this session's time zone and ANSI
+    * mode, as Spark would.
+    */
+  private def withConf[A](body: => A): A =
+    SQLConf.withExistingConf(spark.sessionState.conf)(body)
 
   /** Fetch `(pk as alias, cols...)` and null-safe-join the ids into
     * data — §3.3 (`connector.py:230-284`). The fetched id table is
@@ -108,48 +126,43 @@ final class Connector(
       allowDuplication: Boolean = false,
   ): DataFrame = {
     schema.checkSchemaNotEmpty()
-    val pre = FrameOps.preprocess(data, columns)
-    val joined = retrieveJoined(pre, table, alias, allowDuplication, pre.count())
+    val joined = keyedStep(FrameOps.preprocess(data, columns), table, alias,
+      insert = false, allowDuplication)
     FrameOps.postprocess(dropReplaced(joined, table, replace), columns)
   }
 
-  /** The id join of [[retrieveIds]] over a frame already renamed and
-    * deduped, whose row count is `inputRows`. The result is the cached
-    * join of [[FrameOps.mergeIds]]; the caller releases it.
+  /** The one step behind [[load]], [[retrieveIds]] and
+    * [[insertAndRetrieveIds]], over a frame already renamed: collect
+    * the table's distinct projection of `pre` (one Spark action), insert
+    * it when `insert` is set, read the table once with the retrieve
+    * query, and check that read on the driver, D1 first, then the id
+    * guard of [[FrameOps.mergeIdRows]]. The result is the cached id
+    * join; the caller releases it.
     */
-  private def retrieveJoined(
+  private def keyedStep(
       pre: DataFrame,
       table: String,
       alias: String,
+      insert: Boolean,
       allowDuplication: Boolean,
-      inputRows: => Long,
   ): DataFrame = {
     val (primaryKey, commonColumns) =
       schema.parseRetrieve(table, alias, pre.columns.toSeq)
-
-    val query = dialect.getRetrieveQuery(table, primaryKey, alias, commonColumns)
-    val dbFetch = JdbcFrames.queryToDataFrame(spark, conn, query, lowercaseLabels = true)
-
-    FrameOps.mergeIds(pre, dbFetch, alias, table, allowDuplication, inputRows)
+    val projection = FrameOps.getRows(pre, commonColumns)
+    val keys = projection.collect().toSeq
+    val inserted =
+      if (insert) insertRows(keys, projection.schema, table, commonColumns) else Nil
+    val (dbRows, dbSchema) = JdbcFrames.readQuery(conn,
+      dialect.getRetrieveQuery(table, primaryKey, alias, commonColumns), lowercaseLabels = true)
+    withConf {
+      if (insert) checkInserted(table, inserted, projection.schema, dbRows, dbSchema)
+      FrameOps.mergeIdRows(pre, keys, projection.schema, dbRows, dbSchema,
+        alias, table, allowDuplication)
+    }
   }
 
   private def dropReplaced(joined: DataFrame, table: String, replace: Boolean): DataFrame =
     if (replace) FrameOps.dropReplaced(joined, schema.getColumns(table)) else joined
-
-  /** Committed-snapshot parallel read of a whole table via Spark's
-    * distributed JDBC source ([[JdbcFrames.readTableParallel]]).
-    * Sees only COMMITTED data — call after a committed load; the
-    * in-transaction path is [[retrieveIds]]/`queryToDataFrame`. Use
-    * for very large retrieve targets where a driver-side ResultSet
-    * would bottleneck.
-    */
-  def retrieveSnapshot(
-      table: String,
-      partitionColumn: Option[String] = None,
-      numPartitions: Int = 8,
-  ): DataFrame =
-    JdbcFrames.readTableParallel(spark, conn.getMetaData.getURL, table,
-      partitionColumn, numPartitions)
 
   /** `connector.py:286-324`. */
   def insertAndRetrieveIds(
@@ -160,8 +173,10 @@ final class Connector(
       replace: Boolean = true,
       allowDuplication: Boolean = false,
   ): DataFrame = {
-    insert(data, table, columns)
-    retrieveIds(data, table, alias, columns, replace, allowDuplication)
+    schema.checkSchemaNotEmpty()
+    val joined = keyedStep(FrameOps.preprocess(data, columns), table, alias,
+      insert = true, allowDuplication)
+    FrameOps.postprocess(dropReplaced(joined, table, replace), columns)
   }
 
   /** Validate loaded data against a (generated) reconstruction query
@@ -175,49 +190,42 @@ final class Connector(
       exact: Boolean = true,
   ): Unit = {
     schema.checkSchemaNotEmpty()
-    val pre = FrameOps.preprocess(data, columns)
-    compareDistinct(pre, FrameOps.countAndNulls(pre), query, where, exact)
+    compareDistinct(FrameOps.preprocess(data, columns), query, where, exact)
   }
 
-  /** [[compare]] of a frame already renamed and deduped, whose
-    * [[FrameOps.countAndNulls]] is `preStats`.
-    */
+  /** [[compare]] of a frame already renamed and deduped. */
   private def compareDistinct(
       pre: DataFrame,
-      preStats: => (Long, Boolean),
       query: Option[String],
       where: Option[String],
       exact: Boolean,
   ): Unit = {
     val q = query.getOrElse(schema.getCompareQuery(pre.columns.toSeq, where))
     val (dbRows, dbSchema) = JdbcFrames.readQuery(conn, q, lowercaseLabels = true)
-    val dbCount = dbRows.size.toLong
-    assert(dbCount > 0, "Compare query yielded no results.")
-    val (preCount, preHasNulls) = preStats
-    if (!preHasNulls)
-      assert(dbCount >= preCount,
-        s"Compare query yielded fewer rows ($dbCount) than data.")
-    FrameOps.compareFrames(pre, FrameOps.matchTypes(
-      JdbcFrames.frameOf(spark, dbRows, dbSchema), pre.schema), exact = exact)
+    withConf(FrameOps.compareRows(pre, dbRows, dbSchema, exact))
   }
 
   /** The flagship: plan, cascade inserts in topological order threading
     * retrieved ids through the frame, then validate — §3.1
     * (`connector.py:376-452`).
     *
-    * Each step's data is evaluated once. The frame is deduped and
-    * cached once up front, and its row count taken at most once: every
-    * id join keeps it distinct with the same row count (rows that differ
-    * only on a table's dropped natural columns join to different keys),
-    * so no step re-dedups or re-counts it. Under `allowDuplication` a
-    * join may add rows, so each retrieve step counts its input. Each
-    * insert runs one Spark job, the collect of its rows; its D1 check
-    * runs on the driver over those rows and the table's read-back.
+    * The frame is deduped and cached once up front; every id join keeps
+    * it distinct (rows that differ only on a table's dropped natural
+    * columns join to different keys), so no step re-dedups it. Each
+    * step runs one Spark action, the collect of its table's distinct
+    * projection, and one read of its table: an insert-and-retrieve step
+    * reads with the retrieve query, and that read serves D1, the id
+    * guard and the broadcast id join; a plain insert reads back its
+    * inserted columns for D1. The checks run on the driver. The final
+    * compare (D2) is one more Spark action over the cached frame. When
+    * a check fails, the Spark operator it stands for runs and raises
+    * its error, so the load stays exact and all-or-nothing.
     *
-    * Each retrieve step caches the join that carries its ids (the next
-    * step reads it). On success every cache but the last step's, which
-    * backs the returned frame, is released; on failure all of them are,
-    * so a long-lived session does not accumulate cached RDDs either way.
+    * Each insert-and-retrieve step caches the join that carries its ids
+    * (the next step reads it). On success every cache but the last
+    * step's, which backs the returned frame, is released; on failure
+    * all of them are, so a long-lived session does not accumulate cached
+    * RDDs either way.
     */
   def load(
       data: DataFrame,
@@ -236,17 +244,14 @@ final class Connector(
       // clone needed (connector.py:424)
       val pre = FrameOps.preprocess(data, columns).cache()
       cached += pre
-      lazy val preStats = FrameOps.countAndNulls(pre)
       val instructions = schema.getLoadInstructions(pre.columns.toSeq)
 
       // phase 1: insert+retrieve in topo order, ids cascade through the frame
       val afterRetrieve = instructions.insertAndRetrieve.foldLeft(pre) {
         (acc, spec) =>
           val renames = spec.columns.toMap
-          val renamed = acc.withColumnsRenamed(renames)
-          insertRenamed(renamed, spec.table)
-          val joined = retrieveJoined(renamed, spec.table, spec.alias,
-            allowDuplication, if (allowDuplication) renamed.count() else preStats._1)
+          val joined = keyedStep(acc.withColumnsRenamed(renames), spec.table, spec.alias,
+            insert = true, allowDuplication)
           cached += joined
           FrameOps.postprocess(dropReplaced(joined, spec.table, replace), renames)
       }
@@ -255,7 +260,7 @@ final class Connector(
         insertRenamed(afterRetrieve.withColumnsRenamed(spec.columns.toMap), spec.table)
       }
       if (compare)
-        compareDistinct(pre, preStats, compareQuery, where, exact)
+        compareDistinct(pre, compareQuery, where, exact)
 
       cached.init.foreach(_.unpersist())
       FrameOps.postprocess(afterRetrieve, columns)

@@ -8,6 +8,8 @@ import scala.util.Using
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
+import graft.ops.FrameOps
+
 /** DataFrame ↔ single-JDBC-connection bridging.
   *
   * Why not `spark.read.jdbc` / `df.write.jdbc`: the reference's
@@ -17,10 +19,10 @@ import org.apache.spark.sql.types._
   * JDBC source opens its own connections and commits per partition,
   * which would break that contract and, for Derby in-memory DBs, not
   * see uncommitted state. Rows crossing this boundary are deduped
-  * dimension rows (small by construction); the bulk work — joins,
-  * dedup, the final compare — stays distributed in Spark. The
-  * per-insert check (D1) reads its table back with [[readQuery]] and
-  * compares on the driver, where the inserted rows already are.
+  * dimension rows (small by construction). The loader reads each table
+  * once with [[readQuery]] and keeps the rows on the driver: its
+  * checks (D1, the id guard, the final compare's keys) run there, and
+  * only the id join and the final compare's probe run in Spark.
   */
 object JdbcFrames {
 
@@ -34,7 +36,7 @@ object JdbcFrames {
       lowercaseLabels: Boolean = false,
   ): DataFrame = {
     val (rows, schema) = readQuery(conn, sql, lowercaseLabels)
-    frameOf(spark, rows, schema)
+    FrameOps.frameOf(spark, rows, schema)
   }
 
   /** The rows and schema [[queryToDataFrame]] reads, still on the
@@ -76,78 +78,6 @@ object JdbcFrames {
       rs.close()
       (rows.toSeq, StructType(fields))
     }
-
-  /** One-partition frame over driver-held rows (B6's materialization). */
-  private[graft] def frameOf(
-      spark: SparkSession, rows: Seq[Row], schema: StructType,
-  ): DataFrame =
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-
-  /** Committed-snapshot parallel table read (the scale companion to
-    * [[queryToDataFrame]]): Spark's distributed JDBC source, one
-    * connection per partition, range-split on `partitionColumn`
-    * (bounds probed with a single MIN/MAX query). Runs OUTSIDE any
-    * loader transaction — each partition connection sees only
-    * COMMITTED data, so use it for very large retrieve targets after
-    * a committed load; the single-connection [[queryToDataFrame]]
-    * remains the path with in-transaction visibility. On a real
-    * cluster this is the difference between one driver-side ResultSet
-    * and N executors each pulling a key range.
-    */
-  def readTableParallel(
-      spark: SparkSession, url: String, table: String,
-      partitionColumn: Option[String] = None, numPartitions: Int = 8,
-      lowercaseLabels: Boolean = true,
-  ): DataFrame = {
-    val base = spark.read.format("jdbc")
-      .option("url", url).option("dbtable", table)
-    val df = partitionColumn match {
-      case Some(pc) =>
-        // bounds probe. `pc`/`table` are interpolated verbatim —
-        // callers with quoted/mixed-case identifiers must pass them
-        // pre-quoted for their dialect (as with `dbtable` itself).
-        val c = java.sql.DriverManager.getConnection(url)
-        try {
-          val st = c.createStatement()
-          val rs = st.executeQuery(s"SELECT MIN($pc), MAX($pc) FROM $table")
-          rs.next()
-          // Spark's JDBC source supports numeric, date, and timestamp
-          // partition columns; pick the bound representation by the
-          // probed JDBC type instead of assuming integral
-          val integral = Set(Types.INTEGER, Types.BIGINT, Types.SMALLINT,
-            Types.TINYINT, Types.DECIMAL, Types.NUMERIC)
-          val temporal = Set(Types.DATE, Types.TIMESTAMP)
-          val jdbcType = rs.getMetaData.getColumnType(1)
-          val bounds: Option[(String, String)] =
-            if (integral(jdbcType)) {
-              val lo = rs.getLong(1)
-              val loNull = rs.wasNull()
-              val hi = rs.getLong(2)
-              if (loNull) None
-              else Some((lo.toString, math.max(hi, lo + 1).toString))
-            } else if (temporal(jdbcType)) {
-              val lo = rs.getString(1)
-              val hi = rs.getString(2)
-              if (lo == null || lo == hi) None // empty or single-instant: no range
-              else Some((lo, hi))
-            } else throw new IllegalArgumentException(
-              s"partition column $pc must be integral, date, or timestamp " +
-                s"(jdbc type $jdbcType); use partitionColumn = None for other types")
-          rs.close(); st.close()
-          bounds match {
-            case None => base.load() // empty table: no range to split
-            case Some((lo, hi)) => base
-              .option("partitionColumn", pc)
-              .option("lowerBound", lo)
-              .option("upperBound", hi)
-              .option("numPartitions", numPartitions)
-              .load()
-          }
-        } finally c.close()
-      case None => base.load()
-    }
-    if (lowercaseLabels) df.toDF(df.columns.map(_.toLowerCase): _*) else df
-  }
 
   /** Batch-execute a parameterized insert for every row of `rows`
     * (B5 — the reference's `cursor.executemany`, `connector.py:212`).

@@ -2,12 +2,12 @@ package graft.ops
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, EvalMode, GenericInternalRow}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.{DataType, StringType, StructType}
+import org.apache.spark.sql.types._
 
 import graft.{CompareMissingRowsError, CompareNoExactMatchError, MatchDatatypesError,
   MissingKeysAfterMergeError}
@@ -16,16 +16,20 @@ import graft.{CompareMissingRowsError, CompareNoExactMatchError, MatchDatatypesE
   * `sql_autoloader/dataframe_operations.py` + `connector.py:26-59`
   * (SURVEY.md §2.A, ops A1-A11).
   *
-  * Scale notes: everything stays distributed; the only actions are the
-  * row-count guards in [[mergeIds]] (cached first) and emptiness
-  * probes (`limit(1)` scans, not full counts). The database side of
-  * [[mergeIds]] is always broadcast — id/dimension tables are small
-  * relative to the data being loaded. `Connector.load` evaluates each
-  * step once: it dedups and counts the frame once up front (each id
-  * join keeps it distinct and its row count unchanged). Its D1 check
-  * runs no Spark job: the rows collected for the JDBC batch and the
-  * table's read-back are both on the driver, so [[containsRows]]
-  * compares them there.
+  * Scale notes: the frame being loaded stays distributed; the database
+  * side of every check is rows the driver already read. The id join
+  * broadcasts those rows (id/dimension tables are small next to the
+  * data being loaded). `Connector.load` guards its steps on the driver:
+  * D1 ([[containsRows]]) and the id guard ([[mergeIdRows]]) compare the
+  * table's one read-back with the step's collected distinct
+  * projection, and D2 ([[compareRows]]) is one Spark action that probes
+  * the cached frame against a broadcast of the database keys. Each
+  * driver check decides with Spark's own casts and equality (null-safe,
+  * byte arrays by content, NaNs equal, −0.0 as 0.0); when it finds a
+  * failure, or cannot decide, the Spark operator it stands for
+  * ([[mergeIds]], [[compareFrames]]) runs and raises its own error.
+  * The only other actions are the row-count guards in [[mergeIds]]
+  * (cached first) and [[hasNulls]]' one aggregation.
   */
 object FrameOps {
 
@@ -54,24 +58,15 @@ object FrameOps {
   }
 
   /** A3 (`dataframe_operations.py:12-16`): true if the frame is empty
-    * or any value anywhere is null. Single filtered `limit(1)` probe
-    * instead of per-column counts.
+    * or any value anywhere is null, in one aggregation job.
     */
-  def hasNulls(df: DataFrame): Boolean = countAndNulls(df)._2
-
-  /** (row count, any-null present) in ONE aggregation job — guard
-    * checks are driver barriers, so they are batched wherever the
-    * pipeline needs both facts.
-    */
-  def countAndNulls(df: DataFrame): (Long, Boolean) = {
-    if (df.columns.isEmpty) return (0L, df.isEmpty)
+  def hasNulls(df: DataFrame): Boolean = {
+    if (df.columns.isEmpty) return df.isEmpty
     val anyNull = df.columns.map(c => quoted(c).isNull).reduce(_ || _)
     val row = df.agg(
       count(lit(1)).as("n"),
       sum(when(anyNull, 1L).otherwise(0L)).as("nn")).first()
-    val n = row.getLong(0)
-    val nn = if (row.isNullAt(1)) 0L else row.getLong(1)
-    (n, n == 0 || nn > 0)
+    row.getLong(0) == 0 || (!row.isNullAt(1) && row.getLong(1) > 0)
   }
 
   /** A4 (`dataframe_operations.py:59-76`): project to a column subset
@@ -139,37 +134,10 @@ object FrameOps {
       alias: String,
       table: String,
       allowDuplication: Boolean = false,
-  ): DataFrame =
-    mergeIds(df, dbDf, alias, table, allowDuplication, df.count())
-
-  /** [[mergeIds]] with `df`'s row count supplied by a caller that
-    * already knows it (evaluated only when the guards need it).
-    */
-  private[graft] def mergeIds(
-      df: DataFrame,
-      dbDf: DataFrame,
-      alias: String,
-      table: String,
-      allowDuplication: Boolean,
-      inputRows: => Long,
   ): DataFrame = {
-    require(dbDf.columns.contains(alias),
-      "Provided alias not found in fetch from database.")
-    val onColumns = df.columns.toSeq.intersect(dbDf.columns.toSeq)
-
-    val l = df.alias("l")
-    val r = broadcast(matchTypes(dbDf, df.schema).alias("r"))
-
-    val cond: Column = onColumns
-      .map(c => col(s"l.`$c`") <=> col(s"r.`$c`"))
-      .reduceOption(_ && _)
-      .getOrElse(lit(true))
-
-    val joined = l.join(r, cond, "left")
-      .select(df.columns.map(c => col(s"l.`$c`")) :+ col(s"r.`$alias`").as(alias): _*)
-      .cache()
+    val joined = joinIds(df, dbDf, alias).cache()
     try {
-      val origLen = inputRows
+      val origLen = df.count()
       // row count + null-id count in one aggregation job
       val stats = joined.agg(count(lit(1)).as("n"),
         sum(when(quoted(alias).isNull, 1L).otherwise(0L)).as("nn")).first()
@@ -190,6 +158,94 @@ object FrameOps {
       joined
     } catch {
       case e: Throwable => joined.unpersist(); throw e
+    }
+  }
+
+  /** [[mergeIds]]' join, uncached and unguarded. */
+  private def joinIds(df: DataFrame, dbDf: DataFrame, alias: String): DataFrame = {
+    require(dbDf.columns.contains(alias),
+      "Provided alias not found in fetch from database.")
+    val onColumns = df.columns.toSeq.intersect(dbDf.columns.toSeq)
+
+    val l = df.alias("l")
+    val r = broadcast(matchTypes(dbDf, df.schema).alias("r"))
+
+    val cond: Column = onColumns
+      .map(c => col(s"l.`$c`") <=> col(s"r.`$c`"))
+      .reduceOption(_ && _)
+      .getOrElse(lit(true))
+
+    l.join(r, cond, "left")
+      .select(df.columns.map(c => col(s"l.`$c`")) :+ col(s"r.`$alias`").as(alias): _*)
+  }
+
+  /** `mergeIds(df, frameOf(dbRows, dbSchema), ...)` guarded on the
+    * driver, where `keys` (schema `keySchema`) is `df`'s distinct
+    * projection onto every column the join matches on, already
+    * collected. When [[idsMatch]] passes, the join is returned cached
+    * with no Spark job run. Otherwise [[mergeIds]] runs: it raises the
+    * error the guard found, or decides where the driver could not.
+    * Same result, same caller-owned cache.
+    */
+  private[graft] def mergeIdRows(
+      df: DataFrame,
+      keys: Seq[Row], keySchema: StructType,
+      dbRows: Seq[Row], dbSchema: StructType,
+      alias: String,
+      table: String,
+      allowDuplication: Boolean,
+  ): DataFrame = {
+    val dbDf = frameOf(df.sparkSession, dbRows, dbSchema)
+    // the join matches on every column the two sides share; a shared
+    // column outside `keys` (a frame that already holds the alias,
+    // say) is one only mergeIds can guard
+    val covered = df.columns.filter(dbSchema.names.contains).forall(keySchema.names.contains)
+    if (covered && idsMatch(keys, keySchema, dbRows, dbSchema, alias, allowDuplication))
+      joinIds(df, dbDf, alias).cache()
+    else mergeIds(df, dbDf, alias, table, allowDuplication)
+  }
+
+  /** True when [[mergeIds]]' guards pass for a frame whose distinct
+    * projection onto its join columns is `keys`: every key matches
+    * exactly one database row (at least one under `allowDuplication`)
+    * and no matched id is null. Keys and database rows match as the
+    * join matches them: on the columns both schemas name, the
+    * database side cast as [[matchTypes]] casts it. False as well when
+    * a database value does not cast, or when the driver cannot match
+    * as Spark does (a column it cannot resolve alone, a cast Spark
+    * rejects, a collated or nested key), so the caller runs
+    * [[mergeIds]] to decide.
+    */
+  private[graft] def idsMatch(
+      keys: Seq[Row], keySchema: StructType,
+      dbRows: Seq[Row], dbSchema: StructType,
+      alias: String,
+      allowDuplication: Boolean,
+  ): Boolean = {
+    val on = StructType(keySchema.filter(f => dbSchema.names.contains(f.name)))
+    (dbReaders(on, dbSchema), dbIndex(dbSchema, alias)) match {
+      case (Some(read), Some(id)) =>
+        try {
+          // per key: the rows it matches, and whether one has a null id
+          val matches = mutable.HashMap.empty[GenericInternalRow, (Int, Boolean)]
+          val toDb = CatalystTypeConverters.createToCatalystConverter(dbSchema)
+          dbRows.foreach { row =>
+            val r = toDb(row).asInstanceOf[InternalRow]
+            val key = new GenericInternalRow(read.map(_(r)))
+            val (n, nullId) = matches.getOrElse(key, (0, false))
+            matches(key) = (n + 1, nullId || r.isNullAt(id))
+          }
+          val toKey = CatalystTypeConverters.createToCatalystConverter(keySchema)
+          val at = on.fields.map(f => keySchema.fieldIndex(f.name))
+          keys.forall { row =>
+            val r = toKey(row).asInstanceOf[InternalRow]
+            val key = new GenericInternalRow(at.map(i => normalized(r.get(i, keySchema(i).dataType))))
+            matches.get(key).exists { case (n, nullId) =>
+              !nullId && (n == 1 || allowDuplication)
+            }
+          }
+        } catch { case _: MatchDatatypesError => false }
+      case _ => false
     }
   }
 
@@ -240,13 +296,10 @@ object FrameOps {
     * [[CompareMissingRowsError]] text and the same MatchDatatypesError
     * label on an impossible cast. For flat schemas, as JDBC reads are.
     *
-    * Both sides become Catalyst rows. Each database column whose type
-    * differs from its data column's is cast with Catalyst's own `Cast`
-    * (guarded by its `TRY` mode, as in [[matchTypes]]), in the time zone
-    * and ANSI mode of the active `SQLConf`. The database
-    * rows are then keyed in a hash set: `GenericInternalRow` equality
-    * is null-safe, compares byte arrays by content and NaNs as equal,
-    * and −0.0 is normalised to 0.0 as `except` does. Data rows holding
+    * Both sides become Catalyst rows. Each database column is read as
+    * its data column's type by [[castReader]], and the database rows
+    * are keyed in a hash set: `GenericInternalRow` equality is
+    * null-safe and compares byte arrays by content. Data rows holding
     * a null or NaN are dropped first, as `na.drop()` does; the first
     * 20 distinct missing rows are reported in data order.
     */
@@ -254,31 +307,14 @@ object FrameOps {
       data: Seq[Row], dataSchema: StructType,
       dbRows: Seq[Row], dbSchema: StructType,
   ): Unit = {
-    val conf = SQLConf.get
-    val tz = Some(conf.sessionLocalTimeZone)
-    // per data column: its value in a database row, cast to its type
+    val resolver = SQLConf.get.resolver
     val fromDb: Array[InternalRow => Any] = dataSchema.fields.map { f =>
-      val i = dbSchema.fields.indexWhere(d => conf.resolver(d.name, f.name))
+      val i = dbSchema.fields.indexWhere(d => resolver(d.name, f.name))
       require(i >= 0, s"Column `${f.name}` is missing from the database rows.")
-      val ref = BoundReference(i, dbSchema(i).dataType, nullable = true)
-      if (ref.dataType == f.dataType) (r: InternalRow) => normalized(ref.eval(r))
-      else {
-        val guard = Cast(ref, f.dataType, tz, EvalMode.TRY)
-        val cast = Cast(ref, f.dataType, tz, EvalMode.fromSQLConf(conf))
-        val (before, after) = uncastable(dbSchema(i).name, f.dataType)
-        (r: InternalRow) =>
-          if (!r.isNullAt(i) && guard.eval(r) == null)
-            throw new MatchDatatypesError(
-              before + Cast(ref, StringType, tz).eval(r) + after)
-          else normalized(cast.eval(r))
-      }
+      castReader(dbSchema, i, f.dataType).getOrElse(throw new IllegalArgumentException(
+        s"Column `${f.name}` does not cast from ${dbSchema(i).dataType.sql} to ${f.dataType.sql}."))
     }
-    val toDb = CatalystTypeConverters.createToCatalystConverter(dbSchema)
-    val db = new mutable.HashSet[GenericInternalRow]()
-    dbRows.foreach { row =>
-      val r = toDb(row).asInstanceOf[InternalRow]
-      db += new GenericInternalRow(fromDb.map(_(r)))
-    }
+    val db = keyRows(dbRows, dbSchema, fromDb)
 
     val toData = CatalystTypeConverters.createToCatalystConverter(dataSchema)
     val missing = mutable.LinkedHashSet.empty[GenericInternalRow]
@@ -291,6 +327,152 @@ object FrameOps {
     if (missing.nonEmpty) {
       val toRow = CatalystTypeConverters.createToScalaConverter(dataSchema)
       throw missingRows(missing.map(toRow(_).asInstanceOf[Row]))
+    }
+  }
+
+  /** What [[probeRows]] learns in its one pass: the frame's row count,
+    * whether it is empty or holds a null, and whether it matches the
+    * database rows.
+    */
+  private[graft] final case class RowProbe(rows: Long, hasNulls: Boolean, matches: Boolean)
+
+  /** One Spark action over a distinct `df`: each partition counts its
+    * rows, notes any null and looks each row up in a broadcast of the
+    * database rows read as `df`'s columns ([[dbReaders]]). `matches` is
+    * true only when `compareFrames(df, matchTypes(db, df.schema), exact)`
+    * passes. With `exact`, no row is missing and the distinct database
+    * keys number the rows: `df` being distinct, the two sets are then
+    * equal. Without it, no row is missing once the rows holding a null
+    * or NaN are skipped, as `na.drop()` skips them. `matches` is false
+    * as well when the driver cannot key the database rows as Spark
+    * would, including on a value that does not cast.
+    */
+  private[graft] def probeRows(
+      df: DataFrame, dbRows: Seq[Row], dbSchema: StructType, exact: Boolean,
+  ): RowProbe = {
+    val schema = df.schema
+    val keys = dbReaders(schema, dbSchema).flatMap { read =>
+      try Some(keyRows(dbRows, dbSchema, read))
+      catch { case _: MatchDatatypesError => None }
+    }
+    val shared = df.sparkSession.sparkContext.broadcast(
+      keys.getOrElse(mutable.HashSet.empty[GenericInternalRow]))
+    val skipNulls = !exact
+    try {
+      val parts = df.mapPartitions { rows =>
+        val toData = CatalystTypeConverters.createToCatalystConverter(schema)
+        val db = shared.value
+        var n = 0L
+        var nulls = false
+        var missing = 0L
+        rows.foreach { row =>
+          val values = toData(row).asInstanceOf[InternalRow].toSeq(schema)
+          n += 1
+          nulls ||= values.contains(null)
+          if (!(skipNulls && values.exists(isNullOrNaN)) &&
+            !db.contains(new GenericInternalRow(values.map(normalized).toArray))) missing += 1
+        }
+        Iterator((n, nulls, missing))
+      }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaBoolean, Encoders.scalaLong)).collect()
+      val n = parts.map(_._1).sum
+      val missing = parts.map(_._3).sum
+      RowProbe(n, n == 0 || parts.exists(_._2),
+        keys.exists(k => missing == 0 && (!exact || k.size == n)))
+    } finally shared.destroy()
+  }
+
+  /** D2 of the loader: `compareFrames(df, matchTypes(db, df.schema),
+    * exact)` for a distinct `df` and the database rows `dbRows`, after
+    * asserting that the database returned rows, and (when `df` is
+    * non-empty and null-free) at least as many as `df` has. One Spark
+    * action, [[probeRows]]; [[compareFrames]] runs only when the probe
+    * finds a mismatch, to raise its own error with its own text.
+    */
+  private[graft] def compareRows(
+      df: DataFrame, dbRows: Seq[Row], dbSchema: StructType, exact: Boolean,
+  ): Unit = {
+    val dbCount = dbRows.size.toLong
+    assert(dbCount > 0, "Compare query yielded no results.")
+    val probe = probeRows(df, dbRows, dbSchema, exact)
+    if (!probe.hasNulls)
+      assert(dbCount >= probe.rows, s"Compare query yielded fewer rows ($dbCount) than data.")
+    if (!probe.matches)
+      compareFrames(df, matchTypes(frameOf(df.sparkSession, dbRows, dbSchema), df.schema),
+        exact = exact)
+  }
+
+  /** One-partition frame over driver-held rows. */
+  private[graft] def frameOf(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+
+  /** The database rows as keys: each row's values read by `read`. */
+  private def keyRows(
+      dbRows: Seq[Row], dbSchema: StructType, read: Array[InternalRow => Any],
+  ): mutable.HashSet[GenericInternalRow] = {
+    val toDb = CatalystTypeConverters.createToCatalystConverter(dbSchema)
+    val keys = new mutable.HashSet[GenericInternalRow]()
+    dbRows.foreach { row =>
+      val r = toDb(row).asInstanceOf[InternalRow]
+      keys += new GenericInternalRow(read.map(_(r)))
+    }
+    keys
+  }
+
+  /** Per column of `dataSchema`, a [[castReader]] of the database column
+    * `matchTypes` casts and `select` then finds for it. None when a key
+    * cannot be matched on the driver as Spark matches it: the column
+    * is missing, or ambiguous under the session's resolver, or not
+    * named exactly (`matchTypes` would leave it uncast); Spark rejects
+    * the cast; or the type is nested or a non-binary collation.
+    */
+  private def dbReaders(
+      dataSchema: StructType, dbSchema: StructType,
+  ): Option[Array[InternalRow => Any]] = {
+    val readers = dataSchema.fields.map { f =>
+      val keyable = f.dataType match {
+        case s: StringType => s == StringType // the UTF8_BINARY collation
+        case _: NumericType | BinaryType | BooleanType | DateType | TimestampType |
+            TimestampNTZType => true
+        case _             => false
+      }
+      if (!keyable) None
+      else dbIndex(dbSchema, f.name).flatMap(castReader(dbSchema, _, f.dataType))
+    }
+    if (readers.forall(_.isDefined)) Some(readers.map(_.get)) else None
+  }
+
+  /** The one database column the session's resolver finds for `name`,
+    * if that column is named `name` exactly.
+    */
+  private def dbIndex(dbSchema: StructType, name: String): Option[Int] = {
+    val resolver = SQLConf.get.resolver
+    dbSchema.fields.indices.filter(i => resolver(dbSchema(i).name, name)) match {
+      case Seq(i) if dbSchema(i).name == name => Some(i)
+      case _ => None
+    }
+  }
+
+  /** A reader of column `i` of a database row as type `dt`, cast as
+    * [[matchTypes]] casts it: Catalyst's own `Cast`, guarded by its
+    * `TRY` mode, in the time zone and ANSI mode of the active `SQLConf`.
+    * A non-null value that does not cast throws MatchDatatypesError
+    * with [[matchTypes]]' text. Values come out [[normalized]]. None
+    * when Spark rejects the cast.
+    */
+  private def castReader(dbSchema: StructType, i: Int, dt: DataType): Option[InternalRow => Any] = {
+    val conf = SQLConf.get
+    val tz = Some(conf.sessionLocalTimeZone)
+    val ref = BoundReference(i, dbSchema(i).dataType, nullable = true)
+    if (ref.dataType == dt) Some(r => normalized(ref.eval(r)))
+    else {
+      val guard = Cast(ref, dt, tz, EvalMode.TRY)
+      val cast = Cast(ref, dt, tz, EvalMode.fromSQLConf(conf))
+      val (before, after) = uncastable(dbSchema(i).name, dt)
+      if (!guard.resolved || !cast.resolved) None
+      else Some(r =>
+        if (!r.isNullAt(i) && guard.eval(r) == null)
+          throw new MatchDatatypesError(before + Cast(ref, StringType, tz).eval(r) + after)
+        else normalized(cast.eval(r)))
     }
   }
 

@@ -66,49 +66,6 @@ class DerbyConnectorSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("retrieveSnapshot: partitioned spark.read.jdbc sees committed rows across N range splits") {
-    val url = freshDb()
-    ddl(url,
-      "CREATE TABLE big (id INT GENERATED ALWAYS AS IDENTITY PRIMARY KEY, v VARCHAR(50) NOT NULL UNIQUE)")
-    val data = strDf("v" -> (1 to 200).map(i => f"val_$i%03d"))
-    Connector.withConnection(spark, url)(c => c.load(data))
-
-    // read back OUTSIDE the (now committed) load transaction
-    Connector.withConnection(spark, url) { c =>
-      val snap = c.retrieveSnapshot("big", partitionColumn = Some("id"),
-        numPartitions = 4)
-      assert(snap.rdd.getNumPartitions == 4, "range split did not happen")
-      assert(snap.count() == 200)
-      assert(snap.columns.map(_.toLowerCase).sorted.sameElements(Array("id", "v")))
-      val vs = snap.select(lower(col("v"))).collect().map(_.getString(0)).sorted
-      assert(vs.head == "val_001" && vs.last == "val_200")
-
-      // empty table: no bounds to probe, single-partition fallback
-      val st = c.conn.createStatement()
-      st.execute("CREATE TABLE emptytab (id INT PRIMARY KEY)")
-      st.execute("CREATE TABLE tstab (ts TIMESTAMP NOT NULL, v INT)")
-      st.execute("INSERT INTO tstab VALUES " +
-        "(TIMESTAMP('2020-01-01 00:00:00'), 1), " +
-        "(TIMESTAMP('2020-06-01 00:00:00'), 2), " +
-        "(TIMESTAMP('2020-12-31 00:00:00'), 3)")
-      st.close(); c.conn.commit()
-      assert(c.retrieveSnapshot("emptytab", Some("id")).count() == 0)
-
-      // temporal partition column: Spark's JDBC source takes the
-      // probed string bounds directly
-      val ts = c.retrieveSnapshot("tstab", Some("ts"), numPartitions = 2)
-      assert(ts.count() == 3)
-      assert(ts.rdd.getNumPartitions == 2)
-
-      // unsupported partition column type: clear error, not an opaque
-      // Derby conversion failure
-      val err = intercept[IllegalArgumentException] {
-        c.retrieveSnapshot("big", Some("v"))
-      }
-      assert(err.getMessage.contains("must be integral, date, or timestamp"))
-    }
-  }
-
   test("empty schema detected (test_sqlite_connector.py:97-101)") {
     val url = freshDb()
     ddl(url, "VALUES 1") // touch the db so it exists
@@ -226,33 +183,32 @@ class DerbyConnectorSpec extends AnyFunSuite with SparkSpec {
     } finally spark.listenerManager.unregister(listener)
   }
 
-  test("one load of the three-table streets fixture runs at most 7 SQL actions") {
-    // each of the three inserts collects its rows once (3) and checks
-    // D1 on the driver (0), the load counts its frame once (1), each of
-    // the two retrieve steps runs its guard (2), and the exact compare
-    // runs once (1); with D1 in Spark the load ran 10, and 13 before
-    // each step was evaluated once
+  test("one load of the three-table streets fixture runs at most 4 SQL actions") {
+    // each of the three steps collects its table's distinct projection
+    // once (3), and the exact compare probes the cached frame once (1);
+    // the id guards, D1 and the compare's keys run on the driver. With
+    // the id guards and the compare in Spark the load ran 7, with D1 in
+    // Spark too 10, and 13 before each step was evaluated once
     val url = streetDb()
     val (_, actions) = withActions(Connector.withConnection(spark, url)(c =>
       c.load(streets("NL", "Utrecht", "Oudegracht", "1"))))
-    assert(actions.size <= 7, actions.mkString(", "))
+    assert(actions.size <= 4, actions.mkString(", "))
     assert(!actions.contains("count"), actions.mkString(", "))
     spark.catalog.clearCache()
   }
 
   test("load(compare = false) runs no SQL action the compare-free load did not run") {
-    // the same load without the compare: the three inserts' collects,
-    // the frame's count (it replaces the first retrieve step's own
-    // count, the second step's is gone) and the two retrieve guards;
-    // 9 with D1 in Spark, 10 before each step was evaluated once
+    // the same load without the compare: the three steps' collects;
+    // 6 with the id guards in Spark, 9 with D1 in Spark too, 10 before
+    // each step was evaluated once
     val url = streetDb()
     val (_, actions) = withActions(Connector.withConnection(spark, url)(c =>
       c.load(streets("NL", "Utrecht", "Oudegracht", "1"), compare = false)))
-    assert(actions.size <= 6, actions.mkString(", "))
+    assert(actions.size <= 3, actions.mkString(", "))
     spark.catalog.clearCache()
   }
 
-  test("load(allowDuplication = true) counts every retrieve step's input") {
+  test("load(allowDuplication = true) guards a duplicating join with no count") {
     val url = freshDb()
     // no UNIQUE on tag: the load inserts a third 'x', and its retrieve
     // step then matches three ids
@@ -269,9 +225,9 @@ class DerbyConnectorSpec extends AnyFunSuite with SparkSpec {
     val (rows, actions) = withActions(Connector.withConnection(spark, url)(c =>
       c.load(data, allowDuplication = true).collect().toSeq))
     assert(rows.size == 3 && rows.map(_.getAs[Int]("tag_id")).distinct.size == 3)
-    // the join added rows, so the step counts its input instead of
-    // reusing the frame's count
-    assert(actions.count(_ == "count") == 1, actions.mkString(", "))
+    // the id guard counts each key's matches on the driver, so the
+    // duplicating join needs no count of its input (one before)
+    assert(!actions.contains("count"), actions.mkString(", "))
     spark.catalog.clearCache()
   }
 
@@ -392,6 +348,9 @@ class DerbyConnectorSpec extends AnyFunSuite with SparkSpec {
     strDf("land" -> Seq("NL", "BE", "BE"), "stad" -> Seq("Utrecht", "Gent", "Gent"),
       "straat" -> Seq("Oudegracht", "Veldstraat", "Korenmarkt"), "lengte" -> Seq("1", "1", "2"))
 
+  /** The JDBC statements a clean load of [[faultData]] executes. */
+  private val cleanLoadStatements = 7
+
   test("a fault at any statement of a load rolls it back and releases every cache") {
     val url = streetDb()
     Connector.withConnection(spark, url)(c =>
@@ -408,8 +367,10 @@ class DerbyConnectorSpec extends AnyFunSuite with SparkSpec {
       c.load(data); throw new Undo
     })
     val statements = FaultyDriver.executed.get
-    // three inserts, three D1 read-backs, two retrieves, the compare
-    assert(statements == 9, statements)
+    // three inserts, one read per table (the two keyed tables' reads
+    // serve D1, the id guard and the id join), the compare; 9 when the
+    // keyed tables were read twice
+    assert(statements == cleanLoadStatements, statements)
     assert(streetTables(url) == before)
 
     spark.catalog.clearCache()
@@ -439,7 +400,7 @@ class DerbyConnectorSpec extends AnyFunSuite with SparkSpec {
     spark.catalog.clearCache()
     val sc = spark.sparkContext
     val persistedBefore = sc.getPersistentRDDs.keySet
-    (1 to 9).foreach { k =>
+    (1 to cleanLoadStatements).foreach { k =>
       FaultyDriver.arm(k, dies = true)
       val e = intercept[java.sql.SQLException](
         Connector.withConnection(spark, FaultyDriver.url(url))(c => c.load(data)))

@@ -88,7 +88,7 @@ class FrameOpsPropertySpec extends AnyFunSuite with SparkSpec {
 
   test("containsRows fails exactly when compareFrames(exact = false) does, on the same rows") {
     import org.apache.spark.sql.types._
-    import graft.{CompareMissingRowsError, connector}
+    import graft.CompareMissingRowsError
     val dataSchema = StructType(Seq(
       StructField("d", DoubleType), StructField("f", DoubleType),
       StructField("m", DecimalType(6, 2)), StructField("dt", DateType),
@@ -164,11 +164,209 @@ class FrameOpsPropertySpec extends AnyFunSuite with SparkSpec {
          else Nil)
 
       val viaSpark = outcome(FrameOps.compareFrames(
-        connector.JdbcFrames.frameOf(spark, data, dataSchema),
-        FrameOps.matchTypes(connector.JdbcFrames.frameOf(spark, db, dbSchema), dataSchema),
+        FrameOps.frameOf(spark, data, dataSchema),
+        FrameOps.matchTypes(FrameOps.frameOf(spark, db, dbSchema), dataSchema),
         exact = false))
       val driver = outcome(FrameOps.containsRows(data, dataSchema, db, dbSchema))
       assert(driver == viaSpark, s"seed $seed")
+    }
+  }
+
+  /** "ok", or the failure: the MatchDatatypesError label where one is
+    * in the error's chain (Spark wraps it in job-specific text),
+    * else the error's class and message with byte arrays, which rows
+    * print by identity, masked.
+    */
+  private def outcome(body: => Any): String =
+    try { body; "ok" } catch {
+      case e: Throwable =>
+        def messages(t: Throwable): Seq[String] =
+          Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
+        val label = "MatchDatatypesError: column `[^`]*` value '[^']*' does not cast to \\S+".r
+        messages(e).flatMap(label.findFirstIn).headOption.getOrElse(
+          e.getClass.getName + ": " + e.getMessage.replaceAll("\\[B@[0-9a-f]+", "<bytes>"))
+    }
+
+  /** A frame's rows with byte arrays by content, in a fixed order. */
+  private def contents(df: DataFrame): Seq[String] =
+    df.collect().toSeq.map(_.toSeq.map {
+      case b: Array[Byte] => b.mkString("bytes(", ",", ")")
+      case v => String.valueOf(v)
+    }.mkString("|")).sorted
+
+  private def withAnsi[A](on: Boolean)(body: => A): A = {
+    val prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", on.toString)
+    try body finally spark.conf.set("spark.sql.ansi.enabled", prev)
+  }
+
+  test("the driver id guard passes exactly when mergeIds does, and mergeIdRows returns its join") {
+    import org.apache.spark.sql.types._
+    val dataSchema = StructType(Seq(
+      StructField("d", DoubleType), StructField("m", DecimalType(6, 2)),
+      StructField("b", BinaryType), StructField("l", LongType),
+      StructField("i", IntegerType), StructField("s", StringType)))
+    // as a JDBC read types the retrieve query: the id first, then the
+    // columns in another order, a wider DECIMAL, INT for BIGINT and
+    // BIGINT for INT
+    val dbSchema = StructType(Seq(
+      StructField("id", IntegerType), StructField("s", StringType),
+      StructField("i", LongType), StructField("l", IntegerType),
+      StructField("b", BinaryType), StructField("m", DecimalType(10, 4)),
+      StructField("d", DoubleType)))
+    def dec(s: String) = new java.math.BigDecimal(s)
+
+    (1 to 40).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      def pick[A](xs: A*): A = xs(rnd.nextInt(xs.size))
+      def maybe[A](v: => A): Any = if (rnd.nextInt(8) == 0) null else v
+      def dataRow(): Row = Row(
+        maybe(pick(Double.NaN, 0.0, -0.0, 1.5)),
+        maybe(pick(dec("1.50"), dec("-0.01"))),
+        maybe(pick(Array[Byte](), Array[Byte](1, 2))),
+        maybe(pick(1L, -3L)),
+        maybe(pick(7, -7)),
+        maybe(pick("a", "a ", "")))
+      // the database rows for one key: one row holding the key as the
+      // JDBC reader returns it, each value cast back to the same one
+      // (a wider DECIMAL, ±0.0, INT for BIGINT and back), or, under
+      // `fault`, a key the guard must reject: gone, twice, with a null
+      // id, a DECIMAL that rounds to another value, or a string whose
+      // trailing space a CHAR column's read dropped
+      var nextId = 0
+      def toDb(r: Row, fault: String): Seq[Row] = {
+        def at(i: Int)(f: Any => Any): Any = if (r.isNullAt(i)) null else f(r.get(i))
+        def row(): Row = {
+          nextId += 1
+          Row(
+            if (fault == "null id") null else nextId,
+            at(5) { case v: String => if (fault == "trimmed") v.stripTrailing() else v },
+            at(4)(_.asInstanceOf[Int].toLong),
+            at(3)(_.asInstanceOf[Long].toInt),
+            at(2)(_.asInstanceOf[Array[Byte]].clone()),
+            at(1)(_.asInstanceOf[java.math.BigDecimal].add(
+              dec(if (fault == "rounds away") "0.005" else pick("0", "0.0049")))),
+            at(0) {
+              case d: Double if d == 0.0 => pick(0.0, -0.0)
+              case other => other
+            })
+        }
+        fault match {
+          case "gone"  => Nil
+          case "twice" => Seq(row(), row())
+          case _       => Seq(row())
+        }
+      }
+      val data = Seq.fill(1 + rnd.nextInt(6))(dataRow())
+      val df = FrameOps.preprocess(FrameOps.frameOf(spark, data, dataSchema))
+      val keys = df.collect().toSeq
+      // one key, or none, gets a fault; plus rows of the database's own,
+      // and now and then a BIGINT that does not fit an INT
+      val fault = pick("none", "none", "none", "gone", "twice", "null id", "rounds away",
+        "trimmed", "overflow")
+      val faulty = rnd.nextInt(keys.size)
+      val db = keys.zipWithIndex.flatMap { case (k, i) => toDb(k, if (i == faulty) fault else "none") } ++
+        Seq.fill(rnd.nextInt(3))(dataRow()).flatMap(toDb(_, "none")) ++
+        (if (fault == "overflow") Seq(Row(99, "z", 3000000000L, 1, null, null, 1.0)) else Nil)
+      val allowDuplication = rnd.nextInt(3) == 0
+
+      withAnsi(seed % 2 == 0) {
+        val dbDf = FrameOps.frameOf(spark, db, dbSchema)
+        var viaSparkRows = Seq.empty[String]
+        val viaSpark = outcome {
+          val joined = FrameOps.mergeIds(df, dbDf, "id", "t", allowDuplication)
+          viaSparkRows = contents(joined)
+          joined.unpersist()
+        }
+        val guard = FrameOps.idsMatch(keys, dataSchema, db, dbSchema, "id", allowDuplication)
+        assert(guard == (viaSpark == "ok"), s"seed $seed: $viaSpark")
+        var driverRows = Seq.empty[String]
+        val driver = outcome {
+          val joined = FrameOps.mergeIdRows(df, keys, dataSchema, db, dbSchema,
+            "id", "t", allowDuplication)
+          driverRows = contents(joined)
+          joined.unpersist()
+        }
+        assert(driver == viaSpark, s"seed $seed")
+        assert(driverRows == viaSparkRows, s"seed $seed")
+      }
+    }
+  }
+
+  test("the one-action compare fails exactly when compareFrames(exact = true | false) does, " +
+    "with the same message") {
+    import org.apache.spark.sql.types._
+    val dataSchema = StructType(Seq(
+      StructField("d", DoubleType), StructField("m", DecimalType(6, 2)),
+      StructField("b", BinaryType), StructField("s", StringType),
+      StructField("l", LongType)))
+    // as a JDBC read types the compare query: another column order, an
+    // extra column, a wider DECIMAL and INT for BIGINT
+    val dbSchema = StructType(Seq(
+      StructField("extra", StringType), StructField("s", StringType),
+      StructField("l", IntegerType), StructField("b", BinaryType),
+      StructField("m", DecimalType(10, 4)), StructField("d", DoubleType)))
+    def dec(s: String) = new java.math.BigDecimal(s)
+
+    /** The compare as the loader ran it before: the asserts on counts
+      * Spark took, then `compareFrames` in Spark.
+      */
+    def sparkCompare(df: DataFrame, db: Seq[Row], exact: Boolean): Unit = {
+      import org.apache.spark.sql.functions._
+      Predef.assert(db.nonEmpty, "Compare query yielded no results.")
+      val n = df.count()
+      val nulls = n == 0 ||
+        df.filter(df.columns.map(c => FrameOps.quoted(c).isNull).reduce(_ || _)).count() > 0
+      if (!nulls)
+        Predef.assert(db.size >= n, s"Compare query yielded fewer rows (${db.size}) than data.")
+      FrameOps.compareFrames(df,
+        FrameOps.matchTypes(FrameOps.frameOf(spark, db, dbSchema), dataSchema), exact = exact)
+    }
+
+    (1 to 40).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      def pick[A](xs: A*): A = xs(rnd.nextInt(xs.size))
+      def maybe[A](v: => A): Any = if (rnd.nextInt(10) == 0) null else v
+      def dataRow(): Row = Row(
+        pick(Double.NaN, 0.0, -0.0, 1.5, null),
+        maybe(pick(dec("1.50"), dec("12.34"), dec("-0.01"))),
+        maybe(pick(Array[Byte](), Array[Byte](1, 2))),
+        maybe(pick("", "a", "a ")),
+        maybe(pick(1L, -3L)))
+      def toDb(r: Row): Row = {
+        def at(i: Int)(f: Any => Any): Any = if (r.isNullAt(i)) null else f(r.get(i))
+        Row(
+          pick("x", null),
+          r.get(3),
+          at(4)(_.asInstanceOf[Long].toInt),
+          at(2)(_.asInstanceOf[Array[Byte]].clone()),
+          at(1)(_.asInstanceOf[java.math.BigDecimal].add(dec(pick("0", "0", "0.0049", "0.005")))),
+          at(0) {
+            case d: Double if d == 0.0 => pick(0.0, -0.0)
+            case other => other
+          })
+      }
+      val data = Seq.fill(rnd.nextInt(7))(dataRow())
+      val df = FrameOps.preprocess(FrameOps.frameOf(spark, data, dataSchema)).cache()
+      // the database side of a load: usually every data row, some twice;
+      // now and then one missing, rows of its own, or an overflowing
+      // DECIMAL
+      val db = data.filter(_ => rnd.nextInt(8) != 0).flatMap(r => Seq.fill(pick(1, 1, 2))(toDb(r))) ++
+        (if (rnd.nextInt(4) == 0) Seq.fill(1 + rnd.nextInt(2))(toDb(dataRow())) else Nil) ++
+        (if (rnd.nextInt(8) == 0) Seq(Row(null, "a", 1, null, dec("123456.7890"), 1.5)) else Nil)
+
+      Seq(true, false).foreach { exact =>
+        val viaSpark = outcome(sparkCompare(df, db, exact))
+        val driver = outcome(FrameOps.compareRows(df, db, dbSchema, exact))
+        assert(driver == viaSpark, s"seed $seed exact $exact")
+        // the probe's own verdict agrees, so compareFrames runs only on
+        // a real mismatch
+        val compared = outcome(FrameOps.compareFrames(df,
+          FrameOps.matchTypes(FrameOps.frameOf(spark, db, dbSchema), dataSchema), exact))
+        assert(FrameOps.probeRows(df, db, dbSchema, exact).matches == (compared == "ok"),
+          s"seed $seed exact $exact: $compared")
+      }
+      df.unpersist()
     }
   }
 }
