@@ -15,8 +15,9 @@ identical-code pair bounds the box's drift.
 Prints each pair's value of `--metric`, the change's win count (wins
 follow the metric's direction in BENCHMARK.json), the median of the
 per-pair change/base ratios, the base's median and quartiles, the
-identical-code drift, and the medians of every other metric the runs
-print. Exits non-zero when a run fails or reports a wrong output.
+identical-code drift, and the median, quartiles and win count of every
+metric the runs print. Exits non-zero when a run fails or reports a
+wrong output.
 """
 import argparse
 import json
@@ -129,11 +130,15 @@ def main():
     d0, d1 = drift[0][a.metric], drift[1][a.metric]
     print(f"identical-code drift (base vs base, seed 1): {d0:.6g} -> {d1:.6g} "
           f"({(d1 / d0 - 1) * 100:+.1f}%)")
-    print("\nmedians of every metric (base -> change):")
+    print("\nevery metric, median [quartiles] (base -> change), change better in:")
     for name in runs["base"][1]:
-        b = statistics.median(runs["base"][s][name] for s in seeds)
-        c = statistics.median(runs["change"][s].get(name, float("nan")) for s in seeds)
-        print(f"  {name} {b:.6g} -> {c:.6g}")
+        b = [runs["base"][s][name] for s in seeds]
+        c = [runs["change"][s].get(name, float("nan")) for s in seeds]
+        lower = lower_is_better(name)
+        wins = sum((y < x) if lower else (y > x) for x, y in zip(b, c))
+        (b1, b2, b3), (c1, c2, c3) = quartiles(b), quartiles(c)
+        print(f"  {name} {b2:.6g} [{b1:.6g}, {b3:.6g}] -> {c2:.6g} [{c1:.6g}, {c3:.6g}], "
+              f"{wins}/{len(b)}")
     return 0
 
 
