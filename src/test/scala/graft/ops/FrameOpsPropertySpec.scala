@@ -177,7 +177,7 @@ class FrameOpsPropertySpec extends AnyFunSuite with SparkSpec {
     * else the error's class and message with byte arrays, which rows
     * print by identity, masked.
     */
-  private def outcome(body: => Any): String =
+  private def verdict(body: => Any): String =
     try { body; "ok" } catch {
       case e: Throwable =>
         def messages(t: Throwable): Seq[String] =
@@ -273,7 +273,7 @@ class FrameOpsPropertySpec extends AnyFunSuite with SparkSpec {
       withAnsi(seed % 2 == 0) {
         val dbDf = FrameOps.frameOf(spark, db, dbSchema)
         var viaSparkRows = Seq.empty[String]
-        val viaSpark = outcome {
+        val viaSpark = verdict {
           val joined = FrameOps.mergeIds(df, dbDf, "id", "t", allowDuplication)
           viaSparkRows = contents(joined)
           joined.unpersist()
@@ -281,7 +281,7 @@ class FrameOpsPropertySpec extends AnyFunSuite with SparkSpec {
         val guard = FrameOps.idsMatch(keys, dataSchema, db, dbSchema, "id", allowDuplication)
         assert(guard == (viaSpark == "ok"), s"seed $seed: $viaSpark")
         var driverRows = Seq.empty[String]
-        val driver = outcome {
+        val driver = verdict {
           val joined = FrameOps.mergeIdRows(df, keys, dataSchema, db, dbSchema,
             "id", "t", allowDuplication)
           driverRows = contents(joined)
@@ -356,12 +356,12 @@ class FrameOpsPropertySpec extends AnyFunSuite with SparkSpec {
         (if (rnd.nextInt(8) == 0) Seq(Row(null, "a", 1, null, dec("123456.7890"), 1.5)) else Nil)
 
       Seq(true, false).foreach { exact =>
-        val viaSpark = outcome(sparkCompare(df, db, exact))
-        val driver = outcome(FrameOps.compareRows(df, db, dbSchema, exact))
+        val viaSpark = verdict(sparkCompare(df, db, exact))
+        val driver = verdict(FrameOps.compareRows(df, db, dbSchema, exact))
         assert(driver == viaSpark, s"seed $seed exact $exact")
         // the probe's own verdict agrees, so compareFrames runs only on
         // a real mismatch
-        val compared = outcome(FrameOps.compareFrames(df,
+        val compared = verdict(FrameOps.compareFrames(df,
           FrameOps.matchTypes(FrameOps.frameOf(spark, db, dbSchema), dataSchema), exact))
         assert(FrameOps.probeRows(df, db, dbSchema, exact).matches == (compared == "ok"),
           s"seed $seed exact $exact: $compared")
