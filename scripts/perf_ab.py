@@ -3,21 +3,21 @@
 
     python3 scripts/perf_ab.py --workload load_star --base HEAD~1 --change HEAD --seeds 11
 
-Exports each commit into its own tree outside the repository
-(`git archive`, under `--dir`, by default a new temporary directory), so
-each tree's `.bench_build` and `.bench_work` stay in that tree. Then runs
-`perfbench/run.py --workload W --seed s` in both trees for seeds 1..N,
+Exports each commit into its own tree in a new temporary directory
+outside the repository (`git archive`), so each tree's `.bench_build`
+and `.bench_work` stay in that tree; the trees are removed afterwards.
+Then runs `perfbench/run.py --workload W --seed s` untraced, for
+BENCHMARK.json's `run_seconds`, in both trees for seeds 1..N,
 alternating which tree goes first from one seed to the next so that a
 box that drifts slower over the session does not favour either side,
 and finally runs the base tree twice more on seed 1: that
 identical-code pair bounds the box's drift.
 
-Prints each pair's value of `--metric`, the change's win count (wins
-follow the metric's direction in BENCHMARK.json), the median of the
-per-pair change/base ratios, the base's median and quartiles, the
-identical-code drift, and the median, quartiles and win count of every
-metric the runs print. Exits non-zero when a run fails or reports a
-wrong output.
+Prints each pair's `pass_s`, the change's win count (wins follow the
+metric's direction in BENCHMARK.json), the median of the per-pair
+change/base ratios, the base's median and quartiles, the identical-code
+drift, and the median, quartiles and win count of every metric the runs
+print. Exits non-zero when a run fails or reports a wrong output.
 """
 import argparse
 import json
@@ -29,6 +29,10 @@ import sys
 import tempfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+METRIC = "pass_s"
+
+with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
+    BENCHMARK = json.load(fh)
 
 
 def export(rev, dest):
@@ -39,10 +43,10 @@ def export(rev, dest):
     subprocess.run(["tar", "-x", "-C", dest], input=archive, check=True)
 
 
-def run(tree, workload, seed, seconds, trace):
-    """The metrics one run prints, by name."""
-    cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
-           "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)]
+def run(tree, workload, seed):
+    """The metrics one untraced run prints, by name."""
+    cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
+           "--seconds", str(BENCHMARK["run_seconds"]), "--trace", "0"]
     r = subprocess.run(cmd, cwd=tree, capture_output=True, text=True)
     lines = [l for l in r.stdout.splitlines() if l.startswith("{")]
     if r.returncode != 0 or not lines:
@@ -56,9 +60,7 @@ def run(tree, workload, seed, seconds, trace):
 
 def lower_is_better(metric):
     """The metric's direction as BENCHMARK.json declares it (lower if absent)."""
-    with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
-        spec = json.load(fh)
-    for m in spec.get("end_to_end", []) + spec.get("per_layer", []):
+    for m in BENCHMARK.get("end_to_end", []) + BENCHMARK.get("per_layer", []):
         if m["name"] == metric:
             return m["better"] == "lower"
     return True
@@ -72,7 +74,7 @@ def quartiles(values):
     return q1, q2, q3
 
 
-def summarise(pairs, metric, lower):
+def summarise(pairs, lower):
     """Lines reporting the pairs `[(seed, base, change)]` of one metric."""
     out = [f"{'seed':>4} {'base':>12} {'change':>12} {'ratio':>7}"]
     ratios, wins = [], 0
@@ -96,16 +98,9 @@ def main():
     ap.add_argument("--base", required=True, help="parent commit")
     ap.add_argument("--change", default="HEAD", help="commit under test")
     ap.add_argument("--seeds", type=int, default=11, help="pairs on seeds 1..N")
-    ap.add_argument("--seconds", type=float, default=10)
-    ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--metric", default="pass_s")
-    ap.add_argument("--dir", help="where the two trees go (default: a new temporary directory)")
-    ap.add_argument("--keep", action="store_true", help="keep the trees afterwards")
     a = ap.parse_args()
 
-    top = os.path.abspath(a.dir) if a.dir else tempfile.mkdtemp(prefix="perf_ab-")
-    if os.path.commonpath([top, ROOT]) == ROOT:
-        raise SystemExit("--dir must lie outside the repository")
+    top = tempfile.mkdtemp(prefix="perf_ab-")
     trees = {"base": os.path.join(top, "base"), "change": os.path.join(top, "change")}
     try:
         export(a.base, trees["base"])
@@ -114,20 +109,18 @@ def main():
         for seed in range(1, a.seeds + 1):
             order = ("base", "change") if seed % 2 else ("change", "base")
             for side in order:
-                runs[side][seed] = run(trees[side], a.workload, seed, a.seconds, a.trace)
-                print(f"seed {seed} {side} {a.metric} {runs[side][seed].get(a.metric)}",
-                      flush=True)
-        drift = [run(trees["base"], a.workload, 1, a.seconds, a.trace) for _ in range(2)]
+                runs[side][seed] = run(trees[side], a.workload, seed)
+                print(f"seed {seed} {side} {METRIC} {runs[side][seed].get(METRIC)}", flush=True)
+        drift = [run(trees["base"], a.workload, 1) for _ in range(2)]
     finally:
-        if not a.keep:
-            shutil.rmtree(top, ignore_errors=True)
+        shutil.rmtree(top, ignore_errors=True)
 
     seeds = range(1, a.seeds + 1)
-    print(f"\n{a.workload} {a.metric}: base {a.base}, change {a.change}")
-    pairs = [(s, runs["base"][s][a.metric], runs["change"][s][a.metric]) for s in seeds]
-    for line in summarise(pairs, a.metric, lower_is_better(a.metric)):
+    print(f"\n{a.workload} {METRIC}: base {a.base}, change {a.change}")
+    pairs = [(s, runs["base"][s][METRIC], runs["change"][s][METRIC]) for s in seeds]
+    for line in summarise(pairs, lower_is_better(METRIC)):
         print(line)
-    d0, d1 = drift[0][a.metric], drift[1][a.metric]
+    d0, d1 = drift[0][METRIC], drift[1][METRIC]
     print(f"identical-code drift (base vs base, seed 1): {d0:.6g} -> {d1:.6g} "
           f"({(d1 / d0 - 1) * 100:+.1f}%)")
     print("\nevery metric, median [quartiles] (base -> change), change better in:")
