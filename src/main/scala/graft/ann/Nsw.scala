@@ -3,6 +3,8 @@ package graft.ann
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Caching.checkpointRdd
+
 /** Graph-based ANN — the NSW/HNSW family's search primitive, closing
   * the index taxonomy beside LSH (ann/Ann.scala:316), IVF (:418),
   * PQ and the binary path: a kNN PROXIMITY GRAPH over the corpus,
@@ -250,15 +252,6 @@ object Nsw {
         beam, rounds, k, persistInputs, entries = entries)
     } finally if (upperPersisted) upper.unpersist(false)
   }
-
-  /** The checkpointed RDD behind a localCheckpointed frame — the
-    * unpersist handle (the Dataset itself has no CacheManager entry).
-    */
-  private def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.logical match {
-      case l: org.apache.spark.sql.execution.LogicalRDD => Some(l.rdd)
-      case _ => None
-    }
 
   /** NN-descent — the CORPUS-SCALE graph build that replaces
     * [[knnGraph]]'s guarded all-pairs arm (Dong et al.'s insight:

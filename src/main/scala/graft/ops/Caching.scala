@@ -1,6 +1,8 @@
 package graft.ops
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
 /** Loan-style cache lifecycle for the "shared scan" pattern: an
@@ -66,4 +68,15 @@ object Caching {
     p
   }
   private val lastPlan = new ThreadLocal[String]
+
+  /** The checkpointed RDD behind a `localCheckpoint`ed frame — the
+    * handle `unpersist` must target (the Dataset itself has no
+    * CacheManager entry). None for frames that are not a plain
+    * LogicalRDD scan.
+    */
+  private[graft] def checkpointRdd(df: DataFrame): Option[RDD[_]] =
+    df.queryExecution.logical match {
+      case l: LogicalRDD => Some(l.rdd)
+      case _ => None
+    }
 }

@@ -281,6 +281,11 @@ object FrameOps {
             "\nNote: if this happens due to your data containing missings and your " +
             "database not allowing those, set exact=False")
     } else {
+      // the database side runs on its own first, so that a value that
+      // does not cast fails every time: once a cached data side turns
+      // out empty, AQE drops the database side of `data.except(db)`
+      // unevaluated or not, depending on which stage finishes first
+      db.write.format("noop").mode("overwrite").save()
       val missing = data.except(db).limit(20).collect()
       if (missing.nonEmpty) throw missingRows(missing)
     }

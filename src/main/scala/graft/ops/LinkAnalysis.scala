@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.ops.Caching.checkpointRdd
+
 /** Link analysis for source-quality scoring — the Common-Crawl-lore
   * pattern: rank hosts by a PageRank-style centrality over the link
   * (here: co-citation) graph and prefer high-centrality sources when
@@ -78,17 +80,6 @@ object LinkAnalysis {
     }
     ranks
   }
-
-  /** The checkpointed RDD behind a `localCheckpoint`ed frame — the
-    * handle `unpersist` must target (the Dataset itself has no
-    * CacheManager entry); None for non-LogicalRDD plans. Same device
-    * as `Bpe.train`.
-    */
-  private def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.logical match {
-      case l: org.apache.spark.sql.execution.LogicalRDD => Some(l.rdd)
-      case _ => None
-    }
 
   /** Integer HITS (Kleinberg hubs & authorities) over an edge list —
     * PageRank's companion centrality: a good HUB links to many good

@@ -4,10 +4,11 @@ import java.nio.file.{Files, Path, StandardCopyOption}
 import java.nio.file.attribute.FileTime
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamReader, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{BinaryType, LongType, StringType, StructField, StructType, TimestampType}
 
 /** Bounded replay of a parquet slice THROUGH the streaming engine —
   * the bridge that puts `streaming/Streams.scala` operators under the
@@ -36,6 +37,18 @@ import org.apache.spark.sql.streaming.Trigger
   *   - the sink is a real parquet Append sink (checkpointed), NOT the
   *     in-memory test sink: results never materialize on the driver,
   *     the same shape a production replay job writes.
+  *
+  * Every replay, whatever it stages, runs through ONE runner
+  * ([[run]]): a fresh root under the scratch base; the replay's own
+  * staging ([[stageFrames]] for frame batches, [[stageBytes]] for raw
+  * shards) and streaming read; a query with a checkpoint and
+  * `Trigger.AvailableNow` into either the parquet Append file sink or
+  * `foreachBatch`; then the input and the checkpoint are deleted, the
+  * root goes to the exit reaper and the sink is read back. Failure
+  * contract: when staging, building, `start` or `awaitTermination`
+  * throws (a failed or an interrupted query), the runner stops the
+  * query if it is still active, deletes the whole root and rethrows —
+  * no query keeps running and no scratch outlives the call.
   *
   * Scale note: this is a VERIFICATION harness over a bounded slice
   * (the single-file batch is deliberate — it makes the replay
@@ -92,13 +105,12 @@ object Replay {
     * Measured on the bench box: ~130 ms/batch of offset bookkeeping
     * at disk /tmp. A PRODUCTION streaming job's checkpoint must be
     * durable storage — this harness is a bounded verification replay
-    * by contract (see the object scaladoc); override with
-    * `GRAFT_REPLAY_SCRATCH` (or -Dgraft.replay.scratch) to pin a
-    * location, e.g. when /dev/shm is too small for a staged slice.
+    * by contract (see the object scaladoc); override with the system
+    * property `-Dgraft.replay.scratch=<dir>` to pin a location, e.g.
+    * when /dev/shm is too small for a staged slice.
     */
   private lazy val scratchBase: Path = {
     val pick = sys.props.get("graft.replay.scratch")
-      .orElse(sys.env.get("GRAFT_REPLAY_SCRATCH"))
       .map(java.nio.file.Paths.get(_))
       .orElse {
         val shm = java.nio.file.Paths.get("/dev/shm")
@@ -114,109 +126,104 @@ object Replay {
   private def newReplayRoot(): Path =
     Files.createTempDirectory(scratchBase, "graft_replay_")
 
-  /** Stages `events` (+ sentinels) and streams them through `build`
-    * with Trigger.AvailableNow into a parquet sink; returns the sink
-    * read back as a DataFrame. `events` must be EventRow-shaped with
-    * ms-truncated `ts` — the stateful operators' `Timestamp.getTime`
-    * arithmetic is millisecond-grained, so sub-ms input would diverge
-    * from any ns oracle.
+  /** Where a replay's query writes its output dir `root/out`. */
+  private sealed trait Sink
+  /** The checkpointed parquet file sink, Append mode. */
+  private case object ParquetAppend extends Sink
+  /** `foreachBatch` in `outputMode`, each micro-batch written to the
+    * output dir with `saveMode`: "overwrite" keeps the last Complete
+    * snapshot, "append" accumulates Update emissions.
     */
-  private def runReplay(
-      spark: SparkSession, events: DataFrame,
-      sentinels: Seq[Streams.EventRow],
-      build: Dataset[Streams.EventRow] => Dataset[_],
-  ): DataFrame = withReplayConf(spark) {
+  private final case class EachBatch(outputMode: String, saveMode: String)
+      extends Sink
+
+  /** The one replay runner (see the object scaladoc). `source` stages
+    * the replay's inputs under the fresh root it is given and returns
+    * the streaming frame to run; the runner streams it into `sink` and
+    * returns the sink read back as a DataFrame. The failure cleanup
+    * exists because a root that never reaches the exit reaper would
+    * outlive the JVM, in RAM when the scratch is /dev/shm.
+    */
+  private def run(spark: SparkSession, sink: Sink)(
+      source: Path => DataFrame): DataFrame = withReplayConf(spark) {
     val root = newReplayRoot()
-    val inDir = Files.createDirectory(root.resolve("in"))
-    val ckpt = root.resolve("ckpt").toString
     val outDir = root.resolve("out").toString
-
-    stageBatch(spark, events.coalesce(1), inDir, "b000", mtimeSec = 1000L)
-    sentinels.zipWithIndex.foreach { case (row, i) =>
-      import spark.implicits._
-      stageBatch(spark, Seq(row).toDF(), inDir, f"b${i + 1}%03d",
-        mtimeSec = 1000L + 1000L * (i + 1))
+    var query: Option[StreamingQuery] = None
+    try {
+      val writer = source(root).writeStream
+        .option("checkpointLocation", root.resolve("ckpt").toString)
+        .trigger(Trigger.AvailableNow())
+      query = Some(sink match {
+        case ParquetAppend =>
+          writer.format("parquet").outputMode("append").start(outDir)
+        case EachBatch(outputMode, saveMode) =>
+          val write: (Dataset[Row], Long) => Unit =
+            (b, _) => b.write.mode(saveMode).parquet(outDir)
+          writer.outputMode(outputMode).foreachBatch(write).start()
+      })
+      query.foreach(_.awaitTermination())
+    } catch {
+      case e: Throwable =>
+        try query.filter(_.isActive).foreach(_.stop())
+        catch { case stopFailure: Throwable => e.addSuppressed(stopFailure) }
+        finally deleteRecursively(root)
+        throw e
     }
-
-    val src = spark.readStream
-      .schema(Encoders.product[Streams.EventRow].schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inDir.toString)
-    val out = {
-      import spark.implicits._
-      build(src.as[Streams.EventRow])
-    }
-    val q = out.writeStream
-      .format("parquet")
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start(outDir)
-    q.awaitTermination()
     // the staged input and checkpoint are dead once the query has
     // terminated — only the sink parquet backs the returned frame.
     // Repeated bench/verify invocations would otherwise accumulate
-    // staging dirs in the system temp for the JVM's lifetime.
-    deleteRecursively(inDir)
-    deleteRecursively(root.resolve("ckpt"))
+    // staging dirs in the scratch for the JVM's lifetime.
+    val entries = Files.list(root)
+    val dead =
+      try entries.filter(_.getFileName.toString != "out").toList
+      finally entries.close()
+    dead.forEach(p => deleteRecursively(p))
     // the sink must outlive this call (the returned frame reads it
     // lazily), so the root reaps at JVM exit, not here
     reapAtExit(root)
     spark.read.parquet(outDir)
   }
 
-  /** foreachBatch-sink replay for operators the Append-only file sink
-    * cannot take: `mapGroupsWithState` (Update mode only — [[Streams.ewmaStream]])
-    * and unwatermarked streaming aggregations (Update/Complete only —
-    * [[Streams.hllRegistersStream]], [[Streams.cmsCellsStream]]).
-    * `foreachBatch` is itself the production sink pattern for these
-    * (upsert the emitted rows into a store); here each micro-batch's
-    * emission lands in the parquet sink dir — `replaceEachBatch = true`
-    * for Complete mode (the last snapshot IS the result),
-    * `false` for Update mode (emissions accumulate; the caller picks
-    * each key's final row). The source, state store, checkpoint, and
-    * trigger are exactly [[runReplay]]'s — the engine under test is
-    * the same.
+  /** A file stream reader that takes one staged file per micro-batch:
+    * with the staged modification times, this pins the batch order.
     */
-  private def runReplayEach(
-      spark: SparkSession, batches: Seq[DataFrame], mode: String,
-      replaceEachBatch: Boolean,
-      build: Dataset[Streams.EventRow] => Dataset[_],
-  ): DataFrame = withReplayConf(spark) {
-    require(batches.nonEmpty, "runReplayEach: no batches")
-    val root = newReplayRoot()
-    val inDir = Files.createDirectory(root.resolve("in"))
-    val ckpt = root.resolve("ckpt").toString
-    val outDir = root.resolve("out").toString
+  private def fileStream(spark: SparkSession): DataStreamReader =
+    spark.readStream.option("maxFilesPerTrigger", 1)
 
-    batches.zipWithIndex.foreach { case (b, i) =>
-      stageBatch(spark, b.coalesce(1), inDir, f"b$i%03d",
-        mtimeSec = 1000L + 1000L * i)
-    }
-
-    val src = spark.readStream
-      .schema(Encoders.product[Streams.EventRow].schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inDir.toString)
-    val out = {
+  /** Replays EventRow-shaped `batches`, then `sentinels` one row per
+    * micro-batch, through `build` into `sink`. `batches` must have
+    * ms-truncated `ts` — the stateful operators' `Timestamp.getTime`
+    * arithmetic is millisecond-grained, so sub-ms input would diverge
+    * from any ns oracle.
+    */
+  private def replayEvents(
+      spark: SparkSession, batches: Seq[DataFrame],
+      sentinels: Seq[Streams.EventRow], sink: Sink)(
+      build: Dataset[Streams.EventRow] => Dataset[_]): DataFrame =
+    run(spark, sink) { root =>
       import spark.implicits._
-      build(src.as[Streams.EventRow])
+      val in = stageFrames(spark, root.resolve("in"), "b",
+        batches ++ sentinels.map(row => Seq(row).toDF()))
+      build(fileStream(spark)
+        .schema(Encoders.product[Streams.EventRow].schema)
+        .parquet(in.toString).as[Streams.EventRow]).toDF()
     }
-    val sinkMode = if (replaceEachBatch) "overwrite" else "append"
-    val write: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (b, _) => b.write.mode(sinkMode).parquet(outDir)
-    val q = out.toDF().writeStream
-      .outputMode(mode)
-      .option("checkpointLocation", ckpt)
-      .foreachBatch(write)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    deleteRecursively(inDir)
-    deleteRecursively(root.resolve("ckpt"))
-    reapAtExit(root)
-    spark.read.parquet(outDir)
+
+  /** The slice's max `ts` and the two sentinels that flush a
+    * watermarked replay: users -1 and -2, `marginMs` and 2 × `marginMs`
+    * past that max. One bounded aggregate row places them — NOT a data
+    * collect (same device as the rank/offset collects elsewhere).
+    */
+  private def flushSentinels(events: DataFrame, marginMs: Long, caller: String)
+      : (Timestamp, Seq[Streams.EventRow]) = {
+    val maxTs = events.agg(max(col("ts"))).head().getTimestamp(0)
+    require(maxTs != null, s"$caller: empty input slice")
+    def sentinel(uid: Long, n: Long) = Streams.EventRow(-1L,
+      new Timestamp(maxTs.getTime + n * marginMs), uid, "sentinel", 0.0, "")
+    (maxTs, Seq(sentinel(-1L, 1L), sentinel(-2L, 2L)))
   }
+
+  private val hourMs = 3600L * 1000L
 
   /** Two event-time halves of `events` (cut at the midpoint of the ms
     * span) — the staged micro-batches for the cross-batch-state
@@ -236,14 +243,17 @@ object Replay {
 
   /** Runs [[Streams.ewmaStream]] via the replay: two event-time-split
     * micro-batches, so each user's EWMA state genuinely crosses a
-    * batch boundary before the final value emits. Update mode emits a
-    * row per (user, batch-with-events); `n_events` strictly grows per
+    * batch boundary before the final value emits. `mapGroupsWithState`
+    * runs in Update mode only, which the Append-only file sink cannot
+    * take, so emissions accumulate through `foreachBatch` (the
+    * production upsert-sink pattern). Update mode emits a row per
+    * (user, batch-with-events); `n_events` strictly grows per
     * emission, so each user's final row is the max-n one — equal to
     * the batch [[graft.ops.Ewma.ewma]] fold because both fold the
     * identical IEEE sequence in `(ts, event_id)` order.
     */
   def ewmaReplay(spark: SparkSession, events: DataFrame, alpha: Double): DataFrame =
-    runReplayEach(spark, splitByMidTs(events), "update", replaceEachBatch = false,
+    replayEvents(spark, splitByMidTs(events), Nil, EachBatch("update", "append"))(
       ds => Streams.ewmaStream(ds, alpha))
       .groupBy(col("user_id"))
       .agg(max_by(struct(col("n_events"), col("last_val"), col("ewma")),
@@ -252,14 +262,16 @@ object Replay {
         col("f.last_val").as("last_val"), col("f.ewma").as("ewma"))
 
   /** Runs [[Streams.hllRegistersStream]] via the replay: Complete mode
-    * over two micro-batches, each batch overwriting the sink with the
-    * full ≤256-cell register snapshot — the final snapshot equals the
-    * batch registers of the whole slice (per-bucket max is
-    * duplicate-blind, order-blind, and mergeable by construction).
+    * (an unwatermarked streaming aggregation takes Update or Complete
+    * only) over two micro-batches, each batch overwriting the sink
+    * through `foreachBatch` with the full ≤256-cell register
+    * snapshot — the final snapshot equals the batch registers of the
+    * whole slice (per-bucket max is duplicate-blind, order-blind, and
+    * mergeable by construction).
     */
   def hllRegistersReplay(
       spark: SparkSession, events: DataFrame, valueCol: String): DataFrame =
-    runReplayEach(spark, splitByMidTs(events), "complete", replaceEachBatch = true,
+    replayEvents(spark, splitByMidTs(events), Nil, EachBatch("complete", "overwrite"))(
       ds => Streams.hllRegistersStream(ds.toDF(), valueCol))
 
   /** Runs [[Streams.cmsCellsStream]] via the replay — same Complete-
@@ -269,7 +281,7 @@ object Replay {
   def cmsCellsReplay(
       spark: SparkSession, events: DataFrame, valueCol: String,
       depth: Int, width: Int): DataFrame =
-    runReplayEach(spark, splitByMidTs(events), "complete", replaceEachBatch = true,
+    replayEvents(spark, splitByMidTs(events), Nil, EachBatch("complete", "overwrite"))(
       ds => Streams.cmsCellsStream(ds.toDF(), valueCol, depth, width))
 
   /** Runs [[Streams.dqStream]] via the replay: the watermarked hourly
@@ -281,14 +293,8 @@ object Replay {
   def dqReplay(
       spark: SparkSession, events: DataFrame,
       rules: Seq[(String, org.apache.spark.sql.Column)]): DataFrame = {
-    val maxTs = events.agg(max(col("ts"))).head.getTimestamp(0)
-    require(maxTs != null, "dqReplay: empty input slice")
-    val s1 = new Timestamp(maxTs.getTime + 2L * 3600L * 1000L)
-    val s2 = new Timestamp(s1.getTime + 2L * 3600L * 1000L)
-    def sentinel(uid: Long, ts: Timestamp) =
-      Streams.EventRow(-1L, ts, uid, "sentinel", 0.0, "")
-    runReplay(spark, events,
-      Seq(sentinel(-1L, s1), sentinel(-2L, s2)),
+    val (maxTs, flush) = flushSentinels(events, 2L * hourMs, "dqReplay")
+    replayEvents(spark, Seq(events), flush, ParquetAppend)(
       ds => Streams.dqStream(ds.toDF(), rules, watermark = "0 seconds"))
       .filter(col("win_start") <= lit(maxTs))
   }
@@ -299,40 +305,21 @@ object Replay {
     * sentinel batches a watermarked Append aggregation needs to
     * flush (far-future event time, content that produces no output
     * rows) — and a `build` over the streaming source. Same engine
-    * path as [[runReplay]]: FileStreamSource with pinned batch order,
-    * checkpoint, Trigger.AvailableNow, checkpointed parquet Append
-    * sink. Stateless stream-static joins need no sentinels (they
-    * emit in the arrival batch); windowed aggregations follow the
-    * [[hourlyCountsReplay]] watermark argument.
+    * path as the EventRow replays: FileStreamSource with pinned batch
+    * order, checkpoint, Trigger.AvailableNow, checkpointed parquet
+    * Append sink. Stateless stream-static joins need no sentinels
+    * (they emit in the arrival batch); windowed aggregations follow
+    * the [[hourlyCountsReplay]] watermark argument.
     */
   def replayBatches(
       spark: SparkSession, batches: Seq[DataFrame],
       build: DataFrame => DataFrame,
-  ): DataFrame = withReplayConf(spark) {
+  ): DataFrame = {
     require(batches.nonEmpty, "replayBatches: no batches")
-    val root = newReplayRoot()
-    val inDir = Files.createDirectory(root.resolve("in"))
-    val ckpt = root.resolve("ckpt").toString
-    val outDir = root.resolve("out").toString
-    batches.zipWithIndex.foreach { case (b, i) =>
-      stageBatch(spark, b.coalesce(1), inDir, f"b$i%03d",
-        mtimeSec = 1000L + 1000L * i)
+    run(spark, ParquetAppend) { root =>
+      val in = stageFrames(spark, root.resolve("in"), "b", batches)
+      build(fileStream(spark).schema(batches.head.schema).parquet(in.toString))
     }
-    val src = spark.readStream
-      .schema(batches.head.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inDir.toString)
-    val q = build(src).writeStream
-      .format("parquet")
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start(outDir)
-    q.awaitTermination()
-    deleteRecursively(inDir)
-    deleteRecursively(root.resolve("ckpt"))
-    reapAtExit(root)
-    spark.read.parquet(outDir)
   }
 
   /** Raw-file replay for TEXT-CONTAINER streams
@@ -348,33 +335,12 @@ object Replay {
       spark: SparkSession, shards: Seq[Array[Byte]],
       readerOptions: Map[String, String],
       build: DataFrame => DataFrame,
-  ): DataFrame = withReplayConf(spark) {
+  ): DataFrame = {
     require(shards.nonEmpty, "replayRawText: no shards")
-    val root = newReplayRoot()
-    val inDir = Files.createDirectory(root.resolve("in"))
-    val ckpt = root.resolve("ckpt").toString
-    val outDir = root.resolve("out").toString
-    shards.zipWithIndex.foreach { case (bytes, i) =>
-      val dest = inDir.resolve(f"s$i%03d.txt")
-      Files.write(dest, bytes)
-      Files.setLastModifiedTime(dest,
-        FileTime.fromMillis((1000L + 1000L * i) * 1000L))
+    run(spark, ParquetAppend) { root =>
+      val in = stageBytes(root.resolve("in"), shards, ".txt")
+      build(fileStream(spark).options(readerOptions).text(in.toString))
     }
-    val src = spark.readStream
-      .options(readerOptions)
-      .option("maxFilesPerTrigger", 1)
-      .text(inDir.toString)
-    val q = build(src).writeStream
-      .format("parquet")
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start(outDir)
-    q.awaitTermination()
-    deleteRecursively(inDir)
-    deleteRecursively(root.resolve("ckpt"))
-    reapAtExit(root)
-    spark.read.parquet(outDir)
   }
 
   /** Raw-JSONL shard replay (the [[replayRawText]] sibling through
@@ -385,38 +351,25 @@ object Replay {
     */
   def replayRawJson(
       spark: SparkSession, shards: Seq[Array[Byte]],
-      schema: org.apache.spark.sql.types.StructType,
+      schema: StructType,
       readerOptions: Map[String, String],
       build: DataFrame => DataFrame,
-  ): DataFrame = withReplayConf(spark) {
+  ): DataFrame = {
     require(shards.nonEmpty, "replayRawJson: no shards")
-    val root = newReplayRoot()
-    val inDir = Files.createDirectory(root.resolve("in"))
-    val ckpt = root.resolve("ckpt").toString
-    val outDir = root.resolve("out").toString
-    shards.zipWithIndex.foreach { case (bytes, i) =>
-      val dest = inDir.resolve(f"s$i%03d.jsonl")
-      Files.write(dest, bytes)
-      Files.setLastModifiedTime(dest,
-        FileTime.fromMillis((1000L + 1000L * i) * 1000L))
+    run(spark, ParquetAppend) { root =>
+      val in = stageBytes(root.resolve("in"), shards, ".jsonl")
+      build(fileStream(spark).schema(schema).options(readerOptions)
+        .json(in.toString))
     }
-    val src = spark.readStream
-      .schema(schema)
-      .options(readerOptions)
-      .option("maxFilesPerTrigger", 1)
-      .json(inDir.toString)
-    val q = build(src).writeStream
-      .format("parquet")
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start(outDir)
-    q.awaitTermination()
-    deleteRecursively(inDir)
-    deleteRecursively(root.resolve("ckpt"))
-    reapAtExit(root)
-    spark.read.parquet(outDir)
   }
+
+  // binaryFile's schema is FIXED but the streaming source still
+  // demands it explicitly (no inference on streams)
+  private val binaryFileSchema = StructType(Seq(
+    StructField("path", StringType),
+    StructField("modificationTime", TimestampType),
+    StructField("length", LongType),
+    StructField("content", BinaryType)))
 
   /** Raw-BINARY shard replay (the [[replayRawText]] sibling for
     * sources the text reader cannot split — compressed WARC members):
@@ -428,45 +381,13 @@ object Replay {
   def replayRawBinary(
       spark: SparkSession, shards: Seq[Array[Byte]], suffix: String,
       build: DataFrame => DataFrame,
-  ): DataFrame = withReplayConf(spark) {
+  ): DataFrame = {
     require(shards.nonEmpty, "replayRawBinary: no shards")
-    val root = newReplayRoot()
-    val inDir = Files.createDirectory(root.resolve("in"))
-    val ckpt = root.resolve("ckpt").toString
-    val outDir = root.resolve("out").toString
-    shards.zipWithIndex.foreach { case (bytes, i) =>
-      val dest = inDir.resolve(f"s$i%03d$suffix")
-      Files.write(dest, bytes)
-      Files.setLastModifiedTime(dest,
-        FileTime.fromMillis((1000L + 1000L * i) * 1000L))
+    run(spark, ParquetAppend) { root =>
+      val in = stageBytes(root.resolve("in"), shards, suffix)
+      build(fileStream(spark).format("binaryFile").schema(binaryFileSchema)
+        .load(in.toString))
     }
-    // binaryFile's schema is FIXED but the streaming source still
-    // demands it explicitly (no inference on streams)
-    val binarySchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("path",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("modificationTime",
-        org.apache.spark.sql.types.TimestampType),
-      org.apache.spark.sql.types.StructField("length",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("content",
-        org.apache.spark.sql.types.BinaryType)))
-    val src = spark.readStream
-      .format("binaryFile")
-      .schema(binarySchema)
-      .option("maxFilesPerTrigger", 1)
-      .load(inDir.toString)
-    val q = build(src).writeStream
-      .format("parquet")
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start(outDir)
-    q.awaitTermination()
-    deleteRecursively(inDir)
-    deleteRecursively(root.resolve("ckpt"))
-    reapAtExit(root)
-    spark.read.parquet(outDir)
   }
 
   /** Two-source replay for STREAM-STREAM operators
@@ -479,37 +400,17 @@ object Replay {
   def replayBatches2(
       spark: SparkSession, aBatches: Seq[DataFrame], bBatches: Seq[DataFrame],
       build: (DataFrame, DataFrame) => DataFrame,
-  ): DataFrame = withReplayConf(spark) {
+  ): DataFrame = {
     require(aBatches.nonEmpty && bBatches.nonEmpty, "replayBatches2: no batches")
-    val root = newReplayRoot()
-    val inA = Files.createDirectory(root.resolve("inA"))
-    val inB = Files.createDirectory(root.resolve("inB"))
-    val ckpt = root.resolve("ckpt").toString
-    val outDir = root.resolve("out").toString
-    aBatches.zipWithIndex.foreach { case (b, i) =>
-      stageBatch(spark, b.coalesce(1), inA, f"a$i%03d",
-        mtimeSec = 1000L + 2000L * i)
+    run(spark, ParquetAppend) { root =>
+      val inA = stageFrames(spark, root.resolve("inA"), "a", aBatches,
+        firstSec = 1000L, stepSec = 2000L)
+      val inB = stageFrames(spark, root.resolve("inB"), "b", bBatches,
+        firstSec = 2000L, stepSec = 2000L)
+      build(
+        fileStream(spark).schema(aBatches.head.schema).parquet(inA.toString),
+        fileStream(spark).schema(bBatches.head.schema).parquet(inB.toString))
     }
-    bBatches.zipWithIndex.foreach { case (b, i) =>
-      stageBatch(spark, b.coalesce(1), inB, f"b$i%03d",
-        mtimeSec = 2000L + 2000L * i)
-    }
-    def src(dir: Path, schema: org.apache.spark.sql.types.StructType) =
-      spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(dir.toString)
-    val q = build(src(inA, aBatches.head.schema), src(inB, bBatches.head.schema))
-      .writeStream
-      .format("parquet")
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start(outDir)
-    q.awaitTermination()
-    deleteRecursively(inA)
-    deleteRecursively(inB)
-    deleteRecursively(root.resolve("ckpt"))
-    reapAtExit(root)
-    spark.read.parquet(outDir)
   }
 
   /** Generic-schema COMPLETE-mode replay: every micro-batch's full
@@ -523,33 +424,12 @@ object Replay {
   def replayBatchesComplete(
       spark: SparkSession, batches: Seq[DataFrame],
       build: DataFrame => DataFrame,
-  ): DataFrame = withReplayConf(spark) {
+  ): DataFrame = {
     require(batches.nonEmpty, "replayBatchesComplete: no batches")
-    val root = newReplayRoot()
-    val inDir = Files.createDirectory(root.resolve("in"))
-    val ckpt = root.resolve("ckpt").toString
-    val outDir = root.resolve("out").toString
-    batches.zipWithIndex.foreach { case (b, i) =>
-      stageBatch(spark, b.coalesce(1), inDir, f"b$i%03d",
-        mtimeSec = 1000L + 1000L * i)
+    run(spark, EachBatch("complete", "overwrite")) { root =>
+      val in = stageFrames(spark, root.resolve("in"), "b", batches)
+      build(fileStream(spark).schema(batches.head.schema).parquet(in.toString))
     }
-    val src = spark.readStream
-      .schema(batches.head.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inDir.toString)
-    val write: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (b, _) => b.write.mode("overwrite").parquet(outDir)
-    val q = build(src).writeStream
-      .outputMode("complete")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch(write)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    deleteRecursively(inDir)
-    deleteRecursively(root.resolve("ckpt"))
-    reapAtExit(root)
-    spark.read.parquet(outDir)
   }
 
   /** Roots whose sink dirs are still live; a single JVM shutdown hook
@@ -580,17 +460,8 @@ object Replay {
   def sessionizeReplay(
       spark: SparkSession, events: DataFrame, gapMinutes: Int): DataFrame = {
     val gapMs = gapMinutes * 60L * 1000L
-    // one bounded aggregate row to place the sentinels — NOT a data
-    // collect (same device as the rank/offset collects elsewhere)
-    val maxTs = events.agg(max(col("ts"))).head.getTimestamp(0)
-    require(maxTs != null, "sessionizeReplay: empty input slice")
-    val s1 = new Timestamp(maxTs.getTime + gapMs + 3600L * 1000L)
-    val s2 = new Timestamp(s1.getTime + gapMs + 3600L * 1000L)
-    def sentinel(uid: Long, ts: Timestamp) =
-      Streams.EventRow(-1L, ts, uid, "sentinel", 0.0, "")
-
-    val out = runReplay(spark, events,
-      Seq(sentinel(-1L, s1), sentinel(-2L, s2)),
+    val (_, flush) = flushSentinels(events, gapMs + hourMs, "sessionizeReplay")
+    val out = replayEvents(spark, Seq(events), flush, ParquetAppend)(
       ds => Streams.sessionize(ds, gapMinutes, watermark = "0 seconds"))
     val w = Window.partitionBy(col("user_id")).orderBy(col("session_start"))
     out.filter(col("user_id") >= 0)
@@ -606,14 +477,8 @@ object Replay {
   def sessionizeNativeReplay(
       spark: SparkSession, events: DataFrame, gapMinutes: Int): DataFrame = {
     val gapMs = gapMinutes * 60L * 1000L
-    val maxTs = events.agg(max(col("ts"))).head.getTimestamp(0)
-    require(maxTs != null, "sessionizeNativeReplay: empty input slice")
-    val s1 = new Timestamp(maxTs.getTime + gapMs + 3600L * 1000L)
-    val s2 = new Timestamp(s1.getTime + gapMs + 3600L * 1000L)
-    def sentinel(uid: Long, ts: Timestamp) =
-      Streams.EventRow(-1L, ts, uid, "sentinel", 0.0, "")
-    val out = runReplay(spark, events,
-      Seq(sentinel(-1L, s1), sentinel(-2L, s2)),
+    val (_, flush) = flushSentinels(events, gapMs + hourMs, "sessionizeNativeReplay")
+    val out = replayEvents(spark, Seq(events), flush, ParquetAppend)(
       ds => Streams.sessionizeNative(ds.toDF(), gapMinutes,
         watermark = "0 seconds"))
     val w = Window.partitionBy(col("user_id")).orderBy(col("session_start"))
@@ -631,7 +496,8 @@ object Replay {
     * deterministic wherever rows are distinguishable at all.
     */
   def scd2Replay(spark: SparkSession, events: DataFrame): DataFrame = {
-    val out = runReplay(spark, events, Nil, ds => Streams.scd2Stream(ds))
+    val out = replayEvents(spark, Seq(events), Nil, ParquetAppend)(
+      ds => Streams.scd2Stream(ds))
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("valid_from"), col("valid_to"), col("value"))
     out.withColumn("seq", row_number().over(w).cast("long"))
@@ -649,14 +515,8 @@ object Replay {
     * a hash gate.
     */
   def hourlyCountsReplay(spark: SparkSession, events: DataFrame): DataFrame = {
-    val maxTs = events.agg(max(col("ts"))).head.getTimestamp(0)
-    require(maxTs != null, "hourlyCountsReplay: empty input slice")
-    val s1 = new Timestamp(maxTs.getTime + 2L * 3600L * 1000L)
-    val s2 = new Timestamp(s1.getTime + 2L * 3600L * 1000L)
-    def sentinel(uid: Long, ts: Timestamp) =
-      Streams.EventRow(-1L, ts, uid, "sentinel", 0.0, "")
-    runReplay(spark, events,
-      Seq(sentinel(-1L, s1), sentinel(-2L, s2)),
+    val (_, flush) = flushSentinels(events, 2L * hourMs, "hourlyCountsReplay")
+    replayEvents(spark, Seq(events), flush, ParquetAppend)(
       ds => Streams.hourlyEventCounts(ds.toDF(), watermark = "0 seconds")
         .select(col("hour"), col("event_type"), col("n_events")))
       .filter(col("event_type") =!= "sentinel")
@@ -668,14 +528,8 @@ object Replay {
     * trunc(max)+2h needs the first sentinel strictly past it).
     */
   def slidingCountsReplay(spark: SparkSession, events: DataFrame): DataFrame = {
-    val maxTs = events.agg(max(col("ts"))).head.getTimestamp(0)
-    require(maxTs != null, "slidingCountsReplay: empty input slice")
-    val s1 = new Timestamp(maxTs.getTime + 3L * 3600L * 1000L)
-    val s2 = new Timestamp(s1.getTime + 3L * 3600L * 1000L)
-    def sentinel(uid: Long, ts: Timestamp) =
-      Streams.EventRow(-1L, ts, uid, "sentinel", 0.0, "")
-    runReplay(spark, events,
-      Seq(sentinel(-1L, s1), sentinel(-2L, s2)),
+    val (_, flush) = flushSentinels(events, 3L * hourMs, "slidingCountsReplay")
+    replayEvents(spark, Seq(events), flush, ParquetAppend)(
       ds => Streams.slidingEventCounts(ds.toDF(), watermark = "0 seconds"))
       .filter(col("event_type") =!= "sentinel")
   }
@@ -690,14 +544,8 @@ object Replay {
     */
   def funnelReplay(
       spark: SparkSession, events: DataFrame, steps: Seq[String]): DataFrame = {
-    val maxTs = events.agg(max(col("ts"))).head.getTimestamp(0)
-    require(maxTs != null, "funnelReplay: empty input slice")
-    val s1 = new Timestamp(maxTs.getTime + 3600L * 1000L)
-    val s2 = new Timestamp(s1.getTime + 3600L * 1000L)
-    def sentinel(uid: Long, ts: Timestamp) =
-      Streams.EventRow(-1L, ts, uid, "sentinel", 0.0, "")
-    runReplay(spark, events,
-      Seq(sentinel(-1L, s1), sentinel(-2L, s2)),
+    val (_, flush) = flushSentinels(events, hourMs, "funnelReplay")
+    replayEvents(spark, Seq(events), flush, ParquetAppend)(
       ds => Streams.funnelStream(ds, steps, watermark = "0 seconds"))
       .filter(col("user_id") >= 0)
   }
@@ -710,9 +558,25 @@ object Replay {
     */
   def dedupReplay(
       spark: SparkSession, events: DataFrame, idCol: String): DataFrame =
-    runReplay(spark, events, Nil,
+    replayEvents(spark, Seq(events), Nil, ParquetAppend)(
       ds => Streams.streamingDedup(ds.toDF(), idCol, watermark = "1 hour")
         .select(col(idCol)))
+
+  /** Stages `frames` into the new dir `inDir` as one parquet file each,
+    * `<prefix>000.parquet`, `<prefix>001.parquet`, …, the i-th with
+    * modification time `firstSec + stepSec × i` (seconds); returns
+    * `inDir`.
+    */
+  private def stageFrames(
+      spark: SparkSession, inDir: Path, prefix: String, frames: Seq[DataFrame],
+      firstSec: Long = 1000L, stepSec: Long = 1000L): Path = {
+    Files.createDirectory(inDir)
+    frames.zipWithIndex.foreach { case (b, i) =>
+      stageBatch(spark, b.coalesce(1), inDir, f"$prefix$i%03d",
+        mtimeSec = firstSec + stepSec * i)
+    }
+    inDir
+  }
 
   /** Writes `df` as a single parquet file named `<name>.parquet` in
     * `inDir` with the given modification time — FileStreamSource
@@ -738,5 +602,21 @@ object Replay {
     // home; once the part file moved out, the _SUCCESS/.crc husk is
     // garbage — reap it now, not at JVM exit
     deleteRecursively(tmp)
+  }
+
+  /** Stages raw `shards` into the new dir `inDir` as
+    * `s000<suffix>`, `s001<suffix>`, …, the i-th with modification
+    * time `1000 + 1000 × i` seconds; returns `inDir`.
+    */
+  private def stageBytes(
+      inDir: Path, shards: Seq[Array[Byte]], suffix: String): Path = {
+    Files.createDirectory(inDir)
+    shards.zipWithIndex.foreach { case (bytes, i) =>
+      val dest = inDir.resolve(f"s$i%03d$suffix")
+      Files.write(dest, bytes)
+      Files.setLastModifiedTime(dest,
+        FileTime.fromMillis((1000L + 1000L * i) * 1000L))
+    }
+    inDir
   }
 }

@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Caching.checkpointRdd
+
 /** Byte-pair-encoding vocabulary training over a corpus — the
   * subword-tokenizer half of the text family (the reference has no
   * text pipeline; this extends SURVEY §2.5's scalar-library /
@@ -485,17 +487,6 @@ object Bpe {
       .toDF("word", "freq", "syms")
     (merges.toSeq, seg)
   }
-
-  /** The checkpointed RDD behind a `localCheckpoint`ed frame — the
-    * handle `unpersist` must target (the Dataset itself has no
-    * CacheManager entry). None for frames that are not a plain
-    * LogicalRDD scan.
-    */
-  private def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.logical match {
-      case l: org.apache.spark.sql.execution.LogicalRDD => Some(l.rdd)
-      case _ => None
-    }
 
   /** Re-apply a SAVED merge list to a `(word)` frame — the reload
     * path: train once, persist the merge table, segment anywhere

@@ -114,6 +114,24 @@ class FrameOpsSpec extends AnyFunSuite with SparkSpec {
     } finally spark.conf.set("spark.sql.ansi.enabled", prev)
   }
 
+  test("the inexact compare of an empty cached frame raises on a value that does not cast, every time") {
+    import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
+    val target = StructType(Seq(StructField("a", IntegerType)))
+    val data = FrameOps.frameOf(spark, Nil, target).cache()
+    assert(data.count() == 0)
+    val db = FrameOps.matchTypes(FrameOps.frameOf(spark, Seq(Row("not-a-number")),
+      StructType(Seq(StructField("a", StringType)))), target)
+    def messages(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
+    // repeated: whether the database side runs at all once the cached
+    // data side turns out empty depended on which stage finished first
+    try (1 to 10).foreach { run =>
+      val e = intercept[Exception](FrameOps.compareFrames(data, db, exact = false))
+      assert(messages(e).exists(_.contains(
+        "MatchDatatypesError: column `a` value 'not-a-number' does not cast to INT")), s"run $run: $e")
+    } finally data.unpersist()
+  }
+
   test("mergeIds joins ids null-safely (dataframe_operations.py:106-161)") {
     val data = df("naam" -> Seq("een", "twee", null))
     val dbRows = df("id" -> Seq(1, 2, 3), "naam" -> Seq("een", "twee", null))
