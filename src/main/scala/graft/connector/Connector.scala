@@ -17,16 +17,19 @@ import graft.schema.Schema
   * commit on clean exit, rollback on any exception — which is what
   * makes `load`'s validation failure undo the whole load.
   *
-  * Spark shape: orchestration and the checks run on the driver; the
-  * frame being loaded stays a DataFrame (dedup and the id joins are
-  * Spark operations), and only deduped dimension rows cross the JDBC
-  * boundary (see [[JdbcFrames]]). Each step reads its table once and
-  * checks that read on the driver against the rows it collected: the
-  * per-insert read-back check (D1, [[FrameOps.containsRows]]) and the
-  * id guard ([[FrameOps.mergeIdRows]]). The final compare (D2,
-  * [[FrameOps.compareRows]]) is one Spark action over the cached frame.
+  * Spark shape: [[load]] collects its deduped frame once and runs the
+  * whole cascade on the driver over those rows, so a load is one Spark
+  * action however many tables it fills. Each step projects the rows onto
+  * its table, inserts the projection (see [[JdbcFrames]]), reads its
+  * table once and checks that read on the driver against the rows it
+  * inserted: the per-insert read-back check (D1,
+  * [[FrameOps.containsRows]]) and the id guard and id threading
+  * ([[FrameOps.mergeIdRows]]). The final compare (D2,
+  * [[FrameOps.compareRows]]) checks the collected rows against its read.
   * A check that fails runs the Spark operator it stands for, which
-  * raises the error.
+  * raises the error. The frame returned is the lazy Spark chain of the
+  * same id joins. The single-table calls ([[insert]], [[retrieveIds]],
+  * [[insertAndRetrieveIds]]) collect only their table's projection.
   */
 final class Connector(
     val spark: SparkSession,
@@ -57,22 +60,34 @@ final class Connector(
       columns: Map[String, String] = Map.empty,
   ): Unit = {
     schema.checkSchemaNotEmpty()
-    insertRenamed(data.withColumnsRenamed(columns), table)
+    insertRenamed(data.withColumnsRenamed(columns), None, table)
   }
 
-  /** [[insert]] of a frame already renamed: one collect of the table's
-    * distinct projection, the batch, and D1 over the table's distinct
-    * read-back. The full frame needs no dedup: [[FrameOps.getRows]]
-    * dedups the projection.
+  /** [[insert]] of a frame already renamed, whose rows the driver may
+    * hold: the table's distinct projection ([[projection]]), the batch,
+    * and D1 over the table's distinct read-back.
     */
-  private def insertRenamed(pre: DataFrame, table: String): Unit = {
+  private def insertRenamed(pre: DataFrame, rows: Option[Seq[Row]], table: String): Unit = {
     val commonColumns = schema.parseInsert(table, pre.columns.toSeq)
     assert(commonColumns.nonEmpty, "No common columns were found.")
-    val rows = FrameOps.getRows(pre, commonColumns)
-    val inserted = insertRows(rows.collect().toSeq, rows.schema, table, commonColumns)
+    val (keys, keySchema) = projection(pre, rows, commonColumns)
+    val inserted = insertRows(keys, keySchema, table, commonColumns)
     val (dbRows, dbSchema) = JdbcFrames.readQuery(conn,
       dialect.getCheckInsertQuery(table, commonColumns), lowercaseLabels = true)
-    withConf(checkInserted(table, inserted, rows.schema, dbRows, dbSchema))
+    withConf(checkInserted(table, inserted, keySchema, dbRows, dbSchema))
+  }
+
+  /** The distinct projection of `pre` onto `columns`, and its schema:
+    * [[FrameOps.distinctRows]] of `pre`'s rows when the driver holds
+    * them, else one Spark collect of [[FrameOps.getRows]].
+    */
+  private def projection(
+      pre: DataFrame, rows: Option[Seq[Row]], columns: Seq[String],
+  ): (Seq[Row], StructType) = rows match {
+    case Some(held) => FrameOps.distinctRows(held, pre.schema, columns)
+    case None =>
+      val projected = FrameOps.getRows(pre, columns)
+      (projected.collect().toSeq, projected.schema)
   }
 
   /** Batch-insert the rows of a table's distinct projection that hold
@@ -115,7 +130,8 @@ final class Connector(
 
   /** Fetch `(pk as alias, cols...)` and null-safe-join the ids into
     * data — §3.3 (`connector.py:230-284`). The fetched id table is
-    * broadcast in the join (small by construction).
+    * broadcast in the join (small by construction); the join is
+    * returned uncached.
     */
   def retrieveIds(
       data: DataFrame,
@@ -126,37 +142,37 @@ final class Connector(
       allowDuplication: Boolean = false,
   ): DataFrame = {
     schema.checkSchemaNotEmpty()
-    val joined = keyedStep(FrameOps.preprocess(data, columns), table, alias,
+    val (joined, _) = keyedStep(FrameOps.preprocess(data, columns), None, table, alias,
       insert = false, allowDuplication)
     FrameOps.postprocess(dropReplaced(joined, table, replace), columns)
   }
 
   /** The one step behind [[load]], [[retrieveIds]] and
-    * [[insertAndRetrieveIds]], over a frame already renamed: collect
-    * the table's distinct projection of `pre` (one Spark action), insert
-    * it when `insert` is set, read the table once with the retrieve
-    * query, and check that read on the driver, D1 first, then the id
-    * guard of [[FrameOps.mergeIdRows]]. The result is the cached id
-    * join; the caller releases it.
+    * [[insertAndRetrieveIds]], over a frame already renamed whose rows
+    * the driver may hold: the table's distinct projection of `pre`
+    * ([[projection]]), inserted when `insert` is set, one read of the
+    * table with the retrieve query, and the checks of that read on the
+    * driver, D1 first, then the id guard of [[FrameOps.mergeIdRows]].
+    * Returns the id join, uncached, and `rows` threaded through it.
     */
   private def keyedStep(
       pre: DataFrame,
+      rows: Option[Seq[Row]],
       table: String,
       alias: String,
       insert: Boolean,
       allowDuplication: Boolean,
-  ): DataFrame = {
+  ): (DataFrame, Option[Seq[Row]]) = {
     val (primaryKey, commonColumns) =
       schema.parseRetrieve(table, alias, pre.columns.toSeq)
-    val projection = FrameOps.getRows(pre, commonColumns)
-    val keys = projection.collect().toSeq
+    val (keys, keySchema) = projection(pre, rows, commonColumns)
     val inserted =
-      if (insert) insertRows(keys, projection.schema, table, commonColumns) else Nil
+      if (insert) insertRows(keys, keySchema, table, commonColumns) else Nil
     val (dbRows, dbSchema) = JdbcFrames.readQuery(conn,
       dialect.getRetrieveQuery(table, primaryKey, alias, commonColumns), lowercaseLabels = true)
     withConf {
-      if (insert) checkInserted(table, inserted, projection.schema, dbRows, dbSchema)
-      FrameOps.mergeIdRows(pre, keys, projection.schema, dbRows, dbSchema,
+      if (insert) checkInserted(table, inserted, keySchema, dbRows, dbSchema)
+      FrameOps.mergeIdRows(pre, rows, keys, keySchema, dbRows, dbSchema,
         alias, table, allowDuplication)
     }
   }
@@ -174,7 +190,7 @@ final class Connector(
       allowDuplication: Boolean = false,
   ): DataFrame = {
     schema.checkSchemaNotEmpty()
-    val joined = keyedStep(FrameOps.preprocess(data, columns), table, alias,
+    val (joined, _) = keyedStep(FrameOps.preprocess(data, columns), None, table, alias,
       insert = true, allowDuplication)
     FrameOps.postprocess(dropReplaced(joined, table, replace), columns)
   }
@@ -190,42 +206,44 @@ final class Connector(
       exact: Boolean = true,
   ): Unit = {
     schema.checkSchemaNotEmpty()
-    compareDistinct(FrameOps.preprocess(data, columns), query, where, exact)
+    val pre = FrameOps.preprocess(data, columns)
+    compareDistinct(pre, pre.collect().toSeq, query, where, exact)
   }
 
-  /** [[compare]] of a frame already renamed and deduped. */
+  /** [[compare]] of a frame already renamed and deduped, whose rows the
+    * driver holds.
+    */
   private def compareDistinct(
       pre: DataFrame,
+      rows: Seq[Row],
       query: Option[String],
       where: Option[String],
       exact: Boolean,
   ): Unit = {
     val q = query.getOrElse(schema.getCompareQuery(pre.columns.toSeq, where))
     val (dbRows, dbSchema) = JdbcFrames.readQuery(conn, q, lowercaseLabels = true)
-    withConf(FrameOps.compareRows(pre, dbRows, dbSchema, exact))
+    withConf(FrameOps.compareRows(pre, rows, dbRows, dbSchema, exact))
   }
 
   /** The flagship: plan, cascade inserts in topological order threading
     * retrieved ids through the frame, then validate — §3.1
     * (`connector.py:376-452`).
     *
-    * The frame is deduped and cached once up front; every id join keeps
-    * it distinct (rows that differ only on a table's dropped natural
-    * columns join to different keys), so no step re-dedups it. Each
-    * step runs one Spark action, the collect of its table's distinct
-    * projection, and one read of its table: an insert-and-retrieve step
-    * reads with the retrieve query, and that read serves D1, the id
-    * guard and the broadcast id join; a plain insert reads back its
-    * inserted columns for D1. The checks run on the driver. The final
-    * compare (D2) is one more Spark action over the cached frame. When
-    * a check fails, the Spark operator it stands for runs and raises
-    * its error, so the load stays exact and all-or-nothing.
+    * The frame is deduped, cached and collected once up front: the
+    * load's one Spark action. The cascade runs on the driver over those
+    * rows: each step projects them onto its table, inserts and reads it
+    * once, checks the read (D1, the id guard) and threads the ids it
+    * read through the rows, following the drop after it by column name.
+    * Every id join keeps the rows distinct (rows that differ only on a
+    * table's dropped natural columns join to different keys), so no
+    * step re-dedups them. D2 checks the collected rows against its read.
+    * When a check fails, the Spark operator it stands for runs and
+    * raises its error, so the load stays exact and all-or-nothing; when
+    * the id guard cannot decide, [[FrameOps.mergeIds]] decides.
     *
-    * Each insert-and-retrieve step caches the join that carries its ids
-    * (the next step reads it). On success every cache but the last
-    * step's, which backs the returned frame, is released; on failure
-    * all of them are, so a long-lived session does not accumulate cached
-    * RDDs either way.
+    * The returned frame is the lazy Spark twin of the cascade: the
+    * cached frame and each step's id join, uncached. The frame's cache
+    * is the one the load leaves, and a failed load releases it too.
     */
   def load(
       data: DataFrame,
@@ -238,34 +256,33 @@ final class Connector(
       exact: Boolean = true,
   ): DataFrame = {
     schema.checkSchemaNotEmpty()
-    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    // immutable — the compare below validates this very frame, no
+    // clone needed (connector.py:424)
+    val pre = FrameOps.preprocess(data, columns).cache()
     try {
-      // immutable — the compare below validates this very frame, no
-      // clone needed (connector.py:424)
-      val pre = FrameOps.preprocess(data, columns).cache()
-      cached += pre
       val instructions = schema.getLoadInstructions(pre.columns.toSeq)
+      val preRows = pre.collect().toSeq
 
-      // phase 1: insert+retrieve in topo order, ids cascade through the frame
-      val afterRetrieve = instructions.insertAndRetrieve.foldLeft(pre) {
-        (acc, spec) =>
+      // phase 1: insert+retrieve in topo order, ids cascade through the rows
+      val (afterRetrieve, rows) = instructions.insertAndRetrieve.foldLeft((pre, preRows)) {
+        case ((acc, accRows), spec) =>
           val renames = spec.columns.toMap
-          val joined = keyedStep(acc.withColumnsRenamed(renames), spec.table, spec.alias,
-            insert = true, allowDuplication)
-          cached += joined
-          FrameOps.postprocess(dropReplaced(joined, spec.table, replace), renames)
+          val (joined, joinedRows) = keyedStep(acc.withColumnsRenamed(renames), Some(accRows),
+            spec.table, spec.alias, insert = true, allowDuplication)
+          val dropped = dropReplaced(joined, spec.table, replace)
+          (FrameOps.postprocess(dropped, renames),
+            FrameOps.followRows(joinedRows.get, joined.columns.toSeq, dropped.columns.toSeq))
       }
       // phase 2: plain inserts
       instructions.insert.foreach { spec =>
-        insertRenamed(afterRetrieve.withColumnsRenamed(spec.columns.toMap), spec.table)
+        insertRenamed(afterRetrieve.withColumnsRenamed(spec.columns.toMap), Some(rows), spec.table)
       }
       if (compare)
-        compareDistinct(pre, compareQuery, where, exact)
+        compareDistinct(pre, preRows, compareQuery, where, exact)
 
-      cached.init.foreach(_.unpersist())
       FrameOps.postprocess(afterRetrieve, columns)
     } catch {
-      case e: Throwable => cached.foreach(_.unpersist()); throw e
+      case e: Throwable => pre.unpersist(); throw e
     }
   }
 }

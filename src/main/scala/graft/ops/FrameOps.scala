@@ -2,7 +2,7 @@ package graft.ops
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, EvalMode, GenericInternalRow}
 import org.apache.spark.sql.functions._
@@ -16,20 +16,20 @@ import graft.{CompareMissingRowsError, CompareNoExactMatchError, MatchDatatypesE
   * `sql_autoloader/dataframe_operations.py` + `connector.py:26-59`
   * (SURVEY.md §2.A, ops A1-A11).
   *
-  * Scale notes: the frame being loaded stays distributed; the database
-  * side of every check is rows the driver already read. The id join
-  * broadcasts those rows (id/dimension tables are small next to the
-  * data being loaded). `Connector.load` guards its steps on the driver:
-  * D1 ([[containsRows]]) and the id guard ([[mergeIdRows]]) compare the
-  * table's one read-back with the step's collected distinct
-  * projection, and D2 ([[compareRows]]) is one Spark action that probes
-  * the cached frame against a broadcast of the database keys. Each
-  * driver check decides with Spark's own casts and equality (null-safe,
-  * byte arrays by content, NaNs equal, −0.0 as 0.0); when it finds a
-  * failure, or cannot decide, the Spark operator it stands for
-  * ([[mergeIds]], [[compareFrames]]) runs and raises its own error.
-  * The only other actions are the row-count guards in [[mergeIds]]
-  * (cached first) and [[hasNulls]]' one aggregation.
+  * Scale notes: the database side of every check is rows the driver
+  * already read, and the id join broadcasts those rows (id/dimension
+  * tables are small next to the data being loaded). `Connector.load`
+  * collects its deduped frame once and runs its cascade on those rows:
+  * each step's projection ([[distinctRows]]), D1 ([[containsRows]]),
+  * the id guard and the id threading ([[mergeIdRows]]) and D2
+  * ([[compareRows]]) run on the driver with no Spark job, while the
+  * frame it returns stays a lazy Spark chain of the same id joins. Each
+  * driver check keys rows with Spark's own casts and equality
+  * (null-safe, byte arrays by content, NaNs equal, −0.0 as 0.0); when it
+  * finds a failure, or cannot decide, the Spark operator it stands for
+  * ([[mergeIds]], [[compareFrames]]) runs and raises its own error. The
+  * only other actions are the row-count guards in [[mergeIds]] (cached
+  * first) and [[hasNulls]]' one aggregation.
   */
 object FrameOps {
 
@@ -182,71 +182,107 @@ object FrameOps {
   /** `mergeIds(df, frameOf(dbRows, dbSchema), ...)` guarded on the
     * driver, where `keys` (schema `keySchema`) is `df`'s distinct
     * projection onto every column the join matches on, already
-    * collected. When [[idsMatch]] passes, the join is returned cached
-    * with no Spark job run. Otherwise [[mergeIds]] runs: it raises the
-    * error the guard found, or decides where the driver could not.
-    * Same result, same caller-owned cache.
+    * collected, and `rows`, when given, are `df`'s own rows on the
+    * driver. Returns the join, uncached, and `rows` threaded through it:
+    * each row once per id its key matches. When [[idsOf]] passes, no
+    * Spark job runs. Otherwise [[mergeIds]] runs: it raises the error
+    * the guard found, or decides where the driver could not, and then
+    * its cached result is collected as the rows and released.
     */
   private[graft] def mergeIdRows(
-      df: DataFrame,
+      df: DataFrame, rows: Option[Seq[Row]],
       keys: Seq[Row], keySchema: StructType,
       dbRows: Seq[Row], dbSchema: StructType,
       alias: String,
       table: String,
       allowDuplication: Boolean,
-  ): DataFrame = {
+  ): (DataFrame, Option[Seq[Row]]) = {
     val dbDf = frameOf(df.sparkSession, dbRows, dbSchema)
     // the join matches on every column the two sides share; a shared
     // column outside `keys` (a frame that already holds the alias,
     // say) is one only mergeIds can guard
     val covered = df.columns.filter(dbSchema.names.contains).forall(keySchema.names.contains)
-    if (covered && idsMatch(keys, keySchema, dbRows, dbSchema, alias, allowDuplication))
-      joinIds(df, dbDf, alias).cache()
-    else mergeIds(df, dbDf, alias, table, allowDuplication)
+    val ids =
+      if (covered) idsOf(keys, keySchema, dbRows, dbSchema, alias, allowDuplication) else None
+    val threaded = ids match {
+      case Some(byKey) =>
+        val on = keySchema.names.filter(dbSchema.names.contains)
+        val key = keyOf(df.schema, on.map(df.schema.fieldIndex))
+        rows.map(_.flatMap { r =>
+          byKey(new GenericInternalRow(key(r))).map(id => Row.fromSeq(r.toSeq :+ id))
+        })
+      case None =>
+        val guarded = mergeIds(df, dbDf, alias, table, allowDuplication)
+        try rows.map(_ => guarded.collect().toSeq) finally guarded.unpersist()
+    }
+    (joinIds(df, dbDf, alias), threaded)
   }
 
-  /** True when [[mergeIds]]' guards pass for a frame whose distinct
-    * projection onto its join columns is `keys`: every key matches
-    * exactly one database row (at least one under `allowDuplication`)
-    * and no matched id is null. Keys and database rows match as the
-    * join matches them: on the columns both schemas name, the
-    * database side cast as [[matchTypes]] casts it. False as well when
-    * a database value does not cast, or when the driver cannot match
-    * as Spark does (a column it cannot resolve alone, a cast Spark
-    * rejects, a collated or nested key), so the caller runs
-    * [[mergeIds]] to decide.
+  /** The ids [[mergeIds]] joins to each key, by key, when its guards
+    * pass for a frame whose distinct projection onto its join columns
+    * is `keys`: every key matches exactly one database row (at least one
+    * under `allowDuplication`) and no matched id is null. Keys and
+    * database rows match as the join matches them: on the columns both
+    * schemas name, the database side cast as [[matchTypes]] casts it.
+    * None as well when a database value does not cast, or when the
+    * driver cannot match as Spark does (a column it cannot resolve
+    * alone, a cast Spark rejects, a collated or nested key), so the
+    * caller runs [[mergeIds]] to decide.
     */
-  private[graft] def idsMatch(
+  private[graft] def idsOf(
       keys: Seq[Row], keySchema: StructType,
       dbRows: Seq[Row], dbSchema: StructType,
       alias: String,
       allowDuplication: Boolean,
-  ): Boolean = {
+  ): Option[collection.Map[GenericInternalRow, Seq[Any]]] = {
     val on = StructType(keySchema.filter(f => dbSchema.names.contains(f.name)))
     (dbReaders(on, dbSchema), dbIndex(dbSchema, alias)) match {
       case (Some(read), Some(id)) =>
         try {
-          // per key: the rows it matches, and whether one has a null id
-          val matches = mutable.HashMap.empty[GenericInternalRow, (Int, Boolean)]
+          val ids = mutable.HashMap.empty[GenericInternalRow, Vector[Any]]
           val toDb = CatalystTypeConverters.createToCatalystConverter(dbSchema)
           dbRows.foreach { row =>
             val r = toDb(row).asInstanceOf[InternalRow]
             val key = new GenericInternalRow(read.map(_(r)))
-            val (n, nullId) = matches.getOrElse(key, (0, false))
-            matches(key) = (n + 1, nullId || r.isNullAt(id))
+            ids(key) = ids.getOrElse(key, Vector.empty) :+ row.get(id)
           }
-          val toKey = CatalystTypeConverters.createToCatalystConverter(keySchema)
-          val at = on.fields.map(f => keySchema.fieldIndex(f.name))
-          keys.forall { row =>
-            val r = toKey(row).asInstanceOf[InternalRow]
-            val key = new GenericInternalRow(at.map(i => normalized(r.get(i, keySchema(i).dataType))))
-            matches.get(key).exists { case (n, nullId) =>
-              !nullId && (n == 1 || allowDuplication)
-            }
+          val key = keyOf(keySchema, on.names.map(keySchema.fieldIndex))
+          val pass = keys.forall { row =>
+            ids.get(new GenericInternalRow(key(row))).exists(matched =>
+              !matched.contains(null) && (matched.size == 1 || allowDuplication))
           }
-        } catch { case _: MatchDatatypesError => false }
-      case _ => false
+          if (pass) Some(ids) else None
+        } catch { case _: MatchDatatypesError => None }
+      case _ => None
     }
+  }
+
+  /** The distinct projection of driver-held `rows` (schema `schema`)
+    * onto `columns`, and its schema: [[getRows]] on the driver. Rows
+    * are keyed as `dropDuplicates` groups them ([[keyOf]]), so −0.0
+    * and 0.0 are one row, as are all NaNs, and come out in the order
+    * of their first occurrence with their values normalized.
+    */
+  private[graft] def distinctRows(
+      rows: Seq[Row], schema: StructType, columns: Seq[String],
+  ): (Seq[Row], StructType) = {
+    val at = columns.map(schema.fieldIndex)
+    val projected = StructType(at.map(schema(_)))
+    val key = keyOf(schema, at)
+    val distinct = mutable.LinkedHashSet.empty[GenericInternalRow]
+    rows.foreach(r => distinct += new GenericInternalRow(key(r)))
+    val toRow = CatalystTypeConverters.createToScalaConverter(projected)
+    (distinct.iterator.map(toRow(_).asInstanceOf[Row]).toSeq, projected)
+  }
+
+  /** Driver-held `rows` of a frame with columns `from`, as rows of the
+    * frame with columns `to` that a `drop` of it returns: a drop keeps
+    * the order of the columns it leaves, so each of `to`'s columns is
+    * the next of `from`'s with its name.
+    */
+  private[graft] def followRows(rows: Seq[Row], from: Seq[String], to: Seq[String]): Seq[Row] = {
+    val at = to.scanLeft(-1)((prev, name) => from.indexOf(name, prev + 1)).tail
+    if (at == from.indices) rows else rows.map(r => Row.fromSeq(at.map(r.get)))
   }
 
   /** A7 (`dataframe_operations.py:19-56`): set-containment compare of
@@ -287,11 +323,11 @@ object FrameOps {
       // unevaluated or not, depending on which stage finishes first
       db.write.format("noop").mode("overwrite").save()
       val missing = data.except(db).limit(20).collect()
-      if (missing.nonEmpty) throw missingRows(missing)
+      if (missing.nonEmpty) throw missingRowsError(missing)
     }
   }
 
-  private def missingRows(rows: Iterable[Row]): CompareMissingRowsError =
+  private def missingRowsError(rows: Iterable[Row]): CompareMissingRowsError =
     new CompareMissingRowsError(
       s"Some rows from data were not found in the database:\n${rows.mkString("\n")}")
 
@@ -319,91 +355,71 @@ object FrameOps {
       castReader(dbSchema, i, f.dataType).getOrElse(throw new IllegalArgumentException(
         s"Column `${f.name}` does not cast from ${dbSchema(i).dataType.sql} to ${f.dataType.sql}."))
     }
-    val db = keyRows(dbRows, dbSchema, fromDb)
-
-    val toData = CatalystTypeConverters.createToCatalystConverter(dataSchema)
-    val missing = mutable.LinkedHashSet.empty[GenericInternalRow]
-    val it = data.iterator
-    while (missing.size < 20 && it.hasNext) {
-      val values = toData(it.next()).asInstanceOf[InternalRow].toSeq(dataSchema)
-      val key = new GenericInternalRow(values.map(normalized).toArray)
-      if (!values.exists(isNullOrNaN) && !db.contains(key)) missing += key
-    }
+    val missing = missingRows(data, dataSchema, keyRows(dbRows, dbSchema, fromDb),
+      skipNulls = true, limit = 20)
     if (missing.nonEmpty) {
       val toRow = CatalystTypeConverters.createToScalaConverter(dataSchema)
-      throw missingRows(missing.map(toRow(_).asInstanceOf[Row]))
+      throw missingRowsError(missing.map(toRow(_).asInstanceOf[Row]))
     }
-  }
-
-  /** What [[probeRows]] learns in its one pass: the frame's row count,
-    * whether it is empty or holds a null, and whether it matches the
-    * database rows.
-    */
-  private[graft] final case class RowProbe(rows: Long, hasNulls: Boolean, matches: Boolean)
-
-  /** One Spark action over a distinct `df`: each partition counts its
-    * rows, notes any null and looks each row up in a broadcast of the
-    * database rows read as `df`'s columns ([[dbReaders]]). `matches` is
-    * true only when `compareFrames(df, matchTypes(db, df.schema), exact)`
-    * passes. With `exact`, no row is missing and the distinct database
-    * keys number the rows: `df` being distinct, the two sets are then
-    * equal. Without it, no row is missing once the rows holding a null
-    * or NaN are skipped, as `na.drop()` skips them. `matches` is false
-    * as well when the driver cannot key the database rows as Spark
-    * would, including on a value that does not cast.
-    */
-  private[graft] def probeRows(
-      df: DataFrame, dbRows: Seq[Row], dbSchema: StructType, exact: Boolean,
-  ): RowProbe = {
-    val schema = df.schema
-    val keys = dbReaders(schema, dbSchema).flatMap { read =>
-      try Some(keyRows(dbRows, dbSchema, read))
-      catch { case _: MatchDatatypesError => None }
-    }
-    val shared = df.sparkSession.sparkContext.broadcast(
-      keys.getOrElse(mutable.HashSet.empty[GenericInternalRow]))
-    val skipNulls = !exact
-    try {
-      val parts = df.mapPartitions { rows =>
-        val toData = CatalystTypeConverters.createToCatalystConverter(schema)
-        val db = shared.value
-        var n = 0L
-        var nulls = false
-        var missing = 0L
-        rows.foreach { row =>
-          val values = toData(row).asInstanceOf[InternalRow].toSeq(schema)
-          n += 1
-          nulls ||= values.contains(null)
-          if (!(skipNulls && values.exists(isNullOrNaN)) &&
-            !db.contains(new GenericInternalRow(values.map(normalized).toArray))) missing += 1
-        }
-        Iterator((n, nulls, missing))
-      }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaBoolean, Encoders.scalaLong)).collect()
-      val n = parts.map(_._1).sum
-      val missing = parts.map(_._3).sum
-      RowProbe(n, n == 0 || parts.exists(_._2),
-        keys.exists(k => missing == 0 && (!exact || k.size == n)))
-    } finally shared.destroy()
   }
 
   /** D2 of the loader: `compareFrames(df, matchTypes(db, df.schema),
-    * exact)` for a distinct `df` and the database rows `dbRows`, after
-    * asserting that the database returned rows, and (when `df` is
-    * non-empty and null-free) at least as many as `df` has. One Spark
-    * action, [[probeRows]]; [[compareFrames]] runs only when the probe
-    * finds a mismatch, to raise its own error with its own text.
+    * exact)` for a distinct `df` whose rows the driver holds and the
+    * database rows `dbRows`, after asserting that the database returned
+    * rows, and (when `df` is non-empty and null-free) at least as many
+    * as `df` has. Decided on the driver: no row of `df` may be missing
+    * from the database rows read as its columns ([[dbReaders]]), and
+    * with `exact` the distinct database keys must number `df`'s rows.
+    * [[compareFrames]] runs only when the driver finds a mismatch or
+    * cannot key the database rows as Spark would, to raise its own error.
     */
   private[graft] def compareRows(
-      df: DataFrame, dbRows: Seq[Row], dbSchema: StructType, exact: Boolean,
+      df: DataFrame, rows: Seq[Row], dbRows: Seq[Row], dbSchema: StructType, exact: Boolean,
   ): Unit = {
-    val dbCount = dbRows.size.toLong
+    val dbCount = dbRows.size
     assert(dbCount > 0, "Compare query yielded no results.")
-    val probe = probeRows(df, dbRows, dbSchema, exact)
-    if (!probe.hasNulls)
-      assert(dbCount >= probe.rows, s"Compare query yielded fewer rows ($dbCount) than data.")
-    if (!probe.matches)
-      compareFrames(df, matchTypes(frameOf(df.sparkSession, dbRows, dbSchema), df.schema),
+    if (rows.nonEmpty && !rows.exists(_.anyNull))
+      assert(dbCount >= rows.size, s"Compare query yielded fewer rows ($dbCount) than data.")
+    val schema = df.schema
+    val matches = dbReaders(schema, dbSchema).exists { read =>
+      try {
+        val db = keyRows(dbRows, dbSchema, read)
+        (!exact || db.size == rows.size) &&
+          missingRows(rows, schema, db, skipNulls = !exact, limit = 1).isEmpty
+      } catch { case _: MatchDatatypesError => false }
+    }
+    if (!matches)
+      compareFrames(df, matchTypes(frameOf(df.sparkSession, dbRows, dbSchema), schema),
         exact = exact)
+  }
+
+  /** Up to `limit` distinct rows of `data` (schema `dataSchema`) whose
+    * key is not in `db`, in data order; with `skipNulls`, rows holding a
+    * null or NaN are skipped, as `na.drop()` drops them.
+    */
+  private def missingRows(
+      data: Seq[Row], dataSchema: StructType, db: collection.Set[GenericInternalRow],
+      skipNulls: Boolean, limit: Int,
+  ): collection.Set[GenericInternalRow] = {
+    val key = keyOf(dataSchema, dataSchema.indices)
+    val missing = mutable.LinkedHashSet.empty[GenericInternalRow]
+    val it = data.iterator
+    while (missing.size < limit && it.hasNext) {
+      val values = key(it.next())
+      val k = new GenericInternalRow(values)
+      if (!(skipNulls && values.exists(isNullOrNaN)) && !db.contains(k)) missing += k
+    }
+    missing
+  }
+
+  /** A row's values at `at` as `except`, `dropDuplicates` and the id
+    * join group them: Catalyst values, [[normalized]]. In a
+    * `GenericInternalRow` they compare null-safely, bytes by content.
+    */
+  private def keyOf(schema: StructType, at: Seq[Int]): Row => Array[Any] = {
+    val idx = at.toArray
+    val convert = idx.map(i => CatalystTypeConverters.createToCatalystConverter(schema(i).dataType))
+    row => Array.tabulate(idx.length)(j => normalized(convert(j)(row.get(idx(j)))))
   }
 
   /** One-partition frame over driver-held rows. */

@@ -22,18 +22,25 @@ object ProfileOne {
 
     case class StageRow(id: Int, name: String, tasks: Int, taskMs: Long,
         shufReadB: Long, shufWriteB: Long)
+    // each rep runs in its own job group and tag (an `Overlap.all`
+    // branch sets its own group but inherits the tag); only the recorded
+    // rep's jobs and their stages are kept, whenever their events land
+    def group(rep: Int) = s"ProfileOne-$name-$rep"
+    val recorded = group(reps)
     val jobs = mutable.LinkedHashMap.empty[Int, (Long, Long)] // id -> (t0, t1)
+    val stageIds = mutable.Set.empty[Int]
     val stages = mutable.LinkedHashMap.empty[Int, StageRow]
-    @volatile var record = false
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (record) jobs(j.jobId) = (j.time, 0L)
-      override def onJobEnd(j: SparkListenerJobEnd): Unit =
-        if (record) jobs.get(j.jobId).foreach { case (t0, _) =>
-          jobs(j.jobId) = (t0, j.time)
+        if (Option(j.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+            .exists(_.split(',').contains(recorded))) {
+          jobs(j.jobId) = (j.time, 0L)
+          stageIds ++= j.stageIds
         }
+      override def onJobEnd(j: SparkListenerJobEnd): Unit =
+        jobs.get(j.jobId).foreach { case (t0, _) => jobs(j.jobId) = (t0, j.time) }
       override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
-        if (record) {
+        if (stageIds.contains(s.stageInfo.stageId)) {
           val i = s.stageInfo
           // taskMetrics can be null for stages completed with
           // failures — default the metric fields to 0 rather than
@@ -49,17 +56,16 @@ object ProfileOne {
 
     for (i <- 1 to reps) {
       spark.catalog.clearCache()
-      // flip record BEFORE clearing: the listener bus is async, so a
-      // straggler event from the PREVIOUS rep can land after the flip
-      // — clearing second evicts any such leakage instead of letting
-      // it pollute the recorded rep
-      record = i == reps
-      jobs.clear(); stages.clear()
+      spark.sparkContext.clearJobTags()
+      spark.sparkContext.setJobGroup(group(i), s"rep $i", interruptOnCancel = false)
+      spark.sparkContext.addJobTag(group(i))
       val t0 = System.nanoTime()
       val n = graft.SparkEntry.queries(name)(spark, dir).count()
       val sec = (System.nanoTime() - t0) / 1e9
       println(f"PROFILE $name rep=$i rows=$n sec=$sec%.3f")
     }
+    spark.sparkContext.clearJobTags()
+    spark.sparkContext.clearJobGroup()
     // one settle so late listener events land
     Thread.sleep(300)
     // a job whose end event never landed (t1 == 0) would print a

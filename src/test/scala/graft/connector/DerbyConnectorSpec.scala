@@ -1,15 +1,9 @@
 package graft.connector
 
 import java.sql.DriverManager
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.graftbridge.ListenerBus
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft._
@@ -163,48 +157,41 @@ class DerbyConnectorSpec extends AnyFunSuite with SparkSpec {
     assert(spark.sharedState.cacheManager.isEmpty)
   }
 
-  /** `body`'s result and the SQL actions it ran, by name (`collect`,
-    * `count`, ...).
-    */
-  private def withActions[A](body: => A): (A, Seq[String]) = {
-    val seen = new ConcurrentLinkedQueue[String]()
-    val listener = new QueryExecutionListener {
-      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        seen.add(funcName)
-      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
-        seen.add(funcName)
-    }
-    ListenerBus.drain(spark.sparkContext)
-    spark.listenerManager.register(listener)
-    try {
-      val result = body
-      ListenerBus.drain(spark.sparkContext)
-      (result, seen.asScala.toSeq)
-    } finally spark.listenerManager.unregister(listener)
-  }
-
-  test("one load of the three-table streets fixture runs at most 4 SQL actions") {
-    // each of the three steps collects its table's distinct projection
-    // once (3), and the exact compare probes the cached frame once (1);
-    // the id guards, D1 and the compare's keys run on the driver. With
-    // the id guards and the compare in Spark the load ran 7, with D1 in
-    // Spark too 10, and 13 before each step was evaluated once
+  test("one load of the three-table streets fixture runs at most 1 SQL action") {
+    // the collect of the deduped frame; each step's projection, D1, the
+    // id guards, the id threading and the compare run on the driver
+    // over its rows. With a collect per step and the compare probing
+    // the cached frame the load ran 4, with the id guards and the
+    // compare in Spark 7, with D1 in Spark too 10, and 13 before each
+    // step was evaluated once
     val url = streetDb()
     val (_, actions) = withActions(Connector.withConnection(spark, url)(c =>
       c.load(streets("NL", "Utrecht", "Oudegracht", "1"))))
-    assert(actions.size <= 4, actions.mkString(", "))
-    assert(!actions.contains("count"), actions.mkString(", "))
+    assert(actions == Seq("collect"), actions.mkString(", "))
     spark.catalog.clearCache()
   }
 
   test("load(compare = false) runs no SQL action the compare-free load did not run") {
-    // the same load without the compare: the three steps' collects;
-    // 6 with the id guards in Spark, 9 with D1 in Spark too, 10 before
-    // each step was evaluated once
+    // the same load without the compare: the one collect; 3 with a
+    // collect per step, 6 with the id guards in Spark, 9 with D1 in
+    // Spark too, 10 before each step was evaluated once
     val url = streetDb()
     val (_, actions) = withActions(Connector.withConnection(spark, url)(c =>
       c.load(streets("NL", "Utrecht", "Oudegracht", "1"), compare = false)))
-    assert(actions.size <= 3, actions.mkString(", "))
+    assert(actions.size <= 1, actions.mkString(", "))
+    spark.catalog.clearCache()
+  }
+
+  test("a one-step load and a three-step load run the same number of SQL actions") {
+    // the SQL actions of a load do not grow with its steps
+    val one = freshDb()
+    ddl(one, "CREATE TABLE land (id INT GENERATED ALWAYS AS IDENTITY PRIMARY KEY, " +
+      "land VARCHAR(50) NOT NULL UNIQUE)")
+    val (_, oneStep) = withActions(Connector.withConnection(spark, one)(c =>
+      c.load(strDf("land" -> Seq("NL", "BE")))))
+    val (_, threeSteps) = withActions(Connector.withConnection(spark, streetDb())(c =>
+      c.load(streets("NL", "Utrecht", "Oudegracht", "1"))))
+    assert(oneStep.size == threeSteps.size, s"$oneStep vs $threeSteps")
     spark.catalog.clearCache()
   }
 

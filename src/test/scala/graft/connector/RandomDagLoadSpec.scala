@@ -3,13 +3,14 @@ package graft.connector
 import java.sql.DriverManager
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
+import graft.ops.FrameOps
 
 /** Port of the reference's highest-value test: property-based random
   * DAG schemas round-tripped through `load` and the auto-generated
@@ -69,12 +70,15 @@ class RandomDagLoadSpec extends AnyFunSuite with SparkSpec {
     Fixture(tables, nRows, noIsolates && reachable.size == names.size)
   }
 
-  test("random DAG schemas: load round-trips through the generated compare query (F6)") {
+  /** `n` fixtures of the seeded Gen chain, each with its fresh Derby
+    * database (tables created) and its frame.
+    */
+  private def fixtures(n: Int): Seq[(Fixture, String, DataFrame)] = {
     // scalatestplus is not in the offline cache; drive the Gen
     // directly with a deterministic seed chain
     val params = Gen.Parameters.default
     var seed = Seed(42L)
-    for (_ <- 1 to 12) {
+    (1 to n).map { _ =>
       val fx = fixtureGen.pureApply(params, seed)
       seed = seed.next
       val url = s"jdbc:derby:memory:graft_rand_${dbCounter.incrementAndGet()};create=true"
@@ -103,7 +107,12 @@ class RandomDagLoadSpec extends AnyFunSuite with SparkSpec {
       val df = spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 2),
         StructType(naturalCols.map(c => StructField(c, StringType, nullable = true))))
+      (fx, url, df)
+    }
+  }
 
+  test("random DAG schemas: load round-trips through the generated compare query (F6)") {
+    fixtures(12).foreach { case (fx, url, df) =>
       Connector.withConnection(spark, url) { c =>
         if (fx.connected) {
           c.load(df, exact = false)
@@ -118,5 +127,33 @@ class RandomDagLoadSpec extends AnyFunSuite with SparkSpec {
       }
     }
   }
-}
 
+  test("random DAG schemas: a reload that doubles every table threads each of its ids") {
+    // no table has a UNIQUE constraint, so a reload inserts every row
+    // again and each key then matches two ids, then four below a doubled
+    // parent, and so on: under allowDuplication each row of the cascade
+    // expands once per id. The returned frame must carry every id of
+    // every keyed table, each with the natural and parent columns of
+    // its own row, and no null id; a cascade that threads fewer ids on
+    // the driver than the join matches leaves child rows unkeyed
+    fixtures(12).foreach { case (fx, url, df) =>
+      Connector.withConnection(spark, url) { c =>
+        c.load(df, compare = false)
+        val out = c.load(df, compare = false, replace = false, allowDuplication = true)
+        // every parent table is a keyed step of the load
+        val keyed = fx.tables.filter(t => fx.tables.exists(_.parents.contains(t.name)))
+        assert(keyed.forall(t => out.columns.contains(s"${t.name}_id")), out.columns.toSeq)
+        keyed.foreach { t =>
+          val cols = s"${t.name}_id" +: (t.parents.map(p => s"${p}_id") ++ t.natural)
+          val threaded = out.select(cols.map(FrameOps.quoted): _*).distinct()
+            .collect().map(_.toSeq).toSet
+          val table = JdbcFrames.queryToDataFrame(spark, c.conn,
+            s"SELECT ${(t.pk +: cols.tail).mkString(", ")} FROM ${t.name}", lowercaseLabels = true)
+            .collect().map(_.toSeq).toSet
+          assert(threaded == table, s"table ${t.name} of ${fx.tables}")
+        }
+        spark.catalog.clearCache()
+      }
+    }
+  }
+}

@@ -188,8 +188,11 @@ class FrameOpsPropertySpec extends AnyFunSuite with SparkSpec {
     }
 
   /** A frame's rows with byte arrays by content, in a fixed order. */
-  private def contents(df: DataFrame): Seq[String] =
-    df.collect().toSeq.map(_.toSeq.map {
+  private def contents(df: DataFrame): Seq[String] = rowContents(df.collect().toSeq)
+
+  /** Rows with byte arrays by content, in a fixed order. */
+  private def rowContents(rows: Seq[Row]): Seq[String] =
+    rows.map(_.toSeq.map {
       case b: Array[Byte] => b.mkString("bytes(", ",", ")")
       case v => String.valueOf(v)
     }.mkString("|")).sorted
@@ -278,22 +281,152 @@ class FrameOpsPropertySpec extends AnyFunSuite with SparkSpec {
           viaSparkRows = contents(joined)
           joined.unpersist()
         }
-        val guard = FrameOps.idsMatch(keys, dataSchema, db, dbSchema, "id", allowDuplication)
-        assert(guard == (viaSpark == "ok"), s"seed $seed: $viaSpark")
-        var driverRows = Seq.empty[String]
+        val guard = FrameOps.idsOf(keys, dataSchema, db, dbSchema, "id", allowDuplication)
+        assert(guard.isDefined == (viaSpark == "ok"), s"seed $seed: $viaSpark")
+        var joinedRows = Seq.empty[String]
+        var threadedRows = Seq.empty[String]
         val driver = verdict {
-          val joined = FrameOps.mergeIdRows(df, keys, dataSchema, db, dbSchema,
-            "id", "t", allowDuplication)
-          driverRows = contents(joined)
-          joined.unpersist()
+          // the frame is its own distinct projection: its rows are the keys
+          val (joined, threaded) = FrameOps.mergeIdRows(df, Some(keys), keys, dataSchema,
+            db, dbSchema, "id", "t", allowDuplication)
+          joinedRows = contents(joined)
+          threadedRows = rowContents(threaded.get)
         }
         assert(driver == viaSpark, s"seed $seed")
-        assert(driverRows == viaSparkRows, s"seed $seed")
+        assert(joinedRows == viaSparkRows, s"seed $seed")
+        assert(threadedRows == viaSparkRows, s"seed $seed")
       }
     }
   }
 
-  test("the one-action compare fails exactly when compareFrames(exact = true | false) does, " +
+  test("the driver cascade projects each step and threads its ids as the Spark chain does") {
+    import org.apache.spark.sql.types._
+    def dec(s: String) = new java.math.BigDecimal(s)
+    val dataSchema = StructType(Seq(
+      StructField("d", DoubleType), StructField("m", DecimalType(6, 2)),
+      StructField("b", BinaryType), StructField("s", StringType),
+      StructField("l", LongType), StructField("p", IntegerType)))
+    // a column as a JDBC read types it: a wider DECIMAL, INT for BIGINT
+    // and BIGINT for INT
+    def dbType(dt: DataType): DataType = dt match {
+      case LongType       => IntegerType
+      case IntegerType    => LongType
+      case _: DecimalType => DecimalType(10, 4)
+      case other          => other
+    }
+    // rows as sets compare −0.0 and 0.0 alike: `dropDuplicates` keeps
+    // either sign, and AQE decides which
+    def unsigned(rows: Seq[String]): Seq[String] =
+      rows.map(_.replaceAll("-0\\.0(?![0-9])", "0.0")).sorted
+
+    (1 to 40).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      def pick[A](xs: A*): A = xs(rnd.nextInt(xs.size))
+      def maybe[A](v: => A): Any = if (rnd.nextInt(8) == 0) null else v
+      // distinct through `p`, so no dedup runs and −0.0 keeps its sign
+      val data = (0 until 1 + rnd.nextInt(8)).map(p => Row(
+        maybe(pick(Double.NaN, 0.0, -0.0, 1.5)),
+        maybe(pick(dec("1.50"), dec("-0.01"))),
+        maybe(pick(Array[Byte](), Array[Byte](1, 2))),
+        maybe(pick("a", "a ", "")),
+        maybe(pick(1L, -3L)),
+        p))
+      val pre = FrameOps.frameOf(spark, data, dataSchema).cache()
+      var chain: DataFrame = pre
+      var rows = pre.collect().toSeq
+      var nextId = 0
+      var failed = false
+      (0 until 3).foreach { step =>
+        if (!failed) {
+          if (rnd.nextInt(3) == 0) {
+            val c = pick(chain.columns.toSeq: _*)
+            chain = chain.withColumnsRenamed(Map(c -> s"${c}_$step"))
+          }
+          val cols = chain.columns.toSeq.filter(_ => rnd.nextInt(2) == 0) match {
+            case Seq() => Seq(pick(chain.columns.toSeq: _*))
+            case some  => some
+          }
+          val (keys, keySchema) = FrameOps.distinctRows(rows, chain.schema, cols)
+          assert(unsigned(rowContents(keys)) ==
+            unsigned(contents(FrameOps.getRows(chain, cols))), s"seed $seed step $step")
+
+          // the database side: each key once as the JDBC reader returns
+          // it, in another column order; under allowDuplication now and
+          // then twice; now and then one key the guard must reject (gone,
+          // twice, a null id, a DECIMAL that rounds away, a string whose
+          // trailing space a CHAR column's read dropped); and a row of the
+          // database's own
+          val allowDuplication = rnd.nextInt(2) == 0
+          val alias = s"id$step"
+          val dbSchema = StructType(StructField(alias, IntegerType) +:
+            keySchema.reverse.map(f => f.copy(dataType = dbType(f.dataType))))
+          def toDb(key: Row, fault: String): Seq[Row] = {
+            def row(): Row = {
+              nextId += 1
+              Row.fromSeq((if (fault == "null id") null else nextId) +:
+                key.toSeq.reverse.map {
+                  case null                    => null
+                  case l: Long                 => l.toInt
+                  case i: Int                  => i.toLong
+                  case m: java.math.BigDecimal =>
+                    m.add(dec(if (fault == "rounds away") "0.005" else pick("0", "0.0049")))
+                  case d: Double if d == 0.0   => pick(0.0, -0.0)
+                  case b: Array[Byte]          => b.clone()
+                  case v: String               => if (fault == "trimmed") v.stripTrailing() else v
+                  case other                   => other
+                })
+            }
+            fault match {
+              case "gone"                     => Nil
+              case "twice"                    => Seq(row(), row())
+              case _ if allowDuplication && rnd.nextInt(3) == 0 => Seq(row(), row())
+              case _                          => Seq(row())
+            }
+          }
+          val fault = pick("none", "none", "none", "none", "gone", "twice", "null id",
+            "rounds away", "trimmed")
+          val faulty = rnd.nextInt(keys.size)
+          val db = keys.zipWithIndex.flatMap { case (k, i) =>
+            toDb(k, if (i == faulty) fault else "none")
+          } ++ (if (rnd.nextInt(3) == 0) Seq(Row.fromSeq(99 +: keySchema.map(_ => null))) else Nil)
+
+          var sparkRows = Seq.empty[String]
+          val viaSpark = verdict {
+            val joined = FrameOps.mergeIds(chain, FrameOps.frameOf(spark, db, dbSchema),
+              alias, "t", allowDuplication)
+            sparkRows = contents(joined)
+            joined.unpersist()
+          }
+          var joined: DataFrame = null
+          var threaded = Seq.empty[Row]
+          val (driver, actions) = withActions(verdict {
+            val (j, t) = FrameOps.mergeIdRows(chain, Some(rows), keys, keySchema, db, dbSchema,
+              alias, "t", allowDuplication)
+            joined = j
+            threaded = t.get
+          })
+          assert(driver == viaSpark, s"seed $seed step $step")
+          // a join that passes is decided on the driver, with no Spark action
+          if (driver == "ok") assert(actions.isEmpty, s"seed $seed step $step: $actions")
+          if (driver != "ok") failed = true
+          else {
+            assert(contents(joined) == sparkRows, s"seed $seed step $step")
+            assert(rowContents(threaded) == sparkRows, s"seed $seed step $step")
+            val dropped =
+              if (rnd.nextInt(2) == 0)
+                FrameOps.dropReplaced(joined, cols.filter(_ => rnd.nextBoolean()))
+              else joined
+            rows = FrameOps.followRows(threaded, joined.columns.toSeq, dropped.columns.toSeq)
+            chain = dropped
+          }
+        }
+      }
+      assert(rowContents(rows) == contents(chain), s"seed $seed")
+      pre.unpersist()
+    }
+  }
+
+  test("the driver compare fails exactly when compareFrames(exact = true | false) does, " +
     "with the same message") {
     import org.apache.spark.sql.types._
     val dataSchema = StructType(Seq(
@@ -355,16 +488,17 @@ class FrameOpsPropertySpec extends AnyFunSuite with SparkSpec {
         (if (rnd.nextInt(4) == 0) Seq.fill(1 + rnd.nextInt(2))(toDb(dataRow())) else Nil) ++
         (if (rnd.nextInt(8) == 0) Seq(Row(null, "a", 1, null, dec("123456.7890"), 1.5)) else Nil)
 
+      val rows = df.collect().toSeq
       Seq(true, false).foreach { exact =>
         val viaSpark = verdict(sparkCompare(df, db, exact))
-        val driver = verdict(FrameOps.compareRows(df, db, dbSchema, exact))
+        val (driver, actions) =
+          withActions(verdict(FrameOps.compareRows(df, rows, db, dbSchema, exact)))
         assert(driver == viaSpark, s"seed $seed exact $exact")
-        // the probe's own verdict agrees, so compareFrames runs only on
-        // a real mismatch
+        // the driver decides a passing compare alone: compareFrames runs
+        // only on a real mismatch
         val compared = verdict(FrameOps.compareFrames(df,
           FrameOps.matchTypes(FrameOps.frameOf(spark, db, dbSchema), dataSchema), exact))
-        assert(FrameOps.probeRows(df, db, dbSchema, exact).matches == (compared == "ok"),
-          s"seed $seed exact $exact: $compared")
+        if (compared == "ok") assert(actions.isEmpty, s"seed $seed exact $exact: $actions")
       }
       df.unpersist()
     }
