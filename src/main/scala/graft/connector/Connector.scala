@@ -2,6 +2,8 @@ package graft.connector
 
 import java.sql.{Connection, DriverManager}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
@@ -17,19 +19,20 @@ import graft.schema.Schema
   * commit on clean exit, rollback on any exception — which is what
   * makes `load`'s validation failure undo the whole load.
   *
-  * Spark shape: [[load]] collects its deduped frame once and runs the
+  * Spark shape: [[load]] collects the caller's frame once and runs the
   * whole cascade on the driver over those rows, so a load is one Spark
-  * action however many tables it fills. Each step projects the rows onto
-  * its table, inserts the projection (see [[JdbcFrames]]), reads its
-  * table once and checks that read on the driver against the rows it
-  * inserted: the per-insert read-back check (D1,
-  * [[FrameOps.containsRows]]) and the id guard and id threading
+  * action however many tables it fills. It dedups the rows, then each
+  * step projects them onto its table, inserts the projection (see
+  * [[JdbcFrames]]), reads its table once and checks that read on the
+  * driver against the rows it inserted: the per-insert read-back check
+  * (D1, [[FrameOps.containsRows]]) and the id guard and id threading
   * ([[FrameOps.mergeIdRows]]). The final compare (D2,
-  * [[FrameOps.compareRows]]) checks the collected rows against its read.
-  * A check that fails runs the Spark operator it stands for, which
-  * raises the error. The frame returned is the lazy Spark chain of the
-  * same id joins. The single-table calls ([[insert]], [[retrieveIds]],
-  * [[insertAndRetrieveIds]]) collect only their table's projection.
+  * [[FrameOps.compareRows]]) checks the deduped rows against its read.
+  * A check that fails runs the Spark operator it stands for over a
+  * frame of the rows the driver holds, which raises the error. The
+  * frame returned is a local one of the threaded rows. The single-table
+  * calls ([[insert]], [[retrieveIds]], [[insertAndRetrieveIds]]) collect
+  * only their table's projection, and the last two return a Spark join.
   */
 final class Connector(
     val spark: SparkSession,
@@ -60,34 +63,32 @@ final class Connector(
       columns: Map[String, String] = Map.empty,
   ): Unit = {
     schema.checkSchemaNotEmpty()
-    insertRenamed(data.withColumnsRenamed(columns), None, table)
+    val pre = data.withColumnsRenamed(columns)
+    insertRenamed(pre.columns.toSeq, collected(pre), table)
   }
 
-  /** [[insert]] of a frame already renamed, whose rows the driver may
-    * hold: the table's distinct projection ([[projection]]), the batch,
+  /** [[insert]] of a frame already renamed, with columns `columns` and
+    * distinct projections `project`: the table's projection, the batch,
     * and D1 over the table's distinct read-back.
     */
-  private def insertRenamed(pre: DataFrame, rows: Option[Seq[Row]], table: String): Unit = {
-    val commonColumns = schema.parseInsert(table, pre.columns.toSeq)
+  private def insertRenamed(
+      columns: Seq[String], project: Seq[String] => (Seq[Row], StructType), table: String,
+  ): Unit = {
+    val commonColumns = schema.parseInsert(table, columns)
     assert(commonColumns.nonEmpty, "No common columns were found.")
-    val (keys, keySchema) = projection(pre, rows, commonColumns)
+    val (keys, keySchema) = project(commonColumns)
     val inserted = insertRows(keys, keySchema, table, commonColumns)
     val (dbRows, dbSchema) = JdbcFrames.readQuery(conn,
       dialect.getCheckInsertQuery(table, commonColumns), lowercaseLabels = true)
     withConf(checkInserted(table, inserted, keySchema, dbRows, dbSchema))
   }
 
-  /** The distinct projection of `pre` onto `columns`, and its schema:
-    * [[FrameOps.distinctRows]] of `pre`'s rows when the driver holds
-    * them, else one Spark collect of [[FrameOps.getRows]].
+  /** The distinct projection of `pre` onto `columns`, and its schema,
+    * by one Spark collect of [[FrameOps.getRows]].
     */
-  private def projection(
-      pre: DataFrame, rows: Option[Seq[Row]], columns: Seq[String],
-  ): (Seq[Row], StructType) = rows match {
-    case Some(held) => FrameOps.distinctRows(held, pre.schema, columns)
-    case None =>
-      val projected = FrameOps.getRows(pre, columns)
-      (projected.collect().toSeq, projected.schema)
+  private def collected(pre: DataFrame)(columns: Seq[String]): (Seq[Row], StructType) = {
+    val projected = FrameOps.getRows(pre, columns)
+    (projected.collect().toSeq, projected.schema)
   }
 
   /** Batch-insert the rows of a table's distinct projection that hold
@@ -140,45 +141,7 @@ final class Connector(
       columns: Map[String, String] = Map.empty,
       replace: Boolean = true,
       allowDuplication: Boolean = false,
-  ): DataFrame = {
-    schema.checkSchemaNotEmpty()
-    val (joined, _) = keyedStep(FrameOps.preprocess(data, columns), None, table, alias,
-      insert = false, allowDuplication)
-    FrameOps.postprocess(dropReplaced(joined, table, replace), columns)
-  }
-
-  /** The one step behind [[load]], [[retrieveIds]] and
-    * [[insertAndRetrieveIds]], over a frame already renamed whose rows
-    * the driver may hold: the table's distinct projection of `pre`
-    * ([[projection]]), inserted when `insert` is set, one read of the
-    * table with the retrieve query, and the checks of that read on the
-    * driver, D1 first, then the id guard of [[FrameOps.mergeIdRows]].
-    * Returns the id join, uncached, and `rows` threaded through it.
-    */
-  private def keyedStep(
-      pre: DataFrame,
-      rows: Option[Seq[Row]],
-      table: String,
-      alias: String,
-      insert: Boolean,
-      allowDuplication: Boolean,
-  ): (DataFrame, Option[Seq[Row]]) = {
-    val (primaryKey, commonColumns) =
-      schema.parseRetrieve(table, alias, pre.columns.toSeq)
-    val (keys, keySchema) = projection(pre, rows, commonColumns)
-    val inserted =
-      if (insert) insertRows(keys, keySchema, table, commonColumns) else Nil
-    val (dbRows, dbSchema) = JdbcFrames.readQuery(conn,
-      dialect.getRetrieveQuery(table, primaryKey, alias, commonColumns), lowercaseLabels = true)
-    withConf {
-      if (insert) checkInserted(table, inserted, keySchema, dbRows, dbSchema)
-      FrameOps.mergeIdRows(pre, rows, keys, keySchema, dbRows, dbSchema,
-        alias, table, allowDuplication)
-    }
-  }
-
-  private def dropReplaced(joined: DataFrame, table: String, replace: Boolean): DataFrame =
-    if (replace) FrameOps.dropReplaced(joined, schema.getColumns(table)) else joined
+  ): DataFrame = keyedFrame(data, table, alias, columns, replace, allowDuplication, insert = false)
 
   /** `connector.py:286-324`. */
   def insertAndRetrieveIds(
@@ -188,11 +151,56 @@ final class Connector(
       columns: Map[String, String] = Map.empty,
       replace: Boolean = true,
       allowDuplication: Boolean = false,
+  ): DataFrame = keyedFrame(data, table, alias, columns, replace, allowDuplication, insert = true)
+
+  /** [[retrieveIds]], and [[insertAndRetrieveIds]] when `insert` is set:
+    * one [[keyedStep]] over the deduped frame, whose rows the driver
+    * does not hold, so the ids join it in Spark
+    * ([[FrameOps.mergeIdFrame]]).
+    */
+  private def keyedFrame(
+      data: DataFrame,
+      table: String,
+      alias: String,
+      columns: Map[String, String],
+      replace: Boolean,
+      allowDuplication: Boolean,
+      insert: Boolean,
   ): DataFrame = {
     schema.checkSchemaNotEmpty()
-    val (joined, _) = keyedStep(FrameOps.preprocess(data, columns), None, table, alias,
-      insert = true, allowDuplication)
-    FrameOps.postprocess(dropReplaced(joined, table, replace), columns)
+    val pre = FrameOps.preprocess(data, columns)
+    val joined = keyedStep(pre.columns.toSeq, collected(pre), table, alias, insert) {
+      FrameOps.mergeIdFrame(pre, _, _, _, _, alias, table, allowDuplication)
+    }
+    val kept = if (replace) FrameOps.dropReplaced(joined, schema.getColumns(table)) else joined
+    FrameOps.postprocess(kept, columns)
+  }
+
+  /** The one step behind [[load]], [[retrieveIds]] and
+    * [[insertAndRetrieveIds]], over a frame already renamed, with
+    * columns `columns` and distinct projections `project`: the table's
+    * projection, inserted when `insert` is set, one read of the table
+    * with the retrieve query, and the checks of that read on the driver,
+    * D1 first, then `thread`, given the projection and the read, which
+    * guards the ids and threads them through the frame.
+    */
+  private def keyedStep[A](
+      columns: Seq[String],
+      project: Seq[String] => (Seq[Row], StructType),
+      table: String,
+      alias: String,
+      insert: Boolean,
+  )(thread: (Seq[Row], StructType, Seq[Row], StructType) => A): A = {
+    val (primaryKey, commonColumns) = schema.parseRetrieve(table, alias, columns)
+    val (keys, keySchema) = project(commonColumns)
+    val inserted =
+      if (insert) insertRows(keys, keySchema, table, commonColumns) else Nil
+    val (dbRows, dbSchema) = JdbcFrames.readQuery(conn,
+      dialect.getRetrieveQuery(table, primaryKey, alias, commonColumns), lowercaseLabels = true)
+    withConf {
+      if (insert) checkInserted(table, inserted, keySchema, dbRows, dbSchema)
+      thread(keys, keySchema, dbRows, dbSchema)
+    }
   }
 
   /** Validate loaded data against a (generated) reconstruction query
@@ -207,43 +215,46 @@ final class Connector(
   ): Unit = {
     schema.checkSchemaNotEmpty()
     val pre = FrameOps.preprocess(data, columns)
-    compareDistinct(pre, pre.collect().toSeq, query, where, exact)
+    compareDistinct(pre.schema, pre.collect().toSeq, query, where, exact)
   }
 
-  /** [[compare]] of a frame already renamed and deduped, whose rows the
-    * driver holds.
+  /** [[compare]] of distinct rows the driver holds, of a frame already
+    * renamed with schema `rowSchema`.
     */
   private def compareDistinct(
-      pre: DataFrame,
+      rowSchema: StructType,
       rows: Seq[Row],
       query: Option[String],
       where: Option[String],
       exact: Boolean,
   ): Unit = {
-    val q = query.getOrElse(schema.getCompareQuery(pre.columns.toSeq, where))
+    val q = query.getOrElse(schema.getCompareQuery(rowSchema.names.toSeq, where))
     val (dbRows, dbSchema) = JdbcFrames.readQuery(conn, q, lowercaseLabels = true)
-    withConf(FrameOps.compareRows(pre, rows, dbRows, dbSchema, exact))
+    withConf(FrameOps.compareRows(spark, rowSchema, rows, dbRows, dbSchema, exact))
   }
 
   /** The flagship: plan, cascade inserts in topological order threading
     * retrieved ids through the frame, then validate — §3.1
     * (`connector.py:376-452`).
     *
-    * The frame is deduped, cached and collected once up front: the
-    * load's one Spark action. The cascade runs on the driver over those
-    * rows: each step projects them onto its table, inserts and reads it
-    * once, checks the read (D1, the id guard) and threads the ids it
-    * read through the rows, following the drop after it by column name.
-    * Every id join keeps the rows distinct (rows that differ only on a
-    * table's dropped natural columns join to different keys), so no
-    * step re-dedups them. D2 checks the collected rows against its read.
-    * When a check fails, the Spark operator it stands for runs and
-    * raises its error, so the load stays exact and all-or-nothing; when
-    * the id guard cannot decide, [[FrameOps.mergeIds]] decides.
+    * The renamed frame is collected once up front, the load's one Spark
+    * action, and deduped on the driver as `dropDuplicates` dedups it.
+    * The cascade runs on the driver over those rows, carrying their
+    * schema as Spark would change it: each step renames the columns its
+    * table names otherwise, projects the rows onto its table, inserts
+    * and reads it once, checks the read (D1, the id guard), threads the
+    * ids it read through the rows, drops the table's natural columns
+    * and undoes its renames. Every id join keeps the rows distinct (rows
+    * that differ only on a table's dropped natural columns join to
+    * different keys), so no step re-dedups them. D2 checks the deduped
+    * rows against its read. When a check fails, the Spark operator it
+    * stands for runs over a frame of the rows the driver holds and
+    * raises its error, so the load stays exact and all-or-nothing and
+    * never evaluates the caller's frame again; when the id guard cannot
+    * decide, [[FrameOps.mergeIds]] decides.
     *
-    * The returned frame is the lazy Spark twin of the cascade: the
-    * cached frame and each step's id join, uncached. The frame's cache
-    * is the one the load leaves, and a failed load releases it too.
+    * The returned frame is a local one of the threaded rows: its plan
+    * holds them, with no cache, join or broadcast under it.
     */
   def load(
       data: DataFrame,
@@ -256,33 +267,38 @@ final class Connector(
       exact: Boolean = true,
   ): DataFrame = {
     schema.checkSchemaNotEmpty()
-    // immutable — the compare below validates this very frame, no
+    // immutable — the compare below validates these very rows, no
     // clone needed (connector.py:424)
-    val pre = FrameOps.preprocess(data, columns).cache()
-    try {
-      val instructions = schema.getLoadInstructions(pre.columns.toSeq)
-      val preRows = pre.collect().toSeq
+    val renamed = data.withColumnsRenamed(columns)
+    val instructions = schema.getLoadInstructions(renamed.columns.toSeq)
+    val preSchema = renamed.schema
+    val preRows = FrameOps.distinctRows(renamed.collect().toSeq, preSchema)
 
+    withConf {
       // phase 1: insert+retrieve in topo order, ids cascade through the rows
-      val (afterRetrieve, rows) = instructions.insertAndRetrieve.foldLeft((pre, preRows)) {
-        case ((acc, accRows), spec) =>
+      val (outSchema, outRows) = instructions.insertAndRetrieve.foldLeft((preSchema, preRows)) {
+        case ((accSchema, accRows), spec) =>
           val renames = spec.columns.toMap
-          val (joined, joinedRows) = keyedStep(acc.withColumnsRenamed(renames), Some(accRows),
-            spec.table, spec.alias, insert = true, allowDuplication)
-          val dropped = dropReplaced(joined, spec.table, replace)
-          (FrameOps.postprocess(dropped, renames),
-            FrameOps.followRows(joinedRows.get, joined.columns.toSeq, dropped.columns.toSeq))
+          val in = FrameOps.renamed(accSchema, renames)
+          val (joinedSchema, joined) = keyedStep(in.names.toSeq,
+            FrameOps.distinctRows(accRows, in, _), spec.table, spec.alias, insert = true) {
+            FrameOps.mergeIdRows(spark, in, accRows, _, _, _, _,
+              spec.alias, spec.table, allowDuplication)
+          }
+          val (kept, keptRows) =
+            if (replace) FrameOps.dropRows(joinedSchema, joined, schema.getColumns(spec.table))
+            else (joinedSchema, joined)
+          (FrameOps.postprocessed(kept, renames), keptRows)
       }
       // phase 2: plain inserts
       instructions.insert.foreach { spec =>
-        insertRenamed(afterRetrieve.withColumnsRenamed(spec.columns.toMap), Some(rows), spec.table)
+        val in = FrameOps.renamed(outSchema, spec.columns.toMap)
+        insertRenamed(in.names.toSeq, FrameOps.distinctRows(outRows, in, _), spec.table)
       }
       if (compare)
-        compareDistinct(pre, preRows, compareQuery, where, exact)
+        compareDistinct(preSchema, preRows, compareQuery, where, exact)
 
-      FrameOps.postprocess(afterRetrieve, columns)
-    } catch {
-      case e: Throwable => pre.unpersist(); throw e
+      FrameOps.postprocess(spark.createDataFrame(outRows.asJava, outSchema), columns)
     }
   }
 }

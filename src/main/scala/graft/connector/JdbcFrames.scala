@@ -21,8 +21,10 @@ import graft.ops.FrameOps
   * see uncommitted state. Rows crossing this boundary are deduped
   * dimension rows (small by construction). The loader reads each table
   * once with [[readQuery]] and keeps the rows on the driver: its
-  * checks (D1, the id guard, the final compare's keys) run there, and
-  * only the id join and the final compare's probe run in Spark.
+  * checks (D1, the id guard, the final compare) and the id threading
+  * run there. Only the id join of `retrieveIds` and
+  * `insertAndRetrieveIds`, and a failing check's error path, run in
+  * Spark.
   */
 object JdbcFrames {
 

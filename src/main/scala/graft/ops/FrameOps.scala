@@ -17,19 +17,21 @@ import graft.{CompareMissingRowsError, CompareNoExactMatchError, MatchDatatypesE
   * (SURVEY.md §2.A, ops A1-A11).
   *
   * Scale notes: the database side of every check is rows the driver
-  * already read, and the id join broadcasts those rows (id/dimension
-  * tables are small next to the data being loaded). `Connector.load`
-  * collects its deduped frame once and runs its cascade on those rows:
-  * each step's projection ([[distinctRows]]), D1 ([[containsRows]]),
-  * the id guard and the id threading ([[mergeIdRows]]) and D2
-  * ([[compareRows]]) run on the driver with no Spark job, while the
-  * frame it returns stays a lazy Spark chain of the same id joins. Each
-  * driver check keys rows with Spark's own casts and equality
-  * (null-safe, byte arrays by content, NaNs equal, −0.0 as 0.0); when it
-  * finds a failure, or cannot decide, the Spark operator it stands for
-  * ([[mergeIds]], [[compareFrames]]) runs and raises its own error. The
-  * only other actions are the row-count guards in [[mergeIds]] (cached
-  * first) and [[hasNulls]]' one aggregation.
+  * already read, and the id join of the single-table calls broadcasts
+  * those rows (id/dimension tables are small next to the data being
+  * loaded). `Connector.load` collects the caller's frame once and runs
+  * its cascade on those rows: the dedup and each step's projection
+  * ([[distinctRows]]), D1 ([[containsRows]]), the id guard and the id
+  * threading ([[mergeIdRows]]), the renames and drops between steps
+  * ([[renamed]], [[dropRows]]) and D2 ([[compareRows]]) run on the
+  * driver with no Spark job, and the frame it returns is a local one of
+  * the threaded rows. Each driver check keys rows with Spark's own casts
+  * and equality (null-safe, byte arrays by content, NaNs equal, −0.0 as
+  * 0.0); when it finds a failure, or cannot decide, the Spark operator
+  * it stands for ([[mergeIds]], [[compareFrames]]) runs over a frame of
+  * the rows the driver holds and raises its own error. The only other
+  * actions are the row-count guards in [[mergeIds]] (cached first) and
+  * [[hasNulls]]' one aggregation.
   */
 object FrameOps {
 
@@ -40,21 +42,52 @@ object FrameOps {
   def preprocess(df: DataFrame, columns: Map[String, String] = Map.empty): DataFrame =
     // post-dedup coalesce(1): the dedup's map-side partial aggregation
     // still runs distributed; only the (already per-partition-deduped)
-    // final merge collapses to one task. Loader frames are dimension
-    // rows headed for a single-connection JDBC boundary — the insert
-    // COLLECTS them — so every downstream consumer otherwise pays
-    // shuffle.partitions near-empty tasks per action (and a .cache()
-    // on the result pins that width against AQE coalescing: measured
-    // 32-task stages over 25-row frames in c_load_roundtrip)
+    // final merge collapses to one task. `retrieveIds`,
+    // `insertAndRetrieveIds` and `compare` collect the result or a
+    // projection of it on the driver for a single-connection JDBC
+    // boundary, so any other width pays shuffle.partitions near-empty
+    // tasks per action (and a .cache() on the result would pin that
+    // width against AQE coalescing: measured 32-task stages over
+    // 25-row frames in c_load_roundtrip)
     df.withColumnsRenamed(columns).dropDuplicates().coalesce(1)
 
   /** A2 (`connector.py:43-59`): invert the rename for columns still
     * present, restoring user-facing names.
     */
-  def postprocess(df: DataFrame, columns: Map[String, String] = Map.empty): DataFrame = {
-    val present = df.columns.toSet
-    val undo = columns.collect { case (k, v) if present.contains(v) => v -> k }
-    df.withColumnsRenamed(undo)
+  def postprocess(df: DataFrame, columns: Map[String, String] = Map.empty): DataFrame =
+    df.withColumnsRenamed(undo(df.columns.toSeq, columns))
+
+  /** [[postprocess]]' rename of a frame with columns `present`. */
+  private def undo(present: Seq[String], columns: Map[String, String]): Map[String, String] = {
+    val names = present.toSet
+    columns.collect { case (k, v) if names.contains(v) => v -> k }
+  }
+
+  /** The schema of `postprocess(df, columns)` for a frame of schema
+    * `schema`.
+    */
+  private[graft] def postprocessed(schema: StructType, columns: Map[String, String]): StructType =
+    renamed(schema, undo(schema.names.toSeq, columns))
+
+  /** The schema of `df.withColumnsRenamed(renames)` for a frame of
+    * schema `schema`: as Spark does, each `(from, to)` in turn renames
+    * every column the session's resolver matches to `from`, so a
+    * column another pair renamed is matched by its new name, and a
+    * rename that leaves two columns the resolver cannot tell apart
+    * fails.
+    */
+  private[graft] def renamed(schema: StructType, renames: Map[String, String]): StructType = {
+    val conf = SQLConf.get
+    val resolver = conf.resolver
+    val fields = renames.toSeq.foldLeft(schema.fields.toSeq) { case (fs, (from, to)) =>
+      fs.map(f => if (resolver(f.name, from)) f.copy(name = to) else f)
+    }
+    if (fields != schema.fields.toSeq) {
+      val names = fields.map(f => if (conf.caseSensitiveAnalysis) f.name else f.name.toLowerCase)
+      require(names.distinct.size == names.size,
+        s"Renaming ${renames.mkString(", ")} leaves duplicate columns: ${fields.map(_.name).mkString(", ")}")
+    }
+    StructType(fields)
   }
 
   /** A3 (`dataframe_operations.py:12-16`): true if the frame is empty
@@ -179,65 +212,81 @@ object FrameOps {
       .select(df.columns.map(c => col(s"l.`$c`")) :+ col(s"r.`$alias`").as(alias): _*)
   }
 
-  /** `mergeIds(df, frameOf(dbRows, dbSchema), ...)` guarded on the
-    * driver, where `keys` (schema `keySchema`) is `df`'s distinct
-    * projection onto every column the join matches on, already
-    * collected, and `rows`, when given, are `df`'s own rows on the
-    * driver. Returns the join, uncached, and `rows` threaded through it:
-    * each row once per id its key matches. When [[idsOf]] passes, no
-    * Spark job runs. Otherwise [[mergeIds]] runs: it raises the error
-    * the guard found, or decides where the driver could not, and then
-    * its cached result is collected as the rows and released.
+  /** `mergeIds(frameOf(rows, schema), frameOf(dbRows, dbSchema), ...)`
+    * on the driver, for rows the driver holds whose distinct projection
+    * onto every column the join matches on is `keys` (schema
+    * `keySchema`). Returns the join's schema and rows: each row once per
+    * id its key matches, the id appended as the join appends it
+    * (nullable, the database column's type). When [[idsOf]] passes, no
+    * Spark job runs. Otherwise [[mergeIds]] runs over a frame of `rows`:
+    * it raises the error the guard found, or decides where the driver
+    * could not, and then its cached result is collected and released.
     */
   private[graft] def mergeIdRows(
-      df: DataFrame, rows: Option[Seq[Row]],
+      spark: SparkSession,
+      schema: StructType, rows: Seq[Row],
       keys: Seq[Row], keySchema: StructType,
       dbRows: Seq[Row], dbSchema: StructType,
       alias: String,
       table: String,
       allowDuplication: Boolean,
-  ): (DataFrame, Option[Seq[Row]]) = {
-    val dbDf = frameOf(df.sparkSession, dbRows, dbSchema)
-    // the join matches on every column the two sides share; a shared
-    // column outside `keys` (a frame that already holds the alias,
-    // say) is one only mergeIds can guard
-    val covered = df.columns.filter(dbSchema.names.contains).forall(keySchema.names.contains)
-    val ids =
-      if (covered) idsOf(keys, keySchema, dbRows, dbSchema, alias, allowDuplication) else None
-    val threaded = ids match {
+  ): (StructType, Seq[Row]) =
+    idsOf(schema, keys, keySchema, dbRows, dbSchema, alias, allowDuplication) match {
       case Some(byKey) =>
         val on = keySchema.names.filter(dbSchema.names.contains)
-        val key = keyOf(df.schema, on.map(df.schema.fieldIndex))
-        rows.map(_.flatMap { r =>
-          byKey(new GenericInternalRow(key(r))).map(id => Row.fromSeq(r.toSeq :+ id))
+        val key = keyOf(schema, on.map(schema.fieldIndex))
+        val id = dbSchema(alias).copy(nullable = true)
+        (StructType(schema.fields :+ id), rows.flatMap { r =>
+          byKey(new GenericInternalRow(key(r))).map(i => Row.fromSeq(r.toSeq :+ i))
         })
       case None =>
-        val guarded = mergeIds(df, dbDf, alias, table, allowDuplication)
-        try rows.map(_ => guarded.collect().toSeq) finally guarded.unpersist()
+        val guarded = mergeIds(frameOf(spark, rows, schema), frameOf(spark, dbRows, dbSchema),
+          alias, table, allowDuplication)
+        try (guarded.schema, guarded.collect().toSeq) finally guarded.unpersist()
     }
-    (joinIds(df, dbDf, alias), threaded)
+
+  /** `mergeIds(df, frameOf(dbRows, dbSchema), ...)` for a frame the
+    * driver does not hold, guarded as [[mergeIdRows]] guards it: returns
+    * the join, uncached. [[mergeIds]] runs only when [[idsOf]] does not
+    * pass, to raise its error or decide.
+    */
+  private[graft] def mergeIdFrame(
+      df: DataFrame,
+      keys: Seq[Row], keySchema: StructType,
+      dbRows: Seq[Row], dbSchema: StructType,
+      alias: String,
+      table: String,
+      allowDuplication: Boolean,
+  ): DataFrame = {
+    val dbDf = frameOf(df.sparkSession, dbRows, dbSchema)
+    if (idsOf(df.schema, keys, keySchema, dbRows, dbSchema, alias, allowDuplication).isEmpty)
+      mergeIds(df, dbDf, alias, table, allowDuplication).unpersist()
+    joinIds(df, dbDf, alias)
   }
 
   /** The ids [[mergeIds]] joins to each key, by key, when its guards
-    * pass for a frame whose distinct projection onto its join columns
-    * is `keys`: every key matches exactly one database row (at least one
-    * under `allowDuplication`) and no matched id is null. Keys and
-    * database rows match as the join matches them: on the columns both
-    * schemas name, the database side cast as [[matchTypes]] casts it.
-    * None as well when a database value does not cast, or when the
-    * driver cannot match as Spark does (a column it cannot resolve
-    * alone, a cast Spark rejects, a collated or nested key), so the
-    * caller runs [[mergeIds]] to decide.
+    * pass for a frame of schema `schema` whose distinct projection onto
+    * its join columns is `keys`: every key matches exactly one database
+    * row (at least one under `allowDuplication`) and no matched id is
+    * null. Keys and database rows match as the join matches them: on
+    * the columns both schemas name, the database side cast as
+    * [[matchTypes]] casts it. None as well when a database value does
+    * not cast, or when the driver cannot match as Spark does (a join
+    * column outside `keys`, such as an alias the frame already holds, a
+    * column it cannot resolve alone, a cast Spark rejects, a collated or
+    * nested key), so the caller runs [[mergeIds]] to decide.
     */
   private[graft] def idsOf(
+      schema: StructType,
       keys: Seq[Row], keySchema: StructType,
       dbRows: Seq[Row], dbSchema: StructType,
       alias: String,
       allowDuplication: Boolean,
   ): Option[collection.Map[GenericInternalRow, Seq[Any]]] = {
     val on = StructType(keySchema.filter(f => dbSchema.names.contains(f.name)))
+    val covered = schema.names.filter(dbSchema.names.contains).forall(keySchema.names.contains)
     (dbReaders(on, dbSchema), dbIndex(dbSchema, alias)) match {
-      case (Some(read), Some(id)) =>
+      case (Some(read), Some(id)) if covered =>
         try {
           val ids = mutable.HashMap.empty[GenericInternalRow, Vector[Any]]
           val toDb = CatalystTypeConverters.createToCatalystConverter(dbSchema)
@@ -265,8 +314,17 @@ object FrameOps {
     */
   private[graft] def distinctRows(
       rows: Seq[Row], schema: StructType, columns: Seq[String],
+  ): (Seq[Row], StructType) = distinctAt(rows, schema, columns.map(schema.fieldIndex))
+
+  /** The distinct rows of driver-held `rows` over all their columns:
+    * `dropDuplicates()` on the driver, keyed as [[distinctRows]] keys.
+    */
+  private[graft] def distinctRows(rows: Seq[Row], schema: StructType): Seq[Row] =
+    distinctAt(rows, schema, schema.indices)._1
+
+  private def distinctAt(
+      rows: Seq[Row], schema: StructType, at: Seq[Int],
   ): (Seq[Row], StructType) = {
-    val at = columns.map(schema.fieldIndex)
     val projected = StructType(at.map(schema(_)))
     val key = keyOf(schema, at)
     val distinct = mutable.LinkedHashSet.empty[GenericInternalRow]
@@ -275,14 +333,17 @@ object FrameOps {
     (distinct.iterator.map(toRow(_).asInstanceOf[Row]).toSeq, projected)
   }
 
-  /** Driver-held `rows` of a frame with columns `from`, as rows of the
-    * frame with columns `to` that a `drop` of it returns: a drop keeps
-    * the order of the columns it leaves, so each of `to`'s columns is
-    * the next of `from`'s with its name.
+  /** [[dropReplaced]] of driver-held rows (schema `schema`): the
+    * schema and rows left when every column the session's resolver
+    * matches to one of `columns` is dropped, as `drop` drops them.
     */
-  private[graft] def followRows(rows: Seq[Row], from: Seq[String], to: Seq[String]): Seq[Row] = {
-    val at = to.scanLeft(-1)((prev, name) => from.indexOf(name, prev + 1)).tail
-    if (at == from.indices) rows else rows.map(r => Row.fromSeq(at.map(r.get)))
+  private[graft] def dropRows(
+      schema: StructType, rows: Seq[Row], columns: Seq[String],
+  ): (StructType, Seq[Row]) = {
+    val resolver = SQLConf.get.resolver
+    val keep = schema.indices.filterNot(i => columns.exists(resolver(schema(i).name, _)))
+    if (keep.size == schema.size) (schema, rows)
+    else (StructType(keep.map(schema(_))), rows.map(r => Row.fromSeq(keep.map(r.get))))
   }
 
   /** A7 (`dataframe_operations.py:19-56`): set-containment compare of
@@ -363,24 +424,25 @@ object FrameOps {
     }
   }
 
-  /** D2 of the loader: `compareFrames(df, matchTypes(db, df.schema),
-    * exact)` for a distinct `df` whose rows the driver holds and the
-    * database rows `dbRows`, after asserting that the database returned
-    * rows, and (when `df` is non-empty and null-free) at least as many
-    * as `df` has. Decided on the driver: no row of `df` may be missing
-    * from the database rows read as its columns ([[dbReaders]]), and
-    * with `exact` the distinct database keys must number `df`'s rows.
-    * [[compareFrames]] runs only when the driver finds a mismatch or
-    * cannot key the database rows as Spark would, to raise its own error.
+  /** D2 of the loader: `compareFrames(frameOf(rows, schema),
+    * matchTypes(db, schema), exact)` for distinct rows the driver holds
+    * and the database rows `dbRows`, after asserting that the database
+    * returned rows, and (when `rows` is non-empty and null-free) at
+    * least as many as `rows`. Decided on the driver: no row may be
+    * missing from the database rows read as its columns
+    * ([[dbReaders]]), and with `exact` the distinct database keys must
+    * number the rows. [[compareFrames]] runs, over frames of the rows
+    * the driver holds, only when the driver finds a mismatch or cannot
+    * key the database rows as Spark would, to raise its own error.
     */
   private[graft] def compareRows(
-      df: DataFrame, rows: Seq[Row], dbRows: Seq[Row], dbSchema: StructType, exact: Boolean,
+      spark: SparkSession, schema: StructType, rows: Seq[Row],
+      dbRows: Seq[Row], dbSchema: StructType, exact: Boolean,
   ): Unit = {
     val dbCount = dbRows.size
     assert(dbCount > 0, "Compare query yielded no results.")
     if (rows.nonEmpty && !rows.exists(_.anyNull))
       assert(dbCount >= rows.size, s"Compare query yielded fewer rows ($dbCount) than data.")
-    val schema = df.schema
     val matches = dbReaders(schema, dbSchema).exists { read =>
       try {
         val db = keyRows(dbRows, dbSchema, read)
@@ -389,8 +451,8 @@ object FrameOps {
       } catch { case _: MatchDatatypesError => false }
     }
     if (!matches)
-      compareFrames(df, matchTypes(frameOf(df.sparkSession, dbRows, dbSchema), schema),
-        exact = exact)
+      compareFrames(frameOf(spark, rows, schema),
+        matchTypes(frameOf(spark, dbRows, dbSchema), schema), exact = exact)
   }
 
   /** Up to `limit` distinct rows of `data` (schema `dataSchema`) whose

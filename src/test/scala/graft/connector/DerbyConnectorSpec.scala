@@ -123,7 +123,7 @@ class DerbyConnectorSpec extends AnyFunSuite with SparkSpec {
     "land" -> lengtes.map(_ => land), "stad" -> lengtes.map(_ => stad),
     "straat" -> lengtes.map(_ => straat), "lengte" -> lengtes)
 
-  test("a successful load leaves only the cache under its returned frame") {
+  test("a successful load leaves no cache") {
     val url = streetDb()
     spark.catalog.clearCache()
     val sc = spark.sparkContext
@@ -131,8 +131,86 @@ class DerbyConnectorSpec extends AnyFunSuite with SparkSpec {
     val rows = Connector.withConnection(spark, url)(c =>
       c.load(streets("NL", "Utrecht", "Oudegracht", "1")).count())
     assert(rows == 1)
-    assert(sc.getPersistentRDDs.keySet.diff(persistedBefore).size == 1)
-    spark.catalog.clearCache()
+    assert(sc.getPersistentRDDs.keySet.diff(persistedBefore).isEmpty)
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  test("the frame a load returns is local: no join, cache or broadcast under it") {
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, LocalRelation, ResolvedHint}
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.graftbridge.ListenerBus
+
+    /** Whether `body` starts a job that builds a broadcast. */
+    def broadcasts(body: => Any): Boolean = {
+      val jobs = new ConcurrentLinkedQueue[String]()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          jobs.add(String.valueOf(e.properties))
+      }
+      ListenerBus.drain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(listener)
+      try { body; ListenerBus.drain(spark.sparkContext) }
+      finally spark.sparkContext.removeSparkListener(listener)
+      jobs.asScala.exists(_.contains("broadcast exchange"))
+    }
+    // the listener sees a broadcast job where one runs
+    assert(broadcasts(spark.range(3).join(broadcast(spark.range(3)), "id").collect()))
+
+    val url = streetDb()
+    Connector.withConnection(spark, url) { c =>
+      val out = c.load(strDf("land" -> Seq("NL", "NL"), "stad" -> Seq("Utrecht", "Utrecht"),
+        "straat" -> Seq("Oudegracht", "Neude"), "lengte" -> Seq("1", "2")))
+      val plan = out.queryExecution.optimizedPlan
+      assert(plan.collectFirst { case j: Join => j }.isEmpty, plan)
+      assert(plan.collectFirst { case m: InMemoryRelation => m }.isEmpty, plan)
+      assert(plan.collectFirst { case h: ResolvedHint => h }.isEmpty, plan)
+      assert(plan.collectFirst { case l: LocalRelation => l }.nonEmpty, plan)
+      assert(!broadcasts(assert(out.groupBy().count().head().getLong(0) == 2)))
+      assert(out.columns.toSeq == Seq("straat", "lengte", "land_id", "stad_id"))
+    }
+  }
+
+  /** `df` as a frame that counts, in the accumulator returned, the
+    * partitions of `df` each evaluation of it computes.
+    */
+  private def counted(df: DataFrame): (DataFrame, org.apache.spark.util.LongAccumulator) = {
+    val evaluated = spark.sparkContext.longAccumulator
+    (spark.createDataFrame(df.rdd.mapPartitions { it => evaluated.add(1); it }, df.schema),
+      evaluated)
+  }
+
+  test("a load whose compare fails evaluates the caller's frame once and rolls back") {
+    val url = streetDb()
+    val data = streets("NL", "Utrecht", "Oudegracht", "1")
+    val (source, evaluated) = counted(data)
+    val err = intercept[CompareNoExactMatchError] {
+      Connector.withConnection(spark, url)(c => c.load(source, compareQuery = Some(
+        "SELECT 'NL' AS land, 'Utrecht' AS stad, 'Oudegracht' AS straat, '2' AS lengte " +
+          "FROM SYSIBM.SYSDUMMY1")))
+    }
+    assert(err.getMessage ==
+      "Datasets do not match exactly.\nRows in data and not in db:\n[NL,Utrecht,Oudegracht,1,data]\n" +
+        "Rows in db and not in data:\n[NL,Utrecht,Oudegracht,2,db]\n\n" +
+        "Consider adding a WHERE clause to filter out irrelevant data.\n" +
+        "Note: if this happens due to your data containing missings and your database not " +
+        "allowing those, set exact=False", err.getMessage)
+    // once: each of the frame's partitions one time
+    assert(evaluated.value == data.rdd.getNumPartitions)
+    assert(streetTables(url).forall(_.isEmpty))
+
+    // the public compare falls back over the rows it collected too
+    Connector.withConnection(spark, url)(c => c.load(data))
+    val (other, compared) = counted(streets("NL", "Utrecht", "Oudegracht", "2"))
+    val mismatch = intercept[CompareNoExactMatchError] {
+      Connector.withConnection(spark, url)(c => c.compare(other))
+    }
+    assert(mismatch.getMessage.startsWith(
+      "Datasets do not match exactly.\nRows in data and not in db:\n[NL,Utrecht,Oudegracht,2,data]\n" +
+        "Rows in db and not in data:\n[NL,Utrecht,Oudegracht,1,db]\n"), mismatch.getMessage)
+    assert(compared.value == data.rdd.getNumPartitions)
   }
 
   test("a load failing at its third step rolls back and releases every cache it took") {
@@ -205,10 +283,14 @@ class DerbyConnectorSpec extends AnyFunSuite with SparkSpec {
       "INSERT INTO tag (naam) VALUES ('x'), ('x')")
     val data = strDf("naam" -> Seq("x"), "waarde" -> Seq("1"))
 
+    // the driver's id guard cannot pass, so mergeIds runs over the rows
+    // the driver holds and raises: the caller's frame is evaluated once
+    val (source, evaluated) = counted(data)
     val dup = intercept[AssertionError] {
-      Connector.withConnection(spark, url)(c => c.load(data))
+      Connector.withConnection(spark, url)(c => c.load(source))
     }
-    assert(dup.getMessage.contains("Rows were duplicated"), dup.getMessage)
+    assert(dup.getMessage == "Rows were duplicated when joining on ids.", dup.getMessage)
+    assert(evaluated.value == data.rdd.getNumPartitions)
     val (rows, actions) = withActions(Connector.withConnection(spark, url)(c =>
       c.load(data, allowDuplication = true).collect().toSeq))
     assert(rows.size == 3 && rows.map(_.getAs[Int]("tag_id")).distinct.size == 3)

@@ -175,7 +175,8 @@ class FrameOpsPropertySpec extends AnyFunSuite with SparkSpec {
   /** "ok", or the failure: the MatchDatatypesError label where one is
     * in the error's chain (Spark wraps it in job-specific text),
     * else the error's class and message with byte arrays, which rows
-    * print by identity, masked.
+    * print by identity, masked, and its lines sorted: the rows an error
+    * reports come in the order of the plan that found them.
     */
   private def verdict(body: => Any): String =
     try { body; "ok" } catch {
@@ -184,7 +185,8 @@ class FrameOpsPropertySpec extends AnyFunSuite with SparkSpec {
           Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
         val label = "MatchDatatypesError: column `[^`]*` value '[^']*' does not cast to \\S+".r
         messages(e).flatMap(label.findFirstIn).headOption.getOrElse(
-          e.getClass.getName + ": " + e.getMessage.replaceAll("\\[B@[0-9a-f]+", "<bytes>"))
+          e.getClass.getName + ": " + e.getMessage.replaceAll("\\[B@[0-9a-f]+", "<bytes>")
+            .split("\n").sorted.mkString("\n"))
     }
 
   /** A frame's rows with byte arrays by content, in a fixed order. */
@@ -281,18 +283,22 @@ class FrameOpsPropertySpec extends AnyFunSuite with SparkSpec {
           viaSparkRows = contents(joined)
           joined.unpersist()
         }
-        val guard = FrameOps.idsOf(keys, dataSchema, db, dbSchema, "id", allowDuplication)
+        val guard = FrameOps.idsOf(dataSchema, keys, dataSchema, db, dbSchema, "id", allowDuplication)
         assert(guard.isDefined == (viaSpark == "ok"), s"seed $seed: $viaSpark")
         var joinedRows = Seq.empty[String]
         var threadedRows = Seq.empty[String]
         val driver = verdict {
           // the frame is its own distinct projection: its rows are the keys
-          val (joined, threaded) = FrameOps.mergeIdRows(df, Some(keys), keys, dataSchema,
+          val (_, threaded) = FrameOps.mergeIdRows(spark, dataSchema, keys, keys, dataSchema,
             db, dbSchema, "id", "t", allowDuplication)
-          joinedRows = contents(joined)
-          threadedRows = rowContents(threaded.get)
+          threadedRows = rowContents(threaded)
+        }
+        val framed = verdict {
+          joinedRows = contents(FrameOps.mergeIdFrame(df, keys, dataSchema,
+            db, dbSchema, "id", "t", allowDuplication))
         }
         assert(driver == viaSpark, s"seed $seed")
+        assert(framed == viaSpark, s"seed $seed")
         assert(joinedRows == viaSparkRows, s"seed $seed")
         assert(threadedRows == viaSparkRows, s"seed $seed")
       }
@@ -305,7 +311,7 @@ class FrameOpsPropertySpec extends AnyFunSuite with SparkSpec {
     val dataSchema = StructType(Seq(
       StructField("d", DoubleType), StructField("m", DecimalType(6, 2)),
       StructField("b", BinaryType), StructField("s", StringType),
-      StructField("l", LongType), StructField("p", IntegerType)))
+      StructField("l", LongType), StructField("p", IntegerType, nullable = false)))
     // a column as a JDBC read types it: a wider DECIMAL, INT for BIGINT
     // and BIGINT for INT
     def dbType(dt: DataType): DataType = dt match {
@@ -323,6 +329,9 @@ class FrameOpsPropertySpec extends AnyFunSuite with SparkSpec {
       val rnd = new scala.util.Random(seed)
       def pick[A](xs: A*): A = xs(rnd.nextInt(xs.size))
       def maybe[A](v: => A): Any = if (rnd.nextInt(8) == 0) null else v
+      // a name as the session's resolver matches it: now and then in
+      // upper case
+      def anyCase(c: String): String = if (rnd.nextInt(3) == 0) c.toUpperCase else c
       // distinct through `p`, so no dedup runs and −0.0 keeps its sign
       val data = (0 until 1 + rnd.nextInt(8)).map(p => Row(
         maybe(pick(Double.NaN, 0.0, -0.0, 1.5)),
@@ -331,24 +340,29 @@ class FrameOpsPropertySpec extends AnyFunSuite with SparkSpec {
         maybe(pick("a", "a ", "")),
         maybe(pick(1L, -3L)),
         p))
-      val pre = FrameOps.frameOf(spark, data, dataSchema).cache()
-      var chain: DataFrame = pre
-      var rows = pre.collect().toSeq
+      // the Spark chain of the cascade as `load` ran it, and the schema
+      // and rows the driver follows it with
+      var chain: DataFrame = FrameOps.frameOf(spark, data, dataSchema)
+      var schema = dataSchema
+      var rows: Seq[Row] = data
+      val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
       var nextId = 0
       var failed = false
       (0 until 3).foreach { step =>
         if (!failed) {
-          if (rnd.nextInt(3) == 0) {
-            val c = pick(chain.columns.toSeq: _*)
-            chain = chain.withColumnsRenamed(Map(c -> s"${c}_$step"))
-          }
-          val cols = chain.columns.toSeq.filter(_ => rnd.nextInt(2) == 0) match {
-            case Seq() => Seq(pick(chain.columns.toSeq: _*))
+          // a step's renames, keyed by a name the resolver matches
+          val renames = chain.columns.toSeq.filter(_ => rnd.nextInt(4) == 0)
+            .map(c => anyCase(c) -> s"${c}_$step").toMap
+          val in = chain.withColumnsRenamed(renames)
+          val inSchema = FrameOps.renamed(schema, renames)
+          assert(inSchema == in.schema, s"seed $seed step $step: $renames")
+          val cols = in.columns.toSeq.filter(_ => rnd.nextInt(2) == 0) match {
+            case Seq() => Seq(pick(in.columns.toSeq: _*))
             case some  => some
           }
-          val (keys, keySchema) = FrameOps.distinctRows(rows, chain.schema, cols)
+          val (keys, keySchema) = FrameOps.distinctRows(rows, inSchema, cols)
           assert(unsigned(rowContents(keys)) ==
-            unsigned(contents(FrameOps.getRows(chain, cols))), s"seed $seed step $step")
+            unsigned(contents(FrameOps.getRows(in, cols))), s"seed $seed step $step")
 
           // the database side: each key once as the JDBC reader returns
           // it, in another column order; under allowDuplication now and
@@ -359,7 +373,7 @@ class FrameOpsPropertySpec extends AnyFunSuite with SparkSpec {
           val allowDuplication = rnd.nextInt(2) == 0
           val alias = s"id$step"
           val dbSchema = StructType(StructField(alias, IntegerType) +:
-            keySchema.reverse.map(f => f.copy(dataType = dbType(f.dataType))))
+            keySchema.reverse.map(f => f.copy(dataType = dbType(f.dataType), nullable = true)))
           def toDb(key: Row, fault: String): Seq[Row] = {
             def row(): Row = {
               nextId += 1
@@ -389,40 +403,81 @@ class FrameOpsPropertySpec extends AnyFunSuite with SparkSpec {
           val db = keys.zipWithIndex.flatMap { case (k, i) =>
             toDb(k, if (i == faulty) fault else "none")
           } ++ (if (rnd.nextInt(3) == 0) Seq(Row.fromSeq(99 +: keySchema.map(_ => null))) else Nil)
+          // the table's natural columns the step drops after it, by names
+          // the resolver matches, one of them now and then absent
+          val natural = cols.filter(_ => rnd.nextBoolean()).map(anyCase) ++
+            (if (rnd.nextInt(4) == 0) Seq("absent") else Nil)
+          val replace = rnd.nextInt(3) != 0
 
-          var sparkRows = Seq.empty[String]
+          var sparkOut: DataFrame = null
           val viaSpark = verdict {
-            val joined = FrameOps.mergeIds(chain, FrameOps.frameOf(spark, db, dbSchema),
+            val joined = FrameOps.mergeIds(in, FrameOps.frameOf(spark, db, dbSchema),
               alias, "t", allowDuplication)
-            sparkRows = contents(joined)
-            joined.unpersist()
+            cached += joined
+            val kept = if (replace) FrameOps.dropReplaced(joined, natural) else joined
+            sparkOut = FrameOps.postprocess(kept, renames)
           }
-          var joined: DataFrame = null
-          var threaded = Seq.empty[Row]
+          var outSchema: StructType = null
+          var outRows = Seq.empty[Row]
           val (driver, actions) = withActions(verdict {
-            val (j, t) = FrameOps.mergeIdRows(chain, Some(rows), keys, keySchema, db, dbSchema,
-              alias, "t", allowDuplication)
-            joined = j
-            threaded = t.get
+            val (joinedSchema, joined) = FrameOps.mergeIdRows(spark, inSchema, rows,
+              keys, keySchema, db, dbSchema, alias, "t", allowDuplication)
+            val (kept, keptRows) =
+              if (replace) FrameOps.dropRows(joinedSchema, joined, natural)
+              else (joinedSchema, joined)
+            outSchema = FrameOps.postprocessed(kept, renames)
+            outRows = keptRows
           })
           assert(driver == viaSpark, s"seed $seed step $step")
           // a join that passes is decided on the driver, with no Spark action
           if (driver == "ok") assert(actions.isEmpty, s"seed $seed step $step: $actions")
           if (driver != "ok") failed = true
           else {
-            assert(contents(joined) == sparkRows, s"seed $seed step $step")
-            assert(rowContents(threaded) == sparkRows, s"seed $seed step $step")
-            val dropped =
-              if (rnd.nextInt(2) == 0)
-                FrameOps.dropReplaced(joined, cols.filter(_ => rnd.nextBoolean()))
-              else joined
-            rows = FrameOps.followRows(threaded, joined.columns.toSeq, dropped.columns.toSeq)
-            chain = dropped
+            assert(outSchema == sparkOut.schema, s"seed $seed step $step")
+            assert(rowContents(outRows) == contents(sparkOut), s"seed $seed step $step")
+            chain = sparkOut
+            schema = outSchema
+            rows = outRows
           }
         }
       }
+      assert(schema == chain.schema, s"seed $seed")
       assert(rowContents(rows) == contents(chain), s"seed $seed")
-      pre.unpersist()
+      cached.foreach(_.unpersist())
+    }
+  }
+
+  test("distinctRows over all columns of a collected frame is preprocess's dedup") {
+    import org.apache.spark.sql.types._
+    def dec(s: String) = new java.math.BigDecimal(s)
+    val schema = StructType(Seq(
+      StructField("d", DoubleType), StructField("f", FloatType),
+      StructField("m", DecimalType(6, 2)), StructField("b", BinaryType),
+      StructField("s", StringType), StructField("l", LongType)))
+    // `dropDuplicates` groups −0.0 with 0.0 and prints either sign
+    def unsigned(rows: Seq[String]): Seq[String] =
+      rows.map(_.replaceAll("-0\\.0(?![0-9])", "0.0")).sorted
+
+    (1 to 40).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      def pick[A](xs: A*): A = xs(rnd.nextInt(xs.size))
+      def maybe[A](v: => A): Any = if (rnd.nextInt(5) == 0) null else v
+      def row(): Row = Row(
+        maybe(pick(Double.NaN, 0.0, -0.0, 1.5)),
+        maybe(pick(Float.NaN, 0.0f, -0.0f)),
+        maybe(pick(dec("1.50"), dec("1.5"), dec("-0.01"))),
+        maybe(pick(Array[Byte](), Array[Byte](1, 2))),
+        maybe(pick("a", "a ", "")),
+        maybe(pick(1L, -3L)))
+      val distinct = Seq.fill(1 + rnd.nextInt(6))(row())
+      // duplicate rows, some equal only as `dropDuplicates` keys them
+      val data = rnd.shuffle(distinct ++ Seq.fill(rnd.nextInt(8))(pick(distinct: _*)))
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(data, 1 + rnd.nextInt(3)),
+        schema)
+      val viaSpark = FrameOps.preprocess(df).collect().toSeq
+      val driver = FrameOps.distinctRows(df.collect().toSeq, df.schema)
+      assert(driver.size == viaSpark.size, s"seed $seed")
+      assert(unsigned(rowContents(driver)) == unsigned(rowContents(viaSpark)), s"seed $seed")
     }
   }
 
@@ -492,7 +547,7 @@ class FrameOpsPropertySpec extends AnyFunSuite with SparkSpec {
       Seq(true, false).foreach { exact =>
         val viaSpark = verdict(sparkCompare(df, db, exact))
         val (driver, actions) =
-          withActions(verdict(FrameOps.compareRows(df, rows, db, dbSchema, exact)))
+          withActions(verdict(FrameOps.compareRows(spark, df.schema, rows, db, dbSchema, exact)))
         assert(driver == viaSpark, s"seed $seed exact $exact")
         // the driver decides a passing compare alone: compareFrames runs
         // only on a real mismatch
