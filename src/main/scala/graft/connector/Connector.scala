@@ -2,14 +2,13 @@ package graft.connector
 
 import java.sql.{Connection, DriverManager}
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.StructType
 
 import graft.{CompareMissingRowsError, InsertingDataFailedError}
 import graft.ops.FrameOps
+import graft.ops.FrameOps.Held
 import graft.schema.Schema
 
 /** Transactional database connector — the Spark port of the
@@ -19,13 +18,19 @@ import graft.schema.Schema
   * commit on clean exit, rollback on any exception — which is what
   * makes `load`'s validation failure undo the whole load.
   *
-  * Spark shape: [[load]] collects the caller's frame once and runs the
-  * whole cascade on the driver over those rows, so a load is one Spark
-  * action however many tables it fills. It dedups the rows, then each
-  * step projects them onto its table, inserts the projection (see
-  * [[JdbcFrames]]), reads its table once and checks that read on the
-  * driver against the rows it inserted: the per-insert read-back check
-  * (D1, [[FrameOps.containsRows]]) and the id guard and id threading
+  * Spark shape: [[load]] collects the caller's frame once, as given,
+  * through the frame's own plan, so a frame this session collected
+  * before is not planned or broadcast again; it applies `columns` to
+  * the schema on the driver. The whole cascade runs on the driver over
+  * those Catalyst rows (`FrameOps.Held`), so a load is one Spark action
+  * however many tables it fills. It dedups the rows, then each step
+  * projects them onto its table, reads the table, inserts only the
+  * projection rows that read lacks (see [[JdbcFrames]]), reads the
+  * table again only if it sent a row or the first read stopped early
+  * (a table holding more than twice the rows the step could send), and
+  * checks the last read on the driver against the rows it could
+  * insert: the per-insert read-back check (D1,
+  * [[FrameOps.containsRows]]) and the id guard and id threading
   * ([[FrameOps.mergeIdRows]]). The final compare (D2,
   * [[FrameOps.compareRows]]) checks the deduped rows against its read.
   * A check that fails runs the Spark operator it stands for over a
@@ -68,53 +73,59 @@ final class Connector(
   }
 
   /** [[insert]] of a frame already renamed, with columns `columns` and
-    * distinct projections `project`: the table's projection, the batch,
-    * and D1 over the table's distinct read-back.
+    * distinct projections `project`: the table's projection, inserted
+    * where the table's distinct read lacks it, and D1 over the last read.
     */
-  private def insertRenamed(
-      columns: Seq[String], project: Seq[String] => (Seq[Row], StructType), table: String,
-  ): Unit = {
+  private def insertRenamed(columns: Seq[String], project: Seq[String] => Held, table: String): Unit = {
     val commonColumns = schema.parseInsert(table, columns)
     assert(commonColumns.nonEmpty, "No common columns were found.")
-    val (keys, keySchema) = project(commonColumns)
-    val inserted = insertRows(keys, keySchema, table, commonColumns)
-    val (dbRows, dbSchema) = JdbcFrames.readQuery(conn,
-      dialect.getCheckInsertQuery(table, commonColumns), lowercaseLabels = true)
-    withConf(checkInserted(table, inserted, keySchema, dbRows, dbSchema))
+    withConf(insertMissing(project(commonColumns), table, commonColumns,
+      dialect.getCheckInsertQuery(table, commonColumns)))
   }
 
-  /** The distinct projection of `pre` onto `columns`, and its schema,
-    * by one Spark collect of [[FrameOps.getRows]].
+  /** The distinct projection of `pre` onto `columns`, by one Spark
+    * collect of [[FrameOps.getRows]].
     */
-  private def collected(pre: DataFrame)(columns: Seq[String]): (Seq[Row], StructType) = {
+  private def collected(pre: DataFrame)(columns: Seq[String]): Held = {
     val projected = FrameOps.getRows(pre, columns)
-    (projected.collect().toSeq, projected.schema)
+    FrameOps.distinctRows(Bridge.collectInternal(projected), projected.schema)
   }
 
-  /** Batch-insert the rows of a table's distinct projection that hold
-    * a value in every NOT NULL column, and return them. SQLite's INSERT
-    * OR IGNORE also suppresses NOT NULL violations (the reference's
-    * missing-values fixture relies on it); dropping such rows first
-    * emulates that on every backend.
+  /** Write a table's distinct projection `keys` and check it (D1),
+    * returning the table's last read by `query`, which reads every
+    * column of `keys`.
+    *
+    * Only rows that hold a value in every NOT NULL column are
+    * insertable: SQLite's INSERT OR IGNORE also suppresses NOT NULL
+    * violations (the reference's missing-values fixture relies on it),
+    * and dropping such rows first emulates that on every backend. The
+    * table is read first, and only the insertable rows whose unique key
+    * that read lacks ([[FrameOps.unwritten]]) go to the dialect's
+    * conflict-ignoring insert. That first read stops after twice as many
+    * rows as are insertable, so a few rows loaded into a large table do
+    * not pay for reading it twice; the rows a stopped read found stay out
+    * all the same. The table is read (again, or whole) only when a row
+    * went or the first read stopped. D1 checks every insertable row
+    * against the last read.
     */
-  private def insertRows(
-      rows: Seq[Row], rowSchema: StructType, table: String, commonColumns: Seq[String],
-  ): Seq[Row] = {
+  private def insertMissing(keys: Held, table: String, commonColumns: Seq[String], query: String): Held = {
     val uniqueSets = introspected.uniqueKeySets.getOrElse(table, Nil)
     val notNull = introspected.notNullColumns.getOrElse(table, Set.empty)
-    val required = commonColumns.filter(notNull.contains).map(rowSchema.fieldIndex)
-    val insertable = rows.filter(r => required.forall(i => !r.isNullAt(i)))
-    JdbcFrames.batchInsert(conn, dialect.getInsertQuery(table, commonColumns, uniqueSets),
-      insertable, rowSchema, dialect.insertParamOrder(commonColumns, uniqueSets))
-    insertable
-  }
-
-  /** D1: the inserted rows must be contained in the table's read-back. */
-  private def checkInserted(
-      table: String, inserted: Seq[Row], rowSchema: StructType,
-      dbRows: Seq[Row], dbSchema: StructType,
-  ): Unit =
-    try FrameOps.containsRows(inserted, rowSchema, dbRows, dbSchema)
+    val required = commonColumns.filter(notNull.contains).map(keys.schema.fieldIndex).map(keys.at)
+    val insertable = keys.copy(rows = keys.rows.filter(r => required.forall(i => !r.isNullAt(i))))
+    val cap = 2 * insertable.rows.size + 1
+    val before = read(query, cap)
+    val missing = FrameOps.unwritten(insertable, before,
+      uniqueSets.filter(_.forall(commonColumns.contains)))
+    val after =
+      if (missing.rows.isEmpty && before.rows.size < cap) before
+      else if (missing.rows.isEmpty) read(query)
+      else {
+        JdbcFrames.batchInsert(conn, dialect.getInsertQuery(table, commonColumns, uniqueSets),
+          missing, dialect.insertParamOrder(commonColumns, uniqueSets))
+        read(query)
+      }
+    try FrameOps.containsRows(insertable, after)
     catch {
       case e: CompareMissingRowsError =>
         throw new InsertingDataFailedError(
@@ -122,9 +133,17 @@ final class Connector(
             "This usually happens due to a uniqueness constraint not allowing new data to be inserted.\n" +
             "Either clear the relevant tables, or reset the database.")
     }
+    after
+  }
 
-  /** Driver-side checks cast with this session's time zone and ANSI
-    * mode, as Spark would.
+  /** The rows of `query`, with lower-case column names; at most
+    * `maxRows` of them when that is above 0.
+    */
+  private def read(query: String, maxRows: Int = 0): Held =
+    JdbcFrames.readQuery(conn, query, lowercaseLabels = true, maxRows)
+
+  /** Driver-side checks and reads convert and cast with this session's
+    * time zone and ANSI mode, as Spark would.
     */
   private def withConf[A](body: => A): A =
     SQLConf.withExistingConf(spark.sessionState.conf)(body)
@@ -170,7 +189,7 @@ final class Connector(
     schema.checkSchemaNotEmpty()
     val pre = FrameOps.preprocess(data, columns)
     val joined = keyedStep(pre.columns.toSeq, collected(pre), table, alias, insert) {
-      FrameOps.mergeIdFrame(pre, _, _, _, _, alias, table, allowDuplication)
+      FrameOps.mergeIdFrame(pre, _, _, alias, table, allowDuplication)
     }
     val kept = if (replace) FrameOps.dropReplaced(joined, schema.getColumns(table)) else joined
     FrameOps.postprocess(kept, columns)
@@ -179,27 +198,24 @@ final class Connector(
   /** The one step behind [[load]], [[retrieveIds]] and
     * [[insertAndRetrieveIds]], over a frame already renamed, with
     * columns `columns` and distinct projections `project`: the table's
-    * projection, inserted when `insert` is set, one read of the table
-    * with the retrieve query, and the checks of that read on the driver,
-    * D1 first, then `thread`, given the projection and the read, which
-    * guards the ids and threads them through the frame.
+    * projection, written with [[insertMissing]] when `insert` is set,
+    * and the table's last read with the retrieve query; then `thread`,
+    * given the projection and that read, which guards the ids and
+    * threads them through the frame.
     */
   private def keyedStep[A](
       columns: Seq[String],
-      project: Seq[String] => (Seq[Row], StructType),
+      project: Seq[String] => Held,
       table: String,
       alias: String,
       insert: Boolean,
-  )(thread: (Seq[Row], StructType, Seq[Row], StructType) => A): A = {
+  )(thread: (Held, Held) => A): A = {
     val (primaryKey, commonColumns) = schema.parseRetrieve(table, alias, columns)
-    val (keys, keySchema) = project(commonColumns)
-    val inserted =
-      if (insert) insertRows(keys, keySchema, table, commonColumns) else Nil
-    val (dbRows, dbSchema) = JdbcFrames.readQuery(conn,
-      dialect.getRetrieveQuery(table, primaryKey, alias, commonColumns), lowercaseLabels = true)
+    val keys = project(commonColumns)
+    val query = dialect.getRetrieveQuery(table, primaryKey, alias, commonColumns)
     withConf {
-      if (insert) checkInserted(table, inserted, keySchema, dbRows, dbSchema)
-      thread(keys, keySchema, dbRows, dbSchema)
+      val db = if (insert) insertMissing(keys, table, commonColumns, query) else read(query)
+      thread(keys, db)
     }
   }
 
@@ -215,42 +231,46 @@ final class Connector(
   ): Unit = {
     schema.checkSchemaNotEmpty()
     val pre = FrameOps.preprocess(data, columns)
-    compareDistinct(pre.schema, pre.collect().toSeq, query, where, exact)
+    compareDistinct(FrameOps.distinctRows(Bridge.collectInternal(pre), pre.schema),
+      query, where, exact)
   }
 
   /** [[compare]] of distinct rows the driver holds, of a frame already
-    * renamed with schema `rowSchema`.
+    * renamed.
     */
   private def compareDistinct(
-      rowSchema: StructType,
-      rows: Seq[Row],
+      rows: Held,
       query: Option[String],
       where: Option[String],
       exact: Boolean,
   ): Unit = {
-    val q = query.getOrElse(schema.getCompareQuery(rowSchema.names.toSeq, where))
-    val (dbRows, dbSchema) = JdbcFrames.readQuery(conn, q, lowercaseLabels = true)
-    withConf(FrameOps.compareRows(spark, rowSchema, rows, dbRows, dbSchema, exact))
+    val q = query.getOrElse(schema.getCompareQuery(rows.schema.names.toSeq, where))
+    withConf(FrameOps.compareRows(spark, rows, read(q), exact))
   }
 
   /** The flagship: plan, cascade inserts in topological order threading
     * retrieved ids through the frame, then validate — §3.1
     * (`connector.py:376-452`).
     *
-    * The renamed frame is collected once up front, the load's one Spark
-    * action, and deduped on the driver as `dropDuplicates` dedups it.
-    * The cascade runs on the driver over those rows, carrying their
-    * schema as Spark would change it: each step renames the columns its
-    * table names otherwise, projects the rows onto its table, inserts
-    * and reads it once, checks the read (D1, the id guard), threads the
-    * ids it read through the rows, drops the table's natural columns
-    * and undoes its renames. Every id join keeps the rows distinct (rows
-    * that differ only on a table's dropped natural columns join to
-    * different keys), so no step re-dedups them. D2 checks the deduped
-    * rows against its read. When a check fails, the Spark operator it
-    * stands for runs over a frame of the rows the driver holds and
-    * raises its error, so the load stays exact and all-or-nothing and
-    * never evaluates the caller's frame again; when the id guard cannot
+    * The caller's frame is collected once up front, as given, the
+    * load's one Spark action: through the frame's own plan, so a frame
+    * collected before (a reload of the same frame) runs no analysis,
+    * optimization, planning or broadcast again. `columns` renames the
+    * schema on the driver, as `withColumnsRenamed` renames the frame.
+    * The rows are deduped on the driver as `dropDuplicates` dedups them,
+    * with room for one id per step. The cascade runs on the driver over
+    * those rows, carrying their schema as Spark would change it: each
+    * step renames the columns its table names otherwise, projects the
+    * rows onto its table, writes what the table lacks and reads it,
+    * checks the read (D1, the id guard), writes the ids it read into the
+    * rows, drops the table's natural columns from the schema and undoes
+    * its renames. Every id join keeps the rows distinct (rows that
+    * differ only on a table's dropped natural columns join to different
+    * keys), so no step re-dedups them. D2 checks the deduped rows
+    * against its read. When a check fails, the Spark operator it stands
+    * for runs over a frame of the rows the driver holds and raises its
+    * error, so the load stays exact and all-or-nothing and never
+    * evaluates the caller's frame again; when the id guard cannot
     * decide, [[FrameOps.mergeIds]] decides.
     *
     * The returned frame is a local one of the threaded rows: its plan
@@ -267,38 +287,35 @@ final class Connector(
       exact: Boolean = true,
   ): DataFrame = {
     schema.checkSchemaNotEmpty()
-    // immutable — the compare below validates these very rows, no
-    // clone needed (connector.py:424)
-    val renamed = data.withColumnsRenamed(columns)
-    val instructions = schema.getLoadInstructions(renamed.columns.toSeq)
-    val preSchema = renamed.schema
-    val preRows = FrameOps.distinctRows(renamed.collect().toSeq, preSchema)
-
     withConf {
+      val preSchema = FrameOps.renamed(data.schema, columns)
+      val instructions = schema.getLoadInstructions(preSchema.names.toSeq)
+      val steps = instructions.insertAndRetrieve
+      // the compare below validates these very rows, with no clone
+      // (connector.py:424): the cascade writes only their free values
+      val pre = FrameOps.distinctRows(Bridge.collectInternal(data), preSchema, spare = steps.size)
+
       // phase 1: insert+retrieve in topo order, ids cascade through the rows
-      val (outSchema, outRows) = instructions.insertAndRetrieve.foldLeft((preSchema, preRows)) {
-        case ((accSchema, accRows), spec) =>
-          val renames = spec.columns.toMap
-          val in = FrameOps.renamed(accSchema, renames)
-          val (joinedSchema, joined) = keyedStep(in.names.toSeq,
-            FrameOps.distinctRows(accRows, in, _), spec.table, spec.alias, insert = true) {
-            FrameOps.mergeIdRows(spark, in, accRows, _, _, _, _,
-              spec.alias, spec.table, allowDuplication)
-          }
-          val (kept, keptRows) =
-            if (replace) FrameOps.dropRows(joinedSchema, joined, schema.getColumns(spec.table))
-            else (joinedSchema, joined)
-          (FrameOps.postprocessed(kept, renames), keptRows)
+      val out = steps.zipWithIndex.foldLeft(pre) { case (acc, (spec, step)) =>
+        val renames = spec.columns.toMap
+        val in = acc.copy(schema = FrameOps.renamed(acc.schema, renames))
+        val joined = keyedStep(in.schema.names.toSeq, FrameOps.distinctRows(in, _), spec.table,
+          spec.alias, insert = true) {
+          FrameOps.mergeIdRows(spark, in, _, _, spec.alias, spec.table, allowDuplication,
+            slot = preSchema.size + step)
+        }
+        val kept = if (replace) FrameOps.dropRows(joined, schema.getColumns(spec.table)) else joined
+        kept.copy(schema = FrameOps.postprocessed(kept.schema, renames))
       }
       // phase 2: plain inserts
       instructions.insert.foreach { spec =>
-        val in = FrameOps.renamed(outSchema, spec.columns.toMap)
-        insertRenamed(in.names.toSeq, FrameOps.distinctRows(outRows, in, _), spec.table)
+        val in = out.copy(schema = FrameOps.renamed(out.schema, spec.columns.toMap))
+        insertRenamed(in.schema.names.toSeq, FrameOps.distinctRows(in, _), spec.table)
       }
       if (compare)
-        compareDistinct(preSchema, preRows, compareQuery, where, exact)
+        compareDistinct(pre, compareQuery, where, exact)
 
-      FrameOps.postprocess(spark.createDataFrame(outRows.asJava, outSchema), columns)
+      FrameOps.localFrame(spark, out.copy(schema = FrameOps.postprocessed(out.schema, columns)))
     }
   }
 }

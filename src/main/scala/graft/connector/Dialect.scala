@@ -10,6 +10,14 @@ package graft.connector
   * with Spark) and expresses conflict-ignoring insert as
   * `INSERT ... SELECT ... WHERE NOT EXISTS` over the table's unique
   * constraints, matching `INSERT OR IGNORE` behavior.
+  *
+  * The [[Connector]] reads a table before it inserts and sends only the
+  * rows whose unique key the table lacks; the statements stay the
+  * conflict-ignoring ones, so a row a concurrent writer stored first is
+  * still ignored. Postgres' `ON CONFLICT DO NOTHING` draws a sequence
+  * value for every row it is sent, ignored or not, so a reload no longer
+  * uses up one per stored row; Derby and SQLite draw none for an ignored
+  * row, so their ids do not change.
   */
 trait Dialect {
 

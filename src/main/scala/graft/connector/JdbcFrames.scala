@@ -6,6 +6,8 @@ import scala.collection.mutable
 import scala.util.Using
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 
 import graft.ops.FrameOps
@@ -19,12 +21,13 @@ import graft.ops.FrameOps
   * JDBC source opens its own connections and commits per partition,
   * which would break that contract and, for Derby in-memory DBs, not
   * see uncommitted state. Rows crossing this boundary are deduped
-  * dimension rows (small by construction). The loader reads each table
-  * once with [[readQuery]] and keeps the rows on the driver: its
-  * checks (D1, the id guard, the final compare) and the id threading
-  * run there. Only the id join of `retrieveIds` and
-  * `insertAndRetrieveIds`, and a failing check's error path, run in
-  * Spark.
+  * dimension rows (small by construction). The loader reads a table
+  * with [[readQuery]] into Catalyst rows on the driver, and its checks
+  * (D1, the id guard, the final compare), the choice of rows to insert
+  * and the id threading run there over those values; [[batchInsert]]
+  * binds its parameters from the same values. Only the id join of
+  * `retrieveIds` and `insertAndRetrieveIds`, and a failing check's
+  * error path, run in Spark.
   */
 object JdbcFrames {
 
@@ -37,24 +40,26 @@ object JdbcFrames {
       sql: String,
       lowercaseLabels: Boolean = false,
   ): DataFrame = {
-    val (rows, schema) = readQuery(conn, sql, lowercaseLabels)
-    FrameOps.frameOf(spark, rows, schema)
+    FrameOps.frameOf(spark, readQuery(conn, sql, lowercaseLabels))
   }
 
-  /** The rows and schema [[queryToDataFrame]] reads, still on the
-    * driver — for callers that also need facts the driver already
-    * holds, such as the row count.
+  /** The rows [[queryToDataFrame]] reads, as Catalyst rows still on
+    * the driver, each value converted as Spark converts it in the
+    * active `SQLConf` — for callers that key or count them there.
     *
     * CHAR/NCHAR values lose their trailing pad spaces: Derby pads a
     * `CHAR(5)` value 'NL' to 'NL   ' on read, and SQL compares CHAR
     * values pad-insensitively, so the frame's 'NL' is the value stored.
+    *
+    * With `maxRows` above 0, the read stops after that many rows.
     */
   private[graft] def readQuery(
-      conn: Connection, sql: String, lowercaseLabels: Boolean,
-  ): (Seq[Row], StructType) =
+      conn: Connection, sql: String, lowercaseLabels: Boolean, maxRows: Int = 0,
+  ): FrameOps.Held =
     // a statement that fails because its connection died throws on
     // close too; Using keeps the first failure and suppresses that one
     Using.resource(conn.createStatement()) { st =>
+      st.setMaxRows(maxRows)
       val rs = st.executeQuery(sql)
       val md = rs.getMetaData
       val n = md.getColumnCount
@@ -70,15 +75,16 @@ object JdbcFrames {
         val t = md.getColumnType(i)
         t == Types.CHAR || t == Types.NCHAR
       }
-      val rows = mutable.ArrayBuffer.empty[Row]
+      val toCatalyst = fields.map(f => CatalystTypeConverters.createToCatalystConverter(f.dataType))
+      val rows = mutable.ArrayBuffer.empty[GenericInternalRow]
       while (rs.next()) {
-        rows += Row.fromSeq((1 to n).map { i =>
-          val v = readValue(rs, i, fields(i - 1).dataType)
-          if (padded(i - 1) && v != null) trimPad(v.asInstanceOf[String]) else v
+        rows += new GenericInternalRow(Array.tabulate[Any](n) { i =>
+          val v = readValue(rs, i + 1, fields(i).dataType)
+          toCatalyst(i)(if (padded(i) && v != null) trimPad(v.asInstanceOf[String]) else v)
         })
       }
       rs.close()
-      (rows.toSeq, StructType(fields))
+      FrameOps.Held(StructType(fields), rows.toIndexedSeq)
     }
 
   /** Batch-execute a parameterized insert for every row of `rows`
@@ -90,14 +96,38 @@ object JdbcFrames {
       columns: Seq[String],
   ): Unit = {
     val fields = columns.map(schema.fieldIndex)
+    executeBatch(conn, sql, rows) { (ps, row) =>
+      fields.zipWithIndex.foreach { case (f, i) => bind(ps, i + 1, row.get(f)) }
+    }
+  }
+
+  /** [[batchInsert]] of rows the loader holds: parameter i binds the
+    * column of `rows` named `columns(i)`, its Catalyst value converted
+    * as `collect` would return it.
+    */
+  private[graft] def batchInsert(
+      conn: Connection, sql: String, rows: FrameOps.Held, columns: Seq[String],
+  ): Unit = {
+    val fields = columns.map(rows.schema.fieldIndex)
+    val at = fields.map(rows.at).toArray
+    val toJdbc = fields.map(f => CatalystTypeConverters.createToScalaConverter(rows.schema(f).dataType))
+      .toArray
+    executeBatch(conn, sql, rows.rows) { (ps, row) =>
+      at.indices.foreach(i => bind(ps, i + 1, toJdbc(i)(row.values(at(i)))))
+    }
+  }
+
+  /** Execute `sql` as one batch of `rows`, each bound by `bindRow`. */
+  private def executeBatch[R](
+      conn: Connection, sql: String, rows: Seq[R],
+  )(bindRow: (PreparedStatement, R) => Unit): Unit =
     Using.resource(conn.prepareStatement(sql)) { ps =>
       rows.foreach { row =>
-        fields.zipWithIndex.foreach { case (f, i) => bind(ps, i + 1, row.get(f)) }
+        bindRow(ps, row)
         ps.addBatch()
       }
       ps.executeBatch()
     }
-  }
 
   private def bind(ps: PreparedStatement, idx: Int, v: Any): Unit = v match {
     case null                      => ps.setObject(idx, null)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, EvalMode, GenericInternalRow}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
@@ -19,19 +20,24 @@ import graft.{CompareMissingRowsError, CompareNoExactMatchError, MatchDatatypesE
   * Scale notes: the database side of every check is rows the driver
   * already read, and the id join of the single-table calls broadcasts
   * those rows (id/dimension tables are small next to the data being
-  * loaded). `Connector.load` collects the caller's frame once and runs
-  * its cascade on those rows: the dedup and each step's projection
-  * ([[distinctRows]]), D1 ([[containsRows]]), the id guard and the id
-  * threading ([[mergeIdRows]]), the renames and drops between steps
-  * ([[renamed]], [[dropRows]]) and D2 ([[compareRows]]) run on the
-  * driver with no Spark job, and the frame it returns is a local one of
-  * the threaded rows. Each driver check keys rows with Spark's own casts
-  * and equality (null-safe, byte arrays by content, NaNs equal, −0.0 as
-  * 0.0); when it finds a failure, or cannot decide, the Spark operator
-  * it stands for ([[mergeIds]], [[compareFrames]]) runs over a frame of
-  * the rows the driver holds and raises its own error. The only other
-  * actions are the row-count guards in [[mergeIds]] (cached first) and
-  * [[hasNulls]]' one aggregation.
+  * loaded). `Connector.load` collects the caller's frame once, as
+  * Catalyst rows, and runs its cascade on those rows ([[Held]]): the
+  * dedup and each step's projection ([[distinctRows]]), the rows an
+  * insert may write ([[unwritten]]), D1 ([[containsRows]]), the id
+  * guard and the id threading ([[mergeIdRows]]), the renames and drops
+  * between steps ([[renamed]], [[dropRows]]) and D2 ([[compareRows]])
+  * run on the driver with no Spark job, and the frame it returns is a
+  * local one of the threaded rows ([[localFrame]]). Values are
+  * normalized once, as the rows come in, and every check keys them
+  * with no further conversion, by Spark's own casts and equality
+  * (null-safe, byte arrays by content, NaNs equal, −0.0 as 0.0); ids
+  * go into free values of each row and dropped columns leave only the
+  * row's index map, so rows of the output schema are built once, at
+  * the end. When a check finds a failure, or cannot decide, the Spark
+  * operator it stands for ([[mergeIds]], [[compareFrames]]) runs over a
+  * frame of the rows the driver holds and raises its own error. The
+  * only other actions are the row-count guards in [[mergeIds]] (cached
+  * first) and [[hasNulls]]' one aggregation.
   */
 object FrameOps {
 
@@ -212,92 +218,143 @@ object FrameOps {
       .select(df.columns.map(c => col(s"l.`$c`")) :+ col(s"r.`$alias`").as(alias): _*)
   }
 
-  /** `mergeIds(frameOf(rows, schema), frameOf(dbRows, dbSchema), ...)`
-    * on the driver, for rows the driver holds whose distinct projection
-    * onto every column the join matches on is `keys` (schema
-    * `keySchema`). Returns the join's schema and rows: each row once per
-    * id its key matches, the id appended as the join appends it
-    * (nullable, the database column's type). When [[idsOf]] passes, no
-    * Spark job runs. Otherwise [[mergeIds]] runs over a frame of `rows`:
-    * it raises the error the guard found, or decides where the driver
-    * could not, and then its cached result is collected and released.
+  /** Rows the driver holds, in Catalyst form: column `i` of `schema`
+    * is value `at(i)` of each row. A row may hold more values than its
+    * columns: the load cascade gives each row a free slot per step for
+    * the id it appends ([[mergeIdRows]]) and drops columns by leaving
+    * them out of `at` ([[dropRows]]), so no step rebuilds a row; rows of
+    * `schema` alone are built once, by [[compact]]. Rows read from a
+    * frame ([[distinctRows]]) hold [[normalized]] values.
+    */
+  private[graft] final case class Held(
+      schema: StructType, at: IndexedSeq[Int], rows: IndexedSeq[GenericInternalRow]) {
+
+    /** Each row's values at `at`, as a row of `schema`. */
+    def compact: IndexedSeq[GenericInternalRow] = rows.map(gather(at))
+  }
+
+  private[graft] object Held {
+
+    /** Rows whose values are the columns of `schema`, in order. */
+    def apply(schema: StructType, rows: IndexedSeq[GenericInternalRow]): Held =
+      Held(schema, schema.indices, rows)
+  }
+
+  /** A row's values at `at`, as one row: the row itself when those are
+    * all its values, in order. As a key it compares null-safely, bytes
+    * by content.
+    */
+  private def gather(at: IndexedSeq[Int]): GenericInternalRow => GenericInternalRow = {
+    val idx = at.toArray
+    val identity = idx.indices.forall(j => idx(j) == j)
+    r =>
+      if (identity && r.numFields == idx.length) r
+      else {
+        val values = r.values
+        new GenericInternalRow(Array.tabulate[Any](idx.length)(j => values(idx(j))))
+      }
+  }
+
+  /** `mergeIds(frameOf(held), frameOf(db), ...)` on the driver, for rows
+    * the driver holds whose distinct projection onto every column the
+    * join matches on is `keys`, and a read `db` of the table. Returns
+    * the join: each row once per id its key matches, the id appended as
+    * the join appends it (nullable, the database column's type), at
+    * value `slot` of the row, which no column of `held` may use. A row
+    * takes its first id in place and is copied for each further one.
+    * When [[idsOf]] passes, no Spark job runs. Otherwise [[mergeIds]]
+    * runs over a frame of the rows: it raises the error the guard
+    * found, or decides where the driver could not, and then its cached
+    * result is collected and released.
     */
   private[graft] def mergeIdRows(
       spark: SparkSession,
-      schema: StructType, rows: Seq[Row],
-      keys: Seq[Row], keySchema: StructType,
-      dbRows: Seq[Row], dbSchema: StructType,
+      held: Held, keys: Held, db: Held,
       alias: String,
       table: String,
       allowDuplication: Boolean,
-  ): (StructType, Seq[Row]) =
-    idsOf(schema, keys, keySchema, dbRows, dbSchema, alias, allowDuplication) match {
+      slot: Int,
+  ): Held = {
+    require(!held.at.contains(slot), s"Value $slot of each row must be free for the id.")
+    idsOf(held.schema, keys, db, alias, allowDuplication) match {
       case Some(byKey) =>
-        val on = keySchema.names.filter(dbSchema.names.contains)
-        val key = keyOf(schema, on.map(schema.fieldIndex))
-        val id = dbSchema(alias).copy(nullable = true)
-        (StructType(schema.fields :+ id), rows.flatMap { r =>
-          byKey(new GenericInternalRow(key(r))).map(i => Row.fromSeq(r.toSeq :+ i))
+        val on = keys.schema.names.filter(db.schema.names.contains)
+        val key = gather(on.map(c => held.at(held.schema.fieldIndex(c))))
+        val id = db.schema(alias).copy(nullable = true)
+        Held(StructType(held.schema.fields :+ id), held.at :+ slot, held.rows.flatMap { r =>
+          byKey(key(r)).iterator.zipWithIndex.map { case (i, n) =>
+            val row = if (n == 0) r else new GenericInternalRow(r.values.clone())
+            row.update(slot, i)
+            row
+          }
         })
       case None =>
-        val guarded = mergeIds(frameOf(spark, rows, schema), frameOf(spark, dbRows, dbSchema),
-          alias, table, allowDuplication)
-        try (guarded.schema, guarded.collect().toSeq) finally guarded.unpersist()
+        val guarded = mergeIds(frameOf(spark, held), frameOf(spark, db), alias, table,
+          allowDuplication)
+        try {
+          val width = held.rows.headOption.fold(0)(_.numFields)
+          val at = held.at :+ slot
+          val types = guarded.schema.fields.map(_.dataType)
+          Held(guarded.schema, at, Bridge.collectInternal(guarded).toIndexedSeq.map { r =>
+            val values = new Array[Any](width)
+            at.indices.foreach(j => values(at(j)) = if (r.isNullAt(j)) null else r.get(j, types(j)))
+            new GenericInternalRow(values)
+          })
+        } finally guarded.unpersist()
     }
+  }
 
-  /** `mergeIds(df, frameOf(dbRows, dbSchema), ...)` for a frame the
-    * driver does not hold, guarded as [[mergeIdRows]] guards it: returns
-    * the join, uncached. [[mergeIds]] runs only when [[idsOf]] does not
-    * pass, to raise its error or decide.
+  /** `mergeIds(df, frameOf(db), ...)` for a frame the driver does not
+    * hold, guarded as [[mergeIdRows]] guards it: returns the join,
+    * uncached. [[mergeIds]] runs only when [[idsOf]] does not pass, to
+    * raise its error or decide.
     */
   private[graft] def mergeIdFrame(
       df: DataFrame,
-      keys: Seq[Row], keySchema: StructType,
-      dbRows: Seq[Row], dbSchema: StructType,
+      keys: Held, db: Held,
       alias: String,
       table: String,
       allowDuplication: Boolean,
   ): DataFrame = {
-    val dbDf = frameOf(df.sparkSession, dbRows, dbSchema)
-    if (idsOf(df.schema, keys, keySchema, dbRows, dbSchema, alias, allowDuplication).isEmpty)
+    val dbDf = frameOf(df.sparkSession, db)
+    if (idsOf(df.schema, keys, db, alias, allowDuplication).isEmpty)
       mergeIds(df, dbDf, alias, table, allowDuplication).unpersist()
     joinIds(df, dbDf, alias)
   }
 
   /** The ids [[mergeIds]] joins to each key, by key, when its guards
     * pass for a frame of schema `schema` whose distinct projection onto
-    * its join columns is `keys`: every key matches exactly one database
-    * row (at least one under `allowDuplication`) and no matched id is
-    * null. Keys and database rows match as the join matches them: on
-    * the columns both schemas name, the database side cast as
-    * [[matchTypes]] casts it. None as well when a database value does
-    * not cast, or when the driver cannot match as Spark does (a join
-    * column outside `keys`, such as an alias the frame already holds, a
-    * column it cannot resolve alone, a cast Spark rejects, a collated or
-    * nested key), so the caller runs [[mergeIds]] to decide.
+    * its join columns is `keys`, against the read `db`: every key
+    * matches exactly one database row (at least one under
+    * `allowDuplication`) and no matched id is null. Keys and database
+    * rows match as the join matches them: on the columns both schemas
+    * name, the database side cast as [[matchTypes]] casts it. None as
+    * well when a database value does not cast, or when the driver cannot
+    * match as Spark does (a join column outside `keys`, such as an alias
+    * the frame already holds, a column it cannot resolve alone, a cast
+    * Spark rejects, a collated or nested key), so the caller runs
+    * [[mergeIds]] to decide.
     */
   private[graft] def idsOf(
       schema: StructType,
-      keys: Seq[Row], keySchema: StructType,
-      dbRows: Seq[Row], dbSchema: StructType,
+      keys: Held, db: Held,
       alias: String,
       allowDuplication: Boolean,
   ): Option[collection.Map[GenericInternalRow, Seq[Any]]] = {
-    val on = StructType(keySchema.filter(f => dbSchema.names.contains(f.name)))
-    val covered = schema.names.filter(dbSchema.names.contains).forall(keySchema.names.contains)
-    (dbReaders(on, dbSchema), dbIndex(dbSchema, alias)) match {
+    val on = StructType(keys.schema.filter(f => db.schema.names.contains(f.name)))
+    val covered = schema.names.filter(db.schema.names.contains).forall(keys.schema.names.contains)
+    (dbReaders(on, db), dbIndex(db.schema, alias)) match {
       case (Some(read), Some(id)) if covered =>
         try {
           val ids = mutable.HashMap.empty[GenericInternalRow, Vector[Any]]
-          val toDb = CatalystTypeConverters.createToCatalystConverter(dbSchema)
-          dbRows.foreach { row =>
-            val r = toDb(row).asInstanceOf[InternalRow]
-            val key = new GenericInternalRow(read.map(_(r)))
-            ids(key) = ids.getOrElse(key, Vector.empty) :+ row.get(id)
+          val idAt = db.at(id)
+          db.rows.foreach { row =>
+            val key = new GenericInternalRow(read.map(_(row)))
+            ids(key) = ids.getOrElse(key, Vector.empty) :+ row.values(idAt)
           }
-          val key = keyOf(keySchema, on.names.map(keySchema.fieldIndex))
-          val pass = keys.forall { row =>
-            ids.get(new GenericInternalRow(key(row))).exists(matched =>
+          val key = gather(on.names.map(c => keys.at(keys.schema.fieldIndex(c))))
+          val pass = keys.rows.forall { row =>
+            ids.get(key(row)).exists(matched =>
               !matched.contains(null) && (matched.size == 1 || allowDuplication))
           }
           if (pass) Some(ids) else None
@@ -306,44 +363,124 @@ object FrameOps {
     }
   }
 
-  /** The distinct projection of driver-held `rows` (schema `schema`)
-    * onto `columns`, and its schema: [[getRows]] on the driver. Rows
-    * are keyed as `dropDuplicates` groups them ([[keyOf]]), so −0.0
-    * and 0.0 are one row, as are all NaNs, and come out in the order
-    * of their first occurrence with their values normalized.
+  /** The distinct rows of `rows`, a frame's collected Catalyst rows of
+    * schema `schema`: `dropDuplicates()` on the driver. Each value is
+    * [[normalized]] here, once, so −0.0 and 0.0 are one row, as are all
+    * NaNs; rows come out in the order of their first occurrence, each
+    * with `spare` free values after its columns for the ids the load
+    * cascade appends.
     */
   private[graft] def distinctRows(
-      rows: Seq[Row], schema: StructType, columns: Seq[String],
-  ): (Seq[Row], StructType) = distinctAt(rows, schema, columns.map(schema.fieldIndex))
-
-  /** The distinct rows of driver-held `rows` over all their columns:
-    * `dropDuplicates()` on the driver, keyed as [[distinctRows]] keys.
-    */
-  private[graft] def distinctRows(rows: Seq[Row], schema: StructType): Seq[Row] =
-    distinctAt(rows, schema, schema.indices)._1
-
-  private def distinctAt(
-      rows: Seq[Row], schema: StructType, at: Seq[Int],
-  ): (Seq[Row], StructType) = {
-    val projected = StructType(at.map(schema(_)))
-    val key = keyOf(schema, at)
+      rows: Iterable[InternalRow], schema: StructType, spare: Int = 0,
+  ): Held = {
+    val types = schema.fields.map(_.dataType)
     val distinct = mutable.LinkedHashSet.empty[GenericInternalRow]
-    rows.foreach(r => distinct += new GenericInternalRow(key(r)))
-    val toRow = CatalystTypeConverters.createToScalaConverter(projected)
-    (distinct.iterator.map(toRow(_).asInstanceOf[Row]).toSeq, projected)
+    rows.foreach { r =>
+      val values = new Array[Any](types.length + spare)
+      var i = 0
+      while (i < types.length) {
+        if (!r.isNullAt(i)) values(i) = normalized(r.get(i, types(i)))
+        i += 1
+      }
+      // the free values are null in every row, so they leave the key alone
+      distinct += new GenericInternalRow(values)
+    }
+    Held(schema, distinct.toIndexedSeq)
   }
 
-  /** [[dropReplaced]] of driver-held rows (schema `schema`): the
-    * schema and rows left when every column the session's resolver
-    * matches to one of `columns` is dropped, as `drop` drops them.
+  /** The distinct projection of `held` onto `columns`: [[getRows]] on
+    * the driver, keyed on the held values with no conversion, in the
+    * order of first occurrence.
     */
-  private[graft] def dropRows(
-      schema: StructType, rows: Seq[Row], columns: Seq[String],
-  ): (StructType, Seq[Row]) = {
+  private[graft] def distinctRows(held: Held, columns: Seq[String]): Held = {
+    val at = columns.map(held.schema.fieldIndex)
+    val key = gather(at.map(held.at).toIndexedSeq)
+    val distinct = mutable.LinkedHashSet.empty[GenericInternalRow]
+    held.rows.foreach(r => distinct += key(r))
+    Held(StructType(at.map(held.schema(_))), distinct.toIndexedSeq)
+  }
+
+  /** [[dropReplaced]] of rows the driver holds: `held` without every
+    * column the session's resolver matches to one of `columns`, as
+    * `drop` drops them. Only `at` changes; no row is touched.
+    */
+  private[graft] def dropRows(held: Held, columns: Seq[String]): Held = {
     val resolver = SQLConf.get.resolver
-    val keep = schema.indices.filterNot(i => columns.exists(resolver(schema(i).name, _)))
-    if (keep.size == schema.size) (schema, rows)
-    else (StructType(keep.map(schema(_))), rows.map(r => Row.fromSeq(keep.map(r.get))))
+    val keep = held.schema.indices.filterNot(i => columns.exists(resolver(held.schema(i).name, _)))
+    if (keep.size == held.schema.size) held
+    else Held(StructType(keep.map(held.schema(_))), keep.map(held.at), held.rows)
+  }
+
+  /** The rows of `rows` a conflict-ignoring insert may write into a
+    * table whose rows, read before it, are `db`: each row but those
+    * whose key `db` holds on every unique key set of `keySets`. With
+    * no key set, every row. A row left out would have conflicted with
+    * a stored row, so the insert could not have written it.
+    *
+    * Keys compare in the read's column types ([[presence]]), and any
+    * doubt counts as absent: an extra row sent is one the insert then
+    * ignores, while a row left out that the insert would have written
+    * would be lost.
+    */
+  private[graft] def unwritten(rows: Held, db: Held, keySets: Seq[Seq[String]]): Held = {
+    val present = keySets.map(presence(rows, db, _))
+    if (present.isEmpty || present.exists(_.isEmpty)) rows
+    else rows.copy(rows = rows.rows.filterNot(r => present.forall(_.get(r))))
+  }
+
+  /** Whether `db` holds a row's key on `keySet`, for the rows of
+    * `rows`: the row's value in each key column, cast to the read's type
+    * of that column, equals the read's value. A value that does not
+    * cast exactly (its cast back differs), or a null, is never present,
+    * as SQL's `=` never matches a null. None when no row can be present:
+    * a key column is missing from either side, or the read's type of it
+    * may hold less than the table does (a timestamp's nanoseconds, a
+    * DECIMAL clamped to Spark's 38 digits).
+    */
+  private def presence(
+      rows: Held, db: Held, keySet: Seq[String],
+  ): Option[GenericInternalRow => Boolean] = {
+    val tz = Some(SQLConf.get.sessionLocalTimeZone)
+    // per key column, the row's value as the read types it, and where
+    // the read holds that column
+    val columns: Seq[Option[(InternalRow => Any, Int)]] = keySet.map { c =>
+      (rows.schema.names.indexOf(c), dbIndex(db.schema, c)) match {
+        case (f, Some(d)) if f >= 0 && readsExactly(db.schema(d).dataType) =>
+          val ref = BoundReference(rows.at(f), rows.schema(f).dataType, nullable = true)
+          val to = Cast(ref, db.schema(d).dataType, tz, EvalMode.TRY)
+          val back = Cast(to, ref.dataType, tz, EvalMode.TRY)
+          if (ref.dataType == to.dataType) Some(((r: InternalRow) => ref.eval(r), db.at(d)))
+          else if (!to.resolved || !back.resolved) None
+          else Some(((r: InternalRow) => {
+            val v = to.eval(r)
+            // exact: the value cast back is the value, as keys compare
+            if (v != null && new GenericInternalRow(Array(back.eval(r))) ==
+                new GenericInternalRow(Array(ref.eval(r)))) normalized(v)
+            else null
+          }, db.at(d)))
+        case _ => None
+      }
+    }
+    if (columns.exists(_.isEmpty)) None
+    else {
+      val (cast, dbAt) = columns.flatten.unzip
+      val stored = new mutable.HashSet[GenericInternalRow]()
+      db.rows.foreach { r =>
+        val key = dbAt.map(i => normalized(r.values(i))).toArray
+        if (!key.contains(null)) stored += new GenericInternalRow(key)
+      }
+      Some { r =>
+        val key = cast.map(_(r)).toArray
+        !key.contains(null) && stored.contains(new GenericInternalRow(key))
+      }
+    }
+  }
+
+  /** Whether a JDBC read of this type holds the stored value whole. */
+  private def readsExactly(dt: DataType): Boolean = dt match {
+    case TimestampType | TimestampNTZType => false
+    case d: DecimalType                   => d.precision < DecimalType.MAX_PRECISION
+    case _                                => true
   }
 
   /** A7 (`dataframe_operations.py:19-56`): set-containment compare of
@@ -367,8 +504,11 @@ object FrameOps {
       val diff = data.except(db).limit(20).withColumn("_side", lit("data"))
         .unionByName(db.except(data).limit(20).withColumn("_side", lit("db")))
         .collect()
-      val missing = diff.filter(_.getAs[String]("_side") == "data")
-      val extra = diff.filter(_.getAs[String]("_side") == "db")
+      // each row as the caller's columns, without the side it came from
+      def side(name: String) = diff.filter(_.getAs[String]("_side") == name)
+        .map(r => Row.fromSeq(r.toSeq.init))
+      val missing = side("data")
+      val extra = side("db")
       if (missing.nonEmpty || extra.nonEmpty)
         throw new CompareNoExactMatchError(
           "Datasets do not match exactly.\nRows in data and not in db:\n" +
@@ -392,112 +532,94 @@ object FrameOps {
     new CompareMissingRowsError(
       s"Some rows from data were not found in the database:\n${rows.mkString("\n")}")
 
-  /** `compareFrames(data, matchTypes(db, dataSchema), exact = false)`
+  /** `compareFrames(data, matchTypes(db, data.schema), exact = false)`
     * over rows the driver already holds, evaluated on the driver with
     * no Spark job: the same outcome, the same
     * [[CompareMissingRowsError]] text and the same MatchDatatypesError
     * label on an impossible cast. For flat schemas, as JDBC reads are.
     *
-    * Both sides become Catalyst rows. Each database column is read as
-    * its data column's type by [[castReader]], and the database rows
-    * are keyed in a hash set: `GenericInternalRow` equality is
-    * null-safe and compares byte arrays by content. Data rows holding
-    * a null or NaN are dropped first, as `na.drop()` does; the first
-    * 20 distinct missing rows are reported in data order.
+    * Each database column is read as its data column's type by
+    * [[castReader]], and the database rows are keyed in a hash set:
+    * `GenericInternalRow` equality is null-safe and compares byte arrays
+    * by content. The data rows key on their held values. Data rows
+    * holding a null or NaN are dropped first, as `na.drop()` does; the
+    * first 20 distinct missing rows are reported in data order.
     */
-  private[graft] def containsRows(
-      data: Seq[Row], dataSchema: StructType,
-      dbRows: Seq[Row], dbSchema: StructType,
-  ): Unit = {
+  private[graft] def containsRows(data: Held, db: Held): Unit = {
     val resolver = SQLConf.get.resolver
-    val fromDb: Array[InternalRow => Any] = dataSchema.fields.map { f =>
-      val i = dbSchema.fields.indexWhere(d => resolver(d.name, f.name))
+    val fromDb: Array[InternalRow => Any] = data.schema.fields.map { f =>
+      val i = db.schema.fields.indexWhere(d => resolver(d.name, f.name))
       require(i >= 0, s"Column `${f.name}` is missing from the database rows.")
-      castReader(dbSchema, i, f.dataType).getOrElse(throw new IllegalArgumentException(
-        s"Column `${f.name}` does not cast from ${dbSchema(i).dataType.sql} to ${f.dataType.sql}."))
+      castReader(db, i, f.dataType).getOrElse(throw new IllegalArgumentException(
+        s"Column `${f.name}` does not cast from ${db.schema(i).dataType.sql} to ${f.dataType.sql}."))
     }
-    val missing = missingRows(data, dataSchema, keyRows(dbRows, dbSchema, fromDb),
-      skipNulls = true, limit = 20)
+    val missing = missingRows(data, keyRows(db, fromDb), skipNulls = true, limit = 20)
     if (missing.nonEmpty) {
-      val toRow = CatalystTypeConverters.createToScalaConverter(dataSchema)
+      val toRow = CatalystTypeConverters.createToScalaConverter(data.schema)
       throw missingRowsError(missing.map(toRow(_).asInstanceOf[Row]))
     }
   }
 
-  /** D2 of the loader: `compareFrames(frameOf(rows, schema),
-    * matchTypes(db, schema), exact)` for distinct rows the driver holds
-    * and the database rows `dbRows`, after asserting that the database
-    * returned rows, and (when `rows` is non-empty and null-free) at
-    * least as many as `rows`. Decided on the driver: no row may be
-    * missing from the database rows read as its columns
+  /** D2 of the loader: `compareFrames(frameOf(rows), matchTypes(
+    * frameOf(db), rows.schema), exact)` for distinct rows the driver
+    * holds and the database's read `db`, after asserting that the
+    * database returned rows, and (when `rows` is non-empty and
+    * null-free) at least as many as `rows`. Decided on the driver: no
+    * row may be missing from the database rows read as its columns
     * ([[dbReaders]]), and with `exact` the distinct database keys must
     * number the rows. [[compareFrames]] runs, over frames of the rows
     * the driver holds, only when the driver finds a mismatch or cannot
     * key the database rows as Spark would, to raise its own error.
     */
-  private[graft] def compareRows(
-      spark: SparkSession, schema: StructType, rows: Seq[Row],
-      dbRows: Seq[Row], dbSchema: StructType, exact: Boolean,
-  ): Unit = {
-    val dbCount = dbRows.size
+  private[graft] def compareRows(spark: SparkSession, rows: Held, db: Held, exact: Boolean): Unit = {
+    val dbCount = db.rows.size
     assert(dbCount > 0, "Compare query yielded no results.")
-    if (rows.nonEmpty && !rows.exists(_.anyNull))
-      assert(dbCount >= rows.size, s"Compare query yielded fewer rows ($dbCount) than data.")
-    val matches = dbReaders(schema, dbSchema).exists { read =>
+    if (rows.rows.nonEmpty && !rows.rows.exists(r => rows.at.exists(r.isNullAt)))
+      assert(dbCount >= rows.rows.size, s"Compare query yielded fewer rows ($dbCount) than data.")
+    val matches = dbReaders(rows.schema, db).exists { read =>
       try {
-        val db = keyRows(dbRows, dbSchema, read)
-        (!exact || db.size == rows.size) &&
-          missingRows(rows, schema, db, skipNulls = !exact, limit = 1).isEmpty
+        val keys = keyRows(db, read)
+        (!exact || keys.size == rows.rows.size) &&
+          missingRows(rows, keys, skipNulls = !exact, limit = 1).isEmpty
       } catch { case _: MatchDatatypesError => false }
     }
     if (!matches)
-      compareFrames(frameOf(spark, rows, schema),
-        matchTypes(frameOf(spark, dbRows, dbSchema), schema), exact = exact)
+      compareFrames(frameOf(spark, rows), matchTypes(frameOf(spark, db), rows.schema), exact = exact)
   }
 
-  /** Up to `limit` distinct rows of `data` (schema `dataSchema`) whose
-    * key is not in `db`, in data order; with `skipNulls`, rows holding a
-    * null or NaN are skipped, as `na.drop()` drops them.
+  /** Up to `limit` distinct rows of `data` whose key is not in `db`, in
+    * data order; with `skipNulls`, rows holding a null or NaN are
+    * skipped, as `na.drop()` drops them.
     */
   private def missingRows(
-      data: Seq[Row], dataSchema: StructType, db: collection.Set[GenericInternalRow],
-      skipNulls: Boolean, limit: Int,
+      data: Held, db: collection.Set[GenericInternalRow], skipNulls: Boolean, limit: Int,
   ): collection.Set[GenericInternalRow] = {
-    val key = keyOf(dataSchema, dataSchema.indices)
+    val key = gather(data.at)
     val missing = mutable.LinkedHashSet.empty[GenericInternalRow]
-    val it = data.iterator
+    val it = data.rows.iterator
     while (missing.size < limit && it.hasNext) {
-      val values = key(it.next())
-      val k = new GenericInternalRow(values)
-      if (!(skipNulls && values.exists(isNullOrNaN)) && !db.contains(k)) missing += k
+      val k = key(it.next())
+      if (!(skipNulls && k.values.exists(isNullOrNaN)) && !db.contains(k)) missing += k
     }
     missing
   }
 
-  /** A row's values at `at` as `except`, `dropDuplicates` and the id
-    * join group them: Catalyst values, [[normalized]]. In a
-    * `GenericInternalRow` they compare null-safely, bytes by content.
-    */
-  private def keyOf(schema: StructType, at: Seq[Int]): Row => Array[Any] = {
-    val idx = at.toArray
-    val convert = idx.map(i => CatalystTypeConverters.createToCatalystConverter(schema(i).dataType))
-    row => Array.tabulate(idx.length)(j => normalized(convert(j)(row.get(idx(j)))))
-  }
+  /** One-partition frame over rows the driver holds. */
+  private[graft] def frameOf(spark: SparkSession, held: Held): DataFrame =
+    Bridge.scanFrame(spark, held.compact, held.schema)
 
-  /** One-partition frame over driver-held rows. */
-  private[graft] def frameOf(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+  /** The frame `Connector.load` returns: a local one whose plan holds
+    * `held`'s rows, built as rows of its schema alone, once.
+    */
+  private[graft] def localFrame(spark: SparkSession, held: Held): DataFrame =
+    Bridge.localFrame(spark, held.compact, held.schema)
 
   /** The database rows as keys: each row's values read by `read`. */
   private def keyRows(
-      dbRows: Seq[Row], dbSchema: StructType, read: Array[InternalRow => Any],
+      db: Held, read: Array[InternalRow => Any],
   ): mutable.HashSet[GenericInternalRow] = {
-    val toDb = CatalystTypeConverters.createToCatalystConverter(dbSchema)
     val keys = new mutable.HashSet[GenericInternalRow]()
-    dbRows.foreach { row =>
-      val r = toDb(row).asInstanceOf[InternalRow]
-      keys += new GenericInternalRow(read.map(_(r)))
-    }
+    db.rows.foreach(row => keys += new GenericInternalRow(read.map(_(row))))
     keys
   }
 
@@ -508,9 +630,7 @@ object FrameOps {
     * named exactly (`matchTypes` would leave it uncast); Spark rejects
     * the cast; or the type is nested or a non-binary collation.
     */
-  private def dbReaders(
-      dataSchema: StructType, dbSchema: StructType,
-  ): Option[Array[InternalRow => Any]] = {
+  private def dbReaders(dataSchema: StructType, db: Held): Option[Array[InternalRow => Any]] = {
     val readers = dataSchema.fields.map { f =>
       val keyable = f.dataType match {
         case s: StringType => s == StringType // the UTF8_BINARY collation
@@ -519,7 +639,7 @@ object FrameOps {
         case _             => false
       }
       if (!keyable) None
-      else dbIndex(dbSchema, f.name).flatMap(castReader(dbSchema, _, f.dataType))
+      else dbIndex(db.schema, f.name).flatMap(castReader(db, _, f.dataType))
     }
     if (readers.forall(_.isDefined)) Some(readers.map(_.get)) else None
   }
@@ -542,18 +662,18 @@ object FrameOps {
     * with [[matchTypes]]' text. Values come out [[normalized]]. None
     * when Spark rejects the cast.
     */
-  private def castReader(dbSchema: StructType, i: Int, dt: DataType): Option[InternalRow => Any] = {
+  private def castReader(db: Held, i: Int, dt: DataType): Option[InternalRow => Any] = {
     val conf = SQLConf.get
     val tz = Some(conf.sessionLocalTimeZone)
-    val ref = BoundReference(i, dbSchema(i).dataType, nullable = true)
+    val ref = BoundReference(db.at(i), db.schema(i).dataType, nullable = true)
     if (ref.dataType == dt) Some(r => normalized(ref.eval(r)))
     else {
       val guard = Cast(ref, dt, tz, EvalMode.TRY)
       val cast = Cast(ref, dt, tz, EvalMode.fromSQLConf(conf))
-      val (before, after) = uncastable(dbSchema(i).name, dt)
+      val (before, after) = uncastable(db.schema(i).name, dt)
       if (!guard.resolved || !cast.resolved) None
       else Some(r =>
-        if (!r.isNullAt(i) && guard.eval(r) == null)
+        if (!r.isNullAt(ref.ordinal) && guard.eval(r) == null)
           throw new MatchDatatypesError(before + Cast(ref, StringType, tz).eval(r) + after)
         else normalized(cast.eval(r)))
     }

@@ -135,27 +135,29 @@ class DerbyConnectorSpec extends AnyFunSuite with SparkSpec {
     assert(spark.sharedState.cacheManager.isEmpty)
   }
 
-  test("the frame a load returns is local: no join, cache or broadcast under it") {
+  /** Whether `body` starts a job that builds a broadcast. */
+  private def broadcasts(body: => Any): Boolean = {
     import java.util.concurrent.ConcurrentLinkedQueue
     import scala.jdk.CollectionConverters._
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import org.apache.spark.sql.catalyst.plans.logical.{Join, LocalRelation, ResolvedHint}
-    import org.apache.spark.sql.execution.columnar.InMemoryRelation
     import org.apache.spark.sql.graftbridge.ListenerBus
 
-    /** Whether `body` starts a job that builds a broadcast. */
-    def broadcasts(body: => Any): Boolean = {
-      val jobs = new ConcurrentLinkedQueue[String]()
-      val listener = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit =
-          jobs.add(String.valueOf(e.properties))
-      }
-      ListenerBus.drain(spark.sparkContext)
-      spark.sparkContext.addSparkListener(listener)
-      try { body; ListenerBus.drain(spark.sparkContext) }
-      finally spark.sparkContext.removeSparkListener(listener)
-      jobs.asScala.exists(_.contains("broadcast exchange"))
+    val jobs = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(String.valueOf(e.properties))
     }
+    ListenerBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try { body; ListenerBus.drain(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    jobs.asScala.exists(_.contains("broadcast exchange"))
+  }
+
+  test("the frame a load returns is local: no join, cache or broadcast under it") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, LocalRelation, ResolvedHint}
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+
     // the listener sees a broadcast job where one runs
     assert(broadcasts(spark.range(3).join(broadcast(spark.range(3)), "id").collect()))
 
@@ -192,8 +194,8 @@ class DerbyConnectorSpec extends AnyFunSuite with SparkSpec {
           "FROM SYSIBM.SYSDUMMY1")))
     }
     assert(err.getMessage ==
-      "Datasets do not match exactly.\nRows in data and not in db:\n[NL,Utrecht,Oudegracht,1,data]\n" +
-        "Rows in db and not in data:\n[NL,Utrecht,Oudegracht,2,db]\n\n" +
+      "Datasets do not match exactly.\nRows in data and not in db:\n[NL,Utrecht,Oudegracht,1]\n" +
+        "Rows in db and not in data:\n[NL,Utrecht,Oudegracht,2]\n\n" +
         "Consider adding a WHERE clause to filter out irrelevant data.\n" +
         "Note: if this happens due to your data containing missings and your database not " +
         "allowing those, set exact=False", err.getMessage)
@@ -208,8 +210,8 @@ class DerbyConnectorSpec extends AnyFunSuite with SparkSpec {
       Connector.withConnection(spark, url)(c => c.compare(other))
     }
     assert(mismatch.getMessage.startsWith(
-      "Datasets do not match exactly.\nRows in data and not in db:\n[NL,Utrecht,Oudegracht,2,data]\n" +
-        "Rows in db and not in data:\n[NL,Utrecht,Oudegracht,1,db]\n"), mismatch.getMessage)
+      "Datasets do not match exactly.\nRows in data and not in db:\n[NL,Utrecht,Oudegracht,2]\n" +
+        "Rows in db and not in data:\n[NL,Utrecht,Oudegracht,1]\n"), mismatch.getMessage)
     assert(compared.value == data.rdd.getNumPartitions)
   }
 
@@ -418,7 +420,7 @@ class DerbyConnectorSpec extends AnyFunSuite with SparkSpec {
       "straat" -> Seq("Oudegracht", "Veldstraat", "Korenmarkt"), "lengte" -> Seq("1", "1", "2"))
 
   /** The JDBC statements a clean load of [[faultData]] executes. */
-  private val cleanLoadStatements = 7
+  private val cleanLoadStatements = 10
 
   test("a fault at any statement of a load rolls it back and releases every cache") {
     val url = streetDb()
@@ -436,9 +438,10 @@ class DerbyConnectorSpec extends AnyFunSuite with SparkSpec {
       c.load(data); throw new Undo
     })
     val statements = FaultyDriver.executed.get
-    // three inserts, one read per table (the two keyed tables' reads
-    // serve D1, the id guard and the id join), the compare; 9 when the
-    // keyed tables were read twice
+    // each table receives a row, so each is read, written and read
+    // again (the last read serves D1, and for the two keyed tables the
+    // id guard and the id join), then the compare; 7 when no table was
+    // read before its insert, which sent every row
     assert(statements == cleanLoadStatements, statements)
     assert(streetTables(url) == before)
 
@@ -488,6 +491,164 @@ class DerbyConnectorSpec extends AnyFunSuite with SparkSpec {
       assert(spark.sharedState.cacheManager.isEmpty, s"fault at statement $k")
     }
     FaultyDriver.arm(Int.MaxValue)
+  }
+
+  test("a reload of the streets fixture executes no INSERT and changes nothing") {
+    val url = streetDb()
+    val data = faultData()
+    val loaded = Connector.withConnection(spark, url)(c => c.load(data).collect().toSeq)
+    val before = streetTables(url)
+    assert(before.map(_.size) == Seq(2, 2, 3))
+
+    FaultyDriver.arm(Int.MaxValue)
+    val reloaded = Connector.withConnection(spark, FaultyDriver.url(url))(c =>
+      c.load(data).collect().toSeq)
+    // one read per table, which finds every row, and the compare
+    val statements = FaultyDriver.executions.toArray.toSeq
+    assert(FaultyDriver.inserts.isEmpty, statements)
+    assert(statements.size == 4, statements)
+    assert(streetTables(url) == before)
+    assert(reloaded == loaded)
+    spark.catalog.clearCache()
+  }
+
+  test("a load into partly filled tables sends only the rows they lack") {
+    val url = streetDb()
+    Connector.withConnection(spark, url)(c =>
+      c.load(streets("NL", "Utrecht", "Oudegracht", "1")))
+    val before = streetTables(url)
+
+    // NL, Utrecht and Oudegracht are stored; BE, Gent and two streets are not
+    FaultyDriver.arm(Int.MaxValue)
+    Connector.withConnection(spark, FaultyDriver.url(url))(c => c.load(faultData()))
+    assert(FaultyDriver.inserts == Seq(("land", 1), ("stad", 1), ("straat", 2)),
+      FaultyDriver.executions)
+    val after = streetTables(url)
+    assert(after.zip(before).forall { case (a, b) => a.take(b.size) == b })
+    assert(after.map(_.size) == Seq(2, 2, 3))
+    spark.catalog.clearCache()
+  }
+
+  test("a load into a table larger than twice its rows stops the first read and reads it again") {
+    val url = streetDb()
+    val n = 8
+    Connector.withConnection(spark, url)(c => c.load(strDf("land" -> Seq.fill(n)("NL"),
+      "stad" -> Seq.fill(n)("Utrecht"), "straat" -> (1 to n).map(i => s"Straat $i"),
+      "lengte" -> Seq.fill(n)("1"))))
+    val before = streetTables(url)
+
+    // one stored street: straat's first read stops after 3 of its 8
+    // rows, so straat is read again, whether or not the street was among
+    // those 3 and kept out of the insert; land and stad hold one row
+    // each and are read once (the compare reads every street, so it
+    // asks only that the frame's rows are stored)
+    FaultyDriver.arm(Int.MaxValue)
+    Connector.withConnection(spark, FaultyDriver.url(url))(c =>
+      c.load(streets("NL", "Utrecht", s"Straat $n", "1"), exact = false))
+    def reads(table: String) = FaultyDriver.executions.toArray.toSeq
+      .count { case (sql: String, _) => sql.endsWith(s" FROM $table") }
+    assert(Seq("land", "stad", "straat").map(reads) == Seq(1, 1, 2), FaultyDriver.executions)
+    assert(FaultyDriver.inserts.forall(_._1 == "straat"), FaultyDriver.executions)
+    assert(streetTables(url) == before)
+    spark.catalog.clearCache()
+  }
+
+  test("a row with a null in a unique column is sent to the insert") {
+    import graft.ops.{FrameOps, HeldRows}
+    // Derby reports no key set over a nullable column, so this reads a
+    // Derby table and asks for the rows to send under the key set that
+    // Postgres or SQLite would report for UNIQUE (naam, code)
+    val url = freshDb()
+    ddl(url,
+      "CREATE TABLE code (id INT GENERATED ALWAYS AS IDENTITY PRIMARY KEY, " +
+        "naam VARCHAR(20) NOT NULL, code VARCHAR(10))",
+      "INSERT INTO code (naam, code) VALUES ('a', NULL), ('b', 'x')")
+    val schema = StructType(Seq(StructField("naam", StringType), StructField("code", StringType)))
+    val rows = HeldRows.data(Seq(Row("a", null), Row("b", "x"), Row("c", "y")), schema)
+    val sent = Connector.withConnection(spark, url)(c => FrameOps.unwritten(rows,
+      JdbcFrames.readQuery(c.conn, "SELECT DISTINCT naam, code FROM code", lowercaseLabels = true),
+      Seq(Seq("naam", "code"))))
+    // SQL's `=` never matches a null, so (a, null) is never found
+    // stored; (b, x) is, and (c, y) is not
+    assert(HeldRows.rows(sent) == Seq(Row("a", null), Row("c", "y")))
+  }
+
+  test("a DECIMAL key that matches only after a lossy cast is sent, not left out") {
+    val url = freshDb()
+    ddl(url,
+      "CREATE TABLE bedrag (id INT GENERATED ALWAYS AS IDENTITY PRIMARY KEY, " +
+        "amount DECIMAL(10,4) NOT NULL UNIQUE)",
+      "INSERT INTO bedrag (amount) VALUES (1.5049)")
+    // 1.5049 read as the frame's DECIMAL(6,2) is 1.50, but the table
+    // holds no 1.5000, so the insert writes the frame's 1.50
+    val data = spark.createDataFrame(java.util.List.of(Row(new java.math.BigDecimal("1.50"))),
+      StructType(Seq(StructField("amount", DecimalType(6, 2)))))
+    FaultyDriver.arm(Int.MaxValue)
+    Connector.withConnection(spark, FaultyDriver.url(url))(c => c.insert(data, "bedrag"))
+    assert(FaultyDriver.inserts == Seq(("bedrag", 1)), FaultyDriver.executions)
+    val amounts = Connector.withConnection(spark, url)(c => JdbcFrames.queryToDataFrame(spark,
+      c.conn, "SELECT amount FROM bedrag ORDER BY amount").collect().map(_.getDecimal(0)).toSeq)
+    assert(amounts == Seq(new java.math.BigDecimal("1.5000"), new java.math.BigDecimal("1.5049")))
+  }
+
+  test("a second load of the same frame starts no broadcast job and runs one collect") {
+    val lengtes = strDf("straat" -> Seq("Oudegracht", "Neude"), "lengte" -> Seq("1", "2"))
+    val data = strDf("land" -> Seq("NL", "NL"), "stad" -> Seq("Utrecht", "Utrecht"),
+      "straat" -> Seq("Oudegracht", "Neude")).join(broadcast(lengtes), "straat")
+    val url = streetDb()
+    // the first load plans the frame and builds its broadcast
+    var first: Seq[Row] = Nil
+    assert(broadcasts { first = Connector.withConnection(spark, url)(c => c.load(data).collect().toSeq) })
+    // the second collects through the frame's own plan, whose broadcast
+    // is built: the load's collect, then the test's
+    var second: Seq[Row] = Nil
+    val (built, actions) = withActions(broadcasts {
+      second = Connector.withConnection(spark, streetDb())(c => c.load(data).collect().toSeq)
+    })
+    assert(!built)
+    assert(actions == Seq("collect", "collect"), actions.mkString(", "))
+    assert(second.map(_.getAs[String]("straat")) == first.map(_.getAs[String]("straat")))
+    spark.catalog.clearCache()
+  }
+
+  test("load renames by its columns map as withColumnsRenamed does, and fails on duplicate columns") {
+    import graft.ops.FrameOps
+    val data = strDf("Land" -> Seq("NL"), "plaats" -> Seq("Utrecht"),
+      "straat" -> Seq("Oudegracht"), "lengte" -> Seq("1"))
+    // matched by the session's resolver, as Spark matches it
+    val columns = Map("LAND" -> "land", "plaats" -> "stad")
+    assert(FrameOps.renamed(data.schema, columns) == data.withColumnsRenamed(columns).schema)
+    val url = streetDb()
+    val out = Connector.withConnection(spark, url)(c => c.load(data, columns = columns))
+    assert(out.columns.toSeq == Seq("straat", "lengte", "land_id", "stad_id"))
+    assert(streetTables(url).map(_.size) == Seq(1, 1, 1))
+
+    // a rename that leaves two columns named alike: Spark keeps both,
+    // which the load could not tell apart, so it fails before it runs
+    // a Spark action or writes anything
+    val clash = Map("plaats" -> "LAND")
+    assert(data.withColumnsRenamed(clash).columns.toSeq == Seq("Land", "LAND", "straat", "lengte"))
+    val other = streetDb()
+    val (err, actions) = withActions(intercept[IllegalArgumentException](
+      Connector.withConnection(spark, other)(c => c.load(data, columns = clash))))
+    assert(err.getMessage.contains("leaves duplicate columns"), err.getMessage)
+    assert(actions.isEmpty, actions)
+    assert(streetTables(other).forall(_.isEmpty))
+  }
+
+  test("JdbcFrames.batchInsert binds each Row's fields by the names of its columns") {
+    val url = freshDb()
+    ddl(url, "CREATE TABLE paar (naam VARCHAR(20), bedrag DECIMAL(10,4), n BIGINT)")
+    val schema = StructType(Seq(StructField("n", LongType), StructField("naam", StringType),
+      StructField("bedrag", DecimalType(10, 4))))
+    val rows = Seq(Row(1L, "a", new java.math.BigDecimal("1.5049")), Row(null, "b", null))
+    val stored = Connector.withConnection(spark, url) { c =>
+      JdbcFrames.batchInsert(c.conn, "INSERT INTO paar (bedrag, naam, n) VALUES (?, ?, ?)",
+        rows, schema, Seq("bedrag", "naam", "n"))
+      JdbcFrames.queryToDataFrame(spark, c.conn, "SELECT naam, bedrag, n FROM paar ORDER BY naam")
+        .collect().toSeq
+    }
+    assert(stored == Seq(Row("a", new java.math.BigDecimal("1.5049"), 1L), Row("b", null, null)))
   }
 
   test("F1: vehicle star schema full load + compare round trip (test_sqlite_connector.py:130-234)") {
@@ -626,6 +787,10 @@ private object FaultyDriver extends java.sql.Driver {
   @volatile private var dies = false
   @volatile private var dead = false
   val executed = new AtomicInteger()
+  /** Each statement execution since [[arm]]: its SQL text, and the rows
+    * of its batch (0 for a query).
+    */
+  val executions = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
   /** The Derby connection behind the most recent faulty one. */
   @volatile var underlying: Connection = _
   DriverManager.registerDriver(this)
@@ -636,7 +801,15 @@ private object FaultyDriver extends java.sql.Driver {
     * fail every call on the connection after it as well.
     */
   def arm(k: Int, dies: Boolean = false): Unit = {
-    failAt = k; this.dies = dies; dead = false; executed.set(0)
+    failAt = k; this.dies = dies; dead = false; executed.set(0); executions.clear()
+  }
+
+  /** The INSERTs executed since [[arm]]: the table and the rows sent. */
+  def inserts: Seq[(String, Int)] = {
+    import scala.jdk.CollectionConverters._
+    executions.asScala.toSeq.collect {
+      case (sql, rows) if sql.startsWith("INSERT INTO ") => (sql.split(" ")(2), rows)
+    }
   }
 
   private def forward(target: AnyRef, m: Method, args: Array[AnyRef]): AnyRef =
@@ -648,14 +821,23 @@ private object FaultyDriver extends java.sql.Driver {
   private def proxy[T](iface: Class[_], handler: InvocationHandler): T =
     Proxy.newProxyInstance(getClass.getClassLoader, Array(iface), handler).asInstanceOf[T]
 
-  private def statement(target: Statement, iface: Class[_]): Statement =
+  /** `target`, of type `iface`, prepared with `prepared` if it was. */
+  private def statement(target: Statement, iface: Class[_], prepared: Option[String]): Statement = {
+    var batch = 0
     proxy(iface, (_: AnyRef, m: Method, args: Array[AnyRef]) => {
-      if (!dead && m.getName.startsWith("execute") && executed.incrementAndGet() == failAt) {
-        dead = dies
-        throw new SQLException(s"injected fault at statement $failAt")
+      if (!dead && m.getName == "addBatch") batch += 1
+      if (!dead && m.getName.startsWith("execute")) {
+        val sql = Option(args).flatMap(_.headOption).collect { case q: String => q }.orElse(prepared)
+        executions.add((sql.getOrElse(""), batch))
+        batch = 0
+        if (executed.incrementAndGet() == failAt) {
+          dead = dies
+          throw new SQLException(s"injected fault at statement $failAt")
+        }
       }
       forward(target, m, args)
     })
+  }
 
   def connect(url: String, info: java.util.Properties): Connection =
     if (!acceptsURL(url)) null
@@ -664,7 +846,8 @@ private object FaultyDriver extends java.sql.Driver {
       underlying = conn
       proxy(classOf[Connection], (_: AnyRef, m: Method, args: Array[AnyRef]) =>
         forward(conn, m, args) match {
-          case st: Statement => statement(st, m.getReturnType)
+          case st: Statement => statement(st, m.getReturnType,
+            if (m.getName.startsWith("prepare")) Some(args(0).toString) else None)
           case other => other
         })
     }

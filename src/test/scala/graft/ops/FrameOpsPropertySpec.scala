@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -164,10 +165,11 @@ class FrameOpsPropertySpec extends AnyFunSuite with SparkSpec {
          else Nil)
 
       val viaSpark = outcome(FrameOps.compareFrames(
-        FrameOps.frameOf(spark, data, dataSchema),
-        FrameOps.matchTypes(FrameOps.frameOf(spark, db, dbSchema), dataSchema),
+        HeldRows.frameOf(spark, data, dataSchema),
+        FrameOps.matchTypes(HeldRows.frameOf(spark, db, dbSchema), dataSchema),
         exact = false))
-      val driver = outcome(FrameOps.containsRows(data, dataSchema, db, dbSchema))
+      val driver = outcome(FrameOps.containsRows(HeldRows.data(data, dataSchema),
+        HeldRows.read(db, dbSchema)))
       assert(driver == viaSpark, s"seed $seed")
     }
   }
@@ -262,8 +264,9 @@ class FrameOpsPropertySpec extends AnyFunSuite with SparkSpec {
           case _       => Seq(row())
         }
       }
+      // the caller's frame as retrieveIds gets it: −0.0 may survive the dedup
       val data = Seq.fill(1 + rnd.nextInt(6))(dataRow())
-      val df = FrameOps.preprocess(FrameOps.frameOf(spark, data, dataSchema))
+      val df = FrameOps.preprocess(HeldRows.frameOf(spark, data, dataSchema))
       val keys = df.collect().toSeq
       // one key, or none, gets a fault; plus rows of the database's own,
       // and now and then a BIGINT that does not fit an INT
@@ -276,31 +279,43 @@ class FrameOpsPropertySpec extends AnyFunSuite with SparkSpec {
       val allowDuplication = rnd.nextInt(3) == 0
 
       withAnsi(seed % 2 == 0) {
-        val dbDf = FrameOps.frameOf(spark, db, dbSchema)
+        val dbDf = HeldRows.frameOf(spark, db, dbSchema)
         var viaSparkRows = Seq.empty[String]
         val viaSpark = verdict {
           val joined = FrameOps.mergeIds(df, dbDf, "id", "t", allowDuplication)
           viaSparkRows = contents(joined)
           joined.unpersist()
         }
-        val guard = FrameOps.idsOf(dataSchema, keys, dataSchema, db, dbSchema, "id", allowDuplication)
+        // the keys as the driver holds them: normalized (−0.0 as 0.0, one NaN)
+        val held = HeldRows.data(keys, dataSchema, spare = 1)
+        val dbHeld = HeldRows.read(db, dbSchema)
+        val guard = FrameOps.idsOf(dataSchema, held, dbHeld, "id", allowDuplication)
         assert(guard.isDefined == (viaSpark == "ok"), s"seed $seed: $viaSpark")
+        // mergeIdRows stands for mergeIds over a frame of the rows it holds
+        var heldSparkRows = Seq.empty[String]
+        val heldViaSpark = verdict {
+          val joined = FrameOps.mergeIds(HeldRows.frameOf(spark, HeldRows.rows(held), dataSchema),
+            dbDf, "id", "t", allowDuplication)
+          heldSparkRows = contents(joined)
+          joined.unpersist()
+        }
         var joinedRows = Seq.empty[String]
         var threadedRows = Seq.empty[String]
         val driver = verdict {
           // the frame is its own distinct projection: its rows are the keys
-          val (_, threaded) = FrameOps.mergeIdRows(spark, dataSchema, keys, keys, dataSchema,
-            db, dbSchema, "id", "t", allowDuplication)
-          threadedRows = rowContents(threaded)
+          val threaded = FrameOps.mergeIdRows(spark, held,
+            FrameOps.distinctRows(held, dataSchema.names.toSeq), dbHeld, "id", "t",
+            allowDuplication, slot = dataSchema.size)
+          threadedRows = rowContents(HeldRows.rows(threaded))
         }
         val framed = verdict {
-          joinedRows = contents(FrameOps.mergeIdFrame(df, keys, dataSchema,
-            db, dbSchema, "id", "t", allowDuplication))
+          joinedRows = contents(FrameOps.mergeIdFrame(df, held, dbHeld, "id", "t",
+            allowDuplication))
         }
-        assert(driver == viaSpark, s"seed $seed")
+        assert(driver == heldViaSpark, s"seed $seed")
         assert(framed == viaSpark, s"seed $seed")
         assert(joinedRows == viaSparkRows, s"seed $seed")
-        assert(threadedRows == viaSparkRows, s"seed $seed")
+        assert(threadedRows == heldSparkRows, s"seed $seed")
       }
     }
   }
@@ -332,19 +347,19 @@ class FrameOpsPropertySpec extends AnyFunSuite with SparkSpec {
       // a name as the session's resolver matches it: now and then in
       // upper case
       def anyCase(c: String): String = if (rnd.nextInt(3) == 0) c.toUpperCase else c
-      // distinct through `p`, so no dedup runs and −0.0 keeps its sign
-      val data = (0 until 1 + rnd.nextInt(8)).map(p => Row(
+      // distinct through `p`, so no dedup runs; normalized, as the load
+      // holds its rows
+      val data = HeldRows.normalized((0 until 1 + rnd.nextInt(8)).map(p => Row(
         maybe(pick(Double.NaN, 0.0, -0.0, 1.5)),
         maybe(pick(dec("1.50"), dec("-0.01"))),
         maybe(pick(Array[Byte](), Array[Byte](1, 2))),
         maybe(pick("a", "a ", "")),
         maybe(pick(1L, -3L)),
-        p))
-      // the Spark chain of the cascade as `load` ran it, and the schema
-      // and rows the driver follows it with
-      var chain: DataFrame = FrameOps.frameOf(spark, data, dataSchema)
-      var schema = dataSchema
-      var rows: Seq[Row] = data
+        p)), dataSchema)
+      // the Spark chain of the cascade as `load` ran it, and the rows the
+      // driver follows it with, with a free value per step for its id
+      var chain: DataFrame = HeldRows.frameOf(spark, data, dataSchema)
+      var held = HeldRows.data(data, dataSchema, spare = 3)
       val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
       var nextId = 0
       var failed = false
@@ -354,13 +369,14 @@ class FrameOpsPropertySpec extends AnyFunSuite with SparkSpec {
           val renames = chain.columns.toSeq.filter(_ => rnd.nextInt(4) == 0)
             .map(c => anyCase(c) -> s"${c}_$step").toMap
           val in = chain.withColumnsRenamed(renames)
-          val inSchema = FrameOps.renamed(schema, renames)
-          assert(inSchema == in.schema, s"seed $seed step $step: $renames")
+          val inHeld = held.copy(schema = FrameOps.renamed(held.schema, renames))
+          assert(inHeld.schema == in.schema, s"seed $seed step $step: $renames")
           val cols = in.columns.toSeq.filter(_ => rnd.nextInt(2) == 0) match {
             case Seq() => Seq(pick(in.columns.toSeq: _*))
             case some  => some
           }
-          val (keys, keySchema) = FrameOps.distinctRows(rows, inSchema, cols)
+          val keyHeld = FrameOps.distinctRows(inHeld, cols)
+          val (keys, keySchema) = (HeldRows.rows(keyHeld), keyHeld.schema)
           assert(unsigned(rowContents(keys)) ==
             unsigned(contents(FrameOps.getRows(in, cols))), s"seed $seed step $step")
 
@@ -411,38 +427,34 @@ class FrameOpsPropertySpec extends AnyFunSuite with SparkSpec {
 
           var sparkOut: DataFrame = null
           val viaSpark = verdict {
-            val joined = FrameOps.mergeIds(in, FrameOps.frameOf(spark, db, dbSchema),
+            val joined = FrameOps.mergeIds(in, HeldRows.frameOf(spark, db, dbSchema),
               alias, "t", allowDuplication)
             cached += joined
             val kept = if (replace) FrameOps.dropReplaced(joined, natural) else joined
             sparkOut = FrameOps.postprocess(kept, renames)
           }
-          var outSchema: StructType = null
-          var outRows = Seq.empty[Row]
+          var out: FrameOps.Held = null
           val (driver, actions) = withActions(verdict {
-            val (joinedSchema, joined) = FrameOps.mergeIdRows(spark, inSchema, rows,
-              keys, keySchema, db, dbSchema, alias, "t", allowDuplication)
-            val (kept, keptRows) =
-              if (replace) FrameOps.dropRows(joinedSchema, joined, natural)
-              else (joinedSchema, joined)
-            outSchema = FrameOps.postprocessed(kept, renames)
-            outRows = keptRows
+            val joined = FrameOps.mergeIdRows(spark, inHeld, keyHeld,
+              HeldRows.read(db, dbSchema), alias, "t", allowDuplication,
+              slot = dataSchema.size + step)
+            val kept = if (replace) FrameOps.dropRows(joined, natural) else joined
+            out = kept.copy(schema = FrameOps.postprocessed(kept.schema, renames))
           })
           assert(driver == viaSpark, s"seed $seed step $step")
           // a join that passes is decided on the driver, with no Spark action
           if (driver == "ok") assert(actions.isEmpty, s"seed $seed step $step: $actions")
           if (driver != "ok") failed = true
           else {
-            assert(outSchema == sparkOut.schema, s"seed $seed step $step")
-            assert(rowContents(outRows) == contents(sparkOut), s"seed $seed step $step")
+            assert(out.schema == sparkOut.schema, s"seed $seed step $step")
+            assert(rowContents(HeldRows.rows(out)) == contents(sparkOut), s"seed $seed step $step")
             chain = sparkOut
-            schema = outSchema
-            rows = outRows
+            held = out
           }
         }
       }
-      assert(schema == chain.schema, s"seed $seed")
-      assert(rowContents(rows) == contents(chain), s"seed $seed")
+      assert(held.schema == chain.schema, s"seed $seed")
+      assert(rowContents(HeldRows.rows(held)) == contents(chain), s"seed $seed")
       cached.foreach(_.unpersist())
     }
   }
@@ -475,7 +487,7 @@ class FrameOpsPropertySpec extends AnyFunSuite with SparkSpec {
       val df = spark.createDataFrame(spark.sparkContext.parallelize(data, 1 + rnd.nextInt(3)),
         schema)
       val viaSpark = FrameOps.preprocess(df).collect().toSeq
-      val driver = FrameOps.distinctRows(df.collect().toSeq, df.schema)
+      val driver = HeldRows.rows(FrameOps.distinctRows(Bridge.collectInternal(df), df.schema))
       assert(driver.size == viaSpark.size, s"seed $seed")
       assert(unsigned(rowContents(driver)) == unsigned(rowContents(viaSpark)), s"seed $seed")
     }
@@ -508,7 +520,7 @@ class FrameOpsPropertySpec extends AnyFunSuite with SparkSpec {
       if (!nulls)
         Predef.assert(db.size >= n, s"Compare query yielded fewer rows (${db.size}) than data.")
       FrameOps.compareFrames(df,
-        FrameOps.matchTypes(FrameOps.frameOf(spark, db, dbSchema), dataSchema), exact = exact)
+        FrameOps.matchTypes(HeldRows.frameOf(spark, db, dbSchema), dataSchema), exact = exact)
     }
 
     (1 to 40).foreach { seed =>
@@ -535,7 +547,7 @@ class FrameOpsPropertySpec extends AnyFunSuite with SparkSpec {
           })
       }
       val data = Seq.fill(rnd.nextInt(7))(dataRow())
-      val df = FrameOps.preprocess(FrameOps.frameOf(spark, data, dataSchema)).cache()
+      val df = FrameOps.preprocess(HeldRows.frameOf(spark, data, dataSchema)).cache()
       // the database side of a load: usually every data row, some twice;
       // now and then one missing, rows of its own, or an overflowing
       // DECIMAL
@@ -543,16 +555,22 @@ class FrameOpsPropertySpec extends AnyFunSuite with SparkSpec {
         (if (rnd.nextInt(4) == 0) Seq.fill(1 + rnd.nextInt(2))(toDb(dataRow())) else Nil) ++
         (if (rnd.nextInt(8) == 0) Seq(Row(null, "a", 1, null, dec("123456.7890"), 1.5)) else Nil)
 
-      val rows = df.collect().toSeq
+      // the rows as the driver holds them: normalized (−0.0 as 0.0, one
+      // NaN); compareRows stands for the compare over a frame of them
+      val held = HeldRows.data(df.collect().toSeq, df.schema)
+      val heldDf = HeldRows.frameOf(spark, HeldRows.rows(held), dataSchema)
       Seq(true, false).foreach { exact =>
-        val viaSpark = verdict(sparkCompare(df, db, exact))
+        val viaSpark = verdict(sparkCompare(heldDf, db, exact))
         val (driver, actions) =
-          withActions(verdict(FrameOps.compareRows(spark, df.schema, rows, db, dbSchema, exact)))
+          withActions(verdict(FrameOps.compareRows(spark, held, HeldRows.read(db, dbSchema), exact)))
         assert(driver == viaSpark, s"seed $seed exact $exact")
+        // and the caller's frame, before normalizing, passes or fails alike
+        assert((verdict(sparkCompare(df, db, exact)) == "ok") == (driver == "ok"),
+          s"seed $seed exact $exact")
         // the driver decides a passing compare alone: compareFrames runs
         // only on a real mismatch
         val compared = verdict(FrameOps.compareFrames(df,
-          FrameOps.matchTypes(FrameOps.frameOf(spark, db, dbSchema), dataSchema), exact))
+          FrameOps.matchTypes(HeldRows.frameOf(spark, db, dbSchema), dataSchema), exact))
         if (compared == "ok") assert(actions.isEmpty, s"seed $seed exact $exact: $actions")
       }
       df.unpersist()

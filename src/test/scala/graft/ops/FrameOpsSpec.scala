@@ -101,7 +101,7 @@ class FrameOpsSpec extends AnyFunSuite with SparkSpec {
     try Seq("true", "false").foreach { ansi =>
       spark.conf.set("spark.sql.ansi.enabled", ansi)
       val e = intercept[MatchDatatypesError](
-        FrameOps.containsRows(Seq(Row(1)), target, dbRows, dbSchema))
+        FrameOps.containsRows(HeldRows.data(Seq(Row(1)), target), HeldRows.read(dbRows, dbSchema)))
       assert(e.getMessage == label)
       val viaSpark = intercept[Exception](FrameOps.matchTypes(
         spark.createDataFrame(spark.sparkContext.parallelize(dbRows, 1), dbSchema),
@@ -110,16 +110,17 @@ class FrameOpsSpec extends AnyFunSuite with SparkSpec {
         Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
       assert(messages(viaSpark).exists(_.contains(label)), viaSpark)
       // a null casts to null, and a castable value is found
-      FrameOps.containsRows(Seq(Row(1)), target, Seq(Row(null), Row("1")), dbSchema)
+      FrameOps.containsRows(HeldRows.data(Seq(Row(1)), target),
+        HeldRows.read(Seq(Row(null), Row("1")), dbSchema))
     } finally spark.conf.set("spark.sql.ansi.enabled", prev)
   }
 
   test("the inexact compare of an empty cached frame raises on a value that does not cast, every time") {
     import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
     val target = StructType(Seq(StructField("a", IntegerType)))
-    val data = FrameOps.frameOf(spark, Nil, target).cache()
+    val data = HeldRows.frameOf(spark, Nil, target).cache()
     assert(data.count() == 0)
-    val db = FrameOps.matchTypes(FrameOps.frameOf(spark, Seq(Row("not-a-number")),
+    val db = FrameOps.matchTypes(HeldRows.frameOf(spark, Seq(Row("not-a-number")),
       StructType(Seq(StructField("a", StringType)))), target)
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
