@@ -9,7 +9,7 @@ import org.apache.spark.sql.internal.SQLConf
 import graft.{CompareMissingRowsError, InsertingDataFailedError}
 import graft.ops.FrameOps
 import graft.ops.FrameOps.Held
-import graft.schema.Schema
+import graft.schema.{InsertAndRetrieveSpec, Schema}
 
 /** Transactional database connector — the Spark port of the
   * reference's `DBConnector` (`sql_autoloader/connector.py:81-452`)
@@ -18,26 +18,27 @@ import graft.schema.Schema
   * commit on clean exit, rollback on any exception — which is what
   * makes `load`'s validation failure undo the whole load.
   *
-  * Spark shape: [[load]] collects the caller's frame once, as given,
-  * through the frame's own plan, so a frame this session collected
-  * before is not planned or broadcast again; it applies `columns` to
-  * the schema on the driver. The whole cascade runs on the driver over
-  * those Catalyst rows (`FrameOps.Held`), so a load is one Spark action
-  * however many tables it fills. It dedups the rows, then each step
-  * projects them onto its table, reads the table, inserts only the
-  * projection rows that read lacks (see [[JdbcFrames]]), reads the
-  * table again only if it sent a row or the first read stopped early
-  * (a table holding more than twice the rows the step could send), and
-  * checks the last read on the driver against the rows it could
-  * insert: the per-insert read-back check (D1,
-  * [[FrameOps.containsRows]]) and the id guard and id threading
-  * ([[FrameOps.mergeIdRows]]). The final compare (D2,
-  * [[FrameOps.compareRows]]) checks the deduped rows against its read.
-  * A check that fails runs the Spark operator it stands for over a
-  * frame of the rows the driver holds, which raises the error. The
-  * frame returned is a local one of the threaded rows. The single-table
-  * calls ([[insert]], [[retrieveIds]], [[insertAndRetrieveIds]]) collect
-  * only their table's projection, and the last two return a Spark join.
+  * Spark shape: [[load]] is [[keyedStep]] in a loop, as the reference's
+  * is `insert_and_retrieve_ids` in one. It collects the caller's frame
+  * once, as given, through the frame's own plan, so a frame this
+  * session collected before is not planned or broadcast again; it
+  * applies `columns` to the schema on the driver and dedups the rows
+  * there. Each step runs on the driver over those Catalyst rows
+  * (`FrameOps.Held`), so a load is one Spark action however many
+  * tables it fills: it projects the rows onto its table, reads the
+  * table, inserts only the projection rows that read lacks (see
+  * [[JdbcFrames]]), reads the table again only if it sent a row or the
+  * first read stopped early (a table holding more than twice the rows
+  * the step could send), checks the last read against the rows it
+  * could insert (D1, [[FrameOps.containsRows]]) and threads the ids it
+  * read through the rows, guarding them ([[FrameOps.mergeIdRows]]). The
+  * final compare (D2, [[FrameOps.compareRows]]) checks the deduped rows
+  * against its read. Each check raises its own error from the rows the
+  * driver holds. [[retrieveIds]] and [[insertAndRetrieveIds]] run one
+  * step over the caller's frame, collected as [[load]] collects it, and
+  * return a local frame as [[load]] does; [[compare]] runs D2 over the
+  * frame collected the same way. [[insert]] collects only its table's
+  * projection.
   */
 final class Connector(
     val spark: SparkSession,
@@ -68,6 +69,8 @@ final class Connector(
       columns: Map[String, String] = Map.empty,
   ): Unit = {
     schema.checkSchemaNotEmpty()
+    // a rename that leaves two columns alike fails here, as in every entry point
+    withConf(FrameOps.renamed(data.schema, columns))
     val pre = data.withColumnsRenamed(columns)
     insertRenamed(pre.columns.toSeq, collected(pre), table)
   }
@@ -149,9 +152,8 @@ final class Connector(
     SQLConf.withExistingConf(spark.sessionState.conf)(body)
 
   /** Fetch `(pk as alias, cols...)` and null-safe-join the ids into
-    * data — §3.3 (`connector.py:230-284`). The fetched id table is
-    * broadcast in the join (small by construction); the join is
-    * returned uncached.
+    * data — §3.3 (`connector.py:230-284`): one [[keyedStep]] that only
+    * reads the table.
     */
   def retrieveIds(
       data: DataFrame,
@@ -160,9 +162,9 @@ final class Connector(
       columns: Map[String, String] = Map.empty,
       replace: Boolean = true,
       allowDuplication: Boolean = false,
-  ): DataFrame = keyedFrame(data, table, alias, columns, replace, allowDuplication, insert = false)
+  ): DataFrame = keyed(data, table, alias, columns, replace, allowDuplication, insert = false)
 
-  /** `connector.py:286-324`. */
+  /** `connector.py:286-324`: one [[keyedStep]]. */
   def insertAndRetrieveIds(
       data: DataFrame,
       table: String,
@@ -170,14 +172,14 @@ final class Connector(
       columns: Map[String, String] = Map.empty,
       replace: Boolean = true,
       allowDuplication: Boolean = false,
-  ): DataFrame = keyedFrame(data, table, alias, columns, replace, allowDuplication, insert = true)
+  ): DataFrame = keyed(data, table, alias, columns, replace, allowDuplication, insert = true)
 
   /** [[retrieveIds]], and [[insertAndRetrieveIds]] when `insert` is set:
-    * one [[keyedStep]] over the deduped frame, whose rows the driver
-    * does not hold, so the ids join it in Spark
-    * ([[FrameOps.mergeIdFrame]]).
+    * [[load]] with one step and no compare. The caller's frame is
+    * collected and deduped as [[load]] collects it, and the step's rows
+    * come back as a local frame.
     */
-  private def keyedFrame(
+  private def keyed(
       data: DataFrame,
       table: String,
       alias: String,
@@ -187,40 +189,49 @@ final class Connector(
       insert: Boolean,
   ): DataFrame = {
     schema.checkSchemaNotEmpty()
-    val pre = FrameOps.preprocess(data, columns)
-    val joined = keyedStep(pre.columns.toSeq, collected(pre), table, alias, insert) {
-      FrameOps.mergeIdFrame(pre, _, _, alias, table, allowDuplication)
+    withConf {
+      // renamed before the collect: a rename that fails runs no action
+      val renamed = FrameOps.renamed(data.schema, columns)
+      val pre = FrameOps.distinctRows(Bridge.collectInternal(data), renamed, spare = 1)
+      val out = keyedStep(pre, InsertAndRetrieveSpec(table, alias, Nil), insert, replace,
+        allowDuplication, slot = pre.schema.size)
+      FrameOps.localFrame(spark, out.copy(schema = FrameOps.postprocessed(out.schema, columns)))
     }
-    val kept = if (replace) FrameOps.dropReplaced(joined, schema.getColumns(table)) else joined
-    FrameOps.postprocess(kept, columns)
   }
 
-  /** The one step behind [[load]], [[retrieveIds]] and
-    * [[insertAndRetrieveIds]], over a frame already renamed, with
-    * columns `columns` and distinct projections `project`: the table's
-    * projection, written with [[insertMissing]] when `insert` is set,
-    * and the table's last read with the retrieve query; then `thread`,
-    * given the projection and that read, which guards the ids and
-    * threads them through the frame.
+  /** The one step of [[load]], [[retrieveIds]] and
+    * [[insertAndRetrieveIds]] (`connector.py:286-324`) over rows the
+    * driver holds: rename the columns `spec` names otherwise, project
+    * the rows onto the table, write what the table lacks when `insert`
+    * is set ([[insertMissing]]) and read it, write the ids that read
+    * holds into value `slot` of each row, guarding them
+    * ([[FrameOps.mergeIdRows]]), drop the table's natural columns when
+    * `replace` is set, and undo the renames.
     */
-  private def keyedStep[A](
-      columns: Seq[String],
-      project: Seq[String] => Held,
-      table: String,
-      alias: String,
+  private def keyedStep(
+      held: Held,
+      spec: InsertAndRetrieveSpec,
       insert: Boolean,
-  )(thread: (Held, Held) => A): A = {
-    val (primaryKey, commonColumns) = schema.parseRetrieve(table, alias, columns)
-    val keys = project(commonColumns)
-    val query = dialect.getRetrieveQuery(table, primaryKey, alias, commonColumns)
-    withConf {
-      val db = if (insert) insertMissing(keys, table, commonColumns, query) else read(query)
-      thread(keys, db)
-    }
+      replace: Boolean,
+      allowDuplication: Boolean,
+      slot: Int,
+  ): Held = {
+    val renames = spec.columns.toMap
+    val in = held.copy(schema = FrameOps.renamed(held.schema, renames))
+    val (primaryKey, commonColumns) = schema.parseRetrieve(spec.table, spec.alias, in.schema.names.toSeq)
+    val query = dialect.getRetrieveQuery(spec.table, primaryKey, spec.alias, commonColumns)
+    val db =
+      if (insert) insertMissing(FrameOps.distinctRows(in, commonColumns), spec.table, commonColumns, query)
+      else read(query)
+    val joined = FrameOps.mergeIdRows(spark, in, commonColumns, db, spec.alias, spec.table,
+      allowDuplication, slot)
+    val kept = if (replace) FrameOps.dropRows(joined, schema.getColumns(spec.table)) else joined
+    kept.copy(schema = FrameOps.postprocessed(kept.schema, renames))
   }
 
   /** Validate loaded data against a (generated) reconstruction query
-    * — D2 (`connector.py:326-374`).
+    * — D2 (`connector.py:326-374`), over the caller's frame collected
+    * and deduped as [[load]] collects it.
     */
   def compare(
       data: DataFrame,
@@ -230,9 +241,11 @@ final class Connector(
       exact: Boolean = true,
   ): Unit = {
     schema.checkSchemaNotEmpty()
-    val pre = FrameOps.preprocess(data, columns)
-    compareDistinct(FrameOps.distinctRows(Bridge.collectInternal(pre), pre.schema),
-      query, where, exact)
+    withConf {
+      // renamed before the collect: a rename that fails runs no action
+      val renamed = FrameOps.renamed(data.schema, columns)
+      compareDistinct(FrameOps.distinctRows(Bridge.collectInternal(data), renamed), query, where, exact)
+    }
   }
 
   /** [[compare]] of distinct rows the driver holds, of a frame already
@@ -245,7 +258,7 @@ final class Connector(
       exact: Boolean,
   ): Unit = {
     val q = query.getOrElse(schema.getCompareQuery(rows.schema.names.toSeq, where))
-    withConf(FrameOps.compareRows(spark, rows, read(q), exact))
+    FrameOps.compareRows(spark, rows, read(q), exact)
   }
 
   /** The flagship: plan, cascade inserts in topological order threading
@@ -256,22 +269,18 @@ final class Connector(
     * load's one Spark action: through the frame's own plan, so a frame
     * collected before (a reload of the same frame) runs no analysis,
     * optimization, planning or broadcast again. `columns` renames the
-    * schema on the driver, as `withColumnsRenamed` renames the frame.
-    * The rows are deduped on the driver as `dropDuplicates` dedups them,
-    * with room for one id per step. The cascade runs on the driver over
-    * those rows, carrying their schema as Spark would change it: each
-    * step renames the columns its table names otherwise, projects the
-    * rows onto its table, writes what the table lacks and reads it,
-    * checks the read (D1, the id guard), writes the ids it read into the
-    * rows, drops the table's natural columns from the schema and undoes
-    * its renames. Every id join keeps the rows distinct (rows that
+    * schema on the driver, as `withColumnsRenamed` renames the frame,
+    * before the collect, and the rows are deduped with room for one id
+    * per step. The cascade folds [[keyedStep]] over
+    * those rows in topological order, carrying their schema as Spark
+    * would change it. Every id join keeps the rows distinct (rows that
     * differ only on a table's dropped natural columns join to different
     * keys), so no step re-dedups them. D2 checks the deduped rows
-    * against its read. When a check fails, the Spark operator it stands
-    * for runs over a frame of the rows the driver holds and raises its
-    * error, so the load stays exact and all-or-nothing and never
-    * evaluates the caller's frame again; when the id guard cannot
-    * decide, [[FrameOps.mergeIds]] decides.
+    * against its read. Every check raises its error from the rows the
+    * driver holds, so a failing load never evaluates the caller's frame
+    * again; only keys the driver cannot match as Spark does
+    * ([[FrameOps.mergeIdRows]], [[FrameOps.compareRows]]) run a Spark
+    * job to decide.
     *
     * The returned frame is a local one of the threaded rows: its plan
     * holds them, with no cache, join or broadcast under it.
@@ -297,15 +306,7 @@ final class Connector(
 
       // phase 1: insert+retrieve in topo order, ids cascade through the rows
       val out = steps.zipWithIndex.foldLeft(pre) { case (acc, (spec, step)) =>
-        val renames = spec.columns.toMap
-        val in = acc.copy(schema = FrameOps.renamed(acc.schema, renames))
-        val joined = keyedStep(in.schema.names.toSeq, FrameOps.distinctRows(in, _), spec.table,
-          spec.alias, insert = true) {
-          FrameOps.mergeIdRows(spark, in, _, _, spec.alias, spec.table, allowDuplication,
-            slot = preSchema.size + step)
-        }
-        val kept = if (replace) FrameOps.dropRows(joined, schema.getColumns(spec.table)) else joined
-        kept.copy(schema = FrameOps.postprocessed(kept.schema, renames))
+        keyedStep(acc, spec, insert = true, replace, allowDuplication, slot = preSchema.size + step)
       }
       // phase 2: plain inserts
       instructions.insert.foreach { spec =>

@@ -25,9 +25,7 @@ import graft.ops.FrameOps
   * with [[readQuery]] into Catalyst rows on the driver, and its checks
   * (D1, the id guard, the final compare), the choice of rows to insert
   * and the id threading run there over those values; [[batchInsert]]
-  * binds its parameters from the same values. Only the id join of
-  * `retrieveIds` and `insertAndRetrieveIds`, and a failing check's
-  * error path, run in Spark.
+  * binds its parameters from the same values.
   */
 object JdbcFrames {
 
@@ -95,10 +93,9 @@ object JdbcFrames {
       conn: Connection, sql: String, rows: Seq[Row], schema: StructType,
       columns: Seq[String],
   ): Unit = {
-    val fields = columns.map(schema.fieldIndex)
-    executeBatch(conn, sql, rows) { (ps, row) =>
-      fields.zipWithIndex.foreach { case (f, i) => bind(ps, i + 1, row.get(f)) }
-    }
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
+    batchInsert(conn, sql, FrameOps.Held(schema,
+      rows.map(toCatalyst(_).asInstanceOf[GenericInternalRow]).toIndexedSeq), columns)
   }
 
   /** [[batchInsert]] of rows the loader holds: parameter i binds the
@@ -112,22 +109,14 @@ object JdbcFrames {
     val at = fields.map(rows.at).toArray
     val toJdbc = fields.map(f => CatalystTypeConverters.createToScalaConverter(rows.schema(f).dataType))
       .toArray
-    executeBatch(conn, sql, rows.rows) { (ps, row) =>
-      at.indices.foreach(i => bind(ps, i + 1, toJdbc(i)(row.values(at(i)))))
-    }
-  }
-
-  /** Execute `sql` as one batch of `rows`, each bound by `bindRow`. */
-  private def executeBatch[R](
-      conn: Connection, sql: String, rows: Seq[R],
-  )(bindRow: (PreparedStatement, R) => Unit): Unit =
     Using.resource(conn.prepareStatement(sql)) { ps =>
-      rows.foreach { row =>
-        bindRow(ps, row)
+      rows.rows.foreach { row =>
+        at.indices.foreach(i => bind(ps, i + 1, toJdbc(i)(row.values(at(i)))))
         ps.addBatch()
       }
       ps.executeBatch()
     }
+  }
 
   private def bind(ps: PreparedStatement, idx: Int, v: Any): Unit = v match {
     case null                      => ps.setObject(idx, null)

@@ -17,27 +17,26 @@ import graft.{CompareMissingRowsError, CompareNoExactMatchError, MatchDatatypesE
   * `sql_autoloader/dataframe_operations.py` + `connector.py:26-59`
   * (SURVEY.md §2.A, ops A1-A11).
   *
-  * Scale notes: the database side of every check is rows the driver
-  * already read, and the id join of the single-table calls broadcasts
-  * those rows (id/dimension tables are small next to the data being
-  * loaded). `Connector.load` collects the caller's frame once, as
-  * Catalyst rows, and runs its cascade on those rows ([[Held]]): the
-  * dedup and each step's projection ([[distinctRows]]), the rows an
+  * Scale notes: `Connector`'s entry points collect the caller's frame
+  * once, as Catalyst rows, and run the loader on those rows ([[Held]]):
+  * the dedup and each step's projection ([[distinctRows]]), the rows an
   * insert may write ([[unwritten]]), D1 ([[containsRows]]), the id
-  * guard and the id threading ([[mergeIdRows]]), the renames and drops
+  * threading and its guards ([[mergeIdRows]]), the renames and drops
   * between steps ([[renamed]], [[dropRows]]) and D2 ([[compareRows]])
-  * run on the driver with no Spark job, and the frame it returns is a
-  * local one of the threaded rows ([[localFrame]]). Values are
-  * normalized once, as the rows come in, and every check keys them
-  * with no further conversion, by Spark's own casts and equality
-  * (null-safe, byte arrays by content, NaNs equal, −0.0 as 0.0); ids
-  * go into free values of each row and dropped columns leave only the
-  * row's index map, so rows of the output schema are built once, at
-  * the end. When a check finds a failure, or cannot decide, the Spark
-  * operator it stands for ([[mergeIds]], [[compareFrames]]) runs over a
-  * frame of the rows the driver holds and raises its own error. The
-  * only other actions are the row-count guards in [[mergeIds]] (cached
-  * first) and [[hasNulls]]' one aggregation.
+  * run on the driver with no Spark job, against database rows the
+  * driver read, and the frame returned is a local one of the threaded
+  * rows ([[localFrame]]). Values are normalized once, as the rows come
+  * in, and every check keys them with no further conversion, by Spark's
+  * own casts and equality (null-safe, byte arrays by content, NaNs
+  * equal, −0.0 as 0.0); ids go into free values of each row and dropped
+  * columns leave only the row's index map, so rows of the output schema
+  * are built once, at the end. Each check raises its error itself, with
+  * the text of the Spark operator it stands for ([[mergeIds]],
+  * [[compareFrames]]); that operator runs, over a frame of the rows the
+  * driver holds, only for keys the driver cannot match as Spark does
+  * ([[dbReaders]]). The Spark operators' own actions are the row-count
+  * guards in [[mergeIds]] (cached first), the two `except` jobs of
+  * [[compareFrames]] and [[hasNulls]]' one aggregation.
   */
 object FrameOps {
 
@@ -48,13 +47,11 @@ object FrameOps {
   def preprocess(df: DataFrame, columns: Map[String, String] = Map.empty): DataFrame =
     // post-dedup coalesce(1): the dedup's map-side partial aggregation
     // still runs distributed; only the (already per-partition-deduped)
-    // final merge collapses to one task. `retrieveIds`,
-    // `insertAndRetrieveIds` and `compare` collect the result or a
-    // projection of it on the driver for a single-connection JDBC
-    // boundary, so any other width pays shuffle.partitions near-empty
-    // tasks per action (and a .cache() on the result would pin that
-    // width against AQE coalescing: measured 32-task stages over
-    // 25-row frames in c_load_roundtrip)
+    // final merge collapses to one task. The frames this returns are
+    // small and end at the driver (the A1 gates collect them), so any
+    // other width pays shuffle.partitions near-empty tasks per action
+    // (and a .cache() on the result would pin that width against AQE
+    // coalescing: measured 32-task stages over 25-row frames)
     df.withColumnsRenamed(columns).dropDuplicates().coalesce(1)
 
   /** A2 (`connector.py:43-59`): invert the rename for columns still
@@ -116,7 +113,7 @@ object FrameOps {
     require(columns.forall(df.columns.contains),
       "Not all columns appear in dataframe.")
     // same post-dedup coalesce(1) as [[preprocess]] — see the note
-    // there (these rows are about to cross the JDBC boundary)
+    // there (these rows end at the driver too)
     df.select(columns.map(quoted): _*).dropDuplicates().coalesce(1)
   }
 
@@ -174,7 +171,17 @@ object FrameOps {
       table: String,
       allowDuplication: Boolean = false,
   ): DataFrame = {
-    val joined = joinIds(df, dbDf, alias).cache()
+    require(dbDf.columns.contains(alias),
+      "Provided alias not found in fetch from database.")
+    val onColumns = df.columns.toSeq.intersect(dbDf.columns.toSeq)
+    val r = broadcast(matchTypes(dbDf, df.schema).alias("r"))
+    val cond: Column = onColumns
+      .map(c => col(s"l.`$c`") <=> col(s"r.`$c`"))
+      .reduceOption(_ && _)
+      .getOrElse(lit(true))
+    val joined = df.alias("l").join(r, cond, "left")
+      .select(df.columns.map(c => col(s"l.`$c`")) :+ col(s"r.`$alias`").as(alias): _*)
+      .cache()
     try {
       val origLen = df.count()
       // row count + null-id count in one aggregation job
@@ -183,40 +190,23 @@ object FrameOps {
       val newLen = stats.getLong(0)
       val nullIds = if (stats.isNullAt(1)) 0L else stats.getLong(1)
       assert(newLen >= origLen, "Rows were lost when joining on ids.")
-      if (newLen != origLen && !allowDuplication)
-        throw new AssertionError("Rows were duplicated when joining on ids.")
-
-      if (nullIds > 0) {
-        val sample = joined.filter(quoted(alias).isNull).limit(20).collect()
-          .mkString("\n")
-        throw new MissingKeysAfterMergeError(
-          s"When reading from $table Some id's were returned as NA:\n$sample\n" +
-            "Check if the uniqueness assumptions you made in your database schema are correct, " +
-            "or whether your made a mistake in your schema definitions somewhere.")
-      }
+      if (newLen != origLen && !allowDuplication) throw duplicatedIdsError
+      if (nullIds > 0)
+        throw missingKeysError(table, joined.filter(quoted(alias).isNull).limit(20).collect())
       joined
     } catch {
       case e: Throwable => joined.unpersist(); throw e
     }
   }
 
-  /** [[mergeIds]]' join, uncached and unguarded. */
-  private def joinIds(df: DataFrame, dbDf: DataFrame, alias: String): DataFrame = {
-    require(dbDf.columns.contains(alias),
-      "Provided alias not found in fetch from database.")
-    val onColumns = df.columns.toSeq.intersect(dbDf.columns.toSeq)
+  private def duplicatedIdsError: AssertionError =
+    new AssertionError("Rows were duplicated when joining on ids.")
 
-    val l = df.alias("l")
-    val r = broadcast(matchTypes(dbDf, df.schema).alias("r"))
-
-    val cond: Column = onColumns
-      .map(c => col(s"l.`$c`") <=> col(s"r.`$c`"))
-      .reduceOption(_ && _)
-      .getOrElse(lit(true))
-
-    l.join(r, cond, "left")
-      .select(df.columns.map(c => col(s"l.`$c`")) :+ col(s"r.`$alias`").as(alias): _*)
-  }
+  private def missingKeysError(table: String, rows: Iterable[Row]): MissingKeysAfterMergeError =
+    new MissingKeysAfterMergeError(
+      s"When reading from $table Some id's were returned as NA:\n${rows.mkString("\n")}\n" +
+        "Check if the uniqueness assumptions you made in your database schema are correct, " +
+        "or whether your made a mistake in your schema definitions somewhere.")
 
   /** Rows the driver holds, in Catalyst form: column `i` of `schema`
     * is value `at(i)` of each row. A row may hold more values than its
@@ -256,44 +246,52 @@ object FrameOps {
   }
 
   /** `mergeIds(frameOf(held), frameOf(db), ...)` on the driver, for rows
-    * the driver holds whose distinct projection onto every column the
-    * join matches on is `keys`, and a read `db` of the table. Returns
-    * the join: each row once per id its key matches, the id appended as
-    * the join appends it (nullable, the database column's type), at
-    * value `slot` of the row, which no column of `held` may use. A row
-    * takes its first id in place and is copied for each further one.
-    * When [[idsOf]] passes, no Spark job runs. Otherwise [[mergeIds]]
-    * runs over a frame of the rows: it raises the error the guard
-    * found, or decides where the driver could not, and then its cached
-    * result is collected and released.
+    * the driver holds, the table columns `columns` the rows were
+    * projected onto, and a read `db` of the table: each row once per id
+    * its key matches, the id appended as the join appends it (nullable,
+    * the database column's type), at value `slot` of the row, which no
+    * column of `held` may use. A row takes its first id in place and is
+    * copied for each further one; a row whose key matches none keeps a
+    * null id. Then it raises [[mergeIds]]' errors from the rows it
+    * threaded: the duplication guard first, then the first 20 rows with a
+    * null id. No Spark job runs, unless [[idsOf]] finds keys only Spark
+    * can match: then [[mergeIds]] runs over a frame of the rows, and its
+    * cached result is collected and released.
     */
   private[graft] def mergeIdRows(
       spark: SparkSession,
-      held: Held, keys: Held, db: Held,
+      held: Held, columns: Seq[String], db: Held,
       alias: String,
       table: String,
       allowDuplication: Boolean,
       slot: Int,
   ): Held = {
     require(!held.at.contains(slot), s"Value $slot of each row must be free for the id.")
-    idsOf(held.schema, keys, db, alias, allowDuplication) match {
-      case Some(byKey) =>
-        val on = keys.schema.names.filter(db.schema.names.contains)
-        val key = gather(on.map(c => held.at(held.schema.fieldIndex(c))))
-        val id = db.schema(alias).copy(nullable = true)
-        Held(StructType(held.schema.fields :+ id), held.at :+ slot, held.rows.flatMap { r =>
-          byKey(key(r)).iterator.zipWithIndex.map { case (i, n) =>
+    val at = held.at :+ slot
+    idsOf(held.schema, columns, db, alias) match {
+      case Some((on, byKey)) =>
+        val schema = StructType(held.schema.fields :+ db.schema(alias).copy(nullable = true))
+        val key = gather(on.map(c => held.at(held.schema.fieldIndex(c))).toIndexedSeq)
+        val noId = Vector(null)
+        val missing = mutable.ArrayBuffer.empty[GenericInternalRow]
+        val rows = held.rows.flatMap { r =>
+          val ids = byKey.getOrElse(key(r), noId)
+          if (ids.size > 1 && !allowDuplication) throw duplicatedIdsError
+          ids.iterator.zipWithIndex.map { case (i, n) =>
             val row = if (n == 0) r else new GenericInternalRow(r.values.clone())
             row.update(slot, i)
+            if (i == null && missing.size < 20) missing += row
             row
           }
-        })
+        }
+        if (missing.nonEmpty)
+          throw missingKeysError(table, scalaRows(schema, Held(schema, at, missing.toIndexedSeq).compact))
+        Held(schema, at, rows)
       case None =>
         val guarded = mergeIds(frameOf(spark, held), frameOf(spark, db), alias, table,
           allowDuplication)
         try {
           val width = held.rows.headOption.fold(0)(_.numFields)
-          val at = held.at :+ slot
           val types = guarded.schema.fields.map(_.dataType)
           Held(guarded.schema, at, Bridge.collectInternal(guarded).toIndexedSeq.map { r =>
             val values = new Array[Any](width)
@@ -304,62 +302,29 @@ object FrameOps {
     }
   }
 
-  /** `mergeIds(df, frameOf(db), ...)` for a frame the driver does not
-    * hold, guarded as [[mergeIdRows]] guards it: returns the join,
-    * uncached. [[mergeIds]] runs only when [[idsOf]] does not pass, to
-    * raise its error or decide.
+  /** The join columns of [[mergeIds]] for a frame of schema `frame`
+    * projected onto the table columns `columns`, against the read `db`,
+    * and the ids it joins to each key on them, in read order: keys and
+    * database rows match as the join matches them, the database side
+    * cast as [[matchTypes]] casts it. A database value that does not
+    * cast raises [[MatchDatatypesError]]. None when [[dbReaders]] finds
+    * keys only Spark can match, or the id column is not named exactly.
     */
-  private[graft] def mergeIdFrame(
-      df: DataFrame,
-      keys: Held, db: Held,
-      alias: String,
-      table: String,
-      allowDuplication: Boolean,
-  ): DataFrame = {
-    val dbDf = frameOf(df.sparkSession, db)
-    if (idsOf(df.schema, keys, db, alias, allowDuplication).isEmpty)
-      mergeIds(df, dbDf, alias, table, allowDuplication).unpersist()
-    joinIds(df, dbDf, alias)
-  }
-
-  /** The ids [[mergeIds]] joins to each key, by key, when its guards
-    * pass for a frame of schema `schema` whose distinct projection onto
-    * its join columns is `keys`, against the read `db`: every key
-    * matches exactly one database row (at least one under
-    * `allowDuplication`) and no matched id is null. Keys and database
-    * rows match as the join matches them: on the columns both schemas
-    * name, the database side cast as [[matchTypes]] casts it. None as
-    * well when a database value does not cast, or when the driver cannot
-    * match as Spark does (a join column outside `keys`, such as an alias
-    * the frame already holds, a column it cannot resolve alone, a cast
-    * Spark rejects, a collated or nested key), so the caller runs
-    * [[mergeIds]] to decide.
-    */
-  private[graft] def idsOf(
-      schema: StructType,
-      keys: Held, db: Held,
-      alias: String,
-      allowDuplication: Boolean,
-  ): Option[collection.Map[GenericInternalRow, Seq[Any]]] = {
-    val on = StructType(keys.schema.filter(f => db.schema.names.contains(f.name)))
-    val covered = schema.names.filter(db.schema.names.contains).forall(keys.schema.names.contains)
-    (dbReaders(on, db), dbIndex(db.schema, alias)) match {
-      case (Some(read), Some(id)) if covered =>
-        try {
-          val ids = mutable.HashMap.empty[GenericInternalRow, Vector[Any]]
-          val idAt = db.at(id)
-          db.rows.foreach { row =>
-            val key = new GenericInternalRow(read.map(_(row)))
-            ids(key) = ids.getOrElse(key, Vector.empty) :+ row.values(idAt)
-          }
-          val key = gather(on.names.map(c => keys.at(keys.schema.fieldIndex(c))))
-          val pass = keys.rows.forall { row =>
-            ids.get(key(row)).exists(matched =>
-              !matched.contains(null) && (matched.size == 1 || allowDuplication))
-          }
-          if (pass) Some(ids) else None
-        } catch { case _: MatchDatatypesError => None }
-      case _ => None
+  private def idsOf(
+      frame: StructType, columns: Seq[String], db: Held, alias: String,
+  ): Option[(Seq[String], collection.Map[GenericInternalRow, Vector[Any]])] = {
+    val on = columns.filter(db.schema.names.contains)
+    for {
+      read <- dbReaders(StructType(on.map(frame(_))), db, frame.names.diff(columns))
+      id <- dbIndex(db.schema, alias)
+    } yield {
+      val ids = mutable.HashMap.empty[GenericInternalRow, Vector[Any]]
+      val idAt = db.at(id)
+      db.rows.foreach { row =>
+        val key = new GenericInternalRow(read.map(_(row)))
+        ids(key) = ids.getOrElse(key, Vector.empty) :+ row.values(idAt)
+      }
+      (on, ids)
     }
   }
 
@@ -509,14 +474,7 @@ object FrameOps {
         .map(r => Row.fromSeq(r.toSeq.init))
       val missing = side("data")
       val extra = side("db")
-      if (missing.nonEmpty || extra.nonEmpty)
-        throw new CompareNoExactMatchError(
-          "Datasets do not match exactly.\nRows in data and not in db:\n" +
-            missing.mkString("\n") + "\nRows in db and not in data:\n" +
-            extra.mkString("\n") +
-            "\n\nConsider adding a WHERE clause to filter out irrelevant data." +
-            "\nNote: if this happens due to your data containing missings and your " +
-            "database not allowing those, set exact=False")
+      if (missing.nonEmpty || extra.nonEmpty) throw noExactMatchError(missing, extra)
     } else {
       // the database side runs on its own first, so that a value that
       // does not cast fails every time: once a cached data side turns
@@ -531,6 +489,15 @@ object FrameOps {
   private def missingRowsError(rows: Iterable[Row]): CompareMissingRowsError =
     new CompareMissingRowsError(
       s"Some rows from data were not found in the database:\n${rows.mkString("\n")}")
+
+  private def noExactMatchError(missing: Iterable[Row], extra: Iterable[Row]): CompareNoExactMatchError =
+    new CompareNoExactMatchError(
+      "Datasets do not match exactly.\nRows in data and not in db:\n" +
+        missing.mkString("\n") + "\nRows in db and not in data:\n" +
+        extra.mkString("\n") +
+        "\n\nConsider adding a WHERE clause to filter out irrelevant data." +
+        "\nNote: if this happens due to your data containing missings and your " +
+        "database not allowing those, set exact=False")
 
   /** `compareFrames(data, matchTypes(db, data.schema), exact = false)`
     * over rows the driver already holds, evaluated on the driver with
@@ -554,37 +521,46 @@ object FrameOps {
         s"Column `${f.name}` does not cast from ${db.schema(i).dataType.sql} to ${f.dataType.sql}."))
     }
     val missing = missingRows(data, keyRows(db, fromDb), skipNulls = true, limit = 20)
-    if (missing.nonEmpty) {
-      val toRow = CatalystTypeConverters.createToScalaConverter(data.schema)
-      throw missingRowsError(missing.map(toRow(_).asInstanceOf[Row]))
-    }
+    if (missing.nonEmpty) throw missingRowsError(scalaRows(data.schema, missing))
   }
 
   /** D2 of the loader: `compareFrames(frameOf(rows), matchTypes(
     * frameOf(db), rows.schema), exact)` for distinct rows the driver
     * holds and the database's read `db`, after asserting that the
     * database returned rows, and (when `rows` is non-empty and
-    * null-free) at least as many as `rows`. Decided on the driver: no
-    * row may be missing from the database rows read as its columns
-    * ([[dbReaders]]), and with `exact` the distinct database keys must
-    * number the rows. [[compareFrames]] runs, over frames of the rows
-    * the driver holds, only when the driver finds a mismatch or cannot
-    * key the database rows as Spark would, to raise its own error.
+    * null-free) at least as many as `rows`. Decided on the driver, with
+    * [[compareFrames]]' errors: the first 20 rows missing from the
+    * database rows read as its columns ([[dbReaders]]), in data order,
+    * and with `exact` the first 20 distinct database keys missing from
+    * the rows, in read order; those are looked for only when the keys
+    * outnumber the rows. [[compareFrames]] runs, over frames of the rows
+    * the driver holds, only for keys only Spark can match.
     */
   private[graft] def compareRows(spark: SparkSession, rows: Held, db: Held, exact: Boolean): Unit = {
     val dbCount = db.rows.size
     assert(dbCount > 0, "Compare query yielded no results.")
     if (rows.rows.nonEmpty && !rows.rows.exists(r => rows.at.exists(r.isNullAt)))
       assert(dbCount >= rows.rows.size, s"Compare query yielded fewer rows ($dbCount) than data.")
-    val matches = dbReaders(rows.schema, db).exists { read =>
-      try {
+    dbReaders(rows.schema, db) match {
+      case Some(read) =>
         val keys = keyRows(db, read)
-        (!exact || keys.size == rows.rows.size) &&
-          missingRows(rows, keys, skipNulls = !exact, limit = 1).isEmpty
-      } catch { case _: MatchDatatypesError => false }
+        val missing = scalaRows(rows.schema, missingRows(rows, keys, skipNulls = !exact, limit = 20))
+        if (!exact && missing.nonEmpty) throw missingRowsError(missing)
+        if (exact && (missing.nonEmpty || keys.size != rows.rows.size)) {
+          val data = rows.rows.iterator.map(gather(rows.at)).toSet
+          val extra = db.rows.iterator.map(r => new GenericInternalRow(read.map(_(r))))
+            .filterNot(data.contains).distinct.take(20).toSeq
+          throw noExactMatchError(missing, scalaRows(rows.schema, extra))
+        }
+      case None =>
+        compareFrames(frameOf(spark, rows), matchTypes(frameOf(spark, db), rows.schema), exact = exact)
     }
-    if (!matches)
-      compareFrames(frameOf(spark, rows), matchTypes(frameOf(spark, db), rows.schema), exact = exact)
+  }
+
+  /** Catalyst rows of `schema` as `Row`s, as `collect` returns them. */
+  private def scalaRows(schema: StructType, rows: Iterable[InternalRow]): Seq[Row] = {
+    val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+    rows.map(toRow(_).asInstanceOf[Row]).toSeq
   }
 
   /** Up to `limit` distinct rows of `data` whose key is not in `db`, in
@@ -623,15 +599,23 @@ object FrameOps {
     keys
   }
 
-  /** Per column of `dataSchema`, a [[castReader]] of the database column
-    * `matchTypes` casts and `select` then finds for it. None when a key
-    * cannot be matched on the driver as Spark matches it: the column
-    * is missing, or ambiguous under the session's resolver, or not
-    * named exactly (`matchTypes` would leave it uncast); Spark rejects
-    * the cast; or the type is nested or a non-binary collation.
+  /** How the driver reads database rows as keys on the columns of `on`,
+    * as Spark's join or `except` matches them: per column, a
+    * [[castReader]] of the database column `matchTypes` casts and
+    * `select` then finds for it. None for the keys only Spark can
+    * decide, which its operator then decides:
+    *   - a type that is nested or has a non-binary collation;
+    *   - a column missing from `db`, ambiguous under the session's
+    *     resolver, or not named exactly (`matchTypes` would leave it
+    *     uncast);
+    *   - a cast Spark rejects;
+    *   - a column of `outside`, the frame's columns beyond `on`, that
+    *     `db` names too (the join would match on it).
     */
-  private def dbReaders(dataSchema: StructType, db: Held): Option[Array[InternalRow => Any]] = {
-    val readers = dataSchema.fields.map { f =>
+  private def dbReaders(
+      on: StructType, db: Held, outside: Seq[String] = Nil,
+  ): Option[Array[InternalRow => Any]] = {
+    val readers = on.fields.map { f =>
       val keyable = f.dataType match {
         case s: StringType => s == StringType // the UTF8_BINARY collation
         case _: NumericType | BinaryType | BooleanType | DateType | TimestampType |
@@ -641,7 +625,9 @@ object FrameOps {
       if (!keyable) None
       else dbIndex(db.schema, f.name).flatMap(castReader(db, _, f.dataType))
     }
-    if (readers.forall(_.isDefined)) Some(readers.map(_.get)) else None
+    if (readers.forall(_.isDefined) && !outside.exists(db.schema.names.contains))
+      Some(readers.map(_.get))
+    else None
   }
 
   /** The one database column the session's resolver finds for `name`,

@@ -93,13 +93,14 @@ class DerbyConnectorSpec extends AnyFunSuite with SparkSpec {
   }
 
   /** land <- stad <- straat: loading it runs two insert+retrieve steps
-    * (land, stad) and a plain insert (straat).
+    * (land, stad) and a plain insert (straat). land's name is UNIQUE
+    * when `uniqueLand` is set.
     */
-  private def streetDb(): String = {
+  private def streetDb(uniqueLand: Boolean = true): String = {
     val url = freshDb()
     ddl(url,
       "CREATE TABLE land (id INT GENERATED ALWAYS AS IDENTITY PRIMARY KEY, " +
-        "land VARCHAR(50) NOT NULL UNIQUE)",
+        "land VARCHAR(50) NOT NULL" + (if (uniqueLand) " UNIQUE)" else ")"),
       "CREATE TABLE stad (id INT GENERATED ALWAYS AS IDENTITY PRIMARY KEY, " +
         "land_id INT NOT NULL REFERENCES land (id), stad VARCHAR(50) NOT NULL UNIQUE)",
       "CREATE TABLE straat (id INT GENERATED ALWAYS AS IDENTITY PRIMARY KEY, " +
@@ -203,7 +204,7 @@ class DerbyConnectorSpec extends AnyFunSuite with SparkSpec {
     assert(evaluated.value == data.rdd.getNumPartitions)
     assert(streetTables(url).forall(_.isEmpty))
 
-    // the public compare falls back over the rows it collected too
+    // the public compare raises from the rows it collected too
     Connector.withConnection(spark, url)(c => c.load(data))
     val (other, compared) = counted(streets("NL", "Utrecht", "Oudegracht", "2"))
     val mismatch = intercept[CompareNoExactMatchError] {
@@ -285,8 +286,8 @@ class DerbyConnectorSpec extends AnyFunSuite with SparkSpec {
       "INSERT INTO tag (naam) VALUES ('x'), ('x')")
     val data = strDf("naam" -> Seq("x"), "waarde" -> Seq("1"))
 
-    // the driver's id guard cannot pass, so mergeIds runs over the rows
-    // the driver holds and raises: the caller's frame is evaluated once
+    // the id guard raises from the rows the driver threaded: the
+    // caller's frame is evaluated once
     val (source, evaluated) = counted(data)
     val dup = intercept[AssertionError] {
       Connector.withConnection(spark, url)(c => c.load(source))
@@ -299,6 +300,64 @@ class DerbyConnectorSpec extends AnyFunSuite with SparkSpec {
     // the id guard counts each key's matches on the driver, so the
     // duplicating join needs no count of its input (one before)
     assert(!actions.contains("count"), actions.mkString(", "))
+    spark.catalog.clearCache()
+  }
+
+  test("a failing streets load raises each loader error from the rows it holds, after one collect") {
+    // the streets tables; with no UNIQUE on land, holding 'NL' twice
+    def db(uniqueLand: Boolean): String = {
+      val url = streetDb(uniqueLand)
+      if (!uniqueLand) ddl(url, "INSERT INTO land (land) VALUES ('NL'), ('NL')")
+      url
+    }
+    val street = streets("NL", "Utrecht", "Oudegracht", "1")
+    def compareRow(lengte: String) = Some("SELECT 'NL' AS land, 'Utrecht' AS stad, " +
+      s"'Oudegracht' AS straat, $lengte AS lengte FROM SYSIBM.SYSDUMMY1")
+    val exactMismatch = "Datasets do not match exactly.\nRows in data and not in db:\n" +
+      "[NL,Utrecht,Oudegracht,1]\nRows in db and not in data:\n[NL,Utrecht,Oudegracht,2]\n\n" +
+      "Consider adding a WHERE clause to filter out irrelevant data.\n" +
+      "Note: if this happens due to your data containing missings and your database not " +
+      "allowing those, set exact=False"
+    // (case, whether land is UNIQUE, the load, the error's class and text);
+    // the single-table calls fail the same way
+    val cases = Seq[(String, Boolean, Connector => Any, Class[_], String)](
+      ("duplicated ids", false, _.load(street), classOf[AssertionError],
+        "Rows were duplicated when joining on ids."),
+      ("insertAndRetrieveIds: duplicated ids", false, _.insertAndRetrieveIds(street, "land", "land_id"),
+        classOf[AssertionError], "Rows were duplicated when joining on ids."),
+      // a null land is no row land may hold, so it is not inserted
+      ("a key with no id", true, _.load(streets(null, "Utrecht", "Oudegracht", "1")),
+        classOf[MissingKeysAfterMergeError],
+        "When reading from land Some id's were returned as NA:\n[null,Utrecht,Oudegracht,1,null]\n" +
+          "Check if the uniqueness assumptions you made in your database schema are correct, " +
+          "or whether your made a mistake in your schema definitions somewhere."),
+      ("D1 missing rows", true, _.load(streets("NL", "Utrecht", "Oudegracht", "1", "2")),
+        classOf[InsertingDataFailedError],
+        "Encountered an error upon inserting data into table 'straat':\n\t" +
+          "Some rows from data were not found in the database:\n[1,Oudegracht,2]\n" +
+          "This usually happens due to a uniqueness constraint not allowing new data to be inserted.\n" +
+          "Either clear the relevant tables, or reset the database."),
+      ("D2 exact = true", true, _.load(street, compareQuery = compareRow("'2'")),
+        classOf[CompareNoExactMatchError], exactMismatch),
+      ("compare: D2 exact = true", true, _.compare(street, query = compareRow("'2'")),
+        classOf[CompareNoExactMatchError], exactMismatch),
+      ("D2 exact = false", true, _.load(street, compareQuery = compareRow("'2'"), exact = false),
+        classOf[CompareMissingRowsError],
+        "Some rows from data were not found in the database:\n[NL,Utrecht,Oudegracht,1]"),
+      ("an uncastable compare value", true,
+        _.load(street.withColumn("lengte", col("lengte").cast("int")),
+          compareQuery = compareRow("'een'")),
+        classOf[MatchDatatypesError],
+        "MatchDatatypesError: column `lengte` value 'een' does not cast to INT"))
+
+    cases.foreach { case (name, uniqueLand, load, kind, text) =>
+      val url = db(uniqueLand)
+      val before = streetTables(url)
+      val (err, actions) = withActions(intercept[Throwable](Connector.withConnection(spark, url)(load)))
+      assert(err.getClass == kind && err.getMessage == text, s"$name: $err")
+      assert(actions == Seq("collect"), s"$name: $actions")
+      assert(streetTables(url) == before, name)
+    }
     spark.catalog.clearCache()
   }
 
@@ -624,15 +683,25 @@ class DerbyConnectorSpec extends AnyFunSuite with SparkSpec {
     assert(streetTables(url).map(_.size) == Seq(1, 1, 1))
 
     // a rename that leaves two columns named alike: Spark keeps both,
-    // which the load could not tell apart, so it fails before it runs
-    // a Spark action or writes anything
+    // which no entry point could tell apart, so each fails before it
+    // runs a Spark action or a JDBC statement
     val clash = Map("plaats" -> "LAND")
     assert(data.withColumnsRenamed(clash).columns.toSeq == Seq("Land", "LAND", "straat", "lengte"))
     val other = streetDb()
-    val (err, actions) = withActions(intercept[IllegalArgumentException](
-      Connector.withConnection(spark, other)(c => c.load(data, columns = clash))))
-    assert(err.getMessage.contains("leaves duplicate columns"), err.getMessage)
-    assert(actions.isEmpty, actions)
+    Seq[(String, Connector => Any)](
+      "load" -> (_.load(data, columns = clash)),
+      "insert" -> (_.insert(data, "land", columns = clash)),
+      "retrieveIds" -> (_.retrieveIds(data, "land", "land_id", columns = clash)),
+      "insertAndRetrieveIds" -> (_.insertAndRetrieveIds(data, "land", "land_id", columns = clash)),
+      "compare" -> (_.compare(data, columns = clash)),
+    ).foreach { case (entry, call) =>
+      FaultyDriver.arm(Int.MaxValue)
+      val (err, actions) = withActions(intercept[IllegalArgumentException](
+        Connector.withConnection(spark, FaultyDriver.url(other))(call)))
+      assert(err.getMessage.contains("leaves duplicate columns"), s"$entry: ${err.getMessage}")
+      assert(actions.isEmpty, s"$entry: $actions")
+      assert(FaultyDriver.executions.isEmpty, s"$entry: ${FaultyDriver.executions}")
+    }
     assert(streetTables(other).forall(_.isEmpty))
   }
 

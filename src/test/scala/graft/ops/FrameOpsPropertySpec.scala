@@ -201,6 +201,13 @@ class FrameOpsPropertySpec extends AnyFunSuite with SparkSpec {
       case v => String.valueOf(v)
     }.mkString("|")).sorted
 
+  /** Text with each −0.0 as 0.0: rows of the caller's frame may keep
+    * either sign where the driver holds 0.0.
+    */
+  private def unsigned(text: String): String = text.replaceAll("-0\\.0(?![0-9])", "0.0")
+
+  private def unsigned(rows: Seq[String]): Seq[String] = rows.map(unsigned).sorted
+
   private def withAnsi[A](on: Boolean)(body: => A): A = {
     val prev = spark.conf.get("spark.sql.ansi.enabled")
     spark.conf.set("spark.sql.ansi.enabled", on.toString)
@@ -264,7 +271,7 @@ class FrameOpsPropertySpec extends AnyFunSuite with SparkSpec {
           case _       => Seq(row())
         }
       }
-      // the caller's frame as retrieveIds gets it: −0.0 may survive the dedup
+      // the caller's frame, deduped by Spark: −0.0 may survive the dedup
       val data = Seq.fill(1 + rnd.nextInt(6))(dataRow())
       val df = FrameOps.preprocess(HeldRows.frameOf(spark, data, dataSchema))
       val keys = df.collect().toSeq
@@ -288,9 +295,6 @@ class FrameOpsPropertySpec extends AnyFunSuite with SparkSpec {
         }
         // the keys as the driver holds them: normalized (−0.0 as 0.0, one NaN)
         val held = HeldRows.data(keys, dataSchema, spare = 1)
-        val dbHeld = HeldRows.read(db, dbSchema)
-        val guard = FrameOps.idsOf(dataSchema, held, dbHeld, "id", allowDuplication)
-        assert(guard.isDefined == (viaSpark == "ok"), s"seed $seed: $viaSpark")
         // mergeIdRows stands for mergeIds over a frame of the rows it holds
         var heldSparkRows = Seq.empty[String]
         val heldViaSpark = verdict {
@@ -299,23 +303,21 @@ class FrameOpsPropertySpec extends AnyFunSuite with SparkSpec {
           heldSparkRows = contents(joined)
           joined.unpersist()
         }
-        var joinedRows = Seq.empty[String]
         var threadedRows = Seq.empty[String]
-        val driver = verdict {
-          // the frame is its own distinct projection: its rows are the keys
-          val threaded = FrameOps.mergeIdRows(spark, held,
-            FrameOps.distinctRows(held, dataSchema.names.toSeq), dbHeld, "id", "t",
-            allowDuplication, slot = dataSchema.size)
+        val (driver, actions) = withActions(verdict {
+          // the frame's columns are the table's: its rows are the keys
+          val threaded = FrameOps.mergeIdRows(spark, held, dataSchema.names.toSeq,
+            HeldRows.read(db, dbSchema), "id", "t", allowDuplication, slot = dataSchema.size)
           threadedRows = rowContents(HeldRows.rows(threaded))
-        }
-        val framed = verdict {
-          joinedRows = contents(FrameOps.mergeIdFrame(df, held, dbHeld, "id", "t",
-            allowDuplication))
-        }
+        })
         assert(driver == heldViaSpark, s"seed $seed")
-        assert(framed == viaSpark, s"seed $seed")
-        assert(joinedRows == viaSparkRows, s"seed $seed")
         assert(threadedRows == heldSparkRows, s"seed $seed")
+        // the driver decides and raises alone, with no Spark action
+        assert(actions.isEmpty, s"seed $seed: $actions")
+        // and mergeIds over the caller's frame, before normalizing, passes
+        // or fails alike, with the same rows up to the sign of a zero
+        assert(unsigned(driver) == unsigned(viaSpark), s"seed $seed")
+        assert(unsigned(threadedRows) == unsigned(viaSparkRows), s"seed $seed")
       }
     }
   }
@@ -335,10 +337,8 @@ class FrameOpsPropertySpec extends AnyFunSuite with SparkSpec {
       case _: DecimalType => DecimalType(10, 4)
       case other          => other
     }
-    // rows as sets compare −0.0 and 0.0 alike: `dropDuplicates` keeps
-    // either sign, and AQE decides which
-    def unsigned(rows: Seq[String]): Seq[String] =
-      rows.map(_.replaceAll("-0\\.0(?![0-9])", "0.0")).sorted
+    // rows as sets compare −0.0 and 0.0 alike ([[unsigned]]):
+    // `dropDuplicates` keeps either sign, and AQE decides which
 
     (1 to 40).foreach { seed =>
       val rnd = new scala.util.Random(seed)
@@ -435,15 +435,16 @@ class FrameOpsPropertySpec extends AnyFunSuite with SparkSpec {
           }
           var out: FrameOps.Held = null
           val (driver, actions) = withActions(verdict {
-            val joined = FrameOps.mergeIdRows(spark, inHeld, keyHeld,
+            val joined = FrameOps.mergeIdRows(spark, inHeld, cols,
               HeldRows.read(db, dbSchema), alias, "t", allowDuplication,
               slot = dataSchema.size + step)
             val kept = if (replace) FrameOps.dropRows(joined, natural) else joined
             out = kept.copy(schema = FrameOps.postprocessed(kept.schema, renames))
           })
           assert(driver == viaSpark, s"seed $seed step $step")
-          // a join that passes is decided on the driver, with no Spark action
-          if (driver == "ok") assert(actions.isEmpty, s"seed $seed step $step: $actions")
+          // every join is decided, and every failure raised, on the
+          // driver, with no Spark action
+          assert(actions.isEmpty, s"seed $seed step $step: $actions")
           if (driver != "ok") failed = true
           else {
             assert(out.schema == sparkOut.schema, s"seed $seed step $step")
@@ -467,8 +468,6 @@ class FrameOpsPropertySpec extends AnyFunSuite with SparkSpec {
       StructField("m", DecimalType(6, 2)), StructField("b", BinaryType),
       StructField("s", StringType), StructField("l", LongType)))
     // `dropDuplicates` groups −0.0 with 0.0 and prints either sign
-    def unsigned(rows: Seq[String]): Seq[String] =
-      rows.map(_.replaceAll("-0\\.0(?![0-9])", "0.0")).sorted
 
     (1 to 40).foreach { seed =>
       val rnd = new scala.util.Random(seed)
@@ -560,18 +559,17 @@ class FrameOpsPropertySpec extends AnyFunSuite with SparkSpec {
       val held = HeldRows.data(df.collect().toSeq, df.schema)
       val heldDf = HeldRows.frameOf(spark, HeldRows.rows(held), dataSchema)
       Seq(true, false).foreach { exact =>
-        val viaSpark = verdict(sparkCompare(heldDf, db, exact))
-        val (driver, actions) =
-          withActions(verdict(FrameOps.compareRows(spark, held, HeldRows.read(db, dbSchema), exact)))
-        assert(driver == viaSpark, s"seed $seed exact $exact")
-        // and the caller's frame, before normalizing, passes or fails alike
-        assert((verdict(sparkCompare(df, db, exact)) == "ok") == (driver == "ok"),
-          s"seed $seed exact $exact")
-        // the driver decides a passing compare alone: compareFrames runs
-        // only on a real mismatch
-        val compared = verdict(FrameOps.compareFrames(df,
-          FrameOps.matchTypes(HeldRows.frameOf(spark, db, dbSchema), dataSchema), exact))
-        if (compared == "ok") assert(actions.isEmpty, s"seed $seed exact $exact: $actions")
+        withAnsi(seed % 2 == 0) {
+          val viaSpark = verdict(sparkCompare(heldDf, db, exact))
+          val (driver, actions) =
+            withActions(verdict(FrameOps.compareRows(spark, held, HeldRows.read(db, dbSchema), exact)))
+          assert(driver == viaSpark, s"seed $seed exact $exact")
+          // and the caller's frame, before normalizing, passes or fails alike
+          assert((verdict(sparkCompare(df, db, exact)) == "ok") == (driver == "ok"),
+            s"seed $seed exact $exact")
+          // the driver decides every compare and raises its error alone
+          assert(actions.isEmpty, s"seed $seed exact $exact: $actions")
+        }
       }
       df.unpersist()
     }

@@ -133,6 +133,84 @@ class FrameOpsSpec extends AnyFunSuite with SparkSpec {
     } finally data.unpersist()
   }
 
+  test("the keys the driver cannot match as Spark does are decided by mergeIds or compareFrames") {
+    import org.apache.spark.sql.types._
+    def schema(fields: (String, DataType)*) = StructType(fields.map { case (n, t) => StructField(n, t) })
+    def frame(rows: Seq[Row], schema: StructType) = HeldRows.frameOf(spark, rows, schema)
+    // an analysis error names each attribute with its plan's own id
+    def verdict(body: => Any): String =
+      try { body; "ok" } catch {
+        case e: Throwable => e.getClass.getName + ": " + e.getMessage.replaceAll("#\\d+", "#")
+      }
+    /** (the local compare on the Spark driver, Spark's) of `data` against the read `db`. */
+    def compared(data: Seq[Row], dataSchema: StructType, db: Seq[Row], dbSchema: StructType) = (
+      () => FrameOps.compareRows(spark, HeldRows.data(data, dataSchema), HeldRows.read(db, dbSchema),
+        exact = true),
+      () => FrameOps.compareFrames(frame(data, dataSchema),
+        FrameOps.matchTypes(frame(db, dbSchema), dataSchema), exact = true))
+    val lcase = StringType("UTF8_LCASE")
+    val int = schema("s" -> IntegerType)
+
+    // (member of the set, the check made locally on the Spark driver, the Spark operator it stands for)
+    val cases = Seq[(String, (() => Any, () => Any))](
+      // 'A' and 'a' are one value under the collation
+      "a collated key" -> compared(Seq(Row("A")), schema("s" -> lcase), Seq(Row("a")), schema("s" -> lcase)),
+      "a nested key" -> compared(Seq(Row(Seq(1, 2))), schema("s" -> ArrayType(IntegerType)),
+        Seq(Row(Seq(1, 2))), schema("s" -> ArrayType(IntegerType))),
+      "a column the read lacks" -> compared(Seq(Row(1)), int, Seq(Row(1)), schema("t" -> IntegerType)),
+      "an ambiguous column" -> compared(Seq(Row(1)), int, Seq(Row(1, 1)),
+        schema("s" -> IntegerType, "S" -> IntegerType)),
+      // matchTypes leaves `S` uncast, so the compare widens the INT
+      "a column not named exactly" -> compared(Seq(Row(1)), int, Seq(Row(3000000000L)),
+        schema("S" -> LongType)),
+      "a cast Spark rejects" -> compared(Seq(Row(1)), int, Seq(Row(Array[Byte](1))),
+        schema("s" -> BinaryType)),
+      // the join matches on `x` too, which the table's columns leave out
+      "a frame column outside the keys that the read also names" -> {
+        val data = Seq(Row(1, 1))
+        val dataSchema = schema("k" -> IntegerType, "x" -> IntegerType)
+        val db = Seq(Row(5, 1, 2))
+        val dbSchema = schema("id" -> IntegerType, "k" -> IntegerType, "x" -> IntegerType)
+        (() => FrameOps.mergeIdRows(spark, HeldRows.data(data, dataSchema, spare = 1), Seq("k"),
+          HeldRows.read(db, dbSchema), "id", "t", allowDuplication = false, slot = 2),
+          () => FrameOps.mergeIds(frame(data, dataSchema), frame(db, dbSchema), "id", "t"))
+      })
+
+    cases.foreach { case (member, (driver, viaSpark)) =>
+      val expected = verdict(viaSpark())
+      val (got, actions) = withActions(verdict(driver()))
+      assert(got == expected, member)
+      // Spark decided: it ran a job, or its analysis raised
+      assert(actions.nonEmpty || got.startsWith("org.apache.spark.sql.AnalysisException"),
+        s"$member: $got")
+    }
+  }
+
+  test("the loader raises each error once: Connector names no Spark twin, FrameOps falls back to each at one site") {
+    import java.nio.file.{Files, Paths}
+    def source(path: String): String = {
+      val p = Paths.get(path)
+      assert(Files.exists(p), s"$path not found from the working directory")
+      Files.readString(p)
+    }
+    val connector = source("src/main/scala/graft/connector/Connector.scala")
+    for (name <- Seq("mergeIds", "compareFrames", "preprocess", "mergeIdFrame"))
+      assert(s"\\b$name\\b".r.findFirstIn(connector).isEmpty, name)
+    // FrameOps' code without its comments, by the method each line is in
+    val code = source("src/main/scala/graft/ops/FrameOps.scala").linesIterator
+      .filterNot(l => Seq("*", "/**", "//").exists(l.trim.startsWith)).mkString("\n")
+    val methods = "\n  (?:private(?:\\[graft\\])? )?def (\\w+)".r.findAllMatchIn(code).toSeq
+    val bodies = methods.zip(methods.drop(1).map(_.start) :+ code.length).map { case (m, end) =>
+      m.group(1) -> code.substring(m.end, end)
+    }
+    for ((operator, fallback) <- Seq("mergeIds" -> "mergeIdRows", "compareFrames" -> "compareRows")) {
+      val sites = bodies.flatMap { case (name, body) =>
+        Seq.fill(s"\\b$operator\\(".r.findAllMatchIn(body).size)(name)
+      }
+      assert(sites == Seq(fallback), operator)
+    }
+  }
+
   test("mergeIds joins ids null-safely (dataframe_operations.py:106-161)") {
     val data = df("naam" -> Seq("een", "twee", null))
     val dbRows = df("id" -> Seq(1, 2, 3), "naam" -> Seq("een", "twee", null))
